@@ -47,10 +47,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_store_spark.sources.manifest import (
-    CommitConflict,
-    ManifestedTable,
-)
+from feature_store_spark.sources.commit import ConcurrentWriteError
+from feature_store_spark.sources.manifest import ManifestedTable
 
 STATE_COLS = ("n_rows", "n_vals", "sum_val", "min_val", "max_val")
 
@@ -182,9 +180,9 @@ def refresh_fold(
             return state.overwrite(
                 merged, require_base=base_v, txn=(app_id, src_v)
             )
-        except CommitConflict:
+        except ConcurrentWriteError:
             continue
-    raise CommitConflict(
+    raise ConcurrentWriteError(
         f"incremental refresh lost the state race {max_retries} times"
     )
 

@@ -4266,7 +4266,7 @@ def q_iceberg_orc(spark, sf_dir):
     events batch into an Iceberg v2 table with ORC data files
     (Spark's native ORC writer; per-file manifest bounds come from
     one distributed Spark aggregation, since pyarrow exposes no ORC
-    column statistics — iceberg_write._orc_file_stats), then
+    column statistics — see commit.stage), then
     merge-on-read UPSERT the post-cut batch keyed on
     (entity_type, entity_id) — also ORC data files, plus a parquet
     equality-delete file the scan anti-joins against the ORC frame
@@ -11410,7 +11410,7 @@ QUERIES = {
 # the ENTIRE iceberg family (generalized partition specs in the
 # writer, delete_where routed through the field-id resolver, ORC
 # stats partial-miss guard, schema-history rename gate) and delta
-# family (delta_append staging factored into _stage_add_actions),
+# family (delta_append staging factored out, now sources/commit.py),
 # registry_latest (register_view no longer mutates the caller's
 # view), and the offline-scan pair (2-day partition widening). Then
 # the stale-row refresh VERDICT r10 next #6 named: the r7-era rows

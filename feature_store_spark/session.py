@@ -60,7 +60,8 @@ def get_spark(
         # INT96 carries NO footer min/max statistics, which would
         # blind both parquet row-group skipping and the manifest
         # data-skipping stats (sources/manifest.py) on every
-        # timestamp column this engine writes
+        # timestamp column this engine writes; the commit kernel
+        # (sources/commit.py) refuses table writes without it
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # safe-cast Arrow conversion for createDataFrame(pandas_df)

@@ -49,7 +49,11 @@ import uuid
 from pyspark.sql import DataFrame, functions as F
 
 from feature_store_spark.session import local_rows_df
+from feature_store_spark.sources import commit
 from feature_store_spark.sources.avro_io import read_avro, write_avro
+from feature_store_spark.sources.commit import (  # noqa: F401 - re-export
+    ConcurrentWriteError,
+)
 from feature_store_spark.sources.hive_paths import parse_partition_segs
 
 US_PER_DAY = 86_400_000_000
@@ -99,21 +103,11 @@ _KV_BYTES = {
 }
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed the metadata version this commit
-    targeted. All Iceberg commits here are state-dependent (snapshot
-    ids, sequence numbers, and carried-forward manifest lists were
-    derived from the pre-commit state), so the caller must re-read
-    and retry — silently overwriting would LOSE the rival's commit."""
-
-
 def _publish_metadata(meta_dir: str, snap_id: int, meta: dict) -> None:
-    """Atomically claim ``v<snap_id>.metadata.json``: fully write a
-    private tmp, then publish with ``os.link`` — put-if-absent AND
-    atomic, so a SIGKILL mid-write or a concurrent reader can never
-    observe a torn metadata file (the filesystem analog of the
-    catalog compare-and-swap every real Iceberg commit goes through).
-    Then advance version-hint.text — per-writer tmp name, and only
+    """Claim ``v<snap_id>.metadata.json`` through the kernel's
+    put-if-absent publish (the filesystem analog of the catalog
+    compare-and-swap every real Iceberg commit goes through), then
+    advance version-hint.text — per-writer tmp name, and only
     when this commit is newer than the hint's current value. The
     advance is BEST-EFFORT (the read and the replace are not one
     atomic step, so two racing winners can still leave the hint one
@@ -122,23 +116,9 @@ def _publish_metadata(meta_dir: str, snap_id: int, meta: dict) -> None:
     exists only as a fast-path courtesy to external filesystem-catalog
     readers, which treat it as a hint by contract. Raises
     ConcurrentWriteError on a lost race."""
-    target = os.path.join(meta_dir, f"v{snap_id}.metadata.json")
-    tmp = os.path.join(
-        meta_dir, f".v{snap_id}.{uuid.uuid4().hex[:8]}.metadata.json.tmp"
+    commit.publish_if_absent(
+        meta_dir, f"v{snap_id}.metadata.json", json.dumps(meta)
     )
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, target)  # atomic put-if-absent
-    except FileExistsError:
-        raise ConcurrentWriteError(
-            f"{meta_dir}: metadata v{snap_id} was committed by another "
-            "writer; re-read and retry"
-        ) from None
-    finally:
-        os.remove(tmp)
     hint_path = os.path.join(meta_dir, "version-hint.text")
     try:
         with open(hint_path) as f:
@@ -661,73 +641,147 @@ def _seg_typed(raw: str | None, value_type: str):
     return raw
 
 
-class _micros_timestamps:
-    """Force INT64 TIMESTAMP_MICROS parquet encoding for a staged
-    write (restoring the session conf after). Spark's default INT96
-    timestamps carry NO usable footer statistics (pyarrow reports
-    has_min_max=False — the stats are deprecated in the parquet
-    spec), so manifests would silently record no bounds for
-    timestamp columns and time-range file pruning would never fire
-    on them; Iceberg's own spec stores timestamps as micros-long
-    anyway."""
-
-    _KEY = "spark.sql.parquet.outputTimestampType"
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(self._KEY)
-        except Exception:
-            self.prev = None
-        self.spark.conf.set(self._KEY, "TIMESTAMP_MICROS")
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self._KEY)
-        else:
-            self.spark.conf.set(self._KEY, self.prev)
-        return False
-
-
-def _footer_stats(path: str, field_by_name: dict) -> tuple[int, dict, dict]:
-    """(row_count, lower_bounds, upper_bounds) by Iceberg field id from
-    the parquet footer — the same statistics Iceberg writers persist."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    md = pf.metadata
+def _iceberg_bounds(
+    col_ranges: dict, field_by_name: dict
+) -> tuple[list, list]:
+    """(lower_bounds, upper_bounds) by Iceberg field id from a staged
+    file's column ranges — the statistics Iceberg writers persist —
+    as the manifest's key/value lists."""
     lowers: dict[int, bytes] = {}
     uppers: dict[int, bytes] = {}
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            st = col.statistics
-            if st is None or not st.has_min_max or name not in field_by_name:
-                continue
-            mn, mx = st.min, st.max
-            mins[name] = mn if name not in mins else min(mins[name], mn)
-            maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-    for name, fld in field_by_name.items():
+    for name, (mn, mx) in col_ranges.items():
+        fld = field_by_name.get(name)
+        if fld is None or not isinstance(fld["type"], str):
+            continue
         t = fld["type"]
-        if name in mins:
-            mn, mx = mins[name], maxs[name]
-            if t.startswith("timestamp"):
-                # pyarrow surfaces timestamp stats as datetimes
-                mn = _to_micros(mn)
-                mx = _to_micros(mx)
-            lo = _encode_bound(t, mn)
-            hi = _encode_bound(t, mx)
-            if lo is not None:
-                lowers[fld["id"]] = lo
-            if hi is not None:
-                uppers[fld["id"]] = hi
-    return md.num_rows, lowers, uppers
+        if t.startswith("timestamp"):
+            # parquet footers surface timestamps as datetimes
+            mn, mx = _to_micros(mn), _to_micros(mx)
+        lo, hi = _encode_bound(t, mn), _encode_bound(t, mx)
+        if lo is not None:
+            lowers[fld["id"]] = lo
+        if hi is not None:
+            uppers[fld["id"]] = hi
+    return (
+        [{"key": k, "value": v} for k, v in sorted(lowers.items())],
+        [{"key": k, "value": v} for k, v in sorted(uppers.items())],
+    )
+
+
+def _added_entry(
+    snap_id: int,
+    content: int,
+    f,
+    partition: dict,
+    fmt: str = "PARQUET",
+    bounds: tuple = (None, None),
+    **extra,
+) -> dict:
+    """Manifest entry ADDING staged file ``f`` in snapshot ``snap_id``
+    (content 0 = data, 1 = position deletes, 2 = equality deletes)."""
+    return {
+        "status": 1,
+        "snapshot_id": snap_id,
+        "sequence_number": snap_id,
+        "file_sequence_number": snap_id,
+        "data_file": {
+            "content": content,
+            "file_path": f.path,
+            "file_format": fmt,
+            "partition": partition,
+            "record_count": f.rows,
+            "file_size_in_bytes": f.bytes,
+            "lower_bounds": bounds[0],
+            "upper_bounds": bounds[1],
+            **extra,
+        },
+    }
+
+
+def _write_manifest(
+    meta_dir: str,
+    prefix: str,
+    snap_id: int,
+    schema: dict,
+    entries: list[dict],
+    spec_id: int,
+    content: int,
+    partitions: list | None = None,
+) -> dict:
+    """Write ``entries`` as a new manifest and return its manifest-list
+    record (content 0 = data, 1 = deletes). uuid'd names (what real
+    Iceberg writers emit): a commit that loses the metadata race must
+    never have clobbered a rival's manifest files — losers leave only
+    orphans."""
+    path = os.path.join(
+        meta_dir, f"{prefix}-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
+    )
+    write_avro(path, schema, entries, codec="deflate")
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": snap_id,
+        "min_sequence_number": snap_id,
+        "added_snapshot_id": snap_id,
+        "added_files_count": len(entries),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": sum(
+            e["data_file"]["record_count"] for e in entries
+        ),
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+        "partitions": partitions,
+    }
+
+
+def _partition_summaries(entries: list[dict], fields) -> list[dict]:
+    """Per-field partition summaries (manifest-level pruning) over the
+    entries' partition tuples; ``fields`` = [(name, value type)]."""
+    out = []
+    for name, ty in fields:
+        vals = [e["data_file"]["partition"][name] for e in entries]
+        nn = [v for v in vals if v is not None]
+        out.append(
+            {
+                "contains_null": any(v is None for v in vals),
+                "contains_nan": None,
+                "lower_bound": _encode_bound(ty, min(nn)) if nn else None,
+                "upper_bound": _encode_bound(ty, max(nn)) if nn else None,
+            }
+        )
+    return out
+
+
+def _new_snapshot(
+    meta_dir: str,
+    snap_id: int,
+    manifests: list[dict],
+    summary: dict,
+    prev_meta: dict | None,
+    schema_id: int,
+) -> dict:
+    """Write snapshot ``snap_id``'s manifest list and return its
+    snapshot record. Spec: parent-snapshot-id records the lineage
+    (omitted on the first snapshot) — the changelog scan and
+    rollback-awareness both walk it."""
+    mlist = os.path.join(
+        meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
+    )
+    write_avro(mlist, MANIFEST_LIST_SCHEMA, manifests, codec="deflate")
+    snapshot = {
+        "snapshot-id": snap_id,
+        "timestamp-ms": 1700000000000 + snap_id,
+        "sequence-number": snap_id,
+        "summary": summary,
+        "manifest-list": mlist,
+    }
+    if (prev_meta or {}).get("current-snapshot-id") is not None:
+        snapshot["parent-snapshot-id"] = prev_meta["current-snapshot-id"]
+    snapshot["schema-id"] = schema_id
+    return snapshot
 
 
 def _to_micros(v) -> int:
@@ -738,70 +792,6 @@ def _to_micros(v) -> int:
             v = v.replace(tzinfo=datetime.timezone.utc)
         return int(v.timestamp() * 1e6)
     return int(v)
-
-
-def _orc_file_stats(spark, staging: str, field_by_name: dict) -> dict:
-    """Per-file (row_count, lower_bounds, upper_bounds) for every ORC
-    data file under ``staging``, keyed by local path.
-
-    pyarrow.orc exposes no column statistics (only nrows/schema), so
-    the bounds the manifest needs are computed by Spark itself: ONE
-    distributed aggregation grouped on ``_metadata.file_path`` over
-    the just-written files — executor work proportional to the data
-    just written (page-cache warm), never a driver loop over rows.
-    Temporal bounds are reduced Spark-side in Iceberg's own units
-    (micros / epoch days via unix_micros / datediff) so no
-    driver-timezone conversion can skew them; float/double mins and
-    maxes exclude NaN (the spec's bounds contract)."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.orc(staging)
-    cols = set(df.columns)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    statable: list[str] = []
-    for name, fld in field_by_name.items():
-        t = fld["type"]
-        if name not in cols or not isinstance(t, str):
-            continue
-        if t.startswith("timestamp"):
-            c = F.unix_micros(F.col(name))
-        elif t == "date":
-            c = F.datediff(F.col(name), F.lit("1970-01-01"))
-        elif t in ("float", "double"):
-            c = F.when(~F.isnan(F.col(name)), F.col(name))
-        elif t in ("int", "long", "string"):
-            c = F.col(name)
-        else:
-            continue  # boolean/binary/uuid: bounds add no pruning
-        statable.append(name)
-        aggs.append(F.min(c).alias(f"__mn_{name}"))
-        aggs.append(F.max(c).alias(f"__mx_{name}"))
-    rows = (
-        df.groupBy(F.col("_metadata.file_path").alias("__path"))
-        .agg(*aggs)
-        .collect()
-    )
-    out: dict[str, tuple[int, dict, dict]] = {}
-    for r in rows:
-        lowers: dict[int, bytes] = {}
-        uppers: dict[int, bytes] = {}
-        for name in statable:
-            fld = field_by_name[name]
-            lo = _encode_bound(fld["type"], r[f"__mn_{name}"])
-            hi = _encode_bound(fld["type"], r[f"__mx_{name}"])
-            if lo is not None:
-                lowers[fld["id"]] = lo
-            if hi is not None:
-                uppers[fld["id"]] = hi
-        p = r["__path"]
-        # Hadoop renders local URIs as file:/x, file:///x, or
-        # file://host/x — reduce all to a bare /x
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-        out[p] = (int(r["__n"]), lowers, uppers)
-    return out
 
 
 UNPARTITIONED_SPEC_ID = 1
@@ -952,7 +942,7 @@ def iceberg_append(
     (default — footer stats read driver-side) or ``"orc"`` (Spark's
     native ORC writer; pyarrow exposes no ORC column statistics, so
     the per-file bounds the manifest needs come from one distributed
-    Spark aggregation over the written files — see _orc_file_stats).
+    Spark aggregation over the written files — see commit.stage).
     Either way the manifests carry real lower/upper bounds, so
     file-level pruning works identically for both formats.
     Equality-delete files (``upsert_keys``) are ALWAYS parquet — the
@@ -1171,12 +1161,12 @@ def iceberg_append(
         # each partition into one wide-bounds file, where sorting
         # buys nothing.
         cols = shadows + list(sort_by)
-        staged = (
+        wdf = (
             wdf.repartitionByRange(int(sort_files), *cols)
             if sort_files
             else wdf.repartitionByRange(*cols)
         ).sortWithinPartitions(*cols)
-    else:
+    elif shadows:
         # clustered staging exchange with an EXPLICIT reducer count:
         # a bare repartition(*shadows) lets AQE's advisory-size rule
         # coalesce the whole staged write into ONE reduce task at
@@ -1188,42 +1178,14 @@ def iceberg_append(
         # each tuple still hashes to exactly one task, so the file
         # count cannot grow. Derived from the session's shuffle
         # parallelism so cluster deployments inherit their configured
-        # scale instead of a local constant.
-        # UNPARTITIONED staged writes get an AQE-sized REBALANCE:
-        # the frames the write verbs stage are shuffle- or
-        # localCheckpoint-derived, so their partition count is the
-        # CONFIGURED parallelism, not the data size — written as-is,
-        # every commit lands `shuffle.partitions` near-empty files
-        # and each downstream scan/changes() pays per-file open cost
-        # for all of them. RebalancePartitions lets AQE size the
-        # exchange by advisory bytes, so the file count tracks bytes
-        # at every scale (1 file for a KB batch, ~advisory-sized
-        # files for a TB append); the cost is one exchange of the
-        # staged bytes — the same trade Iceberg's
-        # write.distribution-mode documents for clustered writes.
-        from feature_store_spark.sources.manifest import (
-            _staging_rebalance,
-        )
-
-        staged = (
-            wdf.repartition(_staging_parallelism(spark), *shadows)
-            if shadows
-            else (
-                wdf.hint("rebalance")
-                if _staging_rebalance(spark)
-                else wdf
-            )
-        )
-    writer = staged.write.mode("overwrite").format(fmt)
-    if shadows:
-        writer = writer.partitionBy(*shadows)
+        # scale instead of a local constant. (Unpartitioned writes
+        # get the kernel's AQE-sized rebalance instead.)
+        wdf = wdf.repartition(_staging_parallelism(spark), *shadows)
     # the equality-delete file (upsert/merge commits) is a SECOND,
     # independent Spark write; submit it concurrently with the data
     # staging write (guide §2.6 — the two jobs' task tails back-fill
     # each other) instead of paying two sequential job walls per
-    # commit. Both writes share one _micros_timestamps scope (the
-    # session conf is process-global, so the nested per-write scope
-    # would race if set/unset per thread).
+    # commit
     del_dir = None
     del_keys = None
     if upsert_keys:
@@ -1249,248 +1211,91 @@ def iceberg_append(
                 for k in upsert_keys
             ]
         )
-    with _micros_timestamps(spark):
-        if del_keys is not None:
-            from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_data = pool.submit(writer.save, staging)
-                f_del = pool.submit(
-                    del_keys.distinct().write.parquet, del_dir
-                )
-                # surface BOTH results (a failed delete write must
-                # not be masked by a successful data write)
-                f_data.result()
-                f_del.result()
-        else:
-            writer.save(staging)
+    def stage_data():
+        return commit.stage(
+            wdf, staging, partition_cols=shadows, fmt=fmt,
+            rebalance=not sort_by,
+        )
 
-    paths = [
-        os.path.join(root, name)
-        for root, _dirs, files in os.walk(staging)
-        for name in files
-        if name.endswith(f".{fmt}")
-    ]
-    field_by_name = {f["name"]: f for f in schema_fields}
-    if fmt == "orc":
-        # no driver-readable ORC column stats exist — one distributed
-        # agg over the written files supplies the manifest bounds
-        orc_stats = _orc_file_stats(spark, staging, field_by_name)
-        if paths and not any(p in orc_stats for p in paths):
-            # a universal miss is a path-normalization bug, not data —
-            # committing bound-less manifests here would silently
-            # disable file pruning for the whole snapshot
-            raise RuntimeError(
-                f"orc stats job matched none of {len(paths)} written "
-                f"files (sample key: {next(iter(orc_stats), None)!r})"
-            )
-        # a zero-row part file never groups in the agg: record it
-        # honestly as empty (scanning it later is a harmless no-op).
-        # But a NON-empty file missing from the stats map is a
-        # per-path normalization bug (ADVICE r10: the old fallback
-        # silently recorded record_count=0 and empty bounds for real
-        # data, understating the manifest) — pyarrow.orc can't give
-        # column stats but DOES give nrows, which arbitrates the two
-        # cases exactly
-        missed = [p for p in paths if p not in orc_stats]
-        if missed:
-            from pyarrow import orc as _po
-
-            truly_nonempty = [
-                p for p in missed if _po.ORCFile(p).nrows > 0
-            ]
-            if truly_nonempty:
-                raise RuntimeError(
-                    f"orc stats job missed {len(truly_nonempty)} "
-                    f"non-empty written file(s) (path normalization "
-                    f"bug): {truly_nonempty[:3]} — committing them "
-                    "with record_count=0 would understate the "
-                    "manifest"
-                )
-        stats = [orc_stats.get(p, (0, {}, {})) for p in paths]
+    if del_keys is None:
+        staged = stage_data()
     else:
-        # footer reads are independent KB-scale I/O: collect the
-        # commit statistics in parallel (what real Iceberg committers
-        # do) — serial reads dominated the commit at a few hundred
-        # files
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            stats = list(
-                pool.map(
-                    lambda fp: _footer_stats(fp, field_by_name), paths
-                )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_data = pool.submit(stage_data)
+            f_del = pool.submit(
+                commit.stage, del_keys.distinct(), del_dir,
+                rebalance=False,
             )
+            try:
+                # surface BOTH results (a failed delete write must
+                # not be masked by a successful data write)
+                staged = f_data.result()
+                del_staged = f_del.result()
+            except BaseException:
+                # wait out the other write, then leave nothing behind
+                f_data.exception()
+                f_del.exception()
+                import shutil as _sh
+
+                _sh.rmtree(staging, ignore_errors=True)
+                _sh.rmtree(del_dir, ignore_errors=True)
+                raise
+
+    field_by_name = {f["name"]: f for f in schema_fields}
     entries = []
-    for fpath, (n, lowers, uppers) in zip(paths, stats):
-            if n == 0:
-                # an empty staged frame can still leave one zero-row
-                # part file — never commit it (junk scan overhead);
-                # iceberg_merge relies on this to commit pure-delete
-                # snapshots with no data manifest
-                os.remove(fpath)
-                continue
-            # dir segments are hive-escaped by Spark's writer; the
-            # manifest must record the REAL partition value
-            parts = parse_partition_segs(
-                os.path.relpath(fpath, staging)
+    for sf in staged:
+        # dir segments are hive-escaped by Spark's writer; the
+        # manifest must record the REAL partition value
+        parts = parse_partition_segs(os.path.relpath(sf.path, staging))
+        pvals = {
+            p["name"]: _seg_typed(parts.get(p["shadow"]), p["value_type"])
+            for p in pspec
+        }
+        entries.append(
+            _added_entry(
+                snap_id, 0, sf, pvals, fmt.upper(),
+                _iceberg_bounds(sf.col_ranges, field_by_name),
             )
-            pvals = {
-                p["name"]: _seg_typed(
-                    parts.get(p["shadow"]), p["value_type"]
-                )
-                for p in pspec
-            }
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "sequence_number": snap_id,
-                    "file_sequence_number": snap_id,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": fpath,
-                        "file_format": fmt.upper(),
-                        "partition": pvals,
-                        "record_count": n,
-                        "file_size_in_bytes": os.path.getsize(fpath),
-                        "lower_bounds": [
-                            {"key": k, "value": v}
-                            for k, v in sorted(lowers.items())
-                        ],
-                        "upper_bounds": [
-                            {"key": k, "value": v}
-                            for k, v in sorted(uppers.items())
-                        ],
-                    },
-                }
-            )
+        )
     if not entries and replace:
         # a REPLACE whose new manifest list is empty would wipe the
         # table view — rewrite callers always re-land live rows
         raise ValueError("replace produced no data files")
 
-    mpath = None
-    if entries:
-        mschema = manifest_schema(
-            [{"name": p["name"], "avro": p["avro"]} for p in pspec]
-        )
-        # uuid'd names (what real Iceberg writers emit): a commit
-        # that loses the metadata race must never have clobbered a
-        # rival's manifest files — losers leave only orphans
-        mpath = os.path.join(
-            meta_dir, f"manifest-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
-        )
-        write_avro(mpath, mschema, entries, codec="deflate")
-
-    delete_manifests: list[dict] = []
-    if upsert_keys:
-        import pyarrow.parquet as pq
-
-        # the delete file itself was written CONCURRENTLY with the
-        # data staging write above (micros encoding included); here
-        # only the driver-side manifest bookkeeping remains
-        del_entries = []
-        for name in sorted(os.listdir(del_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(del_dir, name)
-            n_rows = pq.ParquetFile(fpath).metadata.num_rows
-            if n_rows == 0:
-                continue
-            del_entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "sequence_number": snap_id,
-                    "file_sequence_number": snap_id,
-                    "data_file": {
-                        "content": 2,  # EQUALITY DELETES
-                        "file_path": fpath,
-                        "file_format": "PARQUET",
-                        "partition": {},  # unpartitioned spec: global
-                        "record_count": n_rows,
-                        "file_size_in_bytes": os.path.getsize(fpath),
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": key_ids,
-                    },
-                }
-            )
-        if del_entries:
-            dm_path = os.path.join(
-                meta_dir,
-                f"manifest-eqdel-{snap_id}-{uuid.uuid4().hex[:8]}.avro",
-            )
-            write_avro(
-                dm_path, _eq_manifest_schema(), del_entries,
-                codec="deflate",
-            )
-            delete_manifests.append(
-                {
-                    "manifest_path": dm_path,
-                    "manifest_length": os.path.getsize(dm_path),
-                    "partition_spec_id": UNPARTITIONED_SPEC_ID,
-                    "content": 1,  # delete manifest
-                    "sequence_number": snap_id,
-                    "min_sequence_number": snap_id,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": len(del_entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        e["data_file"]["record_count"]
-                        for e in del_entries
-                    ),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "partitions": None,
-                }
-            )
     data_manifests: list[dict] = []
     if entries:
-        part_summaries = []
-        for p in pspec:
-            vals = [
-                e["data_file"]["partition"][p["name"]] for e in entries
-            ]
-            nn = [v for v in vals if v is not None]
-            part_summaries.append(
-                {
-                    "contains_null": any(v is None for v in vals),
-                    "contains_nan": None,
-                    "lower_bound": (
-                        _encode_bound(p["value_type"], min(nn))
-                        if nn
-                        else None
-                    ),
-                    "upper_bound": (
-                        _encode_bound(p["value_type"], max(nn))
-                        if nn
-                        else None
-                    ),
-                }
-            )
         data_manifests.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": cur_spec_id,
-                "content": 0,
-                "sequence_number": snap_id,
-                "min_sequence_number": snap_id,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
+            _write_manifest(
+                meta_dir, "manifest", snap_id,
+                manifest_schema(
+                    [{"name": p["name"], "avro": p["avro"]} for p in pspec]
                 ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": part_summaries,
-            }
+                entries, cur_spec_id, 0,
+                _partition_summaries(
+                    entries, [(p["name"], p["value_type"]) for p in pspec]
+                ),
+            )
         )
+    delete_manifests: list[dict] = []
+    if upsert_keys:
+        # the delete file itself was staged CONCURRENTLY with the
+        # data above; here only the driver-side manifest bookkeeping
+        # remains. Unpartitioned spec: the deletes are global.
+        del_entries = [
+            _added_entry(snap_id, 2, f, {}, equality_ids=key_ids)
+            for f in del_staged
+        ]
+        if del_entries:
+            delete_manifests.append(
+                _write_manifest(
+                    meta_dir, "manifest-eqdel", snap_id,
+                    _eq_manifest_schema(), del_entries,
+                    UNPARTITIONED_SPEC_ID, 1,
+                )
+            )
     if (
         not data_manifests
         and not delete_manifests
@@ -1506,6 +1311,8 @@ def iceberg_append(
         import shutil as _sh
 
         _sh.rmtree(staging, ignore_errors=True)
+        if del_dir is not None:
+            _sh.rmtree(del_dir, ignore_errors=True)
         if allow_empty:
             return int(
                 (prev_meta or {}).get("current-snapshot-id") or 0
@@ -1523,9 +1330,6 @@ def iceberg_append(
         )
     else:
         manifests = prev_manifests + delete_manifests + data_manifests
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}.avro")
-    write_avro(mlist, MANIFEST_LIST_SCHEMA, manifests, codec="deflate")
-
     summary = {
         "operation": (
             "replace"
@@ -1536,20 +1340,10 @@ def iceberg_append(
     if txn is not None:
         summary["app-id"] = str(txn[0])
         summary["batch-id"] = str(int(txn[1]))
-    snapshot = {
-        "snapshot-id": snap_id,
-        "timestamp-ms": 1700000000000 + snap_id,
-        "sequence-number": snap_id,
-        "summary": summary,
-        "manifest-list": mlist,
-    }
-    # spec: parent-snapshot-id records the lineage (omitted on the
-    # first snapshot) — the changelog scan and rollback-awareness
-    # both walk it
-    if prev_meta and prev_meta.get("current-snapshot-id") is not None:
-        snapshot["parent-snapshot-id"] = prev_meta["current-snapshot-id"]
     schemas, cur_sid = _schemas_with(prev_meta, schema_fields)
-    snapshot["schema-id"] = cur_sid
+    snapshot = _new_snapshot(
+        meta_dir, snap_id, manifests, summary, prev_meta, cur_sid
+    )
     if prev_meta is not None and prev_meta.get("partition-specs"):
         # the spec history is table state: carry EVERY spec forward
         # verbatim (old data files are interpreted under the spec
@@ -2896,12 +2690,8 @@ def iceberg_delete_where(
     del_dir = os.path.join(
         table_dir, "data", f"deletes-{snap_id}-{uuid.uuid4().hex[:8]}"
     )
-    dels.write.parquet(del_dir)
+    staged = commit.stage(dels, del_dir, rebalance=False)
 
-    import pyarrow.parquet as pq
-
-    entries = []
-    n_rows = 0
     # positional deletes target explicit file paths, so partition
     # scoping never constrains them — but the manifest's partition
     # tuple schema must match the spec id the manifest records, and
@@ -2912,33 +2702,11 @@ def iceberg_delete_where(
         for s in prev_meta.get("partition-specs", [])
     }.get(del_spec_id, [])
     null_partition = {pf["name"]: None for pf in spec_fields}
-    for name in sorted(os.listdir(del_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        fpath = os.path.join(del_dir, name)
-        md = pq.ParquetFile(fpath).metadata
-        if md.num_rows == 0:
-            continue
-        n_rows += md.num_rows
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": snap_id,
-                "file_sequence_number": snap_id,
-                "data_file": {
-                    "content": 1,  # POSITION DELETES
-                    "file_path": fpath,
-                    "file_format": "PARQUET",
-                    "partition": null_partition,
-                    "record_count": md.num_rows,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        )
+    entries = [_added_entry(snap_id, 1, f, null_partition) for f in staged]
     if not entries:
+        import shutil as _sh
+
+        _sh.rmtree(del_dir, ignore_errors=True)
         raise ValueError(
             f"{table_dir}: DELETE WHERE matched no rows — nothing "
             "committed (the table version is unchanged)"
@@ -2950,41 +2718,16 @@ def iceberg_delete_where(
             for pf in spec_fields
         ]
     )
-    mpath = os.path.join(
-        meta_dir, f"manifest-del-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
+    manifest_rec = _write_manifest(
+        meta_dir, "manifest-del", snap_id, mschema, entries, del_spec_id, 1
     )
-    write_avro(mpath, mschema, entries, codec="deflate")
-    manifest_rec = {
-        "manifest_path": mpath,
-        "manifest_length": os.path.getsize(mpath),
-        "partition_spec_id": del_spec_id,
-        "content": 1,  # DELETE manifest
-        "sequence_number": snap_id,
-        "min_sequence_number": snap_id,
-        "added_snapshot_id": snap_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "partitions": None,
-    }
-    manifests = prev_manifests + [manifest_rec]
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}.avro")
-    write_avro(mlist, MANIFEST_LIST_SCHEMA, manifests, codec="deflate")
-    snapshot = {
-        "snapshot-id": snap_id,
-        "timestamp-ms": 1700000000000 + snap_id,
-        "sequence-number": snap_id,
-        "summary": {"operation": "delete"},
-        "manifest-list": mlist,
+    snapshot = _new_snapshot(
+        meta_dir, snap_id, prev_manifests + [manifest_rec],
+        {"operation": "delete"}, prev_meta,
         # the delete commits under the table's CURRENT schema, which
         # after evolution is not necessarily schema-id 0
-        "schema-id": int(prev_meta.get("current-schema-id", 0)),
-    }
-    if prev_meta.get("current-snapshot-id") is not None:
-        snapshot["parent-snapshot-id"] = prev_meta["current-snapshot-id"]
+        int(prev_meta.get("current-schema-id", 0)),
+    )
     meta = dict(prev_meta)
     meta["last-sequence-number"] = snap_id
     meta["last-updated-ms"] = 1700000000000 + snap_id
@@ -3198,7 +2941,6 @@ def iceberg_metadata_for_delta(spark, delta_dir: str) -> int:
     stats real Iceberg writers persist — so Iceberg-side metadata
     pruning works immediately. Returns the metadata version."""
     import re as _re
-    from concurrent.futures import ThreadPoolExecutor
 
     from feature_store_spark.sources.delta import DeltaTable
 
@@ -3346,111 +3088,37 @@ def iceberg_metadata_for_delta(spark, delta_dir: str) -> int:
             ).days
         return str(s)
 
-    paths = [os.path.join(t.path, a["path"]) for a in adds]
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        stats = list(
-            pool.map(
-                lambda p: _footer_stats(p, stats_key_fields), paths
+    footers = commit.footer_stats(
+        [os.path.join(t.path, a["path"]) for a in adds]
+    )
+    entries = []
+    for add, ft in zip(adds, footers):
+        pvals = add.get("partitionValues") or {}
+        # mapped tables key partitionValues by the PHYSICAL column name
+        partition = {
+            c: _typed_part(c, pvals.get(phys_of.get(c, c), pvals.get(c)))
+            for c in part_cols
+        }
+        entries.append(
+            _added_entry(
+                snap_id, 0, ft, partition,
+                bounds=_iceberg_bounds(ft.col_ranges, stats_key_fields),
             )
         )
-    entries = []
-    for add, fpath, (n, lowers, uppers) in zip(adds, paths, stats):
-        pvals = add.get("partitionValues") or {}
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": snap_id,
-                "file_sequence_number": snap_id,
-                "data_file": {
-                    "content": 0,
-                    "file_path": fpath,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        # mapped tables key partitionValues by the
-                        # PHYSICAL column name
-                        c: _typed_part(
-                            c,
-                            pvals.get(
-                                phys_of.get(c, c), pvals.get(c)
-                            ),
-                        )
-                        for c in part_cols
-                    },
-                    "record_count": n,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lowers.items())
-                    ],
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(uppers.items())
-                    ],
-                },
-            }
-        )
-    # per-field partition summaries for manifest-level pruning
-    part_summaries = []
-    for c in part_cols:
-        vals = [e["data_file"]["partition"][c] for e in entries]
-        nn = [v for v in vals if v is not None]
-        ty = field_by_name[c]["type"]
-        part_summaries.append(
-            {
-                "contains_null": any(v is None for v in vals),
-                "contains_nan": None,
-                "lower_bound": _encode_bound(ty, min(nn)) if nn else None,
-                "upper_bound": _encode_bound(ty, max(nn)) if nn else None,
-            }
-        )
-    mpath = os.path.join(
-        meta_dir, f"manifest-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
+    manifest_rec = _write_manifest(
+        meta_dir, "manifest", snap_id, manifest_schema(part_avro_fields),
+        entries, 0, 0,
+        _partition_summaries(
+            entries, [(c, field_by_name[c]["type"]) for c in part_cols]
+        ),
     )
-    write_avro(
-        mpath, manifest_schema(part_avro_fields), entries, codec="deflate"
-    )
-    mlist = os.path.join(
-        meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
-    )
-    write_avro(
-        mlist,
-        MANIFEST_LIST_SCHEMA,
-        [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": snap_id,
-                "min_sequence_number": snap_id,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": part_summaries,
-            }
-        ],
-        codec="deflate",
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "timestamp-ms": 1700000000000 + snap_id,
-        "sequence-number": snap_id,
-        # each export REPLACES the visible file set (the Delta state
-        # is authoritative; older iceberg snapshots stay for travel)
-        "summary": {"operation": "replace"},
-        "manifest-list": mlist,
-    }
-    if (prev_meta or {}).get("current-snapshot-id") is not None:
-        snapshot["parent-snapshot-id"] = prev_meta["current-snapshot-id"]
     schemas, cur_sid = _schemas_with(prev_meta, fields)
-    snapshot["schema-id"] = cur_sid
+    # each export REPLACES the visible file set (the Delta state is
+    # authoritative; older iceberg snapshots stay for travel)
+    snapshot = _new_snapshot(
+        meta_dir, snap_id, [manifest_rec], {"operation": "replace"},
+        prev_meta, cur_sid,
+    )
     new_meta = {
         "format-version": 2,
         "table-uuid": (prev_meta or {}).get(

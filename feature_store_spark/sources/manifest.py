@@ -28,8 +28,9 @@ Protocol:
    Nothing references them yet: a crash here leaves unreferenced
    garbage, never a partial table.
 2. COMMIT — the new snapshot (current files + new files for append;
-   new files only for overwrite) is serialized to a temp file, fsynced,
-   then ``os.link``-ed to ``_manifests/vN.json``. link(2) is atomic
+   new files only for overwrite) is published as ``_manifests/vN.json``
+   through ``commit.publish_if_absent`` (temp file, fsync, ``os.link``;
+   the kernel shared with the Delta and Iceberg writers). link(2) is atomic
    and fails with EEXIST if another writer took N first — the loser
    re-reads the new current snapshot and retries (append commits are
    order-independent: the retry is a pure metadata re-commit, the data
@@ -63,6 +64,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_store_spark.sources import commit
+from feature_store_spark.sources.commit import ConcurrentWriteError
+
 # 6+ digits, not exactly 6 (review r10): version %06d grows past six
 # digits at 1,000,000 commits — a strict {6} regex made that manifest
 # invisible (current_version stuck, every retry EEXIST-conflicting on
@@ -90,10 +94,6 @@ def _merge_schema_json(base_json: str, new_json: str) -> str:
                 "evolution only adds columns, it never retypes them"
             )
     return json.dumps({**base_s, "fields": fields})
-
-
-class CommitConflict(Exception):
-    """Another writer committed the version this commit raced for."""
 
 
 def _norm_stat(v):
@@ -192,97 +192,6 @@ def _stat_lt(stat, bound) -> bool:
 def _stat_gt(stat, bound) -> bool:
     c = _prune_cmp(stat, bound)
     return c is not None and c > 0
-
-
-def _file_column_ranges(path: str) -> dict[str, list]:
-    """Per-column [min, max] over a parquet file's row-group footers —
-    the data-skipping statistics an Iceberg manifest carries per data
-    file. Driver-side, reads footers only (never data pages). Columns
-    with missing/unusable stats are omitted (omitted = unknown =
-    never pruned)."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    out: dict[str, list] = {}
-    bad: set[str] = set()
-    for rg in range(pf.metadata.num_row_groups):
-        meta = pf.metadata.row_group(rg)
-        for ci in range(meta.num_columns):
-            col = meta.column(ci)
-            name = col.path_in_schema
-            if name in bad or "." in name:  # no nested-column pruning
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                bad.add(name)
-                out.pop(name, None)
-                continue
-            lo, hi = _norm_stat(st.min), _norm_stat(st.max)
-            if lo is None or hi is None:
-                bad.add(name)
-                out.pop(name, None)
-                continue
-            if name in out:
-                out[name][0] = min(out[name][0], lo)
-                out[name][1] = max(out[name][1], hi)
-            else:
-                out[name] = [lo, hi]
-    return out
-
-
-def _staging_rebalance(spark: SparkSession) -> bool:
-    """Whether unpartitioned staged writes add an AQE-sized REBALANCE
-    exchange (default on). The staged frames the write verbs produce
-    are shuffle- or localCheckpoint-derived, so their partition count
-    reflects the CONFIGURED parallelism, not the data size — written
-    as-is, every commit lands `shuffle.partitions` near-empty files.
-    The rebalance lets AQE size the written files by advisory bytes
-    at every scale. Parameterised so deployments that already control
-    input layout (or tests that need a specific staged file count)
-    can opt out per session."""
-    try:
-        return (
-            str(
-                spark.conf.get(
-                    "spark.feature_store.staging.rebalance", "true"
-                )
-            ).lower()
-            != "false"
-        )
-    except Exception:
-        return True
-
-
-def _publish_manifest(manifest_dir: str, name: str, payload: dict) -> None:
-    """THE commit point: write the snapshot to a temp file (fsynced,
-    fully on disk), then atomically link it into place. link(2) fails
-    with EEXIST when the version is already taken — commit-or-conflict,
-    never a torn manifest. Factored out as the crash-injection seam
-    (tests) and the object-store conditional-put seam (deploys)."""
-    tmp = os.path.join(manifest_dir, f".tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, os.path.join(manifest_dir, name))
-    except FileExistsError as e:
-        raise CommitConflict(
-            f"{name} already committed — refresh and retry"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    # fsync the DIRECTORY too (review r10): link(2) updates a dirent,
-    # and a power loss before the kernel flushes it loses the whole
-    # committed version — fatal to the exactly-once composition with
-    # streaming checkpoints (the checkpoint says batch N completed,
-    # the token that proves it is gone, the batch is never
-    # redelivered). File fsync alone does not cover the dirent.
-    dfd = os.open(manifest_dir, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
 
 
 class ManifestedTable:
@@ -484,58 +393,32 @@ class ManifestedTable:
         partition_by: Sequence[str] | None,
         preserve_layout: bool = False,
     ) -> tuple[list[str], str, dict]:
-        """Step 1: job-write to staging, rename finished part files
-        under data/<commit-uuid>/ preserving partition subdirs. Returns
-        (relative paths, schema json, per-file column ranges for
-        data-skipping). Unreferenced until commit."""
+        """Step 1: stage through the commit kernel, then rename the
+        files under data/<commit-uuid>/ preserving partition subdirs.
+        Returns (relative paths, schema json, per-file column ranges
+        for data-skipping). Unreferenced until commit."""
         commit_id = uuid.uuid4().hex
         staging = os.path.join(self.path, f".staging-{commit_id}")
-        if (
-            not partition_by
-            and not preserve_layout
-            and _staging_rebalance(self.spark)
-        ):
-            # AQE-sized REBALANCE (same rationale as the delta /
-            # iceberg staging paths): appended frames are typically
-            # shuffle-derived, so their partition count reflects the
-            # configured parallelism rather than the data size;
-            # rebalancing lets AQE size the written files by bytes,
-            # keeping per-commit file count (and every later scan's
-            # per-file open cost) proportional to data, not cores.
-            df = df.hint("rebalance")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
+        staged = commit.stage(
+            df,
+            staging,
+            partition_cols=partition_by or (),
+            rebalance=not preserve_layout,
+        )
         rels: list[str] = []
-        for root, _dirs, fnames in os.walk(staging):
-            for fn in fnames:
-                if not fn.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, fn)
-                rel = os.path.join(commit_id, os.path.relpath(src, staging))
-                dst = os.path.join(self.data_dir, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-                rels.append(rel)
-        # footer stats with a thread pool (review r10): one serial
-        # pyarrow footer read per part file put O(n_files) driver I/O
-        # on every commit's critical path — the same KB reads the
-        # iceberg exporters already pool
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            stats = dict(
-                zip(
-                    rels,
-                    pool.map(
-                        lambda r: _file_column_ranges(
-                            os.path.join(self.data_dir, r)
-                        ),
-                        rels,
-                    ),
-                )
-            )
+        stats: dict[str, dict] = {}
+        for f in staged:
+            rel = os.path.join(commit_id, os.path.relpath(f.path, staging))
+            dst = os.path.join(self.data_dir, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.rename(f.path, dst)
+            rels.append(rel)
+            stats[rel] = {}
+            for c, (lo, hi) in f.col_ranges.items():
+                lo, hi = _norm_stat(lo), _norm_stat(hi)
+                # no nested-column pruning; unusable stats stay unknown
+                if "." not in c and lo is not None and hi is not None:
+                    stats[rel][c] = [lo, hi]
         shutil.rmtree(staging, ignore_errors=True)
         if partition_by and rels:
             # read-back schema: partition cols come back typed-by-path
@@ -575,7 +458,7 @@ class ManifestedTable:
         base = self._current_manifest()
         base_version = base["version"] if base else 0
         if require_base is not None and base_version != require_base:
-            raise CommitConflict(
+            raise ConcurrentWriteError(
                 f"snapshot advanced v{require_base} -> v{base_version} "
                 "under a read-modify-write commit — re-derive and retry"
             )
@@ -609,7 +492,9 @@ class ManifestedTable:
             "txns": txns,
             "file_stats": file_stats,
         }
-        _publish_manifest(self.manifest_dir, f"v{version:06d}.json", payload)
+        commit.publish_if_absent(
+            self.manifest_dir, f"v{version:06d}.json", json.dumps(payload)
+        )
         return version
 
     def txn_version(self, app_id: str, version: int | None = None) -> int:
@@ -650,7 +535,7 @@ class ManifestedTable:
                 return self._commit(
                     rels, schema_json, "append", txn=txn, stats=stats
                 )
-            except CommitConflict:
+            except ConcurrentWriteError:
                 # racer won the version; re-check duplicate delivery
                 # (the racer may have been US via a retried channel)
                 if txn is not None and self.txn_version(txn[0]) >= int(
@@ -658,7 +543,7 @@ class ManifestedTable:
                 ):
                     return self.current_version()
                 continue
-        raise CommitConflict(
+        raise ConcurrentWriteError(
             f"append lost the version race {max_retries} times"
         )
 
@@ -739,14 +624,14 @@ class ManifestedTable:
                     require_base=base_version,
                     txn=txn,
                 )
-            except CommitConflict:
+            except ConcurrentWriteError:
                 # the racer may have been our own redelivered token
                 if txn is not None and self.txn_version(txn[0]) >= int(
                     txn[1]
                 ):
                     return self.current_version()
                 continue
-        raise CommitConflict(
+        raise ConcurrentWriteError(
             f"merge_upsert lost the snapshot race {max_retries} times"
         )
 

@@ -28,10 +28,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import feature_store_spark as fss  # noqa: E402
-from feature_store_spark.sources.manifest import (  # noqa: E402
-    CommitConflict,
-    ManifestedTable,
-)
+from feature_store_spark.sources.commit import ConcurrentWriteError  # noqa: E402
+from feature_store_spark.sources.manifest import ManifestedTable  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1")
@@ -84,7 +82,7 @@ def bench_scale(spark, label: str, sf_dir: str, out: dict) -> None:
 
 def bench_contention(spark, out: dict, writers: int = 8) -> None:
     """8 threads race single-partition appends at one table: counts
-    CAS retries (CommitConflict is the protocol's designed collision
+    CAS retries (ConcurrentWriteError is the protocol's designed collision
     signal — data files are staged once; only the metadata commit
     loops). All appends must land: final version == writers."""
     path = os.path.join(WORK, "contention")
@@ -100,7 +98,7 @@ def bench_contention(spark, out: dict, writers: int = 8) -> None:
     def counting_commit(*a, **kw):
         try:
             return orig_commit(*a, **kw)
-        except CommitConflict:
+        except ConcurrentWriteError:
             with lock:
                 counting_commit.conflicts += 1
             raise

@@ -19,3 +19,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def no_staging_rebalance(monkeypatch):
+    """Stage writes with the frame's own partitioning: for fixtures that
+    need several staged files, or rows in source order, where the
+    commit kernel's AQE rebalance would coalesce a KB frame into one
+    reordered file."""
+    from feature_store_spark.sources import commit
+
+    real_stage = commit.stage
+
+    def stage(*args, **kwargs):
+        kwargs["rebalance"] = False
+        return real_stage(*args, **kwargs)
+
+    monkeypatch.setattr(commit, "stage", stage)

@@ -1,0 +1,291 @@
+"""The shared commit kernel (``sources/commit.py``) under Delta, Iceberg
+and ManifestedTable: per-verb Spark job counts, file bounds built from
+row-group footers, the session-conf precondition, and cleanup when a
+write fails before publish."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+N_ROWS = 300
+MERGE_ARMS = [
+    {"condition": "src.event_time > tgt.event_time", "action": "update",
+     "set": None}
+]
+
+
+def _frame(spark, lo=0, hi=N_ROWS, shift=0):
+    return spark.range(lo, hi).select(
+        F.lit("user").alias("entity_type"),
+        F.col("id").alias("entity_id"),
+        (F.col("id") * 0.5 + shift).alias("value_float"),
+        F.timestamp_seconds(F.col("id") * 3600 + 86400 * shift).alias(
+            "event_time"
+        ),
+    )
+
+
+def _max_job_id(spark) -> int:
+    sc = spark.sparkContext
+    # the status store is fed by the listener bus; drain it so every
+    # job submitted so far (helper threads included) is visible
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _delta(verb):
+    from feature_store_spark.sources import delta as d
+
+    def setup(spark, path):
+        d.delta_append(_frame(spark), path)
+        d.delta_append(_frame(spark, N_ROWS, 2 * N_ROWS), path)
+
+    calls = {
+        "delta_append": lambda s, p: d.delta_append(
+            _frame(s, 2 * N_ROWS, 3 * N_ROWS), p
+        ),
+        "delta_upsert": lambda s, p: d.delta_upsert(
+            _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p,
+            keys=["entity_id"],
+        ),
+        "delta_merge": lambda s, p: d.delta_merge(
+            _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p,
+            keys=["entity_id"], when_matched=MERGE_ARMS,
+        ),
+        "delta_delete_where": lambda s, p: d.delta_delete_where(
+            s, p, [("entity_id", "<", 50)]
+        ),
+        "delta_optimize": lambda s, p: d.delta_optimize(s, p),
+    }
+    return setup, calls[verb]
+
+
+def _iceberg(verb):
+    from feature_store_spark.sources import iceberg_write as i
+
+    def setup(spark, path):
+        i.iceberg_append(_frame(spark), path)
+        i.iceberg_append(_frame(spark, N_ROWS, 2 * N_ROWS), path)
+
+    calls = {
+        "iceberg_append": lambda s, p: i.iceberg_append(
+            _frame(s, 2 * N_ROWS, 3 * N_ROWS), p
+        ),
+        "iceberg_upsert": lambda s, p: i.iceberg_upsert(
+            _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p,
+            keys=["entity_id"],
+        ),
+        "iceberg_merge": lambda s, p: i.iceberg_merge(
+            _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p,
+            keys=["entity_id"], when_matched=MERGE_ARMS,
+        ),
+        "iceberg_delete_where": lambda s, p: i.iceberg_delete_where(
+            s, p, [("entity_id", "<", 50)]
+        ),
+        "iceberg_rewrite": lambda s, p: i.iceberg_rewrite(s, p),
+    }
+    return setup, calls[verb]
+
+
+def _manifest(verb):
+    from feature_store_spark.sources.manifest import ManifestedTable
+
+    def setup(spark, path):
+        ManifestedTable(spark, path).append(_frame(spark))
+
+    def call(spark, path):
+        ManifestedTable(spark, path).append(
+            _frame(spark, N_ROWS, 2 * N_ROWS)
+        )
+
+    return setup, call
+
+
+# Spark jobs per verb call at a few hundred rows. Job counts are
+# deterministic, so a change here is a change in job choreography: the
+# commit path must not move them without a reason.
+EXPECTED_JOBS = {
+    "delta_append": 2,
+    "delta_upsert": 8,
+    "delta_merge": 11,
+    "delta_delete_where": 2,
+    "delta_optimize": 2,
+    "iceberg_append": 2,
+    "iceberg_upsert": 3,
+    "iceberg_merge": 13,
+    "iceberg_delete_where": 3,
+    "iceberg_rewrite": 3,
+    "ManifestedTable.append": 2,
+}
+
+
+@pytest.mark.parametrize("verb", list(EXPECTED_JOBS))
+def test_verb_job_counts_pinned(spark, tmp_path, verb):
+    if verb.startswith("delta_"):
+        setup, call = _delta(verb)
+    elif verb.startswith("iceberg_"):
+        setup, call = _iceberg(verb)
+    else:
+        setup, call = _manifest(verb)
+    path = str(tmp_path / "t")
+    setup(spark, path)
+    before = _max_job_id(spark)
+    call(spark, path)
+    jobs = _max_job_id(spark) - before
+    assert jobs == EXPECTED_JOBS[verb]
+
+
+LONG_KEY = "k" + "x" * 4999  # sorts after every short key
+
+
+@pytest.fixture
+def small_row_groups(spark):
+    """Writers in this test cut ~100-row row groups: Spark's parquet
+    writer reads the block size from the shared session's Hadoop conf,
+    so it is set for the test and restored after."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    prev = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", "2048")
+    try:
+        yield
+    finally:
+        if prev is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", prev)
+
+
+def _long_key_frame(spark):
+    rows = [(f"k{i:04d}", i) for i in range(400)] + [(LONG_KEY, 400)]
+    return spark.createDataFrame(rows, "key string, v long").coalesce(1)
+
+
+def _assert_statless_row_group(paths):
+    """The fixture's point: some row group holds keys but its footer
+    has no min/max (parquet-mr drops stats over 4 KB)."""
+    import pyarrow.parquet as pq
+
+    hit = False
+    for p in paths:
+        md = pq.ParquetFile(p).metadata
+        for rg in range(md.num_row_groups):
+            col = md.row_group(rg).column(0)
+            assert col.path_in_schema == "key"
+            st = col.statistics
+            all_null = (
+                st is not None
+                and st.has_null_count
+                and st.null_count == col.num_values
+            )
+            if (st is None or not st.has_min_max) and not all_null:
+                hit = True
+    assert hit
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "manifest"])
+def test_partial_footer_stats_never_prune_matching_rows(
+    spark, tmp_path, small_row_groups, fmt
+):
+    path = str(tmp_path / fmt)
+    df = _long_key_frame(spark)
+    if fmt == "delta":
+        from feature_store_spark.sources.delta import DeltaTable, delta_append
+
+        delta_append(df, path)
+        t = DeltaTable(spark, path)
+        files = [os.path.join(path, a["path"]) for a in t.data_files()]
+
+        def scan(k):
+            return t.scan(filters=[("key", "=", k)])
+    elif fmt == "iceberg":
+        from feature_store_spark.sources.iceberg import IcebergTable
+        from feature_store_spark.sources.iceberg_write import iceberg_append
+
+        iceberg_append(df, path, partition_spec=[])
+        t = IcebergTable(spark, path)
+        files = [f["path"] for f in t.data_files(None, None)]
+
+        def scan(k):
+            return t.scan(filters=[("key", "=", k)])
+    else:
+        from feature_store_spark.sources.manifest import ManifestedTable
+
+        t = ManifestedTable(spark, path)
+        t.append(df)
+        files = t.files()
+
+        def scan(k):
+            return t.read(prune={"key": (k, k)}).filter(F.col("key") == k)
+
+    _assert_statless_row_group(files)
+    for k in (LONG_KEY, "k0399", "k0000"):
+        assert scan(k).count() == 1, k[:8]
+
+
+def test_stage_refuses_int96_timestamps(spark, tmp_path):
+    """INT96 timestamps carry no footer min/max. The kernel refuses to
+    stage them: flipping the process-global conf around a write would
+    race concurrent writers."""
+    from feature_store_spark.sources import commit
+    from feature_store_spark.sources.iceberg_write import iceberg_append
+
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        with pytest.raises(ValueError, match="TIMESTAMP_MICROS"):
+            commit.stage(_frame(spark), str(tmp_path / "staged"))
+        with pytest.raises(ValueError, match="TIMESTAMP_MICROS"):
+            iceberg_append(_frame(spark), str(tmp_path / "ice"))
+    finally:
+        spark.conf.set(key, prev)
+    assert not os.path.exists(tmp_path / "staged")
+    # nothing staged, nothing committed
+    assert not os.path.exists(tmp_path / "ice" / "data")
+    assert not os.listdir(tmp_path / "ice" / "metadata")
+
+
+def test_failed_delete_file_write_leaves_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """An upsert whose equality-delete write fails (after its data
+    write succeeded) removes both staged dirs and commits nothing."""
+    from feature_store_spark.sources import commit
+    from feature_store_spark.sources.iceberg import IcebergTable
+    from feature_store_spark.sources.iceberg_write import (
+        iceberg_append,
+        iceberg_upsert,
+    )
+
+    path = str(tmp_path / "ice")
+    iceberg_append(_frame(spark), path)
+    t = IcebergTable(spark, path)
+    rows_before = sorted(map(tuple, t.scan().collect()))
+    history_before = t.snapshots_df().collect()
+    data_dir = os.path.join(path, "data")
+    dirs_before = set(os.listdir(data_dir))
+
+    real_stage = commit.stage
+
+    def failing_stage(df, staging_dir, *args, **kwargs):
+        if "eq-deletes" in os.path.basename(staging_dir):
+            # a write that died part-way: debris, then the error
+            os.makedirs(staging_dir)
+            open(os.path.join(staging_dir, "part-0.parquet"), "w").close()
+            raise OSError("delete-file write failed")
+        return real_stage(df, staging_dir, *args, **kwargs)
+
+    monkeypatch.setattr(commit, "stage", failing_stage)
+    with pytest.raises(OSError, match="delete-file write failed"):
+        iceberg_upsert(
+            _frame(spark, 0, 50, 1), path, keys=["entity_id"]
+        )
+    monkeypatch.undo()
+
+    t = IcebergTable(spark, path)
+    assert sorted(map(tuple, t.scan().collect())) == rows_before
+    assert t.snapshots_df().collect() == history_before
+    assert set(os.listdir(data_dir)) == dirs_before

@@ -354,7 +354,7 @@ class TestDeletionVectors:
         with pytest.raises(ValueError, match="no live rows"):
             delta_delete_where(spark, d, [("eid", "<", 8)])
 
-    def test_inline_dv_scan(self, spark, tmp_path):
+    def test_inline_dv_scan(self, spark, tmp_path, no_staging_rebalance):
         """An inline (storageType 'i', Z85) DV decodes and applies."""
         from feature_store_spark.sources.roaring import (
             serialize_rbm_array, z85_encode,
@@ -363,13 +363,9 @@ class TestDeletionVectors:
         d = str(tmp_path / "inline")
         df = spark.range(10).coalesce(1).select(F.col("id").alias("eid"))
         # the hand-crafted DV below kills ordinals 0-2, so the file
-        # must land in SOURCE row order — opt out of the staging
-        # rebalance, whose exchange re-orders rows within the file
-        spark.conf.set("spark.feature_store.staging.rebalance", "false")
-        try:
-            delta_append(df, d)  # ONE data file: positions are global
-        finally:
-            spark.conf.unset("spark.feature_store.staging.rebalance")
+        # must land in SOURCE row order — no_staging_rebalance opts out
+        # of the staging rebalance, whose exchange re-orders rows
+        delta_append(df, d)  # ONE data file: positions are global
         t = DeltaTable(spark, d)
         add = t.data_files()[0]
         data = serialize_rbm_array([0, 1, 2])
@@ -727,7 +723,9 @@ class TestOptimize:
             range(30, 100)
         )
 
-    def test_zorder_clusters_both_dimensions(self, spark, tmp_path):
+    def test_zorder_clusters_both_dimensions(
+        self, spark, tmp_path, no_staging_rebalance
+    ):
         """Z-ORDER while compacting: after optimize(zorder_by=[x,y]),
         file-level min/max prune on BOTH dimensions."""
         from feature_store_spark.sources.delta import delta_optimize
@@ -739,13 +737,9 @@ class TestOptimize:
             F.col("id").alias("payload"),
         ).repartition(8)
         # the scenario needs a MULTI-file unoptimized table (the
-        # .repartition(8) above is the fixture's point); opt out of
-        # the staging rebalance that would coalesce this KB frame
-        spark.conf.set("spark.feature_store.staging.rebalance", "false")
-        try:
-            delta_append(df, d)
-        finally:
-            spark.conf.unset("spark.feature_store.staging.rebalance")
+        # .repartition(8) above is the fixture's point);
+        # no_staging_rebalance keeps this KB frame from coalescing
+        delta_append(df, d)
         delta_optimize(
             spark, d, target_file_bytes=8 << 10, zorder_by=["x", "y"]
         )
@@ -939,18 +933,16 @@ class TestReviewRegressions:
         delta_vacuum(spark, d)
         assert DeltaTable(spark, d).scan().count() == 15
 
-    def test_optimize_id_mode_keeps_field_ids(self, spark, tmp_path):
+    def test_optimize_id_mode_keeps_field_ids(
+        self, spark, tmp_path, no_staging_rebalance
+    ):
         from feature_store_spark.sources.delta import delta_optimize
         from feature_store_spark.sources.iceberg import parquet_field_ids
 
         d = str(tmp_path / "optid")
         df = spark.range(40).select(F.col("id").alias("eid")).repartition(4)
         # multi-file fixture on purpose (see test_zorder note)
-        spark.conf.set("spark.feature_store.staging.rebalance", "false")
-        try:
-            delta_append(df, d, column_mapping="id")
-        finally:
-            spark.conf.unset("spark.feature_store.staging.rebalance")
+        delta_append(df, d, column_mapping="id")
         delta_optimize(spark, d)
         t = DeltaTable(spark, d)
         for a in t.data_files():

@@ -5,11 +5,13 @@ killed writer must NEVER expose a partial table, at any kill point."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from feature_store_spark.sources import commit
 from feature_store_spark.sources import manifest as M
 
 
@@ -35,7 +37,7 @@ class TestCommitProtocol:
         )
 
     def test_kill_during_data_write_exposes_nothing(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path, monkeypatch, no_staging_rebalance
     ):
         """Kill point 1: mid-way through moving part files into data/.
         The snapshot must stay exactly the old one; the half-moved
@@ -56,14 +58,10 @@ class TestCommitProtocol:
         monkeypatch.setattr(M.os, "rename", dying_rename)
         # the kill scenario needs the staged write to land MULTIPLE
         # part files (die mid-way through moving them); the staging
-        # rebalance would coalesce this KB frame to one file, so opt
-        # out for this append via the session knob
-        spark.conf.set("spark.feature_store.staging.rebalance", "false")
-        try:
-            with pytest.raises(OSError, match="killed"):
-                t.append(_df(spark, 5, 9, "b").repartition(3))
-        finally:
-            spark.conf.unset("spark.feature_store.staging.rebalance")
+        # rebalance would coalesce this KB frame to one file, so
+        # no_staging_rebalance opts out
+        with pytest.raises(OSError, match="killed"):
+            t.append(_df(spark, 5, 9, "b").repartition(3))
         monkeypatch.undo()
 
         assert t.current_version() == 1
@@ -87,7 +85,7 @@ class TestCommitProtocol:
         def dying_publish(*_a, **_k):
             raise OSError("killed pre-publish")
 
-        monkeypatch.setattr(M, "_publish_manifest", dying_publish)
+        monkeypatch.setattr(commit, "publish_if_absent", dying_publish)
         with pytest.raises(OSError, match="pre-publish"):
             t.append(_df(spark, 5, 9, "b"))
         monkeypatch.undo()
@@ -103,21 +101,21 @@ class TestCommitProtocol:
     def test_torn_manifest_write_invisible(
         self, spark, tmp_path, monkeypatch
     ):
-        """Kill point 3: death while serializing the manifest itself.
-        The temp file never links into the log, so readers cannot see
-        a torn manifest."""
+        """Kill point 3: death while writing the manifest itself (its
+        temp file is not yet durable). The temp file never links into
+        the log, so readers cannot see a torn manifest."""
         t = M.ManifestedTable(spark, str(tmp_path / "t"))
         t.append(_df(spark, 0, 5, "a"))
 
-        real_dump = M.json.dump
+        real_fsync = commit.os.fsync
 
-        def dying_dump(*a, **k):
+        def dying_fsync(*a, **k):
             raise OSError("killed mid-serialize")
 
-        monkeypatch.setattr(M.json, "dump", dying_dump)
+        monkeypatch.setattr(commit.os, "fsync", dying_fsync)
         with pytest.raises(OSError, match="mid-serialize"):
             t.append(_df(spark, 5, 9, "b"))
-        monkeypatch.setattr(M.json, "dump", real_dump)
+        monkeypatch.setattr(commit.os, "fsync", real_fsync)
 
         assert t.current_version() == 1
         assert len(_rows(t.read())) == 5
@@ -133,7 +131,7 @@ class TestCommitProtocol:
         t.append(_df(spark, 0, 3, "a"))
         other = M.ManifestedTable(spark, path)
 
-        real_publish = M._publish_manifest
+        real_publish = commit.publish_if_absent
         state = {"raced": False}
 
         def racing_publish(mdir, name, payload):
@@ -142,7 +140,7 @@ class TestCommitProtocol:
                 other.append(_df(spark, 100, 103, "other"))  # wins N first
             return real_publish(mdir, name, payload)
 
-        monkeypatch.setattr(M, "_publish_manifest", racing_publish)
+        monkeypatch.setattr(commit, "publish_if_absent", racing_publish)
         t.append(_df(spark, 3, 6, "b"))
         monkeypatch.undo()
 
@@ -250,12 +248,15 @@ class TestSnapshotSemantics:
         t.append(base)
         other = M.ManifestedTable(spark, path)
 
-        real_publish = M._publish_manifest
+        real_publish = commit.publish_if_absent
         state = {"raced": False}
 
         def racing_publish(mdir, name, payload):
             # only interleave under the merge's own overwrite commit
-            if not state["raced"] and payload["mode"] == "overwrite":
+            if (
+                not state["raced"]
+                and json.loads(payload)["mode"] == "overwrite"
+            ):
                 state["raced"] = True
                 other.append(
                     spark.createDataFrame(
@@ -264,7 +265,7 @@ class TestSnapshotSemantics:
                 )
             return real_publish(mdir, name, payload)
 
-        monkeypatch.setattr(M, "_publish_manifest", racing_publish)
+        monkeypatch.setattr(commit, "publish_if_absent", racing_publish)
         t.merge_upsert(
             spark.createDataFrame(
                 [("u1", 2.0, 20)], "k string, v double, ts long"
@@ -307,7 +308,7 @@ class TestSnapshotSemantics:
         assert _rows(t.read()) == before
         assert len(t.files()) < n_files_before
         # CAS: compacting against a stale base conflicts
-        with pytest.raises(M.CommitConflict):
+        with pytest.raises(commit.ConcurrentWriteError):
             t.overwrite(_df(spark, 0, 1, "x"), require_base=2)
 
 

@@ -19,26 +19,20 @@ from pyspark.sql import DataFrame, SparkSession
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply engine session settings to a driver-provided session
     (the driver builds its own SparkSession; the nanos conf must be
-    set before any parquet read). All of these are runtime-settable
-    confs: shuffle partitions sized to the box (a vanilla 200 would
-    pay 200-task stages on fixture-scale aggregates before AQE
-    coalesces), Arrow for the pandas-UDF and toPandas paths."""
+    set before any parquet read): every runtime-settable conf
+    ``get_spark`` uses (``session.SESSION_CONFS``), plus shuffle
+    partitions sized to the box (a vanilla 200 would pay 200-task
+    stages on fixture-scale aggregates before AQE coalesces)."""
     import os
 
+    from feature_store_spark.session import SESSION_CONFS
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for key, value in SESSION_CONFS.items():
+        spark.conf.set(key, value)
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus),
-    )
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # annotated MICROS, not INT96: INT96 has no footer min/max stats,
-    # which blinds parquet row-group skipping and the manifest
-    # data-skipping stats on written timestamp columns
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
     )
     return spark
 

@@ -4,8 +4,10 @@ positional vector assembly (SURVEY.md §2.7 U2/U3/U5, §2.2 L6).
 The reference's feature vectors are positional arrays ordered by
 ``feature_view_members.position`` (feature_store.proto:49-68); scalar
 assembly fills gaps with defaults and records a mask + per-slot ages
-(RocksDBFeatureStore.java:281-328). Here those are pivots + ``array()``
-of columns in schema order.
+(RocksDBFeatureStore.java:281-328). Here assembly is one
+``groupBy(entity)`` with a ``max_by`` per slot, then ``array()`` of the
+slots in schema order; the slot helpers are shared with the serving
+get (serving.py), so both apply one default / mask / age rule.
 """
 
 from __future__ import annotations
@@ -15,8 +17,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from feature_store_spark.session import local_rows_df
-
-from feature_store_spark.functions import epoch_ms
 
 
 def melt(
@@ -89,6 +89,103 @@ def latest_per_key(
     )
 
 
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier, so dotted or
+    keyword names (``ctr.7d``, ``values``) resolve as one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """A Python string as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_double(x: float) -> str:
+    x = float(x)
+    if x != x or x in (float("inf"), float("-inf")):
+        return f"CAST('{x}' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def _epoch_ms_sql(ts: str) -> str:
+    # functions.epoch_ms as SQL text: floor of the epoch microseconds
+    return f"CAST(floor(unix_micros({ts}) / 1000) AS BIGINT)"
+
+
+def in_features_sql(name_col: str, feature_names: Sequence[str]) -> str:
+    """Predicate: the row's feature is a member of the view."""
+    if not feature_names:
+        return "false"
+    return f"{sql_ident(name_col)} IN ({', '.join(map(sql_str, feature_names))})"
+
+
+def slot_projection_sql(
+    name_col: str,
+    value_col: str,
+    time_col: str,
+    tiebreak_cols: Sequence[str] = (),
+) -> list[str]:
+    """A scalar row as slot-aggregation input: ``__n`` its feature,
+    ``__s`` the (v double, t epoch-ms) struct a slot serves, ``__o``
+    its recency key (time, then tiebreaks, then the value).
+
+    ``max`` over ``__o`` is the row ``latest_per_key`` keeps: struct
+    fields order NULL lowest, so a NULL time loses to any time and a
+    NULL tiebreak to any tiebreak (time desc, tiebreaks desc nulls
+    last). The value comes last so an exact tie still picks one
+    deterministic row. The value is cast to double INSIDE the struct:
+    the sentinel invariant is "mask true <=> default served <=> age
+    -1", and it keys on the value AS SERVED — a NULL raw
+    value serves the default, so its t must not leak into the age."""
+    v = f"CAST({sql_ident(value_col)} AS DOUBLE)"
+    t = sql_ident(time_col)
+    order = ", ".join([t, *map(sql_ident, tiebreak_cols), v])
+    return [
+        f"{sql_ident(name_col)} AS __n",
+        f"named_struct('v', {v}, 't', {_epoch_ms_sql(t)}) AS __s",
+        f"struct({order}) AS __o",
+    ]
+
+
+def slot_aggregates_sql(feature_names: Sequence[str]) -> list[str]:
+    """One ``max_by`` per feature over rows projected by
+    ``slot_projection_sql``: ``__slot<i>`` is the latest (v, t) of
+    feature i for the group, NULL when the group has none."""
+    return [
+        f"max_by(__s, CASE WHEN __n = {sql_str(n)} THEN __o END) AS __slot{i}"
+        for i, n in enumerate(feature_names)
+    ]
+
+
+def slot_vectors_sql(
+    feature_names: Sequence[str],
+    defaults: dict[str, float] | None = None,
+    now_ms: int | None = None,
+) -> tuple[str, str, str]:
+    """Slot structs -> (values, is_default_mask, value_ages_ms) SQL.
+
+    RocksDBFeatureStore.java:281-328: a slot with no value serves the
+    feature's default with mask true and age -1; a served value has
+    mask false and age ``now - t`` (-1 when its time is NULL)."""
+    defaults = defaults or {}
+    now = f"{int(now_ms)}L" if now_ms is not None else _epoch_ms_sql("current_timestamp()")
+    slots = [f"__slot{i}" for i in range(len(feature_names))]
+    values = [
+        f"coalesce({s}.v, {_sql_double(defaults.get(n, 0.0))})"
+        for s, n in zip(slots, feature_names)
+    ]
+    mask = [f"{s}.v IS NULL" for s in slots]
+    ages = [
+        f"CASE WHEN {s}.v IS NULL OR {s}.t IS NULL THEN -1L ELSE {now} - {s}.t END"
+        for s in slots
+    ]
+    return (
+        f"CAST(array({', '.join(values)}) AS array<double>)",
+        f"CAST(array({', '.join(mask)}) AS array<boolean>)",
+        f"CAST(array({', '.join(ages)}) AS array<bigint>)",
+    )
+
+
 def assemble_vectors(
     scalars: DataFrame,
     feature_names: Sequence[str],
@@ -104,76 +201,37 @@ def assemble_vectors(
 
     Reference: RocksDBFeatureStore.java:281-328 — for each feature of
     the schema, MultiGet the scalar; missing -> default + mask=true +
-    age=-1; present -> value + age=now-event_time.
+    age=-1; present -> value + age=now-event_time. Each slot holds the
+    latest row of its (entity, feature) by time desc, then tiebreaks
+    desc nulls last.
 
     Output: entity_col, ``values array<double>`` (schema order),
     ``is_default_mask array<boolean>``, ``value_ages_ms array<long>``.
+
+    One shuffle: a ``groupBy(entity)`` with one ``max_by`` per slot,
+    built from SQL text (each Column built in Python is a py4j round
+    trip). Slots are positional, so feature names never become column
+    names (a feature ``ctr.7d`` or one named like ``entity_col`` needs
+    no quoting).
     """
-    defaults = defaults or {}
     feature_names = list(feature_names)
-
-    latest = latest_per_key(
-        scalars.filter(F.col(name_col).isin(feature_names)),
-        [entity_col, name_col],
-        time_col,
-        tiebreak_cols,
-    )
-    # ONE pivot of (value, time) structs — not two pivots + a join
-    # (which would shuffle the latest-scalars twice and re-join them)
-    # cast to double INSIDE the struct (review r10m): the sentinel
-    # invariant is "mask true <=> default served <=> age -1", and it
-    # must key on the value AS SERVED — a NULL raw value (or one that
-    # fails the double cast, e.g. a string 'n/a') serves the default,
-    # so its t must not leak into the age and its mask must say
-    # default. assemble_flat already casts before the null check.
-    pivoted = (
-        latest.groupBy(entity_col)
-        .pivot(name_col, feature_names)
-        .agg(
-            F.first(
-                F.struct(
-                    F.col(value_col).cast("double").alias("v"),
-                    epoch_ms(F.col(time_col)).alias("t"),
-                )
-            )
+    values, mask, ages = slot_vectors_sql(feature_names, defaults, now_ms)
+    # a view without members still needs one aggregate to group by
+    aggs = slot_aggregates_sql(feature_names) or ["count(1)"]
+    slots = (
+        scalars.where(in_features_sql(name_col, feature_names))
+        .selectExpr(
+            sql_ident(entity_col),
+            *slot_projection_sql(name_col, value_col, time_col, tiebreak_cols),
         )
+        .groupBy(entity_col)
+        .agg(*map(F.expr, aggs))
     )
-
-    def slot(n: str):
-        # pivot emits columns NAMED the feature values: access by
-        # backtick-quoted name, or a feature like 'ctr.7d' parses as
-        # a struct path and an entity_col-named feature goes
-        # ambiguous (review r10m)
-        return F.col(f"`{n}`")
-
-    now_expr = (
-        F.lit(now_ms)
-        if now_ms is not None
-        else epoch_ms(F.current_timestamp())
-    )
-    values = F.array(
-        *[
-            F.coalesce(
-                slot(n)["v"], F.lit(float(defaults.get(n, 0.0)))
-            )
-            for n in feature_names
-        ]
-    )
-    mask = F.array(*[slot(n)["v"].isNull() for n in feature_names])
-    ages = F.array(
-        *[
-            F.when(
-                slot(n)["v"].isNull() | slot(n)["t"].isNull(),
-                F.lit(-1).cast("long"),
-            ).otherwise((now_expr - slot(n)["t"]).cast("long"))
-            for n in feature_names
-        ]
-    )
-    return pivoted.select(
-        F.col(entity_col),
-        values.alias("values"),
-        mask.alias("is_default_mask"),
-        ages.alias("value_ages_ms"),
+    return slots.selectExpr(
+        sql_ident(entity_col),
+        f"{values} AS values",
+        f"{mask} AS is_default_mask",
+        f"{ages} AS value_ages_ms",
     )
 
 

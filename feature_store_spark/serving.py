@@ -6,10 +6,18 @@ latency tiers are infrastructure, not semantics; what must be
 preserved is the *routing logic* and the vector contract (values +
 is_default_mask + value_ages_ms + source + staleness warnings). Here:
 
-- ``online_vectors`` / ``online_scalars`` are tables (FIXTURES.md §7),
-- a batch get is ONE query: requested ids (broadcast) left-joined to
-  vectors, then to assembled scalars, ``coalesce`` picking the source —
-  the Spark shape of the fallback chain,
+- the cache, ``online_vectors`` and ``online_scalars`` tiers are tables
+  (FIXTURES.md §7),
+- a batch get is ONE aggregate over request-filtered tiers: each tier
+  is reached only through a ``left_semi`` join against the broadcast
+  request ids (one broadcast, reused by all three tiers), so a get
+  reads O(requested) tier rows past the scan and shuffles no whole
+  table. The filtered tier rows and the request rows themselves are
+  unioned into one ``groupBy(entity)``: ``min_by`` over tier priority
+  picks the cache/vector envelope, one ``max_by`` per feature slot
+  assembles the scalar tier (the slot rule ``assemble_vectors`` uses),
+  and exploding the collected request rows gives one response per
+  request row — three Spark jobs per get (broadcast, shuffle, result),
 - the ``source`` column reproduces ROCKSDB_VECTOR / SCALAR_ASSEMBLY /
   MISS routing (OnlineServingService.java:50,69,90,98); REDIS_CACHE is
   a cache tier with identical semantics to the vector hit.
@@ -18,13 +26,30 @@ is_default_mask + value_ages_ms + source + staleness warnings). Here:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_store_spark.operators.reshape import assemble_vectors
+from feature_store_spark.operators.reshape import (
+    in_features_sql,
+    slot_aggregates_sql,
+    slot_projection_sql,
+    slot_vectors_sql,
+    sql_ident,
+)
 
 STALENESS_WARN_MS = 24 * 3600 * 1000  # RocksDBFeatureStore.java:154-160
+
+_ENVELOPE = "struct<values:array<double>,mask:array<boolean>,ages:array<bigint>>"
+
+
+def _envelope_sql(ages: str = "`value_ages_ms`") -> str:
+    return (
+        "named_struct('values', CAST(`values` AS array<double>),"
+        " 'mask', CAST(`is_default_mask` AS array<boolean>),"
+        f" 'ages', CAST({ages} AS array<bigint>)) AS __e"
+    )
 
 
 def get_online_features(
@@ -42,19 +67,25 @@ def get_online_features(
 
     request_ids: a DataFrame with ``entity_col`` (kept in input order
     via an explicit ``request_order`` column if present).
-    Returns one row per requested id with values / mask / ages /
-    source / stale_warning.
+    Returns one row per request row — its columns as given, duplicate
+    and NULL ids included — with values / mask / ages / source /
+    stale_warning.
 
-    ``vectors`` must hold ONE row per entity — the contract the
+    ``vectors`` should hold ONE row per entity — the contract the
     materializer's last-writer-wins MERGE maintains (a KV store can't
-    hold two values per key). Duplicate vector rows would fan out the
-    left join to duplicate responses; the scalar side is immune
-    (assembly dedupes via latest_per_key).
+    hold two values per key); so should ``cache``. Duplicate cache or
+    vector rows break that contract but not the response shape: the
+    get still answers one row per request row, from one of the
+    duplicates. A cache or vector row with NULL ``values`` counts as
+    absent. The scalar tier may hold any number of rows per (entity,
+    feature): each slot serves the latest by ``event_time`` (NULL
+    times lose), the rule ``assemble_vectors`` applies; features
+    outside ``feature_names`` are ignored.
 
     ``cache`` + ``cache_ttl_ms`` add the REDIS_CACHE tier WITH its
     TTL semantics (RedisFeatureCache.java:45-120; the TTL knob is
     application.yml:53-55): a cache row (same vector envelope plus
-    ``cached_at_ms``, one row per entity like ``vectors``) serves
+    ``cached_at_ms``) serves
     iff ``now_ms - cached_at_ms < cache_ttl_ms``; an expired entry
     behaves exactly like an absent one and the read falls through to
     the deeper tiers. Served cache ages are aged forward by the
@@ -67,128 +98,85 @@ def get_online_features(
     those rows. ``now_ms`` is required with a cache: TTL needs a
     clock, and serving must not read the wall clock mid-plan
     (non-deterministic across retries).
+
+    The plan is built from SQL text: each Column built in Python is a
+    py4j round trip, and on a small get that driver time is most of
+    the call.
     """
+    if cache is not None and (cache_ttl_ms is None or now_ms is None):
+        raise ValueError(
+            "cache tier needs BOTH cache_ttl_ms and now_ms — TTL "
+            "expiry is relative to an explicit serving clock"
+        )
     feature_names = list(feature_names)
-    out = request_ids
+    key = sql_ident(entity_col)
+    requested_keys = F.broadcast(request_ids.select(entity_col))
 
+    def requested(tier: DataFrame, where: str, *cols: str) -> DataFrame:
+        return (
+            tier.where(where)
+            .join(requested_keys, entity_col, "left_semi")
+            .selectExpr(f"{key} AS __k", *cols)
+        )
+
+    request_struct = ", ".join(map(sql_ident, request_ids.columns))
+    rows = [
+        request_ids.selectExpr(
+            f"{key} AS __k",
+            f"struct({request_struct}) AS __r",
+            "CAST(NULL AS INT) AS __p",
+            f"CAST(NULL AS {_ENVELOPE}) AS __e",
+        )
+    ]
+    aggs = ["collect_list(__r) AS __reqs", "min(__p) AS __p", "min_by(__e, __p) AS __e"]
     if cache is not None:
-        if cache_ttl_ms is None or now_ms is None:
-            raise ValueError(
-                "cache tier needs BOTH cache_ttl_ms and now_ms — TTL "
-                "expiry is relative to an explicit serving clock"
+        # forward only REAL ages: -1 is the default-slot
+        # sentinel the slot rule writes and staleness_gate keys on
+        elapsed = f"({int(now_ms)}L - `cached_at_ms`)"
+        ages = f"transform(`value_ages_ms`, a -> CASE WHEN a < 0 THEN a ELSE a + {elapsed} END)"
+        rows.append(
+            requested(
+                cache,
+                f"`values` IS NOT NULL AND {elapsed} < {int(cache_ttl_ms)}L",
+                "0 AS __p",
+                _envelope_sql(ages),
             )
-        c = cache.select(
-            F.col(entity_col),
-            F.col("values").alias("__c_values"),
-            F.col("is_default_mask").alias("__c_mask"),
-            F.col("value_ages_ms").alias("__c_ages"),
-            F.col("cached_at_ms").alias("__c_at"),
         )
-        out = out.join(c, entity_col, "left")
-        elapsed = F.lit(now_ms) - F.col("__c_at")
-        fresh = F.col("__c_at").isNotNull() & (elapsed < F.lit(cache_ttl_ms))
-        out = (
-            out.withColumn(
-                "__cache_values", F.when(fresh, F.col("__c_values"))
-            )
-            .withColumn("__cache_mask", F.when(fresh, F.col("__c_mask")))
-            .withColumn(
-                "__cache_ages",
-                F.when(
-                    fresh,
-                    # forward only REAL ages (review r10): -1 is the
-                    # default-slot sentinel assemble_vectors writes and
-                    # staleness_gate keys on — adding elapsed minted a
-                    # bogus non-negative age, making default slots
-                    # indistinguishable from real values (and able to
-                    # trip stale_warning on their own past the TTL)
-                    F.transform(
-                        F.col("__c_ages"),
-                        lambda a: F.when(a < 0, a).otherwise(a + elapsed),
-                    ),
-                ),
-            )
-            .drop("__c_values", "__c_mask", "__c_ages", "__c_at")
-        )
-    else:
-        out = (
-            out.withColumn(
-                "__cache_values", F.lit(None).cast("array<double>")
-            )
-            .withColumn("__cache_mask", F.lit(None).cast("array<boolean>"))
-            .withColumn("__cache_ages", F.lit(None).cast("array<bigint>"))
-        )
-
     if vectors is not None:
-        v = vectors.select(
-            F.col(entity_col),
-            F.col("values").alias("__vec_values"),
-            F.col("is_default_mask").alias("__vec_mask"),
-            F.col("value_ages_ms").alias("__vec_ages"),
-        )
-        out = out.join(v, entity_col, "left")
-    else:
-        out = (
-            out.withColumn("__vec_values", F.lit(None).cast("array<double>"))
-            .withColumn("__vec_mask", F.lit(None).cast("array<boolean>"))
-            .withColumn("__vec_ages", F.lit(None).cast("array<bigint>"))
-        )
-
+        rows.append(requested(vectors, "`values` IS NOT NULL", "1 AS __p", _envelope_sql()))
     if scalars is not None:
-        assembled = assemble_vectors(
-            scalars,
-            feature_names,
-            defaults=defaults,
-            entity_col=entity_col,
-            now_ms=now_ms,
-        ).select(
-            F.col(entity_col),
-            F.col("values").alias("__asm_values"),
-            F.col("is_default_mask").alias("__asm_mask"),
-            F.col("value_ages_ms").alias("__asm_ages"),
+        rows.append(
+            requested(
+                scalars,
+                in_features_sql("feature_name", feature_names),
+                *slot_projection_sql("feature_name", "value", "event_time"),
+            )
         )
-        out = out.join(assembled, entity_col, "left")
+        aggs += ["count(__n) > 0 AS __asm", *slot_aggregates_sql(feature_names)]
+        asm_values, asm_mask, asm_ages = slot_vectors_sql(feature_names, defaults, now_ms)
     else:
-        out = (
-            out.withColumn("__asm_values", F.lit(None).cast("array<double>"))
-            .withColumn("__asm_mask", F.lit(None).cast("array<boolean>"))
-            .withColumn("__asm_ages", F.lit(None).cast("array<bigint>"))
-        )
+        aggs.append("false AS __asm")
+        asm_values = asm_mask = asm_ages = "NULL"
 
-    source = (
-        F.when(F.col("__cache_values").isNotNull(), F.lit("REDIS_CACHE"))
-        .when(F.col("__vec_values").isNotNull(), F.lit("ROCKSDB_VECTOR"))
-        .when(F.col("__asm_values").isNotNull(), F.lit("SCALAR_ASSEMBLY"))
-        .otherwise(F.lit("MISS"))
+    unioned = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), rows)
+    served = unioned.groupBy("__k").agg(*map(F.expr, aggs)).selectExpr(
+        "__reqs",
+        f"CASE WHEN __p IS NOT NULL THEN __e.values WHEN __asm THEN {asm_values} END AS __values",
+        f"CASE WHEN __p IS NOT NULL THEN __e.mask WHEN __asm THEN {asm_mask} END AS __mask",
+        f"CASE WHEN __p IS NOT NULL THEN __e.ages WHEN __asm THEN {asm_ages} END AS __ages",
+        "CASE WHEN __p = 0 THEN 'REDIS_CACHE' WHEN __p = 1 THEN 'ROCKSDB_VECTOR'"
+        " WHEN __asm THEN 'SCALAR_ASSEMBLY' ELSE 'MISS' END AS __source",
     )
-    values = F.coalesce(
-        F.col("__cache_values"), F.col("__vec_values"), F.col("__asm_values")
-    )
-    mask = F.coalesce(
-        F.col("__cache_mask"), F.col("__vec_mask"), F.col("__asm_mask")
-    )
-    ages = F.coalesce(
-        F.col("__cache_ages"), F.col("__vec_ages"), F.col("__asm_ages")
-    )
-    max_age = F.array_max(ages)
-    stale = F.when(
-        max_age.isNotNull() & (max_age > F.lit(STALENESS_WARN_MS)), F.lit(True)
-    ).otherwise(F.lit(False))
-
     extra = []
     if cache is not None:
-        backfill = F.col("__cache_values").isNull() & (
-            F.col("__vec_values").isNotNull()
-            | F.col("__asm_values").isNotNull()
-        )
-        extra.append(backfill.alias("cache_backfill"))
-    return out.select(
-        *[F.col(c) for c in request_ids.columns],
-        values.alias("values"),
-        mask.alias("is_default_mask"),
-        ages.alias("value_ages_ms"),
-        source.alias("source"),
-        stale.alias("stale_warning"),
+        extra.append("__source IN ('ROCKSDB_VECTOR', 'SCALAR_ASSEMBLY') AS cache_backfill")
+    return served.selectExpr(
+        "inline(__reqs)",
+        "__values AS `values`",
+        "__mask AS is_default_mask",
+        "__ages AS value_ages_ms",
+        "__source AS source",
+        f"coalesce(array_max(__ages) > {STALENESS_WARN_MS}, false) AS stale_warning",
         *extra,
     )
 

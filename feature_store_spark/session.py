@@ -27,6 +27,38 @@ TABLES = (
 )
 
 
+# Runtime-settable SQL confs the engine relies on. ``get_spark`` puts
+# them on the builder; ``__spark_entry__._configure`` sets them on a
+# session the caller built, so both kinds of session run alike.
+SESSION_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # the synthetic test parquet uses TIMESTAMP(NANOS), which
+    # vanilla Spark rejects; read as long + convert in load_table
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # write timestamps as annotated MICROS, not legacy INT96:
+    # INT96 carries NO footer min/max statistics, which would
+    # blind both parquet row-group skipping and the manifest
+    # data-skipping stats (sources/manifest.py) on every
+    # timestamp column this engine writes; the commit kernel
+    # (sources/commit.py) refuses table writes without it
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # safe-cast Arrow conversion for createDataFrame(pandas_df):
+    # local_rows_df routes driver-built frames
+    # through pandas+Arrow, and with the default (false) a
+    # mistyped payload (non-integral float into a long field,
+    # out-of-range int) is silently truncated/wrapped instead of
+    # raising. With true, the failed safe cast raises inside the
+    # Arrow lane and local_rows_df falls back to the verifying
+    # classic path — a future caller bug stays a loud error, not
+    # silent corruption.
+    "spark.sql.execution.pandas.convertToArrowArraySafely": "true",
+}
+
+
 def get_spark(
     app_name: str = "feature_store_spark",
     master: str | None = None,
@@ -48,34 +80,11 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # the driver's synthetic parquet uses TIMESTAMP(NANOS), which
-        # vanilla Spark rejects; read as long + convert in load_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # write timestamps as annotated MICROS, not legacy INT96:
-        # INT96 carries NO footer min/max statistics, which would
-        # blind both parquet row-group skipping and the manifest
-        # data-skipping stats (sources/manifest.py) on every
-        # timestamp column this engine writes; the commit kernel
-        # (sources/commit.py) refuses table writes without it
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # safe-cast Arrow conversion for createDataFrame(pandas_df)
-        # (ADVICE r13): local_rows_df routes driver-built frames
-        # through pandas+Arrow, and with the default (false) a
-        # mistyped payload (non-integral float into a long field,
-        # out-of-range int) is silently truncated/wrapped instead of
-        # raising. With true, the failed safe cast raises inside the
-        # Arrow lane and local_rows_df falls back to the verifying
-        # classic path — a future caller bug stays a loud error, not
-        # silent corruption.
-        .config("spark.sql.execution.pandas.convertToArrowArraySafely", "true")
         .config("spark.ui.enabled", "false")
     )
+    for key, value in SESSION_CONFS.items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 

@@ -1686,3 +1686,252 @@ def test_scoped_rewrite_content_invariant_property(
     assert keep_paths <= {
         f["path"] for f in t1.data_files(None, None)
     }
+
+
+# ------------------------------------------- serving get + vector assembly
+
+SERVE_FEATS = ["a", "b", "c"]
+SERVE_DEFAULTS = {"a": -1.0, "c": 2.5}
+SERVE_NOW, SERVE_TTL = 10_000, 1_000
+SERVE_T0_US = 9_000_000  # scalar event times: t0 + k * 500 us
+
+
+def _latest_slot(rows):
+    """entity -> feature -> row, for rows ``(entity, feature, time_us,
+    *tiebreaks, value)``: the latest in-view row by (time, tiebreaks,
+    value), NULLs lowest — the slot rule both the get and
+    assemble_vectors serve."""
+
+    def key(r):
+        return [(x is not None, x if x is not None else 0) for x in r[2:]]
+
+    out: dict = {}
+    for r in sorted(rows, key=key):  # a later row overwrites an earlier
+        if r[1] in SERVE_FEATS:
+            out.setdefault(r[0], {})[r[1]] = r
+    return out
+
+
+def _slot_vector(slots):
+    vals, mask, ages = [], [], []
+    for n in SERVE_FEATS:
+        t, v = (None, None) if n not in slots else (slots[n][2], slots[n][-1])
+        vals.append(SERVE_DEFAULTS.get(n, 0.0) if v is None else v)
+        mask.append(v is None)
+        ages.append(-1 if v is None or t is None else SERVE_NOW - t // 1000)
+    return vals, mask, ages
+
+
+def _serve_reference(req, cache, vectors, scalars):
+    """Pure-Python fallback chain for one request id: the set of
+    acceptable (source, values, mask, ages) answers (several only when
+    a tier holds duplicate rows for the id)."""
+    if req is None:
+        return {("MISS", None, None, None)}
+    if cache is not None:
+        hits = {
+            ("REDIS_CACHE", tuple(v), tuple(m),
+             tuple(a if a < 0 else a + SERVE_NOW - at for a in ages))
+            for e, v, m, ages, at in cache
+            if e == req and v is not None and at is not None
+            and SERVE_NOW - at < SERVE_TTL
+        }
+        if hits:
+            return hits
+    if vectors is not None:
+        hits = {
+            ("ROCKSDB_VECTOR", tuple(v), tuple(m), tuple(a))
+            for e, v, m, a in vectors
+            if e == req and v is not None
+        }
+        if hits:
+            return hits
+    slots = _latest_slot([(e, n, t, v) for e, n, v, t in scalars or []]).get(req)
+    if slots:
+        vals, mask, ages = _slot_vector(slots)
+        return {("SCALAR_ASSEMBLY", tuple(vals), tuple(mask), tuple(ages))}
+    return {("MISS", None, None, None)}
+
+
+# small id / time / value domains, so tiers overlap, requests hit, and
+# scalar rows tie on time (and on time + tiebreak) often
+_pool = st.integers(min_value=0, max_value=3)
+_val = st.sampled_from([None, 0.5, -2.0, 7.25])
+_k = st.sampled_from([None, 0, 1, 2])
+_null_values = st.sampled_from([False, False, False, True])
+_env = st.tuples(
+    st.lists(st.sampled_from([1.0, 3.5]), min_size=3, max_size=3),
+    st.lists(st.booleans(), min_size=3, max_size=3),
+    st.lists(st.sampled_from([-1, 0, 40, 90_000_000]), min_size=3, max_size=3),
+)
+_SERVE_EXAMPLE = dict(  # TTL boundary, -1 sentinel, NULL envelopes, time tie
+    id_kind="bigint",
+    entity_col="entity_id",
+    absent=set(),
+    cache=[
+        (0, ([1.0, 1.0, 1.0], [False, True, False], [40, -1, 0]), 1, False),
+        (1, ([3.5, 3.5, 3.5], [False] * 3, [0, 0, 0]), SERVE_TTL, False),
+        (2, ([3.5, 3.5, 3.5], [False] * 3, [0, 0, 0]), 0, True),
+    ],
+    vectors=[
+        (1, ([1.0, 3.5, 1.0], [False] * 3, [5, 5, 5]), False),
+        (3, ([1.0, 3.5, 1.0], [False] * 3, [5, 5, 5]), True),
+    ],
+    scalars=[(2, "a", 0.5, 1), (2, "a", 7.25, 1), (2, "b", None, 2), (2, "zz", 0.5, 0)],
+    requests=[0, 1, 2, 2, None, 3],
+)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    id_kind=st.sampled_from(["bigint", "string"]),
+    entity_col=st.sampled_from(["entity_id", "user key"]),
+    absent=st.sets(st.sampled_from(["cache", "vectors", "scalars"])),
+    cache=st.lists(
+        st.tuples(
+            _pool,
+            _env,
+            st.sampled_from([None, 0, 1, SERVE_TTL - 1, SERVE_TTL, SERVE_TTL + 1]),
+            _null_values,
+        ),
+        max_size=5,
+    ),
+    vectors=st.lists(st.tuples(_pool, _env, _null_values), max_size=4),
+    scalars=st.lists(
+        st.tuples(_pool, st.sampled_from(SERVE_FEATS + ["zz"]), _val, _k),
+        max_size=14,
+    ),
+    requests=st.lists(st.one_of(st.none(), _pool, st.just(9)), min_size=1, max_size=10),
+)
+@example(**_SERVE_EXAMPLE)
+def test_get_online_features_matches_python_reference_property(
+    spark, id_kind, entity_col, absent, cache, vectors, scalars, requests
+):
+    """get_online_features == a pure-Python model of the cache ->
+    vector -> scalar-assembly -> MISS chain for ANY tiers and requests:
+    several scalar rows per (entity, feature) with time ties and NULL
+    times, NULL values (default served, mask true, age -1), features
+    outside the view, cache entries around the TTL boundary and with
+    -1 age sentinels, entities in several tiers, absent (None) tiers,
+    duplicate / NULL request ids with extra request columns, int and
+    string ids under a non-default entity column. Duplicate cache or
+    vector rows (outside the one-row-per-entity contract) still give
+    exactly one response per request row."""
+    from feature_store_spark.serving import get_online_features
+
+    def eid(e):
+        return None if e is None else (e if id_kind == "bigint" else f"e{e}")
+
+    cache, vectors, scalars = (
+        None if name in absent else rows
+        for name, rows in (("cache", cache), ("vectors", vectors), ("scalars", scalars))
+    )
+
+    q = f"`{entity_col}`"
+    env = "`values` array<double>, is_default_mask array<boolean>, value_ages_ms array<bigint>"
+    cache_rows = None if cache is None else [
+        (eid(e), None if null_values else v, m, a,
+         None if age is None else SERVE_NOW - age)
+        for e, (v, m, a), age, null_values in cache
+    ]
+    vector_rows = None if vectors is None else [
+        (eid(e), None if null_values else v, m, a)
+        for e, (v, m, a), null_values in vectors
+    ]
+    scalar_rows = None if scalars is None else [
+        (eid(e), n, v, None if k is None else SERVE_T0_US + 500 * k)
+        for e, n, v, k in scalars
+    ]
+    frame = lambda rows, ddl: spark.createDataFrame(rows, ddl)  # noqa: E731
+    got = get_online_features(
+        frame(
+            [(eid(e), i, f"n{i}") for i, e in enumerate(requests)],
+            f"{q} {id_kind}, tag int, note string",
+        ),
+        None if vector_rows is None else frame(vector_rows, f"{q} {id_kind}, {env}"),
+        None if scalar_rows is None else frame(
+            scalar_rows,
+            f"{q} {id_kind}, feature_name string, value double, t_us bigint",
+        ).selectExpr("*", "timestamp_micros(t_us) AS event_time"),
+        SERVE_FEATS,
+        defaults=SERVE_DEFAULTS,
+        entity_col=entity_col,
+        now_ms=SERVE_NOW,
+        cache=None if cache_rows is None else frame(
+            cache_rows, f"{q} {id_kind}, {env}, cached_at_ms bigint"
+        ),
+        cache_ttl_ms=SERVE_TTL,
+    ).collect()
+
+    assert len(got) == len(requests)
+    assert sorted(r["tag"] for r in got) == list(range(len(requests)))
+    for r in got:
+        i = r["tag"]
+        assert r[entity_col] == eid(requests[i]) and r["note"] == f"n{i}"
+        answer = (
+            r["source"],
+            None if r["values"] is None else tuple(r["values"]),
+            None if r["is_default_mask"] is None else tuple(r["is_default_mask"]),
+            None if r["value_ages_ms"] is None else tuple(r["value_ages_ms"]),
+        )
+        assert answer in _serve_reference(eid(requests[i]), cache_rows, vector_rows, scalar_rows)
+        ages = [a for a in answer[3] or () if a is not None]
+        assert r["stale_warning"] == (bool(ages) and max(ages) > 24 * 3600 * 1000)
+        if cache is not None:
+            assert r["cache_backfill"] == (answer[0] in ("ROCKSDB_VECTOR", "SCALAR_ASSEMBLY"))
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=1),
+            st.sampled_from(SERVE_FEATS + ["zz"]),
+            _val,
+            _k,
+            st.sampled_from([None, 0, 1, 2]),
+        ),
+        min_size=1,
+        max_size=16,
+    )
+)
+@example(  # a time tie the tiebreak decides against the value order
+    rows=[
+        (0, "a", 7.25, 1, 0), (0, "a", 0.5, 1, 2), (0, "a", -2.0, 1, None),
+        (0, "b", 0.5, None, 1), (0, "b", -2.0, 0, None), (1, "zz", 0.5, 0, 0),
+    ]
+)
+def test_assemble_vectors_tiebreaks_match_python_reference_property(spark, rows):
+    """assemble_vectors with tiebreak_cols == the Python slot rule: per
+    (entity, feature) the row with the latest time, then the largest
+    tiebreak (NULLs last), serves; NULL values and absent features
+    serve the default with mask true and age -1; out-of-view features
+    are ignored; one output row per entity with an in-view row."""
+    from feature_store_spark.operators.reshape import assemble_vectors
+
+    scalars = spark.createDataFrame(
+        [(e, n, v, None if k is None else SERVE_T0_US + 500 * k, tb) for e, n, v, k, tb in rows],
+        "entity_id bigint, feature_name string, value double, t_us bigint, seq int",
+    ).selectExpr("*", "timestamp_micros(t_us) AS event_time")
+    got = {
+        r["entity_id"]: (r["values"], r["is_default_mask"], r["value_ages_ms"])
+        for r in assemble_vectors(
+            scalars, SERVE_FEATS, defaults=SERVE_DEFAULTS, now_ms=SERVE_NOW,
+            tiebreak_cols=["seq"],
+        ).collect()
+    }
+    want = {
+        e: _slot_vector(slots)
+        for e, slots in _latest_slot(
+            [(e, n, None if k is None else SERVE_T0_US + 500 * k, tb, v) for e, n, v, k, tb in rows]
+        ).items()
+    }
+    assert got == {e: tuple(v) for e, v in want.items()}

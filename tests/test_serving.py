@@ -269,3 +269,105 @@ def test_cache_age_forwarding_preserves_default_sentinel(spark):
     assert out["source"] == "REDIS_CACHE"
     # real slot aged by elapsed 300s; sentinel untouched
     assert out["value_ages_ms"] == [305_000, -1]
+
+
+def _max_job_id(spark) -> int:
+    sc = spark.sparkContext
+    # the status store is fed by the listener bus; drain it so every
+    # job submitted so far is visible
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _ancestors(plan: str, marker: str) -> list[list[str]]:
+    """For each plan-tree line containing ``marker``: the node lines
+    above it, nearest first (tree depth is the indent of the node)."""
+    out, stack = [], []
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        if not body:
+            continue
+        depth = len(line) - len(body)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if marker in body:
+            out.append([n for _, n in reversed(stack)])
+        stack.append((depth, body))
+    return out
+
+
+def test_get_online_features_is_one_request_filtered_aggregate(spark, tmp_path):
+    """A batch get over parquet tiers in the benchmark's mix (cache,
+    vector, scalar-assembly and miss ids) runs at most three Spark jobs
+    — the request broadcast, one shuffle, the result — and reaches
+    every tier scan only through a LeftSemi join on the request ids:
+    no tier is broadcast and no window sorts the scalar table."""
+    import pyarrow as pa
+
+    feats = ["f0", "f1", "f2"]
+    ts = pa.timestamp("us", tz="UTC")
+    t0 = 1_704_067_200_000_000
+    vec_ids = list(range(0, 200))  # ids 0-49 are also cached
+    envelope = {
+        "values": pa.array([[float(e), 1.0, 2.0] for e in vec_ids]),
+        "is_default_mask": pa.array([[False] * 3] * len(vec_ids)),
+        "value_ages_ms": pa.array([[5, 5, 5]] * len(vec_ids), pa.list_(pa.int64())),
+    }
+    vectors = pa.table({"entity_id": pa.array(vec_ids, pa.int64()), **envelope})
+    cache = vectors.slice(0, 50).append_column(
+        "cached_at_ms", pa.array([t0 // 1000] * 50, pa.int64())
+    )
+    sc_ids = [e for e in range(200, 300) for _ in feats for _ in range(2)]
+    scalars = pa.table(
+        {
+            "entity_id": pa.array(sc_ids, pa.int64()),
+            "feature_name": pa.array([feats[i // 2 % 3] for i in range(len(sc_ids))]),
+            "value": pa.array([float(i) for i in range(len(sc_ids))]),
+            "event_time": pa.array([t0 + i for i in range(len(sc_ids))], ts),
+        }
+    )
+    tiers = {}
+    for name, table in (("cache", cache), ("vectors", vectors), ("scalars", scalars)):
+        path = str(tmp_path / name)
+        spark.createDataFrame(table).write.parquet(path)
+        tiers[name] = spark.read.parquet(path)
+    ids = list(range(0, 400, 4))  # 100 ids: 13 cached, 37 vectors, 25 scalars, 25 misses
+    req = spark.createDataFrame(
+        pa.table(
+            {
+                "entity_id": pa.array(ids, pa.int64()),
+                "request_order": pa.array(range(len(ids)), pa.int64()),
+            }
+        )
+    )
+    out = get_online_features(
+        req,
+        tiers["vectors"],
+        tiers["scalars"],
+        feats,
+        now_ms=t0 // 1000 + 1000,
+        cache=tiers["cache"],
+        cache_ttl_ms=60_000,
+    )
+    served = out.select("entity_id", "source")
+    before = _max_job_id(spark)
+    got = served.toArrow()
+    jobs = _max_job_id(spark) - before
+    sources = dict(zip(*(got.column(c).to_pylist() for c in ("entity_id", "source"))))
+    assert sources == {
+        e: "REDIS_CACHE" if e < 50 else "ROCKSDB_VECTOR" if e < 200
+        else "SCALAR_ASSEMBLY" if e < 300 else "MISS"
+        for e in ids
+    }
+    assert jobs <= 3, jobs
+
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan and "Window" not in plan
+    # the tiers are the plan's only file scans
+    scans = _ancestors(plan, "FileScan parquet")
+    for cols in ("cached_at_ms", "feature_name", "values"):
+        assert any(cols in line for line in plan.splitlines() if "FileScan" in line)
+    for above in scans:
+        at = next(i for i, n in enumerate(above) if "Join" in n)
+        assert "LeftSemi" in above[at] and "entity_id" in above[at], above[at]
+        assert not any("Exchange" in n for n in above[:at]), above[:at]

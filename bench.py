@@ -414,7 +414,7 @@ def _calibration_anchors(spark) -> dict:
         if os.path.exists(path):
             os.unlink(path)
 
-    # commit-latency anchor: one TINY manifest append (two small
+    # commit-latency anchor: one TINY Delta append (two small
     # Spark jobs + small-file writes) — the unit cost of the
     # multi-commit choreography query class (incremental_*,
     # iceberg_orc, ivfpq_recall …), which tracks small-I/O/scheduler
@@ -422,7 +422,7 @@ def _calibration_anchors(spark) -> dict:
     # cross-round swing confined to that class divides out here
     import shutil
 
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import delta_append
 
     tiny = spark.range(1000).select(
         F.col("id"), (F.col("id") * 1.0).alias("v")
@@ -433,7 +433,7 @@ def _calibration_anchors(spark) -> dict:
         d = tempfile.mkdtemp(prefix="fss-anchor-commit-")
         dirs.append(d)
         t0 = time.time()
-        ManifestedTable(spark, os.path.join(d, "t")).append(tiny)
+        delta_append(tiny, os.path.join(d, "t"))
         lat.append(time.time() - t0)
     for d in dirs:
         shutil.rmtree(d, ignore_errors=True)

@@ -1,4 +1,4 @@
-"""Incremental maintenance over manifested tables.
+"""Incremental maintenance over Delta tables.
 
 The reference recomputes offline aggregates from the full table on
 every run (its store is single-node; a re-scan is cheap). At 100 TB a
@@ -6,7 +6,7 @@ daily refresh that re-reads the world is the pipeline's whole cost —
 the standard fix is materialized-view maintenance over a change feed:
 keep per-key ALGEBRAIC aggregate state (count / sum / min / max — the
 classic decomposable aggregates), read only the rows appended since
-the last refresh (:meth:`ManifestedTable.read_appended`), aggregate
+the last refresh (:meth:`DeltaTable.read_appended`), aggregate
 the delta, and fold it into the state with the aggregates' own merge
 functions (sum+sum, min-of-mins, max-of-maxes). AVG is derived as
 sum/count at read time — it is not itself mergeable, its components
@@ -38,17 +38,25 @@ and one with its own two-table commit order —
   pairs), and the accumulated pairs equal a full recompute at every
   version. Streaming front door:
   ``streaming.materializer.incremental_dedup_sink``.
+
+Every flavor takes the session and the table directories; a state
+table is created by its first refresh.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feature_store_spark.sources.commit import ConcurrentWriteError
-from feature_store_spark.sources.manifest import ManifestedTable
+from feature_store_spark.sources.delta import (
+    DeltaTable,
+    delta_append,
+    delta_head,
+    delta_overwrite,
+)
 
 STATE_COLS = ("n_rows", "n_vals", "sum_val", "min_val", "max_val")
 
@@ -90,8 +98,9 @@ def merge_states(prev: DataFrame, delta: DataFrame, keys: Sequence[str]) -> Data
 
 
 def refresh_fold(
-    state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    state_dir: str,
+    source_dir: str,
     partial_fn,
     merge_fn,
     app_id: str,
@@ -108,9 +117,10 @@ def refresh_fold(
     :func:`refresh_drift_counts` (PSI current-window bin counts) are
     the shipped instances.
 
-    Exactly-once protocol: the state commit carries
-    ``txn=(app_id, source_version)`` and ``require_base`` pinned to
-    the state version the merge was derived from. A refresh that
+    Exactly-once protocol: the state commit is a replace-all
+    (:func:`~feature_store_spark.sources.delta.delta_overwrite`) that
+    carries ``txn=(app_id, source_version)`` and claims exactly the
+    version after the state it was derived from. A refresh that
     crashes after committing is detected on re-run (txn high-water
     mark >= source version -> no-op); one that crashes before
     committing left no trace; a concurrent refresh loses the
@@ -118,8 +128,8 @@ def refresh_fold(
     state pins ``version=base_v`` explicitly so the fold never mixes
     a racer's newer state with an older CAS guard.
 
-    If the source range since the last refresh contains a non-append
-    commit (overwrite / MERGE / compaction), ``read_appended`` refuses
+    If the source range since the last refresh contains a commit that
+    removes files (overwrite / MERGE / OPTIMIZE), ``read_appended`` refuses
     and the refresh falls back to a FULL recompute at the source
     version — correctness never depends on guessing what a rewrite
     did to row membership.
@@ -138,47 +148,45 @@ def refresh_fold(
     partial/merge lane so the state's floating-point combine order
     never changes under the graded oracle."""
     for _ in range(max_retries):
-        # Pin the state snapshot FIRST, then read the txn high-water
-        # mark from that SAME snapshot: reading the token from the
-        # live manifest before capturing base_v is a TOCTOU — a racer
-        # committing between the two reads leaves `last` stale
-        # relative to the state at base_v, so the delta (last, src_v]
-        # would overlap rows already folded in (double counting) while
-        # still passing both the CAS and the txn no-op check.
-        base_v = state.current_version()
-        # txn_version is -1 before the first refresh; clamp to 0 so the
-        # first delta is "everything since the empty snapshot", not a
-        # probe for a nonexistent manifest v0 (which would force a
-        # needless full-recompute fallback)
-        last = max(state.txn_version(app_id, version=base_v), 0)
-        src_v = source.current_version()
+        # Pin the state version FIRST, then read the txn high-water
+        # mark at that SAME version: reading the token from the live
+        # log before capturing base_v is a TOCTOU — a racer committing
+        # between the two reads leaves `last` stale relative to the
+        # state at base_v, so the delta (last, src_v] would overlap
+        # rows already folded in (double counting) while still passing
+        # both the CAS and the txn no-op check.
+        state, base_v = delta_head(spark, state_dir)
+        # -1 = never refreshed; a refresh that covered source v0
+        # recorded 0, so (last, src_v] never re-reads a folded commit
+        last = -1 if state is None else state.txn_version(app_id, base_v)
+        source, src_v = delta_head(spark, source_dir)
         if src_v <= last:
-            # also covers a never-written source (src_v == 0): there
+            # also covers a never-written source (src_v == -1): there
             # is nothing to aggregate and no schema to aggregate with
-            return state.current_version()
+            return base_v
         try:
             delta = source.read_appended(last, src_v)
+            prev = (
+                None
+                if state is None
+                else state.scan(version=base_v, infer_schema=False)
+            )
             if fold_fn is not None:
-                prev = state.read(version=base_v) if base_v > 0 else None
                 merged = fold_fn(prev, delta)
             else:
                 partial = partial_fn(delta)
-                if base_v > 0:
-                    prev = state.read(version=base_v)
-                    merged = merge_fn(prev, partial)
-                else:
-                    merged = partial
+                merged = partial if prev is None else merge_fn(prev, partial)
         except ValueError:
-            # non-append commit in range: full recompute at src_v
-            src_full = source.read(version=src_v)
+            # a commit in range removed files: full recompute at src_v
+            src_full = source.scan(version=src_v, infer_schema=False)
             merged = (
                 fold_fn(None, src_full)
                 if fold_fn is not None
                 else partial_fn(src_full)
             )
         try:
-            return state.overwrite(
-                merged, require_base=base_v, txn=(app_id, src_v)
+            return delta_overwrite(
+                merged, state_dir, base_v, txn=(app_id, src_v)
             )
         except ConcurrentWriteError:
             continue
@@ -188,8 +196,9 @@ def refresh_fold(
 
 
 def refresh_aggregate(
-    state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    state_dir: str,
+    source_dir: str,
     keys: Sequence[str],
     value_col: str,
     app_id: str = "incremental-agg",
@@ -199,8 +208,9 @@ def refresh_aggregate(
     source's current version (see :func:`refresh_fold` for the
     exactly-once protocol and the non-append fallback)."""
     return refresh_fold(
-        state,
-        source,
+        spark,
+        state_dir,
+        source_dir,
         lambda df: partial_aggregate(df, keys, value_col),
         lambda prev, part: merge_states(prev, part, keys),
         app_id,
@@ -209,8 +219,9 @@ def refresh_aggregate(
 
 
 def refresh_exact_dedup(
-    state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    state_dir: str,
+    source_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     app_id: str = "incremental-exact-dedup",
@@ -275,13 +286,15 @@ def refresh_exact_dedup(
         )
 
     return refresh_fold(
-        state, source, partial, merge, app_id, max_retries, fold_fn=fold
+        spark, state_dir, source_dir, partial, merge, app_id, max_retries,
+        fold_fn=fold,
     )
 
 
 def refresh_drift_counts(
-    state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    state_dir: str,
+    source_dir: str,
     edges: dict[str, list[float]],
     app_id: str = "incremental-drift",
     max_retries: int = 5,
@@ -382,14 +395,17 @@ def refresh_drift_counts(
         return u.groupBy("feature", "bin").agg(F.sum("c").alias("c"))
 
     return refresh_fold(
-        state, source, partial, merge, app_id, max_retries, fold_fn=fold
+        spark, state_dir, source_dir, partial, merge, app_id, max_retries,
+        fold_fn=fold,
     )
 
 
-def aggregate_view(state: ManifestedTable, keys: Sequence[str]) -> DataFrame:
+def aggregate_view(
+    spark: SparkSession, state_dir: str, keys: Sequence[str]
+) -> DataFrame:
     """The user-facing aggregate: state columns plus derived AVG
     (sum/count — NULL when no non-NULL values were ever seen)."""
-    return state.read().select(
+    return DeltaTable(spark, state_dir).scan(infer_schema=False).select(
         *keys,
         "n_rows",
         "n_vals",
@@ -404,8 +420,9 @@ def aggregate_view(state: ManifestedTable, keys: Sequence[str]) -> DataFrame:
 
 
 def refresh_distinct_sketch(
-    state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    state_dir: str,
+    source_dir: str,
     keys: Sequence[str],
     value_col: str,
     lg_k: int = 14,
@@ -452,13 +469,17 @@ def refresh_distinct_sketch(
             )
         )
 
-    return refresh_fold(state, source, partial, merge, app_id, max_retries)
+    return refresh_fold(
+        spark, state_dir, source_dir, partial, merge, app_id, max_retries
+    )
 
 
-def distinct_view(state: ManifestedTable, keys: Sequence[str]) -> DataFrame:
+def distinct_view(
+    spark: SparkSession, state_dir: str, keys: Sequence[str]
+) -> DataFrame:
     """The user-facing estimate: per-key approximate distinct count
     from the maintained sketch state."""
-    return state.read().select(
+    return DeltaTable(spark, state_dir).scan(infer_schema=False).select(
         *list(keys),
         F.hll_sketch_estimate("distinct_sketch").alias(
             "distinct_estimate"
@@ -467,8 +488,9 @@ def distinct_view(state: ManifestedTable, keys: Sequence[str]) -> DataFrame:
 
 
 def refresh_heavy_hitters(
-    state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    state_dir: str,
+    source_dir: str,
     keys: Sequence[str],
     item_col: str,
     k: int = 64,
@@ -544,16 +566,19 @@ def refresh_heavy_hitters(
             .agg(F.sum("cnt").alias("cnt"))
         )
 
-    return refresh_fold(state, source, partial, merge, app_id, max_retries)
+    return refresh_fold(
+        spark, state_dir, source_dir, partial, merge, app_id, max_retries
+    )
 
 
 # ------------------------------------------------ incremental dedup
 
 
 def refresh_minhash_dedup(
-    sig_state: ManifestedTable,
-    pairs_state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    sig_dir: str,
+    pairs_dir: str,
+    source_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
@@ -575,7 +600,7 @@ def refresh_minhash_dedup(
     is the one that emits the pair.
 
     Exactly-once, two tables, one token: the refresh window is driven
-    by ``sig_state``'s txn high-water mark, and BOTH commits carry
+    by the signature table's txn high-water mark, and BOTH commits carry
     ``txn=(app_id, src_v)``. Pairs are committed FIRST: a crash
     between the commits re-runs with the SAME window and the same
     state (the sig append hasn't happened), recomputes byte-identical
@@ -595,9 +620,9 @@ def refresh_minhash_dedup(
     hwm. Single-writer per ``app_id`` is assumed — the same
     assumption the token protocol itself makes.
 
-    A non-append source commit in the window (overwrite/MERGE/
-    compaction) fails ``read_appended``; the fallback is a full
-    recompute of both tables at ``src_v``, committed as overwrites
+    A source commit in the window that removes files (overwrite/MERGE/
+    OPTIMIZE) fails ``read_appended``; the fallback is a full
+    recompute of both tables at ``src_v``, committed as replace-alls
     with the same token discipline.
 
     ``max_bucket_size=None`` (the default) disables the LSH
@@ -628,8 +653,11 @@ def refresh_minhash_dedup(
         minhash_wide_from_docs,
     )
 
-    last = max(sig_state.txn_version(app_id), 0)
-    pairs_hwm = pairs_state.txn_version(app_id)
+    sig, sig_v = delta_head(spark, sig_dir)
+    pairs, pairs_v = delta_head(spark, pairs_dir)
+    source, src_v = delta_head(spark, source_dir)
+    last = -1 if sig is None else sig.txn_version(app_id)
+    pairs_hwm = -1 if pairs is None else pairs.txn_version(app_id)
     if pairs_hwm > last:
         # torn refresh: a crash landed between the pairs commit
         # (token pairs_hwm) and the sig commit. Complete the MISSING
@@ -643,20 +671,23 @@ def refresh_minhash_dedup(
             )
             if state_partitions:
                 torn_sigs = torn_sigs.coalesce(state_partitions)
-            sig_state.append(torn_sigs, txn=(app_id, pairs_hwm))
+            sig_v = delta_append(
+                torn_sigs, sig_dir, txn=(app_id, pairs_hwm)
+            )
         except ValueError:
             # the crashed refresh was itself the full-recompute
-            # fallback (its pairs are an overwrite at pairs_hwm):
-            # complete the matching sig overwrite
-            full = source.read(version=pairs_hwm)
+            # fallback (its pairs are a replace-all at pairs_hwm):
+            # complete the matching sig replace-all
+            full = source.scan(version=pairs_hwm, infer_schema=False)
             sigs_full = minhash_wide_from_docs(
                 full, text_col, id_col, shingle_n, num_hashes
             )
-            sig_state.overwrite(sigs_full, txn=(app_id, pairs_hwm))
+            sig_v = delta_overwrite(
+                sigs_full, sig_dir, sig_v, txn=(app_id, pairs_hwm)
+            )
         last = pairs_hwm
-    src_v = source.current_version()
     if src_v <= last:
-        return pairs_state.current_version()
+        return pairs_v
     try:
         delta = source.read_appended(last, src_v)
         # eager: the signature scan of the appended text runs ONCE,
@@ -665,9 +696,12 @@ def refresh_minhash_dedup(
         new_sigs = minhash_wide_from_docs(
             delta, text_col, id_col, shingle_n, num_hashes
         ).localCheckpoint(eager=True)
-        if sig_state.current_version() > 0:
+        if sig_v >= 0:
             pairs = minhash_pairs_incremental(
-                sig_state.read(), new_sigs, num_hashes, bands, id_col,
+                DeltaTable(spark, sig_dir).scan(
+                    version=sig_v, infer_schema=False
+                ),
+                new_sigs, num_hashes, bands, id_col,
                 max_bucket_size=max_bucket_size,
             )
         else:
@@ -684,13 +718,13 @@ def refresh_minhash_dedup(
         if state_partitions:
             pairs = pairs.coalesce(state_partitions)
             new_sigs = new_sigs.coalesce(state_partitions)
-        pairs_state.append(pairs, txn=(app_id, src_v))
-        sig_state.append(new_sigs, txn=(app_id, src_v))
+        pairs_v = delta_append(pairs, pairs_dir, txn=(app_id, src_v))
+        delta_append(new_sigs, sig_dir, txn=(app_id, src_v))
     except ValueError:
-        # non-append commit in the window: recompute the world at
-        # src_v — correctness never rests on guessing what a rewrite
+        # a commit in the window removed files: recompute the world
+        # at src_v — correctness never rests on guessing what a rewrite
         # did to row membership (same contract as refresh_aggregate)
-        full = source.read(version=src_v)
+        full = source.scan(version=src_v, infer_schema=False)
         pairs_full = minhash_dedup_pairs(
             full, text_col, id_col, shingle_n, num_hashes, bands,
             threshold, max_bucket_size=max_bucket_size,
@@ -698,14 +732,17 @@ def refresh_minhash_dedup(
         sigs_full = minhash_wide_from_docs(
             full, text_col, id_col, shingle_n, num_hashes
         )
-        pairs_state.overwrite(pairs_full, txn=(app_id, src_v))
-        sig_state.overwrite(sigs_full, txn=(app_id, src_v))
-    return pairs_state.current_version()
+        pairs_v = delta_overwrite(
+            pairs_full, pairs_dir, pairs_v, txn=(app_id, src_v)
+        )
+        delta_overwrite(sigs_full, sig_dir, sig_v, txn=(app_id, src_v))
+    return pairs_v
 
 
 def refresh_pq_index(
-    codes_state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    codes_dir: str,
+    source_dir: str,
     codebook,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -720,9 +757,9 @@ def refresh_pq_index(
     the codes without ever re-reading historical float vectors.
 
     Exactly-once: the append carries ``txn=(app_id, src_v)``; a
-    redelivered refresh no-ops. A non-append source commit
-    (overwrite/MERGE) falls back to a full re-encode committed as an
-    overwrite — codes must never describe rows that no longer exist.
+    redelivered refresh no-ops. A source commit that removes files
+    (overwrite/MERGE) falls back to a full re-encode committed as a
+    replace-all — codes must never describe rows that no longer exist.
 
     The codebook is FROZEN at training time (the standard PQ
     contract — faiss indexes do the same): retraining would silently
@@ -730,24 +767,43 @@ def refresh_pq_index(
     means a new index, not a refresh."""
     from feature_store_spark.operators.similarity import pq_encode
 
-    last = max(codes_state.txn_version(app_id), 0)
-    src_v = source.current_version()
+    return _refresh_rowwise(
+        spark,
+        codes_dir,
+        source_dir,
+        lambda df: pq_encode(df, codebook, id_col, vec_col),
+        app_id,
+    )
+
+
+def _refresh_rowwise(
+    spark: SparkSession, index_dir: str, source_dir: str, build, app_id: str
+) -> int:
+    """Exactly-once maintenance of a per-row transform ``build``:
+    append ``build(appended rows)`` with ``txn=(app_id, src_v)``, or
+    replace the index with ``build(full source)`` when the source range
+    removed files."""
+    index, index_v = delta_head(spark, index_dir)
+    last = -1 if index is None else index.txn_version(app_id)
+    source, src_v = delta_head(spark, source_dir)
     if src_v <= last:
-        return codes_state.current_version()
+        return index_v
     try:
         delta = source.read_appended(last, src_v)
-        new_codes = pq_encode(delta, codebook, id_col, vec_col)
-        return codes_state.append(new_codes, txn=(app_id, src_v))
+        return delta_append(build(delta), index_dir, txn=(app_id, src_v))
     except ValueError:
-        full = pq_encode(
-            source.read(version=src_v), codebook, id_col, vec_col
+        return delta_overwrite(
+            build(source.scan(version=src_v, infer_schema=False)),
+            index_dir,
+            index_v,
+            txn=(app_id, src_v),
         )
-        return codes_state.overwrite(full, txn=(app_id, src_v))
 
 
 def refresh_ivfpq_index(
-    index_state: ManifestedTable,
-    source: ManifestedTable,
+    spark: SparkSession,
+    index_dir: str,
+    source_dir: str,
     codebook,
     coarse_centroids: DataFrame,
     id_col: str = "vec_id",
@@ -769,9 +825,9 @@ def refresh_ivfpq_index(
     a quantizer change is a NEW index, not a refresh.
 
     Exactly-once: the append carries ``txn=(app_id, src_v)``; a
-    redelivered refresh no-ops. A non-append source commit
-    (overwrite/MERGE) falls back to a full rebuild committed as an
-    overwrite. Degenerate vectors (NULL / ragged) carry NULL codes —
+    redelivered refresh no-ops. A source commit that removes files
+    (overwrite/MERGE) falls back to a full rebuild committed as a
+    replace-all. Degenerate vectors (NULL / ragged) carry NULL codes —
     rows to audit, ranked last by the ADC scorers."""
     from feature_store_spark.operators.similarity import (
         assign_clusters,
@@ -790,14 +846,4 @@ def refresh_ivfpq_index(
         ).select(id_col, "cluster")
         return codes.join(assigned, id_col, "left")
 
-    last = max(index_state.txn_version(app_id), 0)
-    src_v = source.current_version()
-    if src_v <= last:
-        return index_state.current_version()
-    try:
-        delta = source.read_appended(last, src_v)
-        return index_state.append(build(delta), txn=(app_id, src_v))
-    except ValueError:
-        return index_state.overwrite(
-            build(source.read(version=src_v)), txn=(app_id, src_v)
-        )
+    return _refresh_rowwise(spark, index_dir, source_dir, build, app_id)

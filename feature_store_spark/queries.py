@@ -3745,19 +3745,23 @@ def q_scalar_upsert(spark, sf_dir):
     RocksDBFeatureStore.java:111-116): union existing EAV history with
     an hourly update batch, keep last-writer-wins per key.
 
-    The merge runs THROUGH the transactional commit protocol
-    (``sources.manifest.ManifestedTable`` — write files, claim
-    manifest version, atomic pointer flip; the shape of
-    IcebergOfflineStore.java:78-114): the existing history is
-    committed as snapshot v1, the update batch lands as one
-    copy-on-write MERGE commit (v2), and the returned rows are v2's
-    committed state. The result frame is localCheckpointed so the
-    scratch table's files can be deleted before returning (the merged
-    snapshot is key-bounded — one row per (entity, feature))."""
+    The merge runs THROUGH the transactional commit protocol (a
+    Delta table — write files, claim the next log version; the shape
+    of IcebergOfflineStore.java:78-114): the existing history is
+    committed as version 0, the update batch lands as one
+    copy-on-write MERGE commit (v1, ``delta_merge_latest``), and the
+    returned rows are v1's committed state. The result frame is
+    localCheckpointed so the scratch table's files can be deleted
+    before returning (the merged table is key-bounded — one row per
+    (entity, feature))."""
     import shutil as _sh
     import tempfile as _tmp
 
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_merge_latest,
+    )
 
     existing = _events_eav(spark, sf_dir)
     updates = existing.filter(F.col("feature_name") == "purchase").select(
@@ -3769,15 +3773,15 @@ def q_scalar_upsert(spark, sf_dir):
     )
     scratch = _tmp.mkdtemp(prefix="fss-scalar-upsert-")
     try:
-        t = ManifestedTable(spark, scratch)
-        t.append(existing)
-        t.merge_upsert(
+        delta_append(existing, scratch)
+        delta_merge_latest(
             updates,
+            scratch,
             keys=["entity_id", "feature_name"],
             order_col="event_time",
             tiebreak_cols=["rec_event_id"],
         )
-        merged = t.read()
+        merged = DeltaTable(spark, scratch).scan(infer_schema=False)
         return merged.select(
             "entity_id",
             "feature_name",
@@ -3788,9 +3792,22 @@ def q_scalar_upsert(spark, sf_dir):
         _sh.rmtree(scratch, ignore_errors=True)
 
 
+def _append_in_thirds(df, key, src, refresh):
+    """Append ``df`` to the Delta table ``src`` in three slices
+    (``key % 3``), refreshing after each; the middle refresh runs
+    twice, so the txn token must no-op the redelivered one."""
+    from feature_store_spark.sources.delta import delta_append
+
+    for i in range(3):
+        delta_append(df.filter(F.col(key) % 3 == i), src)
+        refresh()
+        if i == 1:
+            refresh()
+
+
 def q_incremental_agg(spark, sf_dir):
     """Materialized-view maintenance over the transactional layer:
-    events arrive as three manifest appends; after each, the per-type
+    events arrive as three Delta appends; after each, the per-type
     aggregate STATE (count/sum/min/max partials) is refreshed by
     reading ONLY the appended files (``read_appended``) and folding
     them into the previous state — the 100 TB history is never
@@ -3805,19 +3822,18 @@ def q_incremental_agg(spark, sf_dir):
         aggregate_view,
         refresh_aggregate,
     )
-    from feature_store_spark.sources.manifest import ManifestedTable
 
     events = load_table(spark, sf_dir, "events")
     scratch = _tmp.mkdtemp(prefix="fss-incr-agg-")
     try:
-        src = ManifestedTable(spark, scratch + "/src")
-        state = ManifestedTable(spark, scratch + "/state")
-        for i in range(3):
-            src.append(events.filter(F.col("event_id") % 3 == i))
-            refresh_aggregate(state, src, ["event_type"], "value")
-            if i == 1:  # redelivered refresh: txn token no-ops it
-                refresh_aggregate(state, src, ["event_type"], "value")
-        out = aggregate_view(state, ["event_type"]).select(
+        src, state = scratch + "/src", scratch + "/state"
+        _append_in_thirds(
+            events, "event_id", src,
+            lambda: refresh_aggregate(
+                spark, state, src, ["event_type"], "value"
+            ),
+        )
+        out = aggregate_view(spark, state, ["event_type"]).select(
             "event_type",
             "n_rows",
             "n_vals",
@@ -3845,7 +3861,7 @@ FROM events GROUP BY event_type
 
 def q_incremental_distinct(spark, sf_dir):
     """Incremental distinct-count via mergeable HLL sketches: events
-    arrive as three manifest appends; after each, the per-type sketch
+    arrive as three Delta appends; after each, the per-type sketch
     state folds in ONLY the appended rows (Spark-native
     hll_sketch_agg / hll_union_agg — register-wise max, so the folded
     state is bit-equal to a one-shot sketch of the whole corpus;
@@ -3862,21 +3878,18 @@ def q_incremental_distinct(spark, sf_dir):
         distinct_view,
         refresh_distinct_sketch,
     )
-    from feature_store_spark.sources.manifest import ManifestedTable
 
     events = load_table(spark, sf_dir, "events")
     scratch = _tmp.mkdtemp(prefix="fss-incr-distinct-")
     try:
-        src = ManifestedTable(spark, scratch + "/src")
-        state = ManifestedTable(spark, scratch + "/state")
-        for i in range(3):
-            src.append(events.filter(F.col("event_id") % 3 == i))
-            refresh_distinct_sketch(state, src, ["event_type"], "user_id")
-            if i == 1:  # redelivered refresh: txn token no-ops it
-                refresh_distinct_sketch(
-                    state, src, ["event_type"], "user_id"
-                )
-        est = distinct_view(state, ["event_type"])
+        src, state = scratch + "/src", scratch + "/state"
+        _append_in_thirds(
+            events, "event_id", src,
+            lambda: refresh_distinct_sketch(
+                spark, state, src, ["event_type"], "user_id"
+            ),
+        )
+        est = distinct_view(spark, state, ["event_type"])
         # one-shot sketch over the full corpus: the fold must equal it
         full = events.groupBy("event_type").agg(
             F.hll_sketch_estimate(
@@ -3922,7 +3935,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 def q_incremental_heavy_hitters(spark, sf_dir):
     """Incremental heavy hitters via mergeable Misra-Gries state:
-    events arrive as three manifest appends; after each, the per-type
+    events arrive as three Delta appends; after each, the per-type
     candidate state (≤64 counters) folds in exact delta counts and
     compresses — O(append) refresh, bounded state, history never
     re-read. The mergeable-summaries bound (cumulative undercount ≤
@@ -3934,7 +3947,7 @@ def q_incremental_heavy_hitters(spark, sf_dir):
     import tempfile as _tmp
 
     from feature_store_spark.incremental import refresh_heavy_hitters
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -3943,16 +3956,14 @@ def q_incremental_heavy_hitters(spark, sf_dir):
     )
     scratch = _tmp.mkdtemp(prefix="fss-incr-hh-")
     try:
-        src = ManifestedTable(spark, scratch + "/src")
-        state = ManifestedTable(spark, scratch + "/state")
-        for i in range(3):
-            src.append(events.filter(F.col("event_id") % 3 == i))
-            refresh_heavy_hitters(state, src, ["event_type"], "item", k=64)
-            if i == 1:  # redelivered refresh: txn token no-ops it
-                refresh_heavy_hitters(
-                    state, src, ["event_type"], "item", k=64
-                )
-        cand = state.read().select(
+        src, state = scratch + "/src", scratch + "/state"
+        _append_in_thirds(
+            events, "event_id", src,
+            lambda: refresh_heavy_hitters(
+                spark, state, src, ["event_type"], "item", k=64
+            ),
+        )
+        cand = DeltaTable(spark, state).scan(infer_schema=False).select(
             "event_type", "item", F.lit(True).alias("covered")
         )
         totals = events.groupBy("event_type").agg(
@@ -3998,7 +4009,7 @@ ORDER BY t.event_type, t.item
 
 def q_incremental_dedup(spark, sf_dir):
     """Incremental corpus dedup (VERDICT r8 next #2): the near-dup
-    corpus arrives as three manifest appends; after each, ONLY the
+    corpus arrives as three Delta appends; after each, ONLY the
     appended docs are minhashed and joined against the signature
     STATE (new-vs-new + new-vs-state pairs via
     ``minhash_pairs_incremental``) — the corpus text is read once, at
@@ -4011,20 +4022,20 @@ def q_incremental_dedup(spark, sf_dir):
     import tempfile as _tmp
 
     from feature_store_spark.incremental import refresh_minhash_dedup
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable
 
     corpus = _mutated_corpus(spark, sf_dir, exact=False)
     scratch = _tmp.mkdtemp(prefix="fss-incr-dedup-")
     try:
-        src = ManifestedTable(spark, scratch + "/src")
-        sig = ManifestedTable(spark, scratch + "/sig")
-        pairs = ManifestedTable(spark, scratch + "/pairs")
-        for i in range(3):
-            src.append(corpus.filter(F.col("doc_id") % 3 == i))
-            refresh_minhash_dedup(sig, pairs, src, state_partitions=4)
-            if i == 1:  # redelivery
-                refresh_minhash_dedup(sig, pairs, src, state_partitions=4)
-        out = pairs.read().select(
+        src, sig = scratch + "/src", scratch + "/sig"
+        pairs = scratch + "/pairs"
+        _append_in_thirds(
+            corpus, "doc_id", src,
+            lambda: refresh_minhash_dedup(
+                spark, sig, pairs, src, state_partitions=4
+            ),
+        )
+        out = DeltaTable(spark, pairs).scan(infer_schema=False).select(
             "id_a", "id_b", _r6(F.col("est_jaccard")).alias("est_jaccard")
         )
         return out.localCheckpoint(eager=True)
@@ -4034,7 +4045,7 @@ def q_incremental_dedup(spark, sf_dir):
 
 def q_stream_incremental_dedup(spark, sf_dir):
     """STREAMING corpus dedup under the oracle gate: the near-dup
-    corpus micro-batches into a manifested corpus table
+    corpus micro-batches into a Delta corpus table
     (``maxFilesPerTrigger=1`` over 4 files forces multiple commits),
     and after every batch the MinHash dedup state advances by reading
     ONLY the appended docs (incremental_dedup_sink). The accumulated
@@ -4042,7 +4053,7 @@ def q_stream_incremental_dedup(spark, sf_dir):
     the same oracle SQL as minhash_pairs."""
     import shutil as _sh
 
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable, delta_head
     from feature_store_spark.streaming.materializer import (
         incremental_dedup_sink,
     )
@@ -4055,9 +4066,7 @@ def q_stream_incremental_dedup(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/in")
     )
-    src = ManifestedTable(spark, f"{d}/src")
-    sig = ManifestedTable(spark, f"{d}/sig")
-    pairs = ManifestedTable(spark, f"{d}/pairs")
+    src, sig, pairs = f"{d}/src", f"{d}/sig", f"{d}/pairs"
     try:
         q = (
             stream.writeStream.foreachBatch(
@@ -4074,12 +4083,13 @@ def q_stream_incremental_dedup(spark, sf_dir):
             raise RuntimeError(
                 "stream_incremental_dedup: stream did not finish in 300s"
             )
-        if pairs.current_version() < 2:
+        n_commits = delta_head(spark, pairs)[1] + 1
+        if n_commits < 2:
             raise RuntimeError(
                 "stream_incremental_dedup: expected multiple state "
-                f"refreshes, got version {pairs.current_version()}"
+                f"refreshes, got {n_commits} commit(s)"
             )
-        out = pairs.read().select(
+        out = DeltaTable(spark, pairs).scan(infer_schema=False).select(
             "id_a", "id_b", _r6(F.col("est_jaccard")).alias("est_jaccard")
         )
         return out.localCheckpoint(eager=True)
@@ -4097,19 +4107,17 @@ def q_incremental_dedup_exact(spark, sf_dir):
     import tempfile as _tmp
 
     from feature_store_spark.incremental import refresh_exact_dedup
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable
 
     corpus = _mutated_corpus(spark, sf_dir, exact=True)
     scratch = _tmp.mkdtemp(prefix="fss-incr-exact-")
     try:
-        src = ManifestedTable(spark, scratch + "/src")
-        state = ManifestedTable(spark, scratch + "/state")
-        for i in range(3):
-            src.append(corpus.filter(F.col("doc_id") % 3 == i))
-            refresh_exact_dedup(state, src)
-            if i == 1:
-                refresh_exact_dedup(state, src)  # redelivery no-op
-        return state.read().select(
+        src, state = scratch + "/src", scratch + "/state"
+        _append_in_thirds(
+            corpus, "doc_id", src,
+            lambda: refresh_exact_dedup(spark, state, src),
+        )
+        return DeltaTable(spark, state).scan(infer_schema=False).select(
             "fingerprint", "keeper_id", "n_copies"
         ).localCheckpoint(eager=True)
     finally:
@@ -4136,7 +4144,11 @@ def q_incremental_ann(spark, sf_dir):
         pq_encode,
         pq_train,
     )
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_head,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cb = pq_train(emb, m=8, ksub=16)
@@ -4148,14 +4160,14 @@ def q_incremental_ann(spark, sf_dir):
     )
     scratch = _tmp.mkdtemp(prefix="fss-incr-ann-")
     try:
-        src = ManifestedTable(spark, scratch + "/src")
-        idx = ManifestedTable(spark, scratch + "/idx")
+        src, idx = scratch + "/src", scratch + "/idx"
         for i in range(2):
-            src.append(emb.filter(F.col("vec_id") % 2 == i))
-            refresh_ivfpq_index(idx, src, cb, cents)
-        v = idx.current_version()
-        refresh_ivfpq_index(idx, src, cb, cents)
-        redelivery_noop = idx.current_version() == v
+            delta_append(emb.filter(F.col("vec_id") % 2 == i), src)
+            refresh_ivfpq_index(spark, idx, src, cb, cents)
+        v = delta_head(spark, idx)[1]
+        refresh_ivfpq_index(spark, idx, src, cb, cents)
+        redelivery_noop = delta_head(spark, idx)[1] == v
+        index = DeltaTable(spark, idx).scan(infer_schema=False)
 
         full = pq_encode(emb, cb).join(
             assign_clusters(
@@ -4166,7 +4178,7 @@ def q_incremental_ann(spark, sf_dir):
         )
         state_rows = {
             (r["vec_id"], tuple(r["codes"] or []), r["cluster"])
-            for r in idx.read().collect()
+            for r in index.collect()
         }
         full_rows = {
             (r["vec_id"], tuple(r["codes"] or []), r["cluster"])
@@ -4183,7 +4195,7 @@ def q_incremental_ann(spark, sf_dir):
                 ).collect()
             }
 
-        search_matches = topk(idx.read()) == topk(full)
+        search_matches = topk(index) == topk(full)
         return local_rows_df(
             spark,
             [
@@ -9683,7 +9695,7 @@ JOIN events p
 
 def q_stream_incremental_agg(spark, sf_dir):
     """STREAMING MATERIALIZED VIEW under the oracle gate: the events
-    stream micro-batches into a manifested source table
+    stream micro-batches into a Delta source table
     (``maxFilesPerTrigger=1`` over 4 files forces multiple commits),
     and after every append the per-type aggregate state advances by
     folding ONLY the appended files (incremental.refresh_aggregate) —
@@ -9692,7 +9704,7 @@ def q_stream_incremental_agg(spark, sf_dir):
     import shutil as _sh
 
     from feature_store_spark.incremental import aggregate_view
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import delta_head
     from feature_store_spark.streaming.materializer import (
         incremental_view_sink,
     )
@@ -9710,8 +9722,7 @@ def q_stream_incremental_agg(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/in")
     )
-    source = ManifestedTable(spark, f"{d}/src")
-    state = ManifestedTable(spark, f"{d}/state")
+    source, state = f"{d}/src", f"{d}/state"
     try:
         q = (
             stream.writeStream.foreachBatch(
@@ -9728,12 +9739,13 @@ def q_stream_incremental_agg(spark, sf_dir):
             raise RuntimeError(
                 "stream_incremental_agg: stream did not finish in 300s"
             )
-        if state.current_version() < 2:
+        n_commits = delta_head(spark, state)[1] + 1
+        if n_commits < 2:
             raise RuntimeError(
                 "stream_incremental_agg: expected multiple state "
-                f"refreshes, got version {state.current_version()}"
+                f"refreshes, got {n_commits} commit(s)"
             )
-        out = aggregate_view(state, ["event_type"]).select(
+        out = aggregate_view(spark, state, ["event_type"]).select(
             "event_type",
             "n_rows",
             "n_vals",
@@ -9747,29 +9759,29 @@ def q_stream_incremental_agg(spark, sf_dir):
         _sh.rmtree(d, ignore_errors=True)
 
 
-def q_stream_manifest_sink(spark, sf_dir):
-    """STREAMING → TRANSACTIONAL TABLE under the oracle gate: the
-    purchase stream lands in a ``ManifestedTable`` through
-    foreachBatch — one atomic manifest commit per micro-batch
-    (``maxFilesPerTrigger=1`` over a 4-file input forces multiple
-    commits), each carrying its Delta-style ``(app_id, batch_id)``
-    idempotence token — and the COMMITTED snapshot is read back as
-    the result. ``multi_commit`` pins that >1 commit actually
-    happened; ``txn_contiguous`` pins the idempotence bookkeeping
-    (high-water mark = batches 0..n-1). The result frame is
+def _purchase_delta_sink(spark, sf_dir, name, partition_cols):
+    """The events stream landed in a Delta table through
+    ``delta_append_sink`` — one atomic log commit per micro-batch
+    (``maxFilesPerTrigger=1`` over a 4-file input forces several), each
+    carrying the protocol's ``txn`` action for (app_id, batch_id) — and
+    the committed purchases read back. ``multi_commit`` pins that >1
+    commit happened; ``txn_contiguous`` that versions 0..n-1 carry
+    batches 0..n-1, so the high-water mark is the latest version.
+    Unpartitioned, the stream itself keeps only purchases; partitioned
+    by event_type, the read prunes to them. The result frame is
     localCheckpointed so the scratch table can be deleted before
     returning."""
     import shutil as _sh
 
-    from feature_store_spark.sources.manifest import ManifestedTable
-    from feature_store_spark.streaming.materializer import (
-        start_manifest_materializer,
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append_sink,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
-    d = _stream_tmpdir("fss_stream_manifest_")
+    d = _stream_tmpdir(f"fss_{name}_")
     # repartition, not coalesce: a small SF reads as ONE partition and
     # coalesce cannot raise it — the 4 input files are what forces >1
     # micro-batch under maxFilesPerTrigger=1
@@ -9781,39 +9793,54 @@ def q_stream_manifest_sink(spark, sf_dir):
         )
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/in")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts", "value")
     )
-    table = ManifestedTable(spark, f"{d}/table")
+    if not partition_cols:
+        stream = stream.filter(F.col("event_type") == "purchase").select(
+            "event_id", "user_id", "ts", "value"
+        )
     try:
-        q = start_manifest_materializer(
-            stream,
-            table,
-            app_id="purchase-sink",
-            checkpoint_dir=f"{d}/ckpt",
-            available_now=True,
+        q = (
+            stream.writeStream.foreachBatch(
+                delta_append_sink(
+                    f"{d}/table", "purchase-sink",
+                    partition_cols=partition_cols,
+                )
+            )
+            .option("checkpointLocation", f"{d}/ckpt")
+            .trigger(availableNow=True)
+            .start()
         )
         if not q.awaitTermination(300):
             q.stop()
-            raise RuntimeError(
-                "stream_manifest_sink: stream did not finish in 300s"
-            )
-        n_commits = table.current_version()
-        hwm = table.txn_version("purchase-sink")
-        return (
-            table.read()
-            .select(
-                "event_id",
-                "user_id",
-                F.unix_micros("ts").alias("ts_us"),
-                _r6(F.col("value")).alias("value"),
-                F.lit(n_commits >= 2).alias("multi_commit"),
-                F.lit(hwm == n_commits - 1).alias("txn_contiguous"),
-            )
-            .localCheckpoint(eager=True)
+            raise RuntimeError(f"{name}: stream did not finish in 300s")
+        t = DeltaTable(spark, f"{d}/table")
+        n_commits = t.latest_version() + 1
+        hwm = t.txn_version("purchase-sink")
+        out = (
+            t.scan(filters=[("event_type", "=", "purchase")])
+            if partition_cols
+            else t.scan(infer_schema=False)
         )
+        return out.select(
+            "event_id",
+            "user_id",
+            F.unix_micros("ts").alias("ts_us"),
+            _r6(F.col("value")).alias("value"),
+            F.lit(n_commits >= 2).alias("multi_commit"),
+            F.lit(hwm == n_commits - 1).alias("txn_contiguous"),
+        ).localCheckpoint(eager=True)
     finally:
         _sh.rmtree(d, ignore_errors=True)
+
+
+def q_stream_manifest_sink(spark, sf_dir):
+    """STREAMING → TRANSACTIONAL TABLE under the oracle gate: the
+    purchase stream lands in an unpartitioned Delta table, one atomic
+    txn-carrying commit per micro-batch, and the COMMITTED table is
+    the result (see :func:`_purchase_delta_sink`)."""
+    return _purchase_delta_sink(
+        spark, sf_dir, "stream_manifest_sink", None
+    )
 
 
 STREAM_MANIFEST_SINK_SQL = """
@@ -9825,70 +9852,16 @@ FROM events WHERE event_type = 'purchase'
 
 
 def q_stream_delta_sink(spark, sf_dir):
-    """STREAMING → DELTA TABLE under the oracle gate: the purchase
-    stream lands in a Delta Lake table through foreachBatch — one
-    JSON log commit per micro-batch, each carrying the protocol's
-    ``txn`` action for (app_id, batch_id) idempotence — and the
-    committed table is scanned back (partition-pruned on event_type's
-    hive partition) as the result. Same exactly-once contract as
-    stream_manifest_sink, expressed in the OPEN format a real Delta
-    reader can also open. ``multi_commit`` / ``txn_contiguous`` pin
-    that >1 commit happened and the high-water mark covers batches
-    0..n-1."""
-    import shutil as _sh
-
-    from feature_store_spark.sources.delta import (
-        DeltaTable,
-        delta_append_sink,
+    """STREAMING → DELTA TABLE under the oracle gate: the events
+    stream lands in a Delta table hive-partitioned on event_type, one
+    txn-carrying commit per micro-batch, and the committed table is
+    scanned back partition-pruned to the purchases. Same exactly-once
+    contract as stream_manifest_sink (see
+    :func:`_purchase_delta_sink`), with the purchase filter moved from
+    the stream to partition pruning."""
+    return _purchase_delta_sink(
+        spark, sf_dir, "stream_delta_sink", ["event_type"]
     )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    d = _stream_tmpdir("fss_stream_delta_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string,"
-            " ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
-    )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                delta_append_sink(
-                    f"{d}/table", "purchase-sink",
-                    partition_cols=["event_type"],
-                )
-            )
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_delta_sink: stream did not finish in 300s"
-            )
-        t = DeltaTable(spark, f"{d}/table")
-        n_commits = t.latest_version() + 1
-        hwm = t.txn_version("purchase-sink")
-        out = t.scan(filters=[("event_type", "=", "purchase")])
-        return (
-            out.select(
-                "event_id",
-                "user_id",
-                F.unix_micros("ts").alias("ts_us"),
-                _r6(F.col("value")).alias("value"),
-                F.lit(n_commits >= 2).alias("multi_commit"),
-                F.lit(hwm == n_commits - 1).alias("txn_contiguous"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
 
 
 def q_stream_iceberg_sink(spark, sf_dir):
@@ -10058,7 +10031,7 @@ def q_incremental_drift(spark, sf_dir):
     """Drift monitoring as materialized-view maintenance (r10): the
     same PSI semantics as ``drift_psi`` — reference deciles, injected
     l_extendedprice reprice, eps-floored shares — but the CURRENT
-    window arrives as three manifest appends and the monitor never
+    window arrives as three Delta appends and the monitor never
     re-reads it. ``drift_monitor_config`` freezes the reference side
     once (the model-ship shape); ``refresh_drift_counts`` folds ONLY
     each appended batch's bin counts into the state (O(append),
@@ -10071,7 +10044,7 @@ def q_incremental_drift(spark, sf_dir):
     import tempfile as _tmp
 
     from feature_store_spark.incremental import refresh_drift_counts
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable
     from feature_store_spark.stats import (
         drift_monitor_config,
         psi_from_counts,
@@ -10106,14 +10079,14 @@ def q_incremental_drift(spark, sf_dir):
         cfg = drift_monitor_config(
             ref, ["l_quantity", "l_extendedprice"], bins=10
         )
-        src = ManifestedTable(spark, scratch + "/src")
-        state = ManifestedTable(spark, scratch + "/state")
-        for i in range(3):
-            src.append(cur.filter(F.col("l_orderkey") % 3 == i))
-            refresh_drift_counts(state, src, cfg["edges"])
-            if i == 1:  # redelivered refresh: txn token no-ops it
-                refresh_drift_counts(state, src, cfg["edges"])
-        out = psi_from_counts(spark, cfg, state.read())
+        src, state = scratch + "/src", scratch + "/state"
+        _append_in_thirds(
+            cur, "l_orderkey", src,
+            lambda: refresh_drift_counts(spark, state, src, cfg["edges"]),
+        )
+        out = psi_from_counts(
+            spark, cfg, DeltaTable(spark, state).scan(infer_schema=False)
+        )
         return out.coalesce(1).localCheckpoint(eager=True)
     finally:
         base.unpersist()
@@ -10122,7 +10095,7 @@ def q_incremental_drift(spark, sf_dir):
 
 def q_stream_incremental_distinct(spark, sf_dir):
     """STREAMING distinct-count maintenance under the oracle gate:
-    events micro-batch into a manifested log (multiple commits
+    events micro-batch into a Delta log (multiple commits
     forced), and after every batch the per-type HLL sketch state
     folds in ONLY the appended rows (incremental_distinct_sink). The
     final state's estimate must land within 2% of the exact per-type
@@ -10132,7 +10105,7 @@ def q_stream_incremental_distinct(spark, sf_dir):
     import shutil as _sh
 
     from feature_store_spark.incremental import distinct_view
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import delta_head
     from feature_store_spark.streaming.materializer import (
         incremental_distinct_sink,
     )
@@ -10147,8 +10120,7 @@ def q_stream_incremental_distinct(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/in")
     )
-    src = ManifestedTable(spark, f"{d}/src")
-    state = ManifestedTable(spark, f"{d}/state")
+    src, state = f"{d}/src", f"{d}/state"
     try:
         q = (
             stream.writeStream.foreachBatch(
@@ -10167,10 +10139,11 @@ def q_stream_incremental_distinct(spark, sf_dir):
                 "stream_incremental_distinct: stream did not finish "
                 "in 300s"
             )
-        if state.current_version() < 2:
+        n_commits = delta_head(spark, state)[1] + 1
+        if n_commits < 2:
             raise RuntimeError(
                 "stream_incremental_distinct: expected multiple "
-                f"state refreshes, got {state.current_version()}"
+                f"state refreshes, got {n_commits} commit(s)"
             )
         full = ev.groupBy("event_type").agg(
             F.hll_sketch_estimate(
@@ -10179,7 +10152,7 @@ def q_stream_incremental_distinct(spark, sf_dir):
             F.count_distinct("user_id").alias("n_distinct_users"),
         )
         out = (
-            distinct_view(state, ["event_type"])
+            distinct_view(spark, state, ["event_type"])
             .join(full, "event_type")
             .select(
                 "event_type",
@@ -10214,7 +10187,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 def q_stream_incremental_drift(spark, sf_dir):
     """STREAMING drift monitor under the oracle gate: the repriced
-    current window micro-batches into a manifested serving log
+    current window micro-batches into a Delta serving log
     (``maxFilesPerTrigger=1`` over 4 files forces multiple commits),
     and after every batch the PSI bin-count state advances by reading
     ONLY the appended rows (incremental_drift_sink, frozen reference
@@ -10223,7 +10196,7 @@ def q_stream_incremental_drift(spark, sf_dir):
     ``drift_psi``."""
     import shutil as _sh
 
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable, delta_head
     from feature_store_spark.stats import (
         drift_monitor_config,
         psi_from_counts,
@@ -10255,8 +10228,7 @@ def q_stream_incremental_drift(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/in")
     )
-    src = ManifestedTable(spark, f"{d}/src")
-    state = ManifestedTable(spark, f"{d}/state")
+    src, state = f"{d}/src", f"{d}/state"
     try:
         q = (
             stream.writeStream.foreachBatch(
@@ -10273,12 +10245,15 @@ def q_stream_incremental_drift(spark, sf_dir):
             raise RuntimeError(
                 "stream_incremental_drift: stream did not finish in 300s"
             )
-        if state.current_version() < 2:
+        n_commits = delta_head(spark, state)[1] + 1
+        if n_commits < 2:
             raise RuntimeError(
                 "stream_incremental_drift: expected multiple state "
-                f"refreshes, got version {state.current_version()}"
+                f"refreshes, got {n_commits} commit(s)"
             )
-        out = psi_from_counts(spark, cfg, state.read())
+        out = psi_from_counts(
+            spark, cfg, DeltaTable(spark, state).scan(infer_schema=False)
+        )
         return out.localCheckpoint(eager=True)
     finally:
         _sh.rmtree(d, ignore_errors=True)

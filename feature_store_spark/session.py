@@ -41,8 +41,8 @@ SESSION_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # write timestamps as annotated MICROS, not legacy INT96:
     # INT96 carries NO footer min/max statistics, which would
-    # blind both parquet row-group skipping and the manifest
-    # data-skipping stats (sources/manifest.py) on every
+    # blind both parquet row-group skipping and the table
+    # formats' footer-derived file bounds on every
     # timestamp column this engine writes; the commit kernel
     # (sources/commit.py) refuses table writes without it
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",

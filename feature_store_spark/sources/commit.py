@@ -1,5 +1,4 @@
-"""The commit kernel shared by the three table formats (Delta, Iceberg,
-ManifestedTable).
+"""The commit kernel shared by the two table formats (Delta, Iceberg).
 
 Every format commits the way the reference's offline store does
 (IcebergOfflineStore.java:78-114): write data files nobody references
@@ -15,11 +14,10 @@ file. This module owns the two halves:
   ``ConcurrentWriteError``.
 
 What stays per format: where the staged files land (Delta's canonical
-layout, ``data/<uuid>/`` for ManifestedTable, in place for Iceberg) and
-how a ``StagedFile.col_ranges`` entry is encoded (Delta stats JSON,
-Iceberg byte bounds, manifest JSON). On an object store without
-atomic create-exclusive, ``publish_if_absent`` is the seam to swap for
-a catalog conditional put.
+layout, in place for Iceberg) and how a ``StagedFile.col_ranges``
+entry is encoded (Delta stats JSON, Iceberg byte bounds). On an object
+store without atomic create-exclusive, ``publish_if_absent`` is the
+seam to swap for a catalog conditional put.
 """
 
 from __future__ import annotations
@@ -57,14 +55,19 @@ class StagedFile:
     col_ranges: dict[str, list]
 
 
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
 def _footer(path: str) -> StagedFile:
     """Row count and column ranges from one parquet footer (KBs, never
     data pages). A file's range covers every row group: a row group
     holding values but no min/max (parquet-mr and pyarrow drop stats
     over 4 KB; legacy INT96 timestamps carry none) makes the column's
     bounds unknown for the whole file, since a range built from the
-    other row groups would prune rows that match. All-null row groups
-    have nothing to bound and are skipped."""
+    other row groups would prune rows that match. A NaN min or max
+    makes the bounds unknown the same way. All-null row groups have
+    nothing to bound and are skipped."""
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(path)
@@ -85,6 +88,12 @@ def _footer(path: str) -> StagedFile:
                     and st.null_count == col.num_values
                 ):
                     continue
+                unknown.add(name)
+                ranges.pop(name, None)
+                continue
+            if _is_nan(st.min) or _is_nan(st.max):
+                # parquet-mr folds NaN into float min/max; a NaN bound
+                # orders against nothing, so it is recorded as unknown
                 unknown.add(name)
                 ranges.pop(name, None)
                 continue

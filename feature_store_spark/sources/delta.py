@@ -1,11 +1,12 @@
-"""Read-only Delta Lake table scan + minimal append/DELETE exporter
-(public protocol:
-https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
+"""Delta Lake tables: the engine's native transactional format (public
+protocol: https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
 
-Parity/interop: the engine's native transactional format is
-sources/manifest.py; this module lets it SCAN a table a Delta writer
-produced and EXPORT one a Delta reader can open — completing the
-open-format interop story next to sources/iceberg.py.
+Every write verb stages files through sources/commit.py and claims the
+next ``_delta_log`` version put-if-absent: appends retry at the next
+version (they commute), every verb derived from a read version
+(replace-all, MERGE, DELETE, OPTIMIZE, RESTORE) conflicts instead. The
+same module scans tables a Delta writer produced, next to
+sources/iceberg.py.
 
 Physical shape: the Delta log is line-delimited JSON commits
 (``_delta_log/%020d.json``) with add/remove file actions, plus
@@ -906,8 +907,10 @@ class DeltaTable:
 
     def txn_version(self, app_id: str, version: int | None = None) -> int:
         """Highest committed streaming-txn counter for ``app_id`` (-1
-        if none) — the Delta protocol's ``txn`` action, the same
-        restart-recovery read ManifestedTable.txn_version serves."""
+        if none) — the Delta protocol's ``txn`` action, the
+        restart-recovery read of an idempotent writer. ``version`` pins
+        the read to one snapshot, so a caller that also reads table
+        state there sees token and state from the same commit."""
         _, _, txns = self._state(version)
         return txns.get(app_id, -1)
 
@@ -1047,9 +1050,11 @@ class DeltaTable:
         version: int | None = None,
         filters: list[tuple] | None = None,
         as_of_ms: int | None = None,
+        infer_schema: bool = True,
     ) -> DataFrame:
-        from pyspark.sql import functions as F
-
+        """``infer_schema=False`` reads an unmapped table under the
+        log's recorded schema instead of Spark's footer inference,
+        which costs one Spark job per read."""
         if as_of_ms is not None:
             if version is not None:
                 raise ValueError("pass version OR as_of_ms, not both")
@@ -1074,30 +1079,81 @@ class DeltaTable:
                     ),
                 )
             return (
-                self._assemble([all_adds[0]], meta, maybe_evolved)
-                .drop("__fp", "__pos")
+                self._assemble(
+                    [all_adds[0]], meta, maybe_evolved, infer_schema, False
+                )
                 .limit(0)
             )
-        df = self._assemble_live(adds, meta, maybe_evolved)
-        df = df.drop("__fp", "__pos")
+        df = self._assemble_live(
+            adds, meta, maybe_evolved, infer_schema, tagged=False
+        )
         for f in filters or []:
             df = df.filter(_Filter(*f).sql())
         return df
+
+    def read_appended(self, since: int, to: int | None = None) -> DataFrame:
+        """The rows added by the commits in ``(since, to]`` (``to``
+        defaults to the latest version; ``since=-1`` starts at the
+        table's first commit), read under the schema at ``to`` — the
+        change read incremental maintenance folds, O(append) instead
+        of O(table).
+
+        Raises ``ValueError`` when a commit in the range removes a file
+        (overwrite, MERGE, DELETE, OPTIMIZE: its adds no longer mean
+        new rows) or when a commit's JSON is gone; the caller falls
+        back to a full recompute."""
+        to = self.latest_version() if to is None else int(to)
+        adds: list[dict] = []
+        for v in range(int(since) + 1, to + 1):
+            try:
+                with open(os.path.join(self.log_dir, f"{v:020d}.json")) as f:
+                    actions = [json.loads(ln) for ln in f if ln.strip()]
+            except FileNotFoundError:
+                raise ValueError(
+                    f"{self.path}: commit {v} is gone; the range "
+                    "cannot be proven append-only"
+                ) from None
+            if any("remove" in a for a in actions):
+                raise ValueError(
+                    f"{self.path}: commit {v} removes files, not an "
+                    "append; incremental read undefined"
+                )
+            adds.extend(a["add"] for a in actions if "add" in a)
+        meta, _, _ = self._state(to)
+        if not adds:
+            from pyspark.sql import types as T
+
+            return self.spark.createDataFrame(
+                [], T.StructType.fromJson(json.loads(meta["schemaString"]))
+            )
+        return self._assemble_live(
+            adds,
+            meta,
+            self._maybe_evolved.get(to, True),
+            infer_schema=False,
+            tagged=False,
+        )
 
     def _assemble_live(
         self,
         adds: list[dict],
         meta: dict,
         maybe_evolved: bool = True,
+        infer_schema: bool = True,
+        tagged: bool = True,
     ) -> DataFrame:
         """``_assemble`` minus the rows the adds' deletion vectors
         already killed, keeping the ``__fp``/``__pos`` tags — the
         LIVE row set a MERGE probe must match against (a DV-dead row
-        is not a row; firing a merge arm on one would resurrect it)."""
+        is not a row; firing a merge arm on one would resurrect it).
+        ``tagged=False`` drops the tags; without deletion vectors the
+        scan then never reads the row-index metadata column."""
         from pyspark.sql import functions as F
 
-        df = self._assemble(adds, meta, maybe_evolved)
         dv_adds = [a for a in adds if a.get("deletionVector")]
+        df = self._assemble(
+            adds, meta, maybe_evolved, infer_schema, tagged or bool(dv_adds)
+        )
         if dv_adds:
             # decode all DVs at plan time (KB–MB metadata) and remove
             # their (file, row ordinal) pairs with ONE anti-join —
@@ -1132,17 +1188,19 @@ class DeltaTable:
                     & (df["__pos"] == dv_df["__del_pos"]),
                     "left_anti",
                 )
-        return df
+        return df if tagged else df.drop("__fp", "__pos")
 
     def _assemble(
         self,
         adds: list[dict],
         meta: dict,
         maybe_evolved: bool = True,
+        infer_schema: bool = True,
+        tagged: bool = True,
     ) -> DataFrame:
-        """Read the add set to a frame with LOGICAL column names plus
-        ``__fp`` (absolute data-file path) / ``__pos`` (row ordinal)
-        tags for deletion-vector matching.
+        """Read the add set to a frame with LOGICAL column names plus,
+        when ``tagged``, ``__fp`` (absolute data-file path) / ``__pos``
+        (row ordinal) tags for deletion-vector matching.
 
         Unmapped hive-layout tables keep the single-scan ``basePath``
         fast path (partition dirs reconstruct the columns). Mapped or
@@ -1160,6 +1218,8 @@ class DeltaTable:
         phys_parts = [log2phys.get(c, c) for c in logical_parts]
 
         def tag(frame):
+            if not tagged:
+                return frame
             return frame.withColumn(
                 "__fp",
                 F.regexp_replace(
@@ -1200,13 +1260,18 @@ class DeltaTable:
                 all(f"{c}=" in a["path"] for c in phys_parts)
                 for a in adds
             )
+            reader = self.spark.read
+            if not infer_schema:
+                from pyspark.sql import types as T
+
+                reader = reader.schema(
+                    T.StructType.fromJson(json.loads(meta["schemaString"]))
+                )
             if homogeneous and not logical_parts:
-                return tag(self.spark.read.parquet(*paths))
+                return tag(reader.parquet(*paths))
             if homogeneous and hive:
                 return tag(
-                    self.spark.read.option("basePath", self.path).parquet(
-                        *paths
-                    )
+                    reader.option("basePath", self.path).parquet(*paths)
                 )
         if not sig_of:
             sig_of = self._footer_sigs(paths)
@@ -1250,7 +1315,9 @@ class DeltaTable:
                 cols.append(
                     F.lit(v).cast(_ddl(types.get(lc))).alias(lc)
                 )
-            frames.append(g.select(*cols, "__fp", "__pos"))
+            frames.append(
+                g.select(*cols, *(["__fp", "__pos"] if tagged else []))
+            )
         out = frames[0]
         for g in frames[1:]:
             out = out.unionByName(g)
@@ -1336,9 +1403,13 @@ def _parse_partition_value(s: str | None, type_str: str | None):
             return s == "true"
         if type_str == "string":
             return s
+        if type_str == "date":
+            import datetime
+
+            return datetime.date.fromisoformat(s)
     except ValueError:
         return None
-    return None  # dates/timestamps/decimals: no pruning, stay safe
+    return None  # timestamps/decimals: no pruning, stay safe
 
 
 _INTERVAL_UNITS_MS = {
@@ -1573,7 +1644,7 @@ def delta_append(
     action in the same commit and makes redelivery a NO-OP when the
     table's high-water mark for ``app_id`` already covers ``version``
     — the exactly-once handshake Structured Streaming's foreachBatch
-    needs (same semantics as ManifestedTable.append's token).
+    needs.
 
     ``column_mapping='name'|'id'`` (first commit only) creates the
     table in that column-mapping mode: data files carry generated
@@ -1599,8 +1670,9 @@ def delta_append(
     bumped, so committed files' ids never repoint. Readers null-fill
     the new columns for pre-evolution files.
 
-    Export-grade: append-only, no concurrent-writer arbitration (the
-    engine's native format, sources/manifest.py, owns that)."""
+    Concurrent appenders arbitrate on the version claim: a lost race
+    re-checks the txn mark and retries at the next version with the
+    same staged files, unless the table definition changed."""
     import uuid
 
     import pyarrow.parquet as pq
@@ -1999,6 +2071,157 @@ def delta_append(
     # touch spark to keep the session-arg contract obvious
     assert spark is not None
     return version
+
+
+def delta_head(
+    spark: SparkSession, table_dir: str
+) -> tuple[DeltaTable | None, int]:
+    """``(table, latest version)``, or ``(None, -1)`` before the
+    table's first commit: -1 means "nothing written", never version 0."""
+    try:
+        t = DeltaTable(spark, table_dir)
+        return t, t.latest_version()
+    except (FileNotFoundError, ValueError):
+        return None, -1
+
+
+def delta_overwrite(
+    df: DataFrame,
+    table_dir: str,
+    read_version: int,
+    partition_cols: list[str] | None = None,
+    txn: tuple[str, int] | None = None,
+) -> int:
+    """Replace-all commit: remove every file live at ``read_version``
+    and add ``df``'s files (``dataChange: true``) in ONE commit that
+    claims exactly ``read_version + 1``, so a result derived from
+    ``read_version`` raises ``ConcurrentWriteError`` instead of erasing
+    a commit that landed after it. ``read_version=-1`` creates the
+    table, partitioned by ``partition_cols``. The frame's schema
+    becomes the table's. ``txn`` is recorded, not checked (the caller
+    decides redelivery). Returns the committed version."""
+    from pyspark.sql import types as T
+
+    read_version = int(read_version)
+    partition_cols = list(partition_cols or [])
+    schema_string = df.schema.json()
+    now_ms = int(time.time() * 1000)
+    actions: list[dict] = [
+        {"commitInfo": {"timestamp": now_ms, "operation": "WRITE",
+                        "operationParameters": {"mode": "Overwrite"}}}
+    ]
+    if read_version < 0:
+        os.makedirs(os.path.join(table_dir, "_delta_log"), exist_ok=True)
+        actions += [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {"id": str(uuid.uuid4()),
+                          "format": {"provider": "parquet", "options": {}},
+                          "schemaString": schema_string,
+                          "partitionColumns": partition_cols,
+                          "configuration": {}}},
+        ]
+    else:
+        t = DeltaTable(df.sparkSession, table_dir)
+        meta, adds, _ = t._state(read_version)
+        constraints = _writer_feature_gate(
+            t, meta, "delta_overwrite", mutates=True
+        )
+        if t._mapping(meta)[0] != "none":
+            raise NotImplementedError(
+                f"{table_dir}: replace-all on a column-mapped table"
+            )
+        tbl_parts = meta.get("partitionColumns") or []
+        if partition_cols and partition_cols != tbl_parts:
+            raise ValueError(
+                f"{table_dir}: table is partitioned by {tbl_parts}; "
+                f"overwrite passed partition_cols={partition_cols}"
+            )
+        partition_cols = tbl_parts
+        if constraints:
+            _enforce_check_constraints(
+                df, constraints, table_dir, "delta_overwrite"
+            )
+
+        def shape(s: str) -> list:
+            return [
+                (f.name, _norm_type(f.dataType.jsonValue()))
+                for f in T.StructType.fromJson(json.loads(s)).fields
+            ]
+
+        if shape(schema_string) != shape(meta["schemaString"]):
+            actions.append(
+                {"metaData": {**meta, "schemaString": schema_string}}
+            )
+        actions += [
+            {"remove": {"path": a["path"], "dataChange": True,
+                        "deletionTimestamp": now_ms,
+                        "partitionValues": a.get("partitionValues") or {},
+                        "size": a.get("size")}}
+            for a in adds
+        ]
+    actions += _stage_adds(
+        df,
+        table_dir,
+        read_version + 1,
+        partition_cols,
+        [c for c in df.columns if c not in partition_cols],
+    )
+    if txn is not None:
+        actions.append(
+            {"txn": {"appId": txn[0], "version": int(txn[1]),
+                     "lastUpdated": 0}}
+        )
+    _claim_or_raise(table_dir, read_version + 1, actions, "overwrite")
+    return read_version + 1
+
+
+def delta_merge_latest(
+    updates: DataFrame,
+    table_dir: str,
+    keys: list[str],
+    order_col: str,
+    tiebreak_cols: list[str] | tuple = (),
+    partition_cols: list[str] | None = None,
+    txn: tuple[str, int] | None = None,
+) -> int:
+    """Last-writer-wins copy-on-write MERGE: the table becomes
+    ``latest_per_key(scan ∪ updates)`` by ``order_col`` (then
+    ``tiebreak_cols``), committed through :func:`delta_overwrite` with
+    a CAS on the scanned version; a lost race re-derives (three tries).
+    Unlike :func:`delta_upsert` it collapses duplicate keys on either
+    side, and a batch that adds or lacks nullable columns evolves or
+    null-fills the schema. ``txn=(app_id, n)`` makes a redelivered
+    batch a no-op; ``partition_cols`` applies when the merge creates
+    the table. Returns the committed version."""
+    from feature_store_spark.operators.reshape import latest_per_key
+
+    for _ in range(3):
+        t, base = delta_head(updates.sparkSession, table_dir)
+        if (
+            t is not None
+            and txn is not None
+            and t.txn_version(txn[0], base) >= int(txn[1])
+        ):
+            return base
+        merged = latest_per_key(
+            updates
+            if t is None
+            else t.scan(version=base, infer_schema=False).unionByName(
+                updates, allowMissingColumns=True
+            ),
+            list(keys),
+            order_col,
+            list(tiebreak_cols),
+        )
+        try:
+            return delta_overwrite(
+                merged, table_dir, base, partition_cols, txn
+            )
+        except ConcurrentWriteError:
+            continue
+    raise ConcurrentWriteError(
+        f"{table_dir}: merge lost the version race 3 times"
+    )
 
 
 def delta_optimize(
@@ -2538,8 +2761,10 @@ def delta_vacuum(
     or an untracked orphan whose mtime is (a concurrent writer's
     in-flight data files must not look like garbage). Time travel to
     versions whose files are vacuumed stops working, exactly as in
-    Delta proper. Returns the deleted (or, with ``dry_run``,
-    deletable) paths relative to the table root.
+    Delta proper. Crashed writers' ``.staging-*`` dirs and unpublished
+    ``_delta_log/.tmp-*`` files are reaped under the same mtime grace.
+    Returns the deleted (or, with ``dry_run``, deletable) paths
+    relative to the table root.
 
     ``retention_ms`` defaults to the table property
     ``delta.deletedFileRetentionDuration`` when set, else 0 — the
@@ -2607,10 +2832,33 @@ def delta_vacuum(
                 if ts > cutoff:
                     continue  # inside the retention window
             doomed.append(rel)
+    def stale(rel: str) -> bool:
+        try:
+            mtime_ms = os.path.getmtime(os.path.join(t.path, rel)) * 1000
+        except OSError:
+            return False  # its writer finished and removed it
+        return retention_ms <= 0 or mtime_ms <= cutoff
+
+    # crashed writers' debris: staging dirs under the root and
+    # unpublished commit temp files in the log, under the same grace
+    debris = [
+        rel
+        for rel in [n for n in os.listdir(t.path)
+                    if n.startswith(".staging-")]
+        + [os.path.join("_delta_log", n)
+           for n in os.listdir(t.log_dir) if n.startswith(".tmp-")]
+        if stale(rel)
+    ]
     if not dry_run:
         for rel in doomed:
             os.remove(os.path.join(t.path, rel))
-    return sorted(doomed)
+        for rel in debris:
+            p = os.path.join(t.path, rel)
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.remove(p)
+    return sorted(doomed + debris)
 
 
 def delta_checkpoint(spark: SparkSession, table_dir: str) -> int:

@@ -63,6 +63,7 @@ Scope gates (loud, documented):
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -73,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from feature_store_spark.session import local_rows_df
 from feature_store_spark.sources.avro_io import read_avro
+from feature_store_spark.sources.commit import _is_nan
 
 _US_PER_DAY = 86_400_000_000
 _US_PER_HOUR = 3_600_000_000
@@ -206,6 +208,20 @@ class _Filter:
         v, op = self.value, self.op
         if op == "in":
             return any(_Filter(self.col, "=", x).might_match(lo, hi) for x in v)
+        # Spark orders NaN above every number and NaN = NaN holds, so a
+        # NaN literal prunes nothing, and a NaN bound (older writers'
+        # footers) is unknown: a NaN max leaves the range unbounded above
+        if _is_nan(v):
+            return True
+        lo = None if _is_nan(lo) else lo
+        hi = None if _is_nan(hi) else hi
+        try:
+            return self._interval_match(lo, hi)
+        except TypeError:
+            return True  # bound and literal not comparable: keep
+
+    def _interval_match(self, lo, hi) -> bool:
+        v, op = self.value, self.op
         if op == "!=":
             # only an exactly-constant [v, v] range is excluded
             return not (lo is not None and hi is not None and lo == hi == v)
@@ -227,6 +243,12 @@ class _Filter:
                 return "'" + x.replace("'", "''") + "'"
             if isinstance(x, bool):
                 return "true" if x else "false"
+            if isinstance(x, datetime.datetime):
+                return f"TIMESTAMP '{x.isoformat(sep=' ')}'"
+            if isinstance(x, datetime.date):
+                return f"DATE '{x.isoformat()}'"
+            if _is_nan(x):
+                return "double('NaN')"
             return repr(x)
 
         if self.op == "in":

@@ -34,8 +34,8 @@ identity + day spec by default, or any ``partition_spec`` built from
 the spec's transforms — identity, year/month/day/hour, bucket[N]
 (spec murmur3), truncate[W] — plus the unpartitioned spec for global
 deletes.
-The writer exists for interop/export and fixtures; the manifest
-layer (sources/manifest.py) remains the engine's native format.
+The writer exists for interop/export and fixtures; Delta
+(sources/delta.py) is the engine's native format.
 """
 
 from __future__ import annotations

@@ -3,9 +3,8 @@
 The reference has no streaming engine — REALTIME update frequencies
 are metadata enforced at read time. The natural Spark upgrade: a
 ``readStream`` over the feature-record stream, watermarked on
-event_time, materialized per micro-batch with ``foreachBatch`` (which
-would be a Delta MERGE in production; here a last-writer-wins upsert
-into an in-memory/parquet table).
+event_time, materialized per micro-batch with ``foreachBatch`` as a
+last-writer-wins MERGE into a Delta table (:func:`merge_latest_sink`).
 
 Late data needs no special handling downstream: the ASOF semantics
 (J1) place a late row correctly by its event_time, and the online
@@ -76,36 +75,6 @@ def enrich_stream(
     return stream.join(d, list(keys), how)
 
 
-def latest_upsert_batch(
-    batch: DataFrame,
-    existing: DataFrame | None,
-    key_cols: Sequence[str] = ("entity_id", "feature_name"),
-    time_col: str = "event_time",
-    tiebreak_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Per-micro-batch last-writer-wins upsert (the foreachBatch body;
-    Delta MERGE in production). Pure function for testability.
-
-    ``tiebreak_cols`` break EQUAL-``time_col`` collisions
-    deterministically (e.g. a monotone record id) — without one,
-    which of two distinct same-timestamp rows survives is
-    partitioning-dependent (review r10e #4), the same knob
-    ``merge_upsert`` exposes."""
-    from feature_store_spark.operators.reshape import latest_per_key
-
-    # allowMissingColumns: a widening micro-batch (new nullable
-    # column) must evolve the upsert state like append/MERGE do, not
-    # kill the stream with AnalysisException (review r10)
-    unioned = (
-        batch
-        if existing is None
-        else existing.unionByName(batch, allowMissingColumns=True)
-    )
-    return latest_per_key(
-        unioned, list(key_cols), time_col, tiebreak_cols=tiebreak_cols
-    )
-
-
 def start_materializer(
     stream: DataFrame,
     sink: Callable[[DataFrame, int], None],
@@ -121,79 +90,32 @@ def start_materializer(
     )
 
 
-def manifest_sink(
-    table,
-    app_id: str,
-    partition_by: Sequence[str] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body committing each micro-batch to a
-    :class:`~feature_store_spark.sources.manifest.ManifestedTable`
-    APPEND with the Delta-style idempotence token ``(app_id,
-    batch_id)``.
-
-    Why this composition is exactly-once end to end: Structured
-    Streaming's checkpoint gives at-least-once foreachBatch delivery —
-    after a crash between sink completion and checkpoint commit, the
-    SAME batch_id is redelivered. The manifest append records
-    ``(app_id, batch_id)`` atomically WITH the file list, so the
-    redelivered batch sees its counter already committed and no-ops:
-    table contents are exactly-once while every commit stays one
-    atomic manifest publish. (This is the pattern Delta's
-    ``txnAppId``/``txnVersion`` writer options implement; stock
-    parquet sinks cannot express it.)"""
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        table.append(batch, partition_by=partition_by, txn=(app_id, batch_id))
-
-    return sink
-
-
-def start_manifest_materializer(
-    stream: DataFrame,
-    table,
-    app_id: str,
-    checkpoint_dir: str,
-    partition_by: Sequence[str] | None = None,
-    available_now: bool = False,
-    trigger_seconds: int = 10,
-) -> StreamingQuery:
-    """Stream → transactional table: micro-batches land as atomic,
-    idempotent manifest commits (see :func:`manifest_sink`)."""
-    w = stream.writeStream.foreachBatch(
-        manifest_sink(table, app_id, partition_by)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
-
-
-def manifest_merge_sink(
-    table,
+def merge_latest_sink(
+    table_dir: str,
     app_id: str,
     keys: Sequence[str],
     order_col: str = "event_time",
     tiebreak_cols: Sequence[str] = (),
-    partition_by: Sequence[str] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body running each micro-batch as a transactional
-    last-writer-wins MERGE into a ManifestedTable — THE online-store
-    materializer (the reference's REALTIME feature updates, S12/U1
-    semantics) with exactly-once state: the ``(app_id, batch_id)``
-    token commits atomically with the merged snapshot, so a
-    redelivered batch after a sink restart no-ops, and the CAS inside
-    ``merge_upsert`` re-derives if anything else committed in
-    between. Readers always see a complete pre- or post-merge
-    snapshot."""
+    last-writer-wins MERGE into a Delta table
+    (:func:`~feature_store_spark.sources.delta.delta_merge_latest`) —
+    THE online-store materializer (the reference's REALTIME feature
+    updates, S12/U1 semantics) with exactly-once state: the ``(app_id,
+    batch_id)`` txn commits atomically with the merged table, so a
+    redelivered batch after a sink restart no-ops, and the merge's CAS
+    re-derives if anything else committed in between. Readers always
+    see a complete pre- or post-merge version. Appending sinks use
+    :func:`~feature_store_spark.sources.delta.delta_append_sink`."""
+    from feature_store_spark.sources.delta import delta_merge_latest
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        table.merge_upsert(
+        delta_merge_latest(
             batch,
-            keys=keys,
-            order_col=order_col,
-            tiebreak_cols=tiebreak_cols,
-            partition_by=partition_by,
+            table_dir,
+            list(keys),
+            order_col,
+            list(tiebreak_cols),
             txn=(app_id, batch_id),
         )
 
@@ -201,15 +123,14 @@ def manifest_merge_sink(
 
 
 def incremental_view_sink(
-    source_table,
-    state_table,
+    source_dir: str,
+    state_dir: str,
     app_id: str,
     keys: Sequence[str],
     value_col: str,
-    partition_by: Sequence[str] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body maintaining a STREAMING MATERIALIZED VIEW:
-    each micro-batch lands as an idempotent manifest append to the
+    each micro-batch lands as an idempotent Delta append to the
     source table, then the per-key aggregate state is advanced by
     :func:`feature_store_spark.incremental.refresh_aggregate`, which
     reads ONLY the appended files and folds them into the previous
@@ -223,14 +144,14 @@ def incremental_view_sink(
     committed snapshot equal to a full aggregate of some source
     prefix, and the final refresh closes the gap."""
     from feature_store_spark.incremental import refresh_aggregate
+    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        source_table.append(
-            batch, partition_by=partition_by, txn=(app_id, batch_id)
-        )
+        delta_append(batch, source_dir, txn=(app_id, batch_id))
         refresh_aggregate(
-            state_table,
-            source_table,
+            batch.sparkSession,
+            state_dir,
+            source_dir,
             keys,
             value_col,
             app_id=f"{app_id}:view",
@@ -240,16 +161,16 @@ def incremental_view_sink(
 
 
 def incremental_dedup_sink(
-    source_table,
-    sig_table,
-    pairs_table,
+    source_dir: str,
+    sig_dir: str,
+    pairs_dir: str,
     app_id: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     state_partitions: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for STREAMING corpus dedup (r9): each
-    micro-batch of documents lands as an idempotent manifest append
+    micro-batch of documents lands as an idempotent Delta append
     to the corpus table, then the MinHash dedup state advances via
     :func:`feature_store_spark.incremental.refresh_minhash_dedup` —
     only the appended docs are minhashed and joined against the
@@ -264,13 +185,15 @@ def incremental_dedup_sink(
     The pairs table is eventually-exact: always equal to the full
     recompute over some committed corpus prefix."""
     from feature_store_spark.incremental import refresh_minhash_dedup
+    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        source_table.append(batch, txn=(app_id, batch_id))
+        delta_append(batch, source_dir, txn=(app_id, batch_id))
         refresh_minhash_dedup(
-            sig_table,
-            pairs_table,
-            source_table,
+            batch.sparkSession,
+            sig_dir,
+            pairs_dir,
+            source_dir,
             text_col=text_col,
             id_col=id_col,
             app_id=f"{app_id}:dedup",
@@ -281,15 +204,15 @@ def incremental_dedup_sink(
 
 
 def incremental_distinct_sink(
-    source_table,
-    state_table,
+    source_dir: str,
+    state_dir: str,
     keys,
     value_col: str,
     app_id: str,
     lg_k: int = 14,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for STREAMING distinct-count maintenance
-    (r11): each micro-batch lands as an idempotent manifest append,
+    (r11): each micro-batch lands as an idempotent Delta append,
     then the per-key HLL sketch state advances via
     :func:`feature_store_spark.incremental.refresh_distinct_sketch`
     — only the appended rows are sketched, per-batch cost is
@@ -297,12 +220,14 @@ def incremental_distinct_sink(
     sketch of everything ever appended. Same exactly-once
     composition as :func:`incremental_drift_sink`."""
     from feature_store_spark.incremental import refresh_distinct_sketch
+    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        source_table.append(batch, txn=(app_id, batch_id))
+        delta_append(batch, source_dir, txn=(app_id, batch_id))
         refresh_distinct_sketch(
-            state_table,
-            source_table,
+            batch.sparkSession,
+            state_dir,
+            source_dir,
             keys,
             value_col,
             lg_k=lg_k,
@@ -313,13 +238,13 @@ def incremental_distinct_sink(
 
 
 def incremental_drift_sink(
-    source_table,
-    state_table,
+    source_dir: str,
+    state_dir: str,
     edges: dict,
     app_id: str,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for STREAMING drift monitoring (r10): each
-    micro-batch of serving rows lands as an idempotent manifest
+    micro-batch of serving rows lands as an idempotent Delta
     append to the serving-log table, then the PSI current-window
     bin-count state advances via
     :func:`feature_store_spark.incremental.refresh_drift_counts` —
@@ -334,12 +259,14 @@ def incremental_drift_sink(
     redelivered batches on the log, and the refresh's source-version
     token no-ops redelivered refreshes."""
     from feature_store_spark.incremental import refresh_drift_counts
+    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        source_table.append(batch, txn=(app_id, batch_id))
+        delta_append(batch, source_dir, txn=(app_id, batch_id))
         refresh_drift_counts(
-            state_table,
-            source_table,
+            batch.sparkSession,
+            state_dir,
+            source_dir,
             edges,
             app_id=f"{app_id}:drift",
         )

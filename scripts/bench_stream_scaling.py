@@ -127,7 +127,6 @@ def measure(spark, scale_dir):
         iceberg_append,
         iceberg_append_sink,
     )
-    from feature_store_spark.sources.manifest import ManifestedTable
     from feature_store_spark.streaming.materializer import (
         incremental_distinct_sink,
     )
@@ -186,13 +185,12 @@ def measure(spark, scale_dir):
                     sink = iceberg_append_sink(f"{d}/t", "ladder")
                     schema = SCHEMA
                 else:
-                    src = ManifestedTable(spark, f"{d}/src")
-                    state = ManifestedTable(spark, f"{d}/state")
-                    src.append(
-                        seed.select("entity_type", "entity_id")
+                    src, state = f"{d}/src", f"{d}/state"
+                    delta_append(
+                        seed.select("entity_type", "entity_id"), src
                     )
                     refresh_distinct_sketch(
-                        state, src, ["entity_type"], "entity_id"
+                        spark, state, src, ["entity_type"], "entity_id"
                     )
                     sink = incremental_distinct_sink(
                         src, state, ["entity_type"], "entity_id",

@@ -1,7 +1,8 @@
-"""The shared commit kernel (``sources/commit.py``) under Delta, Iceberg
-and ManifestedTable: per-verb Spark job counts, file bounds built from
-row-group footers, the session-conf precondition, and cleanup when a
-write fails before publish."""
+"""The shared commit kernel (``sources/commit.py``) under Delta and
+Iceberg: per-verb Spark job counts, the incremental refresh's job
+choreography, file bounds built from row-group footers (partial stats,
+NaN), the session-conf precondition, and cleanup when a write fails
+before publish."""
 
 from __future__ import annotations
 
@@ -59,6 +60,9 @@ def _delta(verb):
             s, p, [("entity_id", "<", 50)]
         ),
         "delta_optimize": lambda s, p: d.delta_optimize(s, p),
+        "delta_overwrite": lambda s, p: d.delta_overwrite(
+            _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p, 1
+        ),
     }
     return setup, calls[verb]
 
@@ -90,20 +94,6 @@ def _iceberg(verb):
     return setup, calls[verb]
 
 
-def _manifest(verb):
-    from feature_store_spark.sources.manifest import ManifestedTable
-
-    def setup(spark, path):
-        ManifestedTable(spark, path).append(_frame(spark))
-
-    def call(spark, path):
-        ManifestedTable(spark, path).append(
-            _frame(spark, N_ROWS, 2 * N_ROWS)
-        )
-
-    return setup, call
-
-
 # Spark jobs per verb call at a few hundred rows. Job counts are
 # deterministic, so a change here is a change in job choreography: the
 # commit path must not move them without a reason.
@@ -113,23 +103,18 @@ EXPECTED_JOBS = {
     "delta_merge": 11,
     "delta_delete_where": 2,
     "delta_optimize": 2,
+    "delta_overwrite": 2,
     "iceberg_append": 2,
     "iceberg_upsert": 3,
     "iceberg_merge": 13,
     "iceberg_delete_where": 3,
     "iceberg_rewrite": 3,
-    "ManifestedTable.append": 2,
 }
 
 
 @pytest.mark.parametrize("verb", list(EXPECTED_JOBS))
 def test_verb_job_counts_pinned(spark, tmp_path, verb):
-    if verb.startswith("delta_"):
-        setup, call = _delta(verb)
-    elif verb.startswith("iceberg_"):
-        setup, call = _iceberg(verb)
-    else:
-        setup, call = _manifest(verb)
+    setup, call = (_delta if verb.startswith("delta_") else _iceberg)(verb)
     path = str(tmp_path / "t")
     setup(spark, path)
     before = _max_job_id(spark)
@@ -185,44 +170,94 @@ def _assert_statless_row_group(paths):
     assert hit
 
 
-@pytest.mark.parametrize("fmt", ["delta", "iceberg", "manifest"])
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
 def test_partial_footer_stats_never_prune_matching_rows(
     spark, tmp_path, small_row_groups, fmt
 ):
     path = str(tmp_path / fmt)
     df = _long_key_frame(spark)
+    t, files = _write_table(spark, fmt, path, df)
+    _assert_statless_row_group(files)
+    for k in (LONG_KEY, "k0399", "k0000"):
+        assert t.scan(filters=[("key", "=", k)]).count() == 1, k[:8]
+
+
+def _write_table(spark, fmt, path, df):
+    """One commit of ``df`` in ``fmt``: the table and its data files."""
     if fmt == "delta":
         from feature_store_spark.sources.delta import DeltaTable, delta_append
 
         delta_append(df, path)
         t = DeltaTable(spark, path)
-        files = [os.path.join(path, a["path"]) for a in t.data_files()]
+        return t, [os.path.join(path, a["path"]) for a in t.data_files()]
+    from feature_store_spark.sources.iceberg import IcebergTable
+    from feature_store_spark.sources.iceberg_write import iceberg_append
 
-        def scan(k):
-            return t.scan(filters=[("key", "=", k)])
-    elif fmt == "iceberg":
-        from feature_store_spark.sources.iceberg import IcebergTable
-        from feature_store_spark.sources.iceberg_write import iceberg_append
+    iceberg_append(df, path, partition_spec=[])
+    t = IcebergTable(spark, path)
+    return t, [f["path"] for f in t.data_files(None, None)]
 
-        iceberg_append(df, path, partition_spec=[])
-        t = IcebergTable(spark, path)
-        files = [f["path"] for f in t.data_files(None, None)]
 
-        def scan(k):
-            return t.scan(filters=[("key", "=", k)])
-    else:
-        from feature_store_spark.sources.manifest import ManifestedTable
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_nan_footer_bounds_never_prune_matching_rows(spark, tmp_path, fmt):
+    """Spark's writer folds NaN into a double column's footer max, and
+    Spark orders NaN above every number (``NaN >= 0.5`` and
+    ``NaN = NaN`` hold). A NaN bound must read as unknown, so every
+    filtered scan returns what Spark's own filter does."""
+    import json
 
-        t = ManifestedTable(spark, path)
-        t.append(df)
-        files = t.files()
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, 2.0), (3, float("nan"))], "id long, v double"
+    ).coalesce(1)
+    t, _files = _write_table(spark, fmt, str(tmp_path / fmt), df)
+    for f in [
+        ("v", "=", 2.0),
+        ("v", ">", 1.5),
+        ("v", ">=", 0.5),
+        ("v", ">=", 5.0),
+        ("v", "in", [2.0, 7.0]),
+        ("v", "=", float("nan")),
+    ]:
+        from feature_store_spark.sources.iceberg import _Filter
 
-        def scan(k):
-            return t.read(prune={"key": (k, k)}).filter(F.col("key") == k)
+        want = df.filter(_Filter(*f).sql()).count()
+        assert t.scan(filters=[f]).count() == want, f
+    if fmt == "delta":
+        # the log stays valid JSON: no NaN bound is written
+        log = os.path.join(str(tmp_path / fmt), "_delta_log")
+        with open(os.path.join(log, f"{0:020d}.json")) as fh:
+            text = fh.read()
+        assert "NaN" not in text
+        [add] = [
+            json.loads(x)["add"] for x in text.splitlines() if '"add"' in x
+        ]
+        assert "v" not in json.loads(add["stats"])["maxValues"]
 
-    _assert_statless_row_group(files)
-    for k in (LONG_KEY, "k0399", "k0000"):
-        assert scan(k).count() == 1, k[:8]
+
+def test_refresh_choreography_pinned(spark, tmp_path):
+    """Spark jobs per step of the incremental refresh on a 300-row
+    source: a source append, the first refresh (creates the state),
+    each later refresh (read_appended + fold + replace-all commit), and
+    a redelivered refresh (a txn no-op, no job at all)."""
+    from feature_store_spark.incremental import refresh_aggregate
+    from feature_store_spark.sources.delta import delta_append
+
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+
+    def jobs(fn):
+        before = _max_job_id(spark)
+        fn()
+        return _max_job_id(spark) - before
+
+    def refresh():
+        refresh_aggregate(spark, state, src, ["entity_type"], "value_float")
+
+    assert jobs(lambda: delta_append(_frame(spark), src)) <= 2
+    assert jobs(refresh) <= 3
+    for i in (1, 2):
+        delta_append(_frame(spark, i * N_ROWS, (i + 1) * N_ROWS), src)
+        assert jobs(refresh) <= 4
+    assert jobs(refresh) == 0
 
 
 def test_stage_refuses_int96_timestamps(spark, tmp_path):

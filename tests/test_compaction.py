@@ -1,127 +1,118 @@
-"""Small-file compaction (sources/compaction.py): byte-identical
-rows, file count near target, healthy tables untouched, sort-cols
-re-clustering."""
+"""Small-file compaction, as Delta OPTIMIZE (``delta_optimize``):
+identical rows, file count near target, healthy tables untouched,
+re-clustering, and a conflict instead of a lost concurrent append."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from feature_store_spark.sources.compaction import (
-    compact,
-    plan_compaction,
-    table_file_stats,
+from feature_store_spark.sources import commit
+from feature_store_spark.sources.delta import (
+    DeltaTable,
+    delta_append,
+    delta_optimize,
 )
 
 
 def _fragmented_table(spark, path, n_files=64, rows=6400):
-    spark.range(rows).select(
-        F.col("id"),
-        (F.col("id") % 97).alias("k"),
-        F.md5(F.col("id").cast("string")).alias("payload"),
-    ).repartition(n_files).write.mode("overwrite").parquet(path)
+    """One append landing ``n_files`` part files; callers take the
+    ``no_staging_rebalance`` fixture, as a streaming or per-partition
+    writer would leave them."""
+    delta_append(
+        spark.range(rows).select(
+            F.col("id"),
+            (F.col("id") % 97).alias("k"),
+            F.md5(F.col("id").cast("string")).alias("payload"),
+        ).repartition(n_files),
+        path,
+    )
 
 
-def test_compact_reduces_files_preserves_rows(spark, tmp_path):
+def _files(spark, path):
+    return DeltaTable(spark, path).data_files()
+
+
+def _ids(spark, path):
+    return sorted(
+        r["id"] for r in DeltaTable(spark, path).scan().select("id").collect()
+    )
+
+
+def test_compact_reduces_files_preserves_rows(
+    spark, tmp_path, no_staging_rebalance
+):
     path = str(tmp_path / "t")
     _fragmented_table(spark, path)
-    before_rows = sorted(
-        r["id"] for r in spark.read.parquet(path).select("id").collect()
-    )
-    assert table_file_stats(path)["n_files"] >= 64
+    before_rows = _ids(spark, path)
+    assert len(_files(spark, path)) >= 64
 
-    res = compact(spark, path, target_file_mb=1)
-    assert res["compacted"] is True
-    after = table_file_stats(path)
+    v, removed, added = delta_optimize(spark, path, target_file_bytes=1 << 20)
+    assert (v, removed) == (1, 64)
     # everything fits one 1 MB target file
-    assert after["n_files"] <= 4
-    after_rows = sorted(
-        r["id"] for r in spark.read.parquet(path).select("id").collect()
-    )
-    assert after_rows == before_rows
-    # no leftover side/trash dirs
-    parent = tmp_path
-    stray = [p.name for p in parent.iterdir() if "compact-" in p.name]
-    assert stray == []
+    assert added == len(_files(spark, path)) <= 4
+    assert _ids(spark, path) == before_rows
+    # no leftover staging dirs
+    assert not [n for n in os.listdir(path) if n.startswith(".")]
 
 
 def test_healthy_table_is_left_alone(spark, tmp_path):
     path = str(tmp_path / "t2")
-    spark.range(100).coalesce(2).write.mode("overwrite").parquet(path)
-    before = table_file_stats(path)
-    res = compact(spark, path, target_file_mb=128)
-    assert res["compacted"] is False
-    assert table_file_stats(path) == before
+    delta_append(spark.range(100).coalesce(1), path)
+    before = _files(spark, path)
+    with pytest.raises(ValueError, match="nothing to optimize"):
+        delta_optimize(spark, path)
+    assert _files(spark, path) == before
+    assert DeltaTable(spark, path).latest_version() == 0
 
 
-def test_plan_compaction_thresholds(spark, tmp_path):
+def test_plan_compaction_thresholds(spark, tmp_path, no_staging_rebalance):
     path = str(tmp_path / "t3")
     _fragmented_table(spark, path, n_files=8, rows=800)
-    plan = plan_compaction(path, target_file_mb=128)
-    assert plan["should_compact"] is True
-    assert plan["n_target"] == 1
-    # below min_files threshold -> no-op
-    plan2 = plan_compaction(path, target_file_mb=128, min_files_to_compact=9)
-    assert plan2["should_compact"] is False
+    sizes = [a["size"] for a in _files(spark, path)]
+    # files at or above the target are not candidates
+    with pytest.raises(ValueError, match="nothing to optimize"):
+        delta_optimize(spark, path, target_file_bytes=min(sizes))
+    # below it they are, and ceil(total / target) files come out
+    _v, removed, added = delta_optimize(
+        spark, path, target_file_bytes=128 << 20
+    )
+    assert (removed, added) == (8, 1)
 
 
-def test_compact_with_sort_recluster(spark, tmp_path):
+def test_compact_with_sort_recluster(spark, tmp_path, no_staging_rebalance):
     path = str(tmp_path / "t4")
     _fragmented_table(spark, path)
-    res = compact(spark, path, target_file_mb=1, sort_cols=["k", "id"])
-    assert res["compacted"] is True
-    # rows intact and per-file runs sorted by k (spot check via
-    # per-partition ordering after read of a single compacted file)
-    df = spark.read.parquet(path)
-    assert df.count() == 6400
+    _v, _removed, added = delta_optimize(
+        spark, path, target_file_bytes=1 << 20, zorder_by=["k", "id"]
+    )
+    assert added == len(_files(spark, path)) >= 1
+    assert DeltaTable(spark, path).scan().count() == 6400
 
 
-def test_partitioned_root_rejected_leaf_allowed(spark, tmp_path):
-    import pytest as _pytest
-
-    from feature_store_spark.sources.compaction import partition_dirs
-
-    path = str(tmp_path / "pt")
-    spark.range(2000).select(
-        F.col("id"), (F.col("id") % 2).alias("day")
-    ).repartition(16).write.mode("overwrite").partitionBy("day").parquet(path)
-
-    with _pytest.raises(ValueError, match="partitioned table root"):
-        compact(spark, path, target_file_mb=1)
-
-    leaves = partition_dirs(path)
-    assert len(leaves) == 2
-    res = compact(spark, leaves[0], target_file_mb=1)
-    assert res["compacted"] is True
-    # layout intact, rows intact
-    df = spark.read.parquet(path)
-    assert df.count() == 2000
-    assert set(df.columns) == {"id", "day"}
-
-
-def test_compact_refuses_when_concurrent_append_lands(spark, tmp_path):
-    """Review r10: a file appended between compact()'s scan and the
-    dir swap used to be swept into trash and rmtree'd — committed
-    rows destroyed with compacted=True reported. The swap must
-    refuse and leave the table untouched."""
-    import os
-
-    from feature_store_spark.sources import compaction as C
-
+def test_compact_refuses_when_concurrent_append_lands(
+    spark, tmp_path, monkeypatch, no_staging_rebalance
+):
+    """An append landing between OPTIMIZE's read and its commit must
+    not be lost: the optimize conflicts and leaves the table as the
+    racer left it."""
     path = str(tmp_path / "t")
-    spark.range(100).repartition(8).write.parquet(path)
+    _fragmented_table(spark, path, n_files=8, rows=100)
 
-    real_swap = C._swap_dirs
+    real_publish = commit.publish_if_absent
+    state = {"raced": False}
 
-    def racing_swap(old, new, expected=None):
-        # the racer: one more part file lands just before the swap
-        spark.range(100, 110).coalesce(1).write.mode("append").parquet(old)
-        return real_swap(old, new, expected)
+    def racing_publish(directory, name, data):
+        if not state["raced"] and '"OPTIMIZE"' in data:
+            state["raced"] = True
+            delta_append(spark.range(100, 110).select(
+                F.col("id"), (F.col("id") % 97).alias("k"),
+                F.md5(F.col("id").cast("string")).alias("payload"),
+            ), path)
+        return real_publish(directory, name, data)
 
-    import pytest as _pt
-
-    try:
-        C._swap_dirs = racing_swap
-        with _pt.raises(RuntimeError, match="concurrent"):
-            C.compact(spark, path, target_file_mb=1024)
-    finally:
-        C._swap_dirs = real_swap
+    monkeypatch.setattr(commit, "publish_if_absent", racing_publish)
+    with pytest.raises(commit.ConcurrentWriteError):
+        delta_optimize(spark, path)
     # every row — including the racer's — still readable
-    assert spark.read.parquet(path).count() == 110
+    assert DeltaTable(spark, path).scan().count() == 110

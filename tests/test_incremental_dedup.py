@@ -9,13 +9,19 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from feature_store_spark import incremental as I
 from feature_store_spark.incremental import refresh_minhash_dedup
 from feature_store_spark.operators.dedup import (
     minhash_dedup_pairs,
     minhash_pairs_incremental,
     minhash_wide_from_docs,
 )
-from feature_store_spark.sources.manifest import ManifestedTable
+from feature_store_spark.sources.delta import (
+    DeltaTable,
+    delta_append,
+    delta_head,
+    delta_overwrite,
+)
 
 BASE = [
     "the quick brown fox jumps over the lazy dog and runs far away today",
@@ -38,6 +44,25 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _tables(tmp_path):
+    return (str(tmp_path / n) for n in ("src", "sig", "pairs"))
+
+
+def _read(spark, path):
+    return DeltaTable(spark, path).scan()
+
+
+def _v(spark, path):
+    return delta_head(spark, path)[1]
+
+
+def _live_paths(spark, path):
+    return {
+        os.path.abspath(os.path.join(path, a["path"]))
+        for a in DeltaTable(spark, path).data_files()
+    }
+
+
 def _pairs_set(df):
     return {
         (r["id_a"], r["id_b"], round(r["est_jaccard"], 9))
@@ -47,21 +72,19 @@ def _pairs_set(df):
 
 def test_incremental_equals_full_recompute(spark, tmp_path):
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
+    src, sig, pairs = _tables(tmp_path)
     for i in range(3):
-        src.append(corpus.filter(F.col("doc_id") % 3 == i))
-        refresh_minhash_dedup(sig, pairs, src)
+        delta_append(corpus.filter(F.col("doc_id") % 3 == i), src)
+        refresh_minhash_dedup(spark, sig, pairs, src)
         if i == 1:  # redelivered refresh must be a no-op
-            v_before = pairs.current_version()
-            refresh_minhash_dedup(sig, pairs, src)
-            assert pairs.current_version() == v_before
+            v_before = _v(spark, pairs)
+            refresh_minhash_dedup(spark, sig, pairs, src)
+            assert _v(spark, pairs) == v_before
         # INVARIANT at every version: accumulated == full recompute
-        full = minhash_dedup_pairs(src.read())
-        assert _pairs_set(pairs.read()) == _pairs_set(full)
+        full = minhash_dedup_pairs(_read(spark, src))
+        assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)
     # the planted near-dups were actually found
-    got = _pairs_set(pairs.read())
+    got = _pairs_set(_read(spark, pairs))
     assert {(a, b) for a, b, _ in got} >= {(0, 100), (1, 101), (2, 102),
                                            (3, 103)}
 
@@ -71,24 +94,22 @@ def test_refresh_never_rescans_corpus(spark, tmp_path):
     the appended files, and the pair job's file footprint is state +
     delta — no pre-existing source data file is opened again."""
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
-    src.append(corpus.filter(F.col("doc_id") % 3 == 0))
-    refresh_minhash_dedup(sig, pairs, src)
-    old_files = set(src.files())
-    v1 = src.current_version()
-    src.append(corpus.filter(F.col("doc_id") % 3 == 1))
+    src, sig, pairs = _tables(tmp_path)
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 0), src)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    old_files = _live_paths(spark, src)
+    v1 = _v(spark, src)
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 1), src)
     # the delta scan's file set is exactly the NEW files
-    delta = src.read_appended(v1, src.current_version())
+    delta = DeltaTable(spark, src).read_appended(v1)
     delta_files = {f.replace("file:", "") for f in delta.inputFiles()}
-    assert delta_files.isdisjoint({os.path.abspath(p) for p in old_files})
+    assert delta_files.isdisjoint(old_files)
     assert delta_files  # and it reads something
     # the incremental pair plan reads signature STATE, not the corpus
     new_sigs = minhash_wide_from_docs(delta).localCheckpoint(eager=True)
-    p = minhash_pairs_incremental(sig.read(), new_sigs)
+    p = minhash_pairs_incremental(_read(spark, sig), new_sigs)
     pair_files = {f.replace("file:", "") for f in p.inputFiles()}
-    src_files = {os.path.abspath(x) for x in src.files()}
+    src_files = _live_paths(spark, src)
     assert pair_files.isdisjoint(src_files)
 
 
@@ -96,17 +117,15 @@ def test_non_append_commit_falls_back_to_full(spark, tmp_path):
     """An overwrite in the window breaks 'new files == new rows';
     the refresh must full-recompute instead of guessing."""
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
-    src.append(corpus.filter(F.col("doc_id") < 100))
-    refresh_minhash_dedup(sig, pairs, src)
+    src, sig, pairs = _tables(tmp_path)
+    delta_append(corpus.filter(F.col("doc_id") < 100), src)
+    refresh_minhash_dedup(spark, sig, pairs, src)
     # rewrite history: drop doc 1, keep everything else + the dups
-    src.overwrite(corpus.filter(F.col("doc_id") != 1))
-    refresh_minhash_dedup(sig, pairs, src)
-    full = minhash_dedup_pairs(src.read())
-    assert _pairs_set(pairs.read()) == _pairs_set(full)
-    got = {(a, b) for a, b, _ in _pairs_set(pairs.read())}
+    delta_overwrite(corpus.filter(F.col("doc_id") != 1), src, _v(spark, src))
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    full = minhash_dedup_pairs(_read(spark, src))
+    assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)
+    got = {(a, b) for a, b, _ in _pairs_set(_read(spark, pairs))}
     assert (1, 101) not in got  # the dropped doc's pair is gone
     assert (0, 100) in got
 
@@ -117,36 +136,34 @@ def test_crash_between_commits_recovers(spark, tmp_path, monkeypatch):
     txn token, and completes the sig append — no duplicate pairs, no
     lost signatures."""
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
-    src.append(corpus.filter(F.col("doc_id") % 3 == 0))
-    refresh_minhash_dedup(sig, pairs, src)
-    src.append(corpus.filter(F.col("doc_id") % 3 != 0))
+    src, sig, pairs = _tables(tmp_path)
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 0), src)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    delta_append(corpus.filter(F.col("doc_id") % 3 != 0), src)
 
-    real_append = ManifestedTable.append
+    real_append = I.delta_append
     # first attempt: pairs commit lands, sig commit dies
     state = {"fail_next_sig": True}
 
-    def flaky(self, df, *a, **kw):
-        if self.path == sig.path and state["fail_next_sig"]:
+    def flaky(df, table_dir, *a, **kw):
+        if table_dir == sig and state["fail_next_sig"]:
             state["fail_next_sig"] = False
             raise RuntimeError("injected crash")
-        return real_append(self, df, *a, **kw)
+        return real_append(df, table_dir, *a, **kw)
 
-    monkeypatch.setattr(ManifestedTable, "append", flaky)
+    monkeypatch.setattr(I, "delta_append", flaky)
     with pytest.raises(RuntimeError, match="injected crash"):
-        refresh_minhash_dedup(sig, pairs, src)
-    pairs_after_crash = _pairs_set(pairs.read())
+        refresh_minhash_dedup(spark, sig, pairs, src)
+    pairs_after_crash = _pairs_set(_read(spark, pairs))
     # re-run: completes cleanly, pairs unchanged (token no-op)
-    refresh_minhash_dedup(sig, pairs, src)
-    assert _pairs_set(pairs.read()) == pairs_after_crash
-    full = minhash_dedup_pairs(src.read())
-    assert _pairs_set(pairs.read()) == _pairs_set(full)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    assert _pairs_set(_read(spark, pairs)) == pairs_after_crash
+    full = minhash_dedup_pairs(_read(spark, src))
+    assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)
     # sig state covers the whole corpus now: a further refresh no-ops
-    v = pairs.current_version()
-    refresh_minhash_dedup(sig, pairs, src)
-    assert pairs.current_version() == v
+    v = _v(spark, pairs)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    assert _v(spark, pairs) == v
 
 
 def test_crash_then_new_append_before_rerun(spark, tmp_path, monkeypatch):
@@ -158,40 +175,38 @@ def test_crash_then_new_append_before_rerun(spark, tmp_path, monkeypatch):
     the missing sig commit for the crashed window FIRST, then folds
     only the genuinely new append."""
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
-    src.append(corpus.filter(F.col("doc_id") % 3 == 0))
-    refresh_minhash_dedup(sig, pairs, src)
-    src.append(corpus.filter(F.col("doc_id") % 3 == 1))
+    src, sig, pairs = _tables(tmp_path)
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 0), src)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 1), src)
 
-    real_append = ManifestedTable.append
+    real_append = I.delta_append
     state = {"fail_next_sig": True}
 
-    def flaky(self, df, *a, **kw):
-        if self.path == sig.path and state["fail_next_sig"]:
+    def flaky(df, table_dir, *a, **kw):
+        if table_dir == sig and state["fail_next_sig"]:
             state["fail_next_sig"] = False
             raise RuntimeError("injected crash")
-        return real_append(self, df, *a, **kw)
+        return real_append(df, table_dir, *a, **kw)
 
-    monkeypatch.setattr(ManifestedTable, "append", flaky)
+    monkeypatch.setattr(I, "delta_append", flaky)
     with pytest.raises(RuntimeError, match="injected crash"):
-        refresh_minhash_dedup(sig, pairs, src)
+        refresh_minhash_dedup(spark, sig, pairs, src)
     # the poisoning event: a new source commit BEFORE the re-run
-    src.append(corpus.filter(F.col("doc_id") % 3 == 2))
-    refresh_minhash_dedup(sig, pairs, src)
-    full = minhash_dedup_pairs(src.read())
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 2), src)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    full = minhash_dedup_pairs(_read(spark, src))
     # row-level too: not just the set — duplicates would survive a
     # set comparison
     rows = [
-        (r["id_a"], r["id_b"]) for r in pairs.read().collect()
+        (r["id_a"], r["id_b"]) for r in _read(spark, pairs).collect()
     ]
     assert len(rows) == len(set(rows))
-    assert _pairs_set(pairs.read()) == _pairs_set(full)
+    assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)
     # and a redelivered refresh still no-ops
-    v = pairs.current_version()
-    refresh_minhash_dedup(sig, pairs, src)
-    assert pairs.current_version() == v
+    v = _v(spark, pairs)
+    refresh_minhash_dedup(spark, sig, pairs, src)
+    assert _v(spark, pairs) == v
 
 
 def test_exact_dedup_incremental_equals_full(spark, tmp_path):
@@ -201,8 +216,7 @@ def test_exact_dedup_incremental_equals_full(spark, tmp_path):
     from feature_store_spark.incremental import refresh_exact_dedup
 
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
 
     def full(df):
         return {
@@ -219,20 +233,20 @@ def test_exact_dedup_incremental_equals_full(spark, tmp_path):
         }
 
     for i in range(3):
-        src.append(corpus.filter(F.col("doc_id") % 3 == i))
-        refresh_exact_dedup(state, src)
+        delta_append(corpus.filter(F.col("doc_id") % 3 == i), src)
+        refresh_exact_dedup(spark, state, src)
         if i == 1:
-            v = state.current_version()
-            refresh_exact_dedup(state, src)
-            assert state.current_version() == v  # redelivery no-op
+            v = _v(spark, state)
+            refresh_exact_dedup(spark, state, src)
+            assert _v(spark, state) == v  # redelivery no-op
         got = {
             (r["fingerprint"], r["keeper_id"], r["n_copies"])
-            for r in state.read().collect()
+            for r in _read(spark, state).collect()
         }
-        assert got == full(src.read())
+        assert got == full(_read(spark, src))
     # the planted exact dup of doc 3 collapsed to keeper 3, copies 2
     by_keeper = {
-        r["keeper_id"]: r["n_copies"] for r in state.read().collect()
+        r["keeper_id"]: r["n_copies"] for r in _read(spark, state).collect()
     }
     assert by_keeper[3] == 2
 
@@ -246,46 +260,43 @@ def test_stream_sink_redelivery_is_noop(spark, tmp_path):
     )
 
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
+    src, sig, pairs = _tables(tmp_path)
     sink = incremental_dedup_sink(src, sig, pairs, "app")
     b0 = corpus.filter(F.col("doc_id") % 2 == 0)
     b1 = corpus.filter(F.col("doc_id") % 2 == 1)
     sink(b0, 0)
     sink(b1, 1)
-    full = minhash_dedup_pairs(src.read())
-    assert _pairs_set(pairs.read()) == _pairs_set(full)
-    vs = (src.current_version(), sig.current_version(),
-          pairs.current_version())
+    full = minhash_dedup_pairs(_read(spark, src))
+    assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)
+    vs = (_v(spark, src), _v(spark, sig),
+          _v(spark, pairs))
     sink(b1, 1)  # redelivery
-    assert vs == (src.current_version(), sig.current_version(),
-                  pairs.current_version())
-    assert _pairs_set(pairs.read()) == _pairs_set(full)
+    assert vs == (_v(spark, src), _v(spark, sig),
+                  _v(spark, pairs))
+    assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)
 
 
 def test_state_compaction_preserves_tokens_and_answers(spark, tmp_path):
     """Compacting the signature state mid-stream (overwrite with the
-    same rows — the documented ManifestedTable compaction move) must
+    same rows, a replace-all commit) must
     preserve the txn high-water mark: the next refresh still reads
     only the NEW append, no duplicate signatures, pairs still equal
     the full recompute."""
     corpus = _corpus(spark)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    sig = ManifestedTable(spark, str(tmp_path / "sig"))
-    pairs = ManifestedTable(spark, str(tmp_path / "pairs"))
+    src, sig, pairs = _tables(tmp_path)
     for i in (0, 1):
-        src.append(corpus.filter(F.col("doc_id") % 3 == i))
-        refresh_minhash_dedup(sig, pairs, src)
-    hwm = sig.txn_version("incremental-dedup")
+        delta_append(corpus.filter(F.col("doc_id") % 3 == i), src)
+        refresh_minhash_dedup(spark, sig, pairs, src)
+    hwm = DeltaTable(spark, sig).txn_version("incremental-dedup")
     # compact: one overwrite snapshot, same rows, fewer files
-    sig.overwrite(sig.read().coalesce(1))
-    assert sig.txn_version("incremental-dedup") == hwm  # mark survived
-    n_sigs = sig.read().count()
-    src.append(corpus.filter(F.col("doc_id") % 3 == 2))
-    refresh_minhash_dedup(sig, pairs, src)
+    delta_overwrite(_read(spark, sig).coalesce(1), sig, _v(spark, sig))
+    # mark survived
+    assert DeltaTable(spark, sig).txn_version("incremental-dedup") == hwm
+    n_sigs = _read(spark, sig).count()
+    delta_append(corpus.filter(F.col("doc_id") % 3 == 2), src)
+    refresh_minhash_dedup(spark, sig, pairs, src)
     # no duplicate signatures (each doc exactly once)
-    assert sig.read().select("doc_id").distinct().count() == \
-        sig.read().count() > n_sigs
-    full = minhash_dedup_pairs(src.read())
-    assert _pairs_set(pairs.read()) == _pairs_set(full)
+    assert _read(spark, sig).select("doc_id").distinct().count() == \
+        _read(spark, sig).count() > n_sigs
+    full = minhash_dedup_pairs(_read(spark, src))
+    assert _pairs_set(_read(spark, pairs)) == _pairs_set(full)

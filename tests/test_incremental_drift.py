@@ -11,7 +11,12 @@ import os
 from pyspark.sql import functions as F
 
 from feature_store_spark.incremental import refresh_drift_counts
-from feature_store_spark.sources.manifest import ManifestedTable
+from feature_store_spark.sources.delta import (
+    DeltaTable,
+    delta_append,
+    delta_head,
+    delta_overwrite,
+)
 from feature_store_spark.stats import (
     drift_monitor_config,
     psi_from_counts,
@@ -43,6 +48,10 @@ def _frames(spark, n=400):
     return ref, cur
 
 
+def _read(spark, path):
+    return DeltaTable(spark, path).scan()
+
+
 def _report_set(df):
     return {
         (r["feature"], r["n_ref"], r["n_cur"], round(r["psi"], 9))
@@ -53,18 +62,17 @@ def _report_set(df):
 def test_state_equals_full_recompute_at_every_version(spark, tmp_path):
     ref, cur = _frames(spark)
     cfg = drift_monitor_config(ref, ["a", "b"], bins=10)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
     for i in range(3):
-        src.append(cur.filter(F.col("id") % 3 == i))
-        refresh_drift_counts(state, src, cfg["edges"])
+        delta_append(cur.filter(F.col("id") % 3 == i), src)
+        refresh_drift_counts(spark, state, src, cfg["edges"])
         if i == 1:  # redelivered refresh must be a no-op
-            v_before = state.current_version()
-            refresh_drift_counts(state, src, cfg["edges"])
-            assert state.current_version() == v_before
+            v_before = delta_head(spark, state)[1]
+            refresh_drift_counts(spark, state, src, cfg["edges"])
+            assert delta_head(spark, state)[1] == v_before
         # INVARIANT at every version: maintained == full recompute
-        got = psi_from_counts(spark, cfg, state.read())
-        want = psi_report(ref, src.read(), ["a", "b"], bins=10)
+        got = psi_from_counts(spark, cfg, _read(spark, state))
+        want = psi_report(ref, _read(spark, src), ["a", "b"], bins=10)
         assert _report_set(got) == _report_set(want)
     # the injected shift actually registers as drift; b stays stable
     psi = {r["feature"]: r["psi"] for r in got.collect()}
@@ -78,14 +86,16 @@ def test_refresh_never_rescans_serving_log(spark, tmp_path):
     data file is opened again."""
     ref, cur = _frames(spark)
     cfg = drift_monitor_config(ref, ["a", "b"], bins=10)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
-    src.append(cur.filter(F.col("id") % 3 == 0))
-    refresh_drift_counts(state, src, cfg["edges"])
-    old_files = {os.path.abspath(p) for p in src.files()}
-    v1 = src.current_version()
-    src.append(cur.filter(F.col("id") % 3 == 1))
-    delta = src.read_appended(v1, src.current_version())
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    delta_append(cur.filter(F.col("id") % 3 == 0), src)
+    refresh_drift_counts(spark, state, src, cfg["edges"])
+    old_files = {
+        os.path.abspath(os.path.join(src, a["path"]))
+        for a in DeltaTable(spark, src).data_files()
+    }
+    v1 = delta_head(spark, src)[1]
+    delta_append(cur.filter(F.col("id") % 3 == 1), src)
+    delta = DeltaTable(spark, src).read_appended(v1)
     delta_files = {f.replace("file:", "") for f in delta.inputFiles()}
     assert delta_files and delta_files.isdisjoint(old_files)
 
@@ -93,40 +103,42 @@ def test_refresh_never_rescans_serving_log(spark, tmp_path):
 def test_non_append_commit_falls_back_to_full(spark, tmp_path):
     ref, cur = _frames(spark)
     cfg = drift_monitor_config(ref, ["a", "b"], bins=10)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
-    src.append(cur)
-    refresh_drift_counts(state, src, cfg["edges"])
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    delta_append(cur, src)
+    refresh_drift_counts(spark, state, src, cfg["edges"])
     # rewrite history: drop a third of the window
-    src.overwrite(cur.filter(F.col("id") % 3 != 0))
-    refresh_drift_counts(state, src, cfg["edges"])
-    got = psi_from_counts(spark, cfg, state.read())
-    want = psi_report(ref, src.read(), ["a", "b"], bins=10)
+    delta_overwrite(
+        cur.filter(F.col("id") % 3 != 0), src, delta_head(spark, src)[1]
+    )
+    refresh_drift_counts(spark, state, src, cfg["edges"])
+    got = psi_from_counts(spark, cfg, _read(spark, state))
+    want = psi_report(ref, _read(spark, src), ["a", "b"], bins=10)
     assert _report_set(got) == _report_set(want)
 
 
 def test_nulls_do_not_bin_and_empty_feature_is_finite(spark, tmp_path):
     ref, cur = _frames(spark)
     cfg = drift_monitor_config(ref, ["a", "b"], bins=10)
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
     # a batch where feature `a` is entirely NULL
-    src.append(cur.select("id", F.lit(None).cast("double").alias("a"), "b"))
-    refresh_drift_counts(state, src, cfg["edges"])
+    delta_append(
+        cur.select("id", F.lit(None).cast("double").alias("a"), "b"), src
+    )
+    refresh_drift_counts(spark, state, src, cfg["edges"])
     got = {r["feature"]: r for r in psi_from_counts(
-        spark, cfg, state.read()
+        spark, cfg, _read(spark, state)
     ).collect()}
     assert got["a"]["n_cur"] == 0
     assert got["a"]["psi"] == got["a"]["psi"]  # finite, not NaN
     assert got["b"]["n_cur"] > 0
     # matches the recompute on the same (all-NULL `a`) window
-    want = psi_report(ref, src.read(), ["a", "b"], bins=10)
+    want = psi_report(ref, _read(spark, src), ["a", "b"], bins=10)
     assert {
         (r["feature"], r["n_ref"], r["n_cur"], round(r["psi"], 9))
         for r in want.collect()
     } == {
         (r["feature"], r["n_ref"], r["n_cur"], round(r["psi"], 9))
-        for r in psi_from_counts(spark, cfg, state.read()).collect()
+        for r in psi_from_counts(spark, cfg, _read(spark, state)).collect()
     }
 
 
@@ -136,9 +148,8 @@ def test_single_bucket_monitor_degenerates_cleanly(spark, tmp_path):
     ref, cur = _frames(spark)
     cfg = drift_monitor_config(ref, ["a"], bins=1)
     assert cfg["edges"]["a"] == []
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
-    src.append(cur)
-    refresh_drift_counts(state, src, cfg["edges"])
-    got = psi_from_counts(spark, cfg, state.read()).collect()[0]
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    delta_append(cur, src)
+    refresh_drift_counts(spark, state, src, cfg["edges"])
+    got = psi_from_counts(spark, cfg, _read(spark, state)).collect()[0]
     assert got["psi"] == 0.0 and got["n_cur"] > 0

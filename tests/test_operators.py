@@ -323,23 +323,26 @@ def test_refresh_distinct_sketch_fold_equals_full(spark, tmp_path):
         distinct_view,
         refresh_distinct_sketch,
     )
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_head,
+    )
 
     df = spark.range(3000).select(
         (F.col("id") % 3).cast("string").alias("k"),
         (F.col("id") % 517).alias("v"),
     )
-    src = ManifestedTable(spark, str(tmp_path / "src"))
-    state = ManifestedTable(spark, str(tmp_path / "state"))
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
     for i in range(3):
-        src.append(df.filter(F.col("id") % 3 == i))
-        refresh_distinct_sketch(state, src, ["k"], "v")
-    v_before = state.current_version()
-    refresh_distinct_sketch(state, src, ["k"], "v")  # redelivery
-    assert state.current_version() == v_before
+        delta_append(df.filter(F.col("id") % 3 == i), src)
+        refresh_distinct_sketch(spark, state, src, ["k"], "v")
+    v_before = delta_head(spark, state)[1]
+    refresh_distinct_sketch(spark, state, src, ["k"], "v")  # redelivery
+    assert delta_head(spark, state)[1] == v_before
     got = {
         r["k"]: r["distinct_estimate"]
-        for r in distinct_view(state, ["k"]).collect()
+        for r in distinct_view(spark, state, ["k"]).collect()
     }
     # id%3==i slices each cover a subset of v=id%517; exact per key
     want = {
@@ -350,7 +353,7 @@ def test_refresh_distinct_sketch_fold_equals_full(spark, tmp_path):
     }
     assert {k: round(v) for k, v in got.items()} == want
     # estimate-identity of the folded sketch vs a one-shot sketch
-    folded = state.read().select(
+    folded = DeltaTable(spark, state).scan().select(
         "k", F.hll_sketch_estimate("distinct_sketch").alias("e")
     )
     oneshot = df.groupBy("k").agg(

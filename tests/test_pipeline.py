@@ -22,7 +22,7 @@ from feature_store_spark.metrics import auc_roc
 from feature_store_spark.registry import FeatureView, Registry
 from feature_store_spark.scoring import compile_model_expr, example_model
 from feature_store_spark.sources.parsers import read_criteo_tsv, read_svmlight
-from feature_store_spark.streaming.materializer import latest_upsert_batch
+from feature_store_spark.streaming.materializer import merge_latest_sink
 from feature_store_spark.validation import default_rate, model_gates, schema_gate
 
 
@@ -162,12 +162,16 @@ def test_svmlight_parser_letor_comments(spark, tmp_path):
     assert rows[0]["feature_1"] == 0.25 and rows[0]["feature_3"] == 0.0
 
 
-def test_streaming_upsert_batch_semantics(spark):
+def test_streaming_upsert_batch_semantics(spark, tmp_path):
+    from feature_store_spark.sources.delta import DeltaTable
+
+    path = str(tmp_path / "online")
+    sink = merge_latest_sink(path, "upsert", ["entity_id", "feature_name"])
     b1 = spark.createDataFrame(
         [("e1", "f1", 1.0, ts("2024-01-01T00:00:00"))],
         "entity_id string, feature_name string, value_float double, event_time timestamp",
     )
-    state = latest_upsert_batch(b1, None)
+    sink(b1, 0)
     b2 = spark.createDataFrame(
         [
             ("e1", "f1", 2.0, ts("2024-01-03T00:00:00")),
@@ -176,7 +180,8 @@ def test_streaming_upsert_batch_semantics(spark):
         ],
         b1.schema,
     )
-    state = latest_upsert_batch(b2, state)
+    sink(b2, 1)
+    state = DeltaTable(spark, path).scan()
     got = {(r["entity_id"], r["feature_name"]): r["value_float"] for r in state.collect()}
     assert got == {("e1", "f1"): 2.0, ("e2", "f1"): 5.0}
 

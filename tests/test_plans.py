@@ -8,6 +8,7 @@ query survives a 100x scale-up, checked mechanically on every run.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -511,15 +512,19 @@ def test_incremental_refresh_reads_only_appended_files(
     """The incremental fold's whole point: the refresh's delta scan
     lists ONLY the files appended since the last refresh, not the
     table's full file set."""
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable, delta_append
 
-    d = tmp_path_factory.mktemp("incr-plan")
-    t = ManifestedTable(spark, str(d / "t"))
-    t.append(spark.range(0, 100).select(F.col("id")))
-    v1 = t.current_version()
-    t.append(spark.range(100, 110).select(F.col("id")))
-    old = set(t.files(v1))
-    new_files = set(t.files()) - old
+    path = str(tmp_path_factory.mktemp("incr-plan") / "t")
+    v1 = delta_append(spark.range(0, 100).select(F.col("id")), path)
+    delta_append(spark.range(100, 110).select(F.col("id")), path)
+    t = DeltaTable(spark, path)
+
+    def files(version=None):
+        return {
+            os.path.join(path, a["path"]) for a in t.data_files(version)
+        }
+
+    new_files = files() - files(v1)
     delta = t.read_appended(v1)
     scanned = {
         "/" + f.removeprefix("file:").lstrip("/")

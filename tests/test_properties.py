@@ -633,12 +633,17 @@ def test_incremental_refresh_matches_full_recompute_property(
     import random
 
     from feature_store_spark import incremental as I
-    from feature_store_spark.sources import manifest as M
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_head,
+        delta_merge_latest,
+        delta_overwrite,
+    )
 
     rng = random.Random(seed)
     base = tmp_path_factory.mktemp("incr-prop")
-    src = M.ManifestedTable(spark, str(base / "src"))
-    state = M.ManifestedTable(spark, str(base / "state"))
+    src, state = str(base / "src"), str(base / "state")
 
     def batch(lo, n):
         return spark.range(lo, lo + n).select(
@@ -651,34 +656,39 @@ def test_incremental_refresh_matches_full_recompute_property(
     for op in ops:
         if op == "append":
             n = rng.randint(1, 6)
-            src.append(batch(nxt, n))
+            delta_append(batch(nxt, n), src)
             nxt += n
-        elif op == "merge" and src.current_version() > 0:
+        elif op == "merge" and delta_head(spark, src)[1] >= 0:
             n = rng.randint(1, 4)
-            src.merge_upsert(
+            delta_merge_latest(
                 batch(rng.randint(0, max(nxt - 1, 0)), n),
+                src,
                 keys=["k", "v"],
                 order_col="ord",
             )
         elif op == "overwrite":
             n = rng.randint(1, 6)
-            src.overwrite(batch(nxt, n))
+            delta_overwrite(batch(nxt, n), src, delta_head(spark, src)[1])
             nxt += n
         elif op == "refresh":
-            I.refresh_aggregate(state, src, ["k"], "v")
+            I.refresh_aggregate(spark, state, src, ["k"], "v")
 
-    I.refresh_aggregate(state, src, ["k"], "v")
-    I.refresh_aggregate(state, src, ["k"], "v")  # redelivery no-op
+    I.refresh_aggregate(spark, state, src, ["k"], "v")
+    # redelivery no-op
+    v = I.refresh_aggregate(spark, state, src, ["k"], "v")
+    assert v == delta_head(spark, state)[1]
 
-    if src.current_version() == 0:
+    if delta_head(spark, src)[1] < 0:
         # ops never wrote the source: refresh must be a clean no-op
-        assert state.current_version() == 0
+        assert v == -1
         return
-    got = sorted(tuple(r) for r in state.read().collect())
+    got = sorted(
+        tuple(r) for r in DeltaTable(spark, state).scan().collect()
+    )
     want = sorted(
         tuple(r)
         for r in I.partial_aggregate(
-            src.read().select("k", "v"), ["k"], "v"
+            DeltaTable(spark, src).scan().select("k", "v"), ["k"], "v"
         ).collect()
     )
     assert got == want
@@ -1477,23 +1487,24 @@ def test_incremental_heavy_hitters_coverage_property(
     from collections import Counter
 
     from feature_store_spark.incremental import refresh_heavy_hitters
-    from feature_store_spark.sources.manifest import ManifestedTable
+    from feature_store_spark.sources.delta import DeltaTable, delta_append
 
     d = str(tmp_path_factory.mktemp("hhprop") / "t")
     df = spark.createDataFrame(
         [(i, str(v)) for i, v in enumerate(items)], "i long, item string"
     )
-    src = ManifestedTable(spark, d + "/src")
-    state = ManifestedTable(spark, d + "/state")
+    src, state = d + "/src", d + "/state"
     for part in range(3):
         sl = df.filter(F.col("i") % 3 == part)
         if sl.count() == 0:
             continue
-        src.append(sl.withColumn("g", F.lit("all")))
-        refresh_heavy_hitters(state, src, ["g"], "item", k=k)
+        delta_append(sl.withColumn("g", F.lit("all")), src)
+        refresh_heavy_hitters(spark, state, src, ["g"], "item", k=k)
     true = Counter(str(v) for v in items)
     n = len(items)
-    got = {r["item"]: r["cnt"] for r in state.read().collect()}
+    got = {
+        r["item"]: r["cnt"] for r in DeltaTable(spark, state).scan().collect()
+    }
     assert len(got) <= k
     for item, c in true.items():
         if c > n / (k + 1):

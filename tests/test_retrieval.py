@@ -238,26 +238,35 @@ class TestProductQuantization:
             pq_encode,
             pq_train,
         )
-        from feature_store_spark.sources.manifest import ManifestedTable
+        from feature_store_spark.sources.delta import (
+            DeltaTable,
+            delta_append,
+            delta_head,
+            delta_overwrite,
+        )
+
+        def read(path):
+            return DeltaTable(spark, path).scan()
 
         cb = pq_train(emb, m=4, ksub=8)
-        src = ManifestedTable(spark, str(tmp_path / "src"))
-        codes = ManifestedTable(spark, str(tmp_path / "codes"))
+        src, codes = str(tmp_path / "src"), str(tmp_path / "codes")
         for i in (0, 1):
-            src.append(emb.filter(F.col("vec_id") % 2 == i))
-            refresh_pq_index(codes, src, cb)
+            delta_append(emb.filter(F.col("vec_id") % 2 == i), src)
+            refresh_pq_index(spark, codes, src, cb)
 
         def as_map(df):
             return {r["vec_id"]: r["codes"] for r in df.collect()}
 
-        assert as_map(codes.read()) == as_map(pq_encode(src.read(), cb))
-        v = codes.current_version()
-        refresh_pq_index(codes, src, cb)  # redelivery
-        assert codes.current_version() == v
+        assert as_map(read(codes)) == as_map(pq_encode(read(src), cb))
+        v = delta_head(spark, codes)[1]
+        refresh_pq_index(spark, codes, src, cb)  # redelivery
+        assert delta_head(spark, codes)[1] == v
         # history rewrite -> full re-encode of the new truth
-        src.overwrite(emb.filter(F.col("vec_id") < 40))
-        refresh_pq_index(codes, src, cb)
-        assert as_map(codes.read()) == as_map(pq_encode(src.read(), cb))
+        delta_overwrite(
+            emb.filter(F.col("vec_id") < 40), src, delta_head(spark, src)[1]
+        )
+        refresh_pq_index(spark, codes, src, cb)
+        assert as_map(read(codes)) == as_map(pq_encode(read(src), cb))
 
 
 class TestTwoPhaseTopK:
@@ -454,13 +463,20 @@ class TestIncrementalIvfpq:
             pq_encode,
             pq_train,
         )
-        from feature_store_spark.sources.manifest import ManifestedTable
+        from feature_store_spark.sources.delta import (
+            DeltaTable,
+            delta_append,
+            delta_head,
+            delta_overwrite,
+        )
+
+        def read(path):
+            return DeltaTable(spark, path).scan()
 
         cb = pq_train(emb, m=4, ksub=8)
         cents, _ = kmeans_fit(emb, k=5, iters=2)
         cents = cents.localCheckpoint(eager=True)  # freeze the quantizer
-        src = ManifestedTable(spark, str(tmp_path / "src"))
-        idx = ManifestedTable(spark, str(tmp_path / "idx"))
+        src, idx = str(tmp_path / "src"), str(tmp_path / "idx")
 
         def full_build(df):
             codes = pq_encode(df, cb)
@@ -476,17 +492,17 @@ class TestIncrementalIvfpq:
             }
 
         for i in (0, 1, 2):
-            src.append(emb.filter(F.col("vec_id") % 3 == i))
-            refresh_ivfpq_index(idx, src, cb, cents)
+            delta_append(emb.filter(F.col("vec_id") % 3 == i), src)
+            refresh_ivfpq_index(spark, idx, src, cb, cents)
             # INVARIANT: maintained index == full rebuild at every version
-            assert as_map(idx.read()) == as_map(full_build(src.read()))
+            assert as_map(read(idx)) == as_map(full_build(read(src)))
         # search over the maintained state == search over a full build
         queries = emb.filter(F.col("vec_id") < 4).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
         got = ivfpq_search(
-            queries, idx.read(), cents, cb, emb, k=3, n_probe=2,
+            queries, read(idx), cents, cb, emb, k=3, n_probe=2,
             shortlist=10,
         )
         want = ivfpq_search(
@@ -498,13 +514,15 @@ class TestIncrementalIvfpq:
         }
         assert key(got) == key(want)
         # redelivery no-ops
-        v = idx.current_version()
-        refresh_ivfpq_index(idx, src, cb, cents)
-        assert idx.current_version() == v
+        v = delta_head(spark, idx)[1]
+        refresh_ivfpq_index(spark, idx, src, cb, cents)
+        assert delta_head(spark, idx)[1] == v
         # history rewrite -> full rebuild of the new truth
-        src.overwrite(emb.filter(F.col("vec_id") < 60))
-        refresh_ivfpq_index(idx, src, cb, cents)
-        assert as_map(idx.read()) == as_map(full_build(src.read()))
+        delta_overwrite(
+            emb.filter(F.col("vec_id") < 60), src, delta_head(spark, src)[1]
+        )
+        refresh_ivfpq_index(spark, idx, src, cb, cents)
+        assert as_map(read(idx)) == as_map(full_build(read(src)))
 
 
 class TestTwoPhaseEdgeCases:

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from feature_store_spark.sources.commit import ConcurrentWriteError
 from feature_store_spark.sources.delta import (
     DeltaTable,
+    _checkpoint_due,
     delta_append,
     delta_head,
     delta_overwrite,
@@ -126,7 +127,9 @@ def refresh_fold(
     committing left no trace; a concurrent refresh loses the
     compare-and-swap and retries against the new state. Reading the
     state pins ``version=base_v`` explicitly so the fold never mixes
-    a racer's newer state with an older CAS guard.
+    a racer's newer state with an older CAS guard. Every 10th state
+    version is checkpointed, so a long-running refresh loop never
+    replays an unbounded log.
 
     If the source range since the last refresh contains a commit that
     removes files (overwrite / MERGE / OPTIMIZE), ``read_appended`` refuses
@@ -169,7 +172,7 @@ def refresh_fold(
             prev = (
                 None
                 if state is None
-                else state.scan(version=base_v, infer_schema=False)
+                else state.scan(version=base_v)
             )
             if fold_fn is not None:
                 merged = fold_fn(prev, delta)
@@ -178,18 +181,18 @@ def refresh_fold(
                 merged = partial if prev is None else merge_fn(prev, partial)
         except ValueError:
             # a commit in range removed files: full recompute at src_v
-            src_full = source.scan(version=src_v, infer_schema=False)
+            src_full = source.scan(version=src_v)
             merged = (
                 fold_fn(None, src_full)
                 if fold_fn is not None
                 else partial_fn(src_full)
             )
         try:
-            return delta_overwrite(
-                merged, state_dir, base_v, txn=(app_id, src_v)
-            )
+            v = delta_overwrite(merged, state_dir, base_v, txn=(app_id, src_v))
         except ConcurrentWriteError:
             continue
+        _checkpoint_due(spark, state_dir, v)
+        return v
     raise ConcurrentWriteError(
         f"incremental refresh lost the state race {max_retries} times"
     )
@@ -405,7 +408,7 @@ def aggregate_view(
 ) -> DataFrame:
     """The user-facing aggregate: state columns plus derived AVG
     (sum/count — NULL when no non-NULL values were ever seen)."""
-    return DeltaTable(spark, state_dir).scan(infer_schema=False).select(
+    return DeltaTable(spark, state_dir).scan().select(
         *keys,
         "n_rows",
         "n_vals",
@@ -479,7 +482,7 @@ def distinct_view(
 ) -> DataFrame:
     """The user-facing estimate: per-key approximate distinct count
     from the maintained sketch state."""
-    return DeltaTable(spark, state_dir).scan(infer_schema=False).select(
+    return DeltaTable(spark, state_dir).scan().select(
         *list(keys),
         F.hll_sketch_estimate("distinct_sketch").alias(
             "distinct_estimate"
@@ -672,13 +675,13 @@ def refresh_minhash_dedup(
             if state_partitions:
                 torn_sigs = torn_sigs.coalesce(state_partitions)
             sig_v = delta_append(
-                torn_sigs, sig_dir, txn=(app_id, pairs_hwm)
+                torn_sigs, sig_dir, txn=(app_id, pairs_hwm), merge_schema=True
             )
         except ValueError:
             # the crashed refresh was itself the full-recompute
             # fallback (its pairs are a replace-all at pairs_hwm):
             # complete the matching sig replace-all
-            full = source.scan(version=pairs_hwm, infer_schema=False)
+            full = source.scan(version=pairs_hwm)
             sigs_full = minhash_wide_from_docs(
                 full, text_col, id_col, shingle_n, num_hashes
             )
@@ -698,9 +701,7 @@ def refresh_minhash_dedup(
         ).localCheckpoint(eager=True)
         if sig_v >= 0:
             pairs = minhash_pairs_incremental(
-                DeltaTable(spark, sig_dir).scan(
-                    version=sig_v, infer_schema=False
-                ),
+                DeltaTable(spark, sig_dir).scan(version=sig_v),
                 new_sigs, num_hashes, bands, id_col,
                 max_bucket_size=max_bucket_size,
             )
@@ -718,13 +719,17 @@ def refresh_minhash_dedup(
         if state_partitions:
             pairs = pairs.coalesce(state_partitions)
             new_sigs = new_sigs.coalesce(state_partitions)
-        pairs_v = delta_append(pairs, pairs_dir, txn=(app_id, src_v))
-        delta_append(new_sigs, sig_dir, txn=(app_id, src_v))
+        pairs_v = delta_append(
+            pairs, pairs_dir, txn=(app_id, src_v), merge_schema=True
+        )
+        sig_v = delta_append(
+            new_sigs, sig_dir, txn=(app_id, src_v), merge_schema=True
+        )
     except ValueError:
         # a commit in the window removed files: recompute the world
         # at src_v — correctness never rests on guessing what a rewrite
         # did to row membership (same contract as refresh_aggregate)
-        full = source.scan(version=src_v, infer_schema=False)
+        full = source.scan(version=src_v)
         pairs_full = minhash_dedup_pairs(
             full, text_col, id_col, shingle_n, num_hashes, bands,
             threshold, max_bucket_size=max_bucket_size,
@@ -735,7 +740,11 @@ def refresh_minhash_dedup(
         pairs_v = delta_overwrite(
             pairs_full, pairs_dir, pairs_v, txn=(app_id, src_v)
         )
-        delta_overwrite(sigs_full, sig_dir, sig_v, txn=(app_id, src_v))
+        sig_v = delta_overwrite(
+            sigs_full, sig_dir, sig_v, txn=(app_id, src_v)
+        )
+    _checkpoint_due(spark, pairs_dir, pairs_v)
+    _checkpoint_due(spark, sig_dir, sig_v)
     return pairs_v
 
 
@@ -790,14 +799,18 @@ def _refresh_rowwise(
         return index_v
     try:
         delta = source.read_appended(last, src_v)
-        return delta_append(build(delta), index_dir, txn=(app_id, src_v))
+        v = delta_append(
+            build(delta), index_dir, txn=(app_id, src_v), merge_schema=True
+        )
     except ValueError:
-        return delta_overwrite(
-            build(source.scan(version=src_v, infer_schema=False)),
+        v = delta_overwrite(
+            build(source.scan(version=src_v)),
             index_dir,
             index_v,
             txn=(app_id, src_v),
         )
+    _checkpoint_due(spark, index_dir, v)
+    return v
 
 
 def refresh_ivfpq_index(

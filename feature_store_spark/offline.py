@@ -168,7 +168,8 @@ class ManifestedOfflineStore(OfflineStore):
     concurrent appenders serialize on the version claim with no data
     rewrite. ``scan`` keeps the same pushdown/pruning behavior — the
     live files read under a basePath, so hive partition values still
-    parse and prune."""
+    parse and prune. Appends evolve the schema: a batch's new nullable
+    columns widen the table and the table columns it lacks land NULL."""
 
     PARTITIONING = ("entity_type", "event_date")
 
@@ -188,7 +189,9 @@ class ManifestedOfflineStore(OfflineStore):
 
         dated = self._dated(df)
         if mode == "append":
-            return delta_append(dated, self.path, self.PARTITIONING)
+            return delta_append(
+                dated, self.path, self.PARTITIONING, merge_schema=True
+            )
         if mode == "overwrite":
             return delta_overwrite(
                 dated,
@@ -246,9 +249,7 @@ class ManifestedOfflineStore(OfflineStore):
                     ("event_date", op, bound + sign * _dt.timedelta(days=3))
                 )
         return self._apply_scan_filters(
-            DeltaTable(self.spark, self.path).scan(
-                filters=prune, infer_schema=False
-            ),
+            DeltaTable(self.spark, self.path).scan(filters=prune),
             entity_type,
             feature_names,
             time_min,

@@ -99,6 +99,50 @@ from feature_store_spark.scoring import compile_model_expr, compile_model_sql, e
 from feature_store_spark.session import load_table, local_rows_df
 from feature_store_spark.stats import feature_stats
 
+
+def _foreach_batch_stream(
+    spark, name, frame, sink_of, result_of, refreshed=None, shape=None
+):
+    """Shared body of the foreachBatch stream queries: ``frame`` lands
+    as 4 parquet files (repartition, not coalesce: a small SF reads as
+    ONE partition and coalesce cannot raise it) and streams back under
+    ``maxFilesPerTrigger=1``, so the sink ``sink_of(d)`` sees several
+    micro-batches; ``shape`` transforms the stream first. Fails loudly
+    on a 300 s timeout, and unless the Delta table ``d/<refreshed>``
+    took at least two commits. Returns ``result_of(d)``
+    localCheckpointed, then removes the scratch dir ``d``."""
+    import shutil
+
+    from feature_store_spark.sources.delta import delta_head
+
+    d = _stream_tmpdir(f"fss_{name}_")
+    try:
+        frame.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = (
+            spark.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{d}/in")
+        )
+        q = (
+            (shape(stream) if shape else stream)
+            .writeStream.foreachBatch(sink_of(d))
+            .option("checkpointLocation", f"{d}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(f"{name}: stream did not finish in 300s")
+        if refreshed and delta_head(spark, f"{d}/{refreshed}")[1] < 1:
+            raise RuntimeError(
+                f"{name}: expected multiple state refreshes, got at "
+                "most one commit"
+            )
+        return result_of(d).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 FRAUD_FEATURES = [
     "gmv_30d", "gmv_90d", "txn_count_30d", "avg_txn_value",
@@ -3781,7 +3825,7 @@ def q_scalar_upsert(spark, sf_dir):
             order_col="event_time",
             tiebreak_cols=["rec_event_id"],
         )
-        merged = DeltaTable(spark, scratch).scan(infer_schema=False)
+        merged = DeltaTable(spark, scratch).scan()
         return merged.select(
             "entity_id",
             "feature_name",
@@ -3963,7 +4007,7 @@ def q_incremental_heavy_hitters(spark, sf_dir):
                 spark, state, src, ["event_type"], "item", k=64
             ),
         )
-        cand = DeltaTable(spark, state).scan(infer_schema=False).select(
+        cand = DeltaTable(spark, state).scan().select(
             "event_type", "item", F.lit(True).alias("covered")
         )
         totals = events.groupBy("event_type").agg(
@@ -4035,7 +4079,7 @@ def q_incremental_dedup(spark, sf_dir):
                 spark, sig, pairs, src, state_partitions=4
             ),
         )
-        out = DeltaTable(spark, pairs).scan(infer_schema=False).select(
+        out = DeltaTable(spark, pairs).scan().select(
             "id_a", "id_b", _r6(F.col("est_jaccard")).alias("est_jaccard")
         )
         return out.localCheckpoint(eager=True)
@@ -4051,50 +4095,24 @@ def q_stream_incremental_dedup(spark, sf_dir):
     ONLY the appended docs (incremental_dedup_sink). The accumulated
     pairs table must equal the full recompute over the whole corpus —
     the same oracle SQL as minhash_pairs."""
-    import shutil as _sh
-
-    from feature_store_spark.sources.delta import DeltaTable, delta_head
+    from feature_store_spark.sources.delta import DeltaTable
     from feature_store_spark.streaming.materializer import (
         incremental_dedup_sink,
     )
 
-    corpus = _mutated_corpus(spark, sf_dir, exact=False)
-    d = _stream_tmpdir("fss_stream_dedup_incr_")
-    corpus.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
-    )
-    src, sig, pairs = f"{d}/src", f"{d}/sig", f"{d}/pairs"
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_dedup_sink(
-                    src, sig, pairs, "doc-stream", state_partitions=4
-                )
-            )
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_incremental_dedup: stream did not finish in 300s"
-            )
-        n_commits = delta_head(spark, pairs)[1] + 1
-        if n_commits < 2:
-            raise RuntimeError(
-                "stream_incremental_dedup: expected multiple state "
-                f"refreshes, got {n_commits} commit(s)"
-            )
-        out = DeltaTable(spark, pairs).scan(infer_schema=False).select(
+    return _foreach_batch_stream(
+        spark,
+        "stream_incremental_dedup",
+        _mutated_corpus(spark, sf_dir, exact=False),
+        lambda d: incremental_dedup_sink(
+            f"{d}/src", f"{d}/sig", f"{d}/pairs", "doc-stream",
+            state_partitions=4,
+        ),
+        lambda d: DeltaTable(spark, f"{d}/pairs").scan().select(
             "id_a", "id_b", _r6(F.col("est_jaccard")).alias("est_jaccard")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
+        ),
+        refreshed="pairs",
+    )
 
 
 def q_incremental_dedup_exact(spark, sf_dir):
@@ -4117,7 +4135,7 @@ def q_incremental_dedup_exact(spark, sf_dir):
             corpus, "doc_id", src,
             lambda: refresh_exact_dedup(spark, state, src),
         )
-        return DeltaTable(spark, state).scan(infer_schema=False).select(
+        return DeltaTable(spark, state).scan().select(
             "fingerprint", "keeper_id", "n_copies"
         ).localCheckpoint(eager=True)
     finally:
@@ -4167,7 +4185,7 @@ def q_incremental_ann(spark, sf_dir):
         v = delta_head(spark, idx)[1]
         refresh_ivfpq_index(spark, idx, src, cb, cents)
         redelivery_noop = delta_head(spark, idx)[1] == v
-        index = DeltaTable(spark, idx).scan(infer_schema=False)
+        index = DeltaTable(spark, idx).scan()
 
         full = pq_encode(emb, cb).join(
             assign_clusters(
@@ -9701,51 +9719,21 @@ def q_stream_incremental_agg(spark, sf_dir):
     folding ONLY the appended files (incremental.refresh_aggregate) —
     the committed state table is returned and must equal the full
     groupBy over all events, which is exactly INCREMENTAL_AGG_SQL."""
-    import shutil as _sh
-
     from feature_store_spark.incremental import aggregate_view
-    from feature_store_spark.sources.delta import delta_head
     from feature_store_spark.streaming.materializer import (
         incremental_view_sink,
     )
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    d = _stream_tmpdir("fss_stream_incr_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string,"
-            " ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
-    )
-    source, state = f"{d}/src", f"{d}/state"
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_view_sink(
-                    source, state, "ev-view", ["event_type"], "value"
-                )
-            )
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_incremental_agg: stream did not finish in 300s"
-            )
-        n_commits = delta_head(spark, state)[1] + 1
-        if n_commits < 2:
-            raise RuntimeError(
-                "stream_incremental_agg: expected multiple state "
-                f"refreshes, got {n_commits} commit(s)"
-            )
-        out = aggregate_view(spark, state, ["event_type"]).select(
+    return _foreach_batch_stream(
+        spark,
+        "stream_incremental_agg",
+        load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "ts", "value"
+        ),
+        lambda d: incremental_view_sink(
+            f"{d}/src", f"{d}/state", "ev-view", ["event_type"], "value"
+        ),
+        lambda d: aggregate_view(spark, f"{d}/state", ["event_type"]).select(
             "event_type",
             "n_rows",
             "n_vals",
@@ -9753,10 +9741,9 @@ def q_stream_incremental_agg(spark, sf_dir):
             _r6(F.col("min_val")).alias("min_val"),
             _r6(F.col("max_val")).alias("max_val"),
             _r6(F.col("avg_val")).alias("avg_val"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
+        ),
+        refreshed="state",
+    )
 
 
 def _purchase_delta_sink(spark, sf_dir, name, partition_cols):
@@ -9771,66 +9758,42 @@ def _purchase_delta_sink(spark, sf_dir, name, partition_cols):
     by event_type, the read prunes to them. The result frame is
     localCheckpointed so the scratch table can be deleted before
     returning."""
-    import shutil as _sh
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append_sink,
     )
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    d = _stream_tmpdir(f"fss_{name}_")
-    # repartition, not coalesce: a small SF reads as ONE partition and
-    # coalesce cannot raise it — the 4 input files are what forces >1
-    # micro-batch under maxFilesPerTrigger=1
-    ev.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string,"
-            " ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
-    )
-    if not partition_cols:
-        stream = stream.filter(F.col("event_type") == "purchase").select(
-            "event_id", "user_id", "ts", "value"
-        )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                delta_append_sink(
-                    f"{d}/table", "purchase-sink",
-                    partition_cols=partition_cols,
-                )
-            )
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(f"{name}: stream did not finish in 300s")
+    def committed(d):
         t = DeltaTable(spark, f"{d}/table")
         n_commits = t.latest_version() + 1
         hwm = t.txn_version("purchase-sink")
-        out = (
-            t.scan(filters=[("event_type", "=", "purchase")])
-            if partition_cols
-            else t.scan(infer_schema=False)
-        )
-        return out.select(
+        return t.scan(
+            filters=[("event_type", "=", "purchase")] if partition_cols else None
+        ).select(
             "event_id",
             "user_id",
             F.unix_micros("ts").alias("ts_us"),
             _r6(F.col("value")).alias("value"),
             F.lit(n_commits >= 2).alias("multi_commit"),
             F.lit(hwm == n_commits - 1).alias("txn_contiguous"),
-        ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
+        )
+
+    return _foreach_batch_stream(
+        spark,
+        name,
+        load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "ts", "value"
+        ),
+        lambda d: delta_append_sink(
+            f"{d}/table", "purchase-sink", partition_cols=partition_cols
+        ),
+        committed,
+        shape=None if partition_cols else (
+            lambda st: st.filter(F.col("event_type") == "purchase").select(
+                "event_id", "user_id", "ts", "value"
+            )
+        ),
+    )
 
 
 def q_stream_manifest_sink(spark, sf_dir):
@@ -10085,7 +10048,7 @@ def q_incremental_drift(spark, sf_dir):
             lambda: refresh_drift_counts(spark, state, src, cfg["edges"]),
         )
         out = psi_from_counts(
-            spark, cfg, DeltaTable(spark, state).scan(infer_schema=False)
+            spark, cfg, DeltaTable(spark, state).scan()
         )
         return out.coalesce(1).localCheckpoint(eager=True)
     finally:
@@ -10102,10 +10065,7 @@ def q_stream_incremental_distinct(spark, sf_dir):
     distinct user count (graded exactly via count_distinct) and equal
     a one-shot sketch of everything appended — the streaming twin of
     ``incremental_distinct``."""
-    import shutil as _sh
-
     from feature_store_spark.incremental import distinct_view
-    from feature_store_spark.sources.delta import delta_head
     from feature_store_spark.streaming.materializer import (
         incremental_distinct_sink,
     )
@@ -10113,67 +10073,36 @@ def q_stream_incremental_distinct(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id"
     )
-    d = _stream_tmpdir("fss_stream_distinct_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
+    full = ev.groupBy("event_type").agg(
+        F.hll_sketch_estimate(
+            F.hll_sketch_agg("user_id", 14)
+        ).alias("full_estimate"),
+        F.count_distinct("user_id").alias("n_distinct_users"),
     )
-    src, state = f"{d}/src", f"{d}/state"
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_distinct_sink(
-                    src, state, ["event_type"], "user_id",
-                    "distinct-stream",
-                )
-            )
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    return _foreach_batch_stream(
+        spark,
+        "stream_incremental_distinct",
+        ev,
+        lambda d: incremental_distinct_sink(
+            f"{d}/src", f"{d}/state", ["event_type"], "user_id",
+            "distinct-stream",
+        ),
+        lambda d: distinct_view(spark, f"{d}/state", ["event_type"])
+        .join(full, "event_type")
+        .select(
+            "event_type",
+            "n_distinct_users",
+            (F.col("distinct_estimate") == F.col("full_estimate")).alias(
+                "matches_full"
+            ),
+            (
+                F.abs(F.col("distinct_estimate") - F.col("n_distinct_users"))
+                <= 0.02 * F.col("n_distinct_users")
+            ).alias("estimate_ok"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_incremental_distinct: stream did not finish "
-                "in 300s"
-            )
-        n_commits = delta_head(spark, state)[1] + 1
-        if n_commits < 2:
-            raise RuntimeError(
-                "stream_incremental_distinct: expected multiple "
-                f"state refreshes, got {n_commits} commit(s)"
-            )
-        full = ev.groupBy("event_type").agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", 14)
-            ).alias("full_estimate"),
-            F.count_distinct("user_id").alias("n_distinct_users"),
-        )
-        out = (
-            distinct_view(spark, state, ["event_type"])
-            .join(full, "event_type")
-            .select(
-                "event_type",
-                "n_distinct_users",
-                (
-                    F.col("distinct_estimate")
-                    == F.col("full_estimate")
-                ).alias("matches_full"),
-                (
-                    F.abs(
-                        F.col("distinct_estimate")
-                        - F.col("n_distinct_users")
-                    )
-                    <= 0.02 * F.col("n_distinct_users")
-                ).alias("estimate_ok"),
-            )
-            .orderBy("event_type")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
+        .orderBy("event_type"),
+        refreshed="state",
+    )
 
 
 STREAM_INCREMENTAL_DISTINCT_SQL = """
@@ -10194,9 +10123,7 @@ def q_stream_incremental_drift(spark, sf_dir):
     edges). The report from the final state must equal the
     full-recompute PSI over the whole split — the same oracle SQL as
     ``drift_psi``."""
-    import shutil as _sh
-
-    from feature_store_spark.sources.delta import DeltaTable, delta_head
+    from feature_store_spark.sources.delta import DeltaTable
     from feature_store_spark.stats import (
         drift_monitor_config,
         psi_from_counts,
@@ -10219,44 +10146,18 @@ def q_stream_incremental_drift(spark, sf_dir):
     cfg = drift_monitor_config(
         ref, ["l_quantity", "l_extendedprice"], bins=10
     )
-    d = _stream_tmpdir("fss_stream_drift_incr_")
-    cur.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema(
-            "l_quantity double, l_extendedprice double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
+    return _foreach_batch_stream(
+        spark,
+        "stream_incremental_drift",
+        cur,
+        lambda d: incremental_drift_sink(
+            f"{d}/src", f"{d}/state", cfg["edges"], "drift-stream"
+        ),
+        lambda d: psi_from_counts(
+            spark, cfg, DeltaTable(spark, f"{d}/state").scan()
+        ),
+        refreshed="state",
     )
-    src, state = f"{d}/src", f"{d}/state"
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_drift_sink(
-                    src, state, cfg["edges"], "drift-stream"
-                )
-            )
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_incremental_drift: stream did not finish in 300s"
-            )
-        n_commits = delta_head(spark, state)[1] + 1
-        if n_commits < 2:
-            raise RuntimeError(
-                "stream_incremental_drift: expected multiple state "
-                f"refreshes, got {n_commits} commit(s)"
-            )
-        out = psi_from_counts(
-            spark, cfg, DeltaTable(spark, state).scan(infer_schema=False)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
 
 
 def q_target_encoding(spark, sf_dir):

@@ -1050,11 +1050,11 @@ class DeltaTable:
         version: int | None = None,
         filters: list[tuple] | None = None,
         as_of_ms: int | None = None,
-        infer_schema: bool = True,
     ) -> DataFrame:
-        """``infer_schema=False`` reads an unmapped table under the
-        log's recorded schema instead of Spark's footer inference,
-        which costs one Spark job per read."""
+        """The table at ``version`` (default latest), optionally pruned
+        by ``filters``. An unmapped table reads under the log's
+        recorded schema, the Delta table schema, so the read costs no
+        Spark footer-inference job."""
         if as_of_ms is not None:
             if version is not None:
                 raise ValueError("pass version OR as_of_ms, not both")
@@ -1080,12 +1080,16 @@ class DeltaTable:
                 )
             return (
                 self._assemble(
-                    [all_adds[0]], meta, maybe_evolved, infer_schema, False
+                    [all_adds[0]],
+                    meta,
+                    maybe_evolved,
+                    tagged=False,
+                    log_schema=True,
                 )
                 .limit(0)
             )
         df = self._assemble_live(
-            adds, meta, maybe_evolved, infer_schema, tagged=False
+            adds, meta, maybe_evolved, tagged=False, log_schema=True
         )
         for f in filters or []:
             df = df.filter(_Filter(*f).sql())
@@ -1130,8 +1134,8 @@ class DeltaTable:
             adds,
             meta,
             self._maybe_evolved.get(to, True),
-            infer_schema=False,
             tagged=False,
+            log_schema=True,
         )
 
     def _assemble_live(
@@ -1139,8 +1143,8 @@ class DeltaTable:
         adds: list[dict],
         meta: dict,
         maybe_evolved: bool = True,
-        infer_schema: bool = True,
         tagged: bool = True,
+        log_schema: bool = False,
     ) -> DataFrame:
         """``_assemble`` minus the rows the adds' deletion vectors
         already killed, keeping the ``__fp``/``__pos`` tags — the
@@ -1152,7 +1156,7 @@ class DeltaTable:
 
         dv_adds = [a for a in adds if a.get("deletionVector")]
         df = self._assemble(
-            adds, meta, maybe_evolved, infer_schema, tagged or bool(dv_adds)
+            adds, meta, maybe_evolved, tagged or bool(dv_adds), log_schema
         )
         if dv_adds:
             # decode all DVs at plan time (KB–MB metadata) and remove
@@ -1195,8 +1199,8 @@ class DeltaTable:
         adds: list[dict],
         meta: dict,
         maybe_evolved: bool = True,
-        infer_schema: bool = True,
         tagged: bool = True,
+        log_schema: bool = False,
     ) -> DataFrame:
         """Read the add set to a frame with LOGICAL column names plus,
         when ``tagged``, ``__fp`` (absolute data-file path) / ``__pos``
@@ -1261,7 +1265,9 @@ class DeltaTable:
                 for a in adds
             )
             reader = self.spark.read
-            if not infer_schema:
+            if log_schema:
+                # the table reads (scan, read_appended); the verbs'
+                # probes still pay Spark's footer-inference job
                 from pyspark.sql import types as T
 
                 reader = reader.schema(
@@ -1573,11 +1579,17 @@ def _stage_adds(
 
 
 def _evolve_delta_schema(
-    meta0: dict, added: list[dict], mode: str, map_fields: list[dict]
+    meta0: dict,
+    added: list[dict],
+    mode: str,
+    map_fields: list[dict],
+    relaxed: set[str] = frozenset(),
 ) -> dict:
     """Build the updated ``metaData`` action for schema evolution:
     ``added`` (spark-schema field dicts) append to the table schema
-    as nullable columns (old files have no values — they read NULL).
+    as nullable columns (old files have no values — they read NULL),
+    and the ``relaxed`` table columns become nullable (a batch
+    lacking them lands NULLs).
     In mapped tables each new column is assigned a fresh physical
     name + field id above the recorded high-water mark;
     ``map_fields`` is extended in place so the caller's physical
@@ -1588,7 +1600,13 @@ def _evolve_delta_schema(
 
     cur_fields = json.loads(meta0["schemaString"])["fields"]
     conf = dict(meta0.get("configuration") or {})
-    sj = {"type": "struct", "fields": list(cur_fields)}
+    sj = {
+        "type": "struct",
+        "fields": [
+            {**f, "nullable": True} if f["name"] in relaxed else f
+            for f in cur_fields
+        ],
+    }
     for f in added:
         nf = dict(f)
         nf["nullable"] = True  # old files have no values
@@ -1668,7 +1686,10 @@ def delta_append(
     columns land nullable, and in mapped tables they get fresh
     ``delta.columnMapping`` ids/physical names with ``maxColumnId``
     bumped, so committed files' ids never repoint. Readers null-fill
-    the new columns for pre-evolution files.
+    the new columns for pre-evolution files. ``merge_schema=True``
+    also admits a batch that lacks table columns: they are written
+    as typed NULLs (and recorded nullable), so the table schema is
+    the union of both and never narrows.
 
     Concurrent appenders arbitrate on the version claim: a lost race
     re-checks the txn mark and retries at the next version with the
@@ -1861,6 +1882,24 @@ def delta_append(
             and _norm_type(new_types[n]) != _norm_type(cur_types[n])
         )
         absent = sorted(n for n in cur_types if n not in new_types)
+        relaxed: set[str] = set()
+        if merge_schema and absent:
+            # the union of both schemas: the table's columns the batch
+            # lacks land as typed NULLs (and turn nullable)
+            from pyspark.sql import types as T
+
+            fill = [
+                f
+                for f in T.StructType.fromJson(
+                    json.loads(meta0["schemaString"])
+                ).fields
+                if f.name in absent
+            ]
+            df = df.withColumns(
+                {f.name: F.lit(None).cast(f.dataType) for f in fill}
+            )
+            relaxed = {f.name for f in fill if not f.nullable}
+            absent = []
         added = [f for f in df_fields if f["name"] not in cur_types]
         if mismatched or absent:
             raise ValueError(
@@ -1875,9 +1914,9 @@ def delta_append(
                 f"{[f['name'] for f in added]} — pass "
                 "merge_schema=True to evolve the table schema"
             )
-        if added:
+        if added or relaxed:
             evolution_md = _evolve_delta_schema(
-                meta0, added, mode, map_fields
+                meta0, added, mode, map_fields, relaxed
             )
     else:
         mode = column_mapping or "none"
@@ -2189,10 +2228,11 @@ def delta_merge_latest(
     ``tiebreak_cols``), committed through :func:`delta_overwrite` with
     a CAS on the scanned version; a lost race re-derives (three tries).
     Unlike :func:`delta_upsert` it collapses duplicate keys on either
-    side, and a batch that adds or lacks nullable columns evolves or
+    side, and a batch that adds or lacks columns evolves or
     null-fills the schema. ``txn=(app_id, n)`` makes a redelivered
     batch a no-op; ``partition_cols`` applies when the merge creates
-    the table. Returns the committed version."""
+    the table. Every 10th version is checkpointed. Returns the
+    committed version."""
     from feature_store_spark.operators.reshape import latest_per_key
 
     for _ in range(3):
@@ -2206,7 +2246,7 @@ def delta_merge_latest(
         merged = latest_per_key(
             updates
             if t is None
-            else t.scan(version=base, infer_schema=False).unionByName(
+            else t.scan(version=base).unionByName(
                 updates, allowMissingColumns=True
             ),
             list(keys),
@@ -2214,11 +2254,11 @@ def delta_merge_latest(
             list(tiebreak_cols),
         )
         try:
-            return delta_overwrite(
-                merged, table_dir, base, partition_cols, txn
-            )
+            v = delta_overwrite(merged, table_dir, base, partition_cols, txn)
         except ConcurrentWriteError:
             continue
+        _checkpoint_due(updates.sparkSession, table_dir, v)
+        return v
     raise ConcurrentWriteError(
         f"{table_dir}: merge lost the version race 3 times"
     )
@@ -2747,6 +2787,11 @@ def delta_changes(
     return out
 
 
+# age past which a ``.staging-*`` dir or ``_delta_log/.tmp-*`` file
+# can only be a crashed writer's
+_DEBRIS_GRACE_S = 24 * 3600
+
+
 def delta_vacuum(
     spark: SparkSession,
     table_dir: str,
@@ -2762,7 +2807,8 @@ def delta_vacuum(
     in-flight data files must not look like garbage). Time travel to
     versions whose files are vacuumed stops working, exactly as in
     Delta proper. Crashed writers' ``.staging-*`` dirs and unpublished
-    ``_delta_log/.tmp-*`` files are reaped under the same mtime grace.
+    ``_delta_log/.tmp-*`` files are reaped once they are a day old,
+    whatever ``retention_ms`` says, so a live writer's never are.
     Returns the deleted (or, with ``dry_run``, deletable) paths
     relative to the table root.
 
@@ -2832,15 +2878,17 @@ def delta_vacuum(
                 if ts > cutoff:
                     continue  # inside the retention window
             doomed.append(rel)
+
     def stale(rel: str) -> bool:
         try:
-            mtime_ms = os.path.getmtime(os.path.join(t.path, rel)) * 1000
+            mtime = os.path.getmtime(os.path.join(t.path, rel))
         except OSError:
             return False  # its writer finished and removed it
-        return retention_ms <= 0 or mtime_ms <= cutoff
+        return mtime <= now_ms / 1000 - _DEBRIS_GRACE_S
 
     # crashed writers' debris: staging dirs under the root and
-    # unpublished commit temp files in the log, under the same grace
+    # unpublished commit temp files in the log. A live writer's are
+    # minutes old at most, whatever the data-file retention says.
     debris = [
         rel
         for rel in [n for n in os.listdir(t.path)
@@ -2857,7 +2905,10 @@ def delta_vacuum(
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
             else:
-                os.remove(p)
+                try:
+                    os.remove(p)
+                except FileNotFoundError:
+                    pass
     return sorted(doomed + debris)
 
 
@@ -3049,6 +3100,16 @@ def delta_checkpoint(spark: SparkSession, table_dir: str) -> int:
     return version
 
 
+def _checkpoint_due(
+    spark: SparkSession, table_dir: str, version: int, every: int | None = 10
+) -> None:
+    """Checkpoint after every ``every``-th commit (the standard Delta
+    cadence), so a long-running writer never makes its readers replay
+    an unbounded JSON log."""
+    if every and version > 0 and version % int(every) == 0:
+        delta_checkpoint(spark, table_dir)
+
+
 def delta_append_sink(
     table_dir: str,
     app_id: str,
@@ -3071,8 +3132,7 @@ def delta_append_sink(
             partition_cols=partition_cols,
             txn=(app_id, int(batch_id)),
         )
-        if checkpoint_every and v > 0 and v % int(checkpoint_every) == 0:
-            delta_checkpoint(batch_df.sparkSession, table_dir)
+        _checkpoint_due(batch_df.sparkSession, table_dir, v, checkpoint_every)
 
     return sink
 
@@ -3111,8 +3171,7 @@ def delta_upsert_sink(
             txn=(app_id, int(batch_id)),
             op_col=op_col,
         )
-        if checkpoint_every and v > 0 and v % int(checkpoint_every) == 0:
-            delta_checkpoint(batch_df.sparkSession, table_dir)
+        _checkpoint_due(batch_df.sparkSession, table_dir, v, checkpoint_every)
 
     return sink
 
@@ -3206,8 +3265,7 @@ def delta_merge_sink(
             evolve=evolve,
             txn=(app_id, int(batch_id)),
         )
-        if checkpoint_every and v > 0 and v % int(checkpoint_every) == 0:
-            delta_checkpoint(batch_df.sparkSession, table_dir)
+        _checkpoint_due(batch_df.sparkSession, table_dir, v, checkpoint_every)
 
     return sink
 

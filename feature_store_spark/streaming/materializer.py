@@ -122,6 +122,21 @@ def merge_latest_sink(
     return sink
 
 
+def _land(batch: DataFrame, source_dir: str, app_id: str, batch_id: int):
+    """The incremental sinks' source write: an idempotent append that
+    evolves the schema (new columns widen, missing ones land NULL),
+    checkpointed every 10th version like the state tables."""
+    from feature_store_spark.sources.delta import (
+        _checkpoint_due,
+        delta_append,
+    )
+
+    v = delta_append(
+        batch, source_dir, txn=(app_id, batch_id), merge_schema=True
+    )
+    _checkpoint_due(batch.sparkSession, source_dir, v)
+
+
 def incremental_view_sink(
     source_dir: str,
     state_dir: str,
@@ -144,10 +159,9 @@ def incremental_view_sink(
     committed snapshot equal to a full aggregate of some source
     prefix, and the final refresh closes the gap."""
     from feature_store_spark.incremental import refresh_aggregate
-    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        delta_append(batch, source_dir, txn=(app_id, batch_id))
+        _land(batch, source_dir, app_id, batch_id)
         refresh_aggregate(
             batch.sparkSession,
             state_dir,
@@ -185,10 +199,9 @@ def incremental_dedup_sink(
     The pairs table is eventually-exact: always equal to the full
     recompute over some committed corpus prefix."""
     from feature_store_spark.incremental import refresh_minhash_dedup
-    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        delta_append(batch, source_dir, txn=(app_id, batch_id))
+        _land(batch, source_dir, app_id, batch_id)
         refresh_minhash_dedup(
             batch.sparkSession,
             sig_dir,
@@ -220,10 +233,9 @@ def incremental_distinct_sink(
     sketch of everything ever appended. Same exactly-once
     composition as :func:`incremental_drift_sink`."""
     from feature_store_spark.incremental import refresh_distinct_sketch
-    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        delta_append(batch, source_dir, txn=(app_id, batch_id))
+        _land(batch, source_dir, app_id, batch_id)
         refresh_distinct_sketch(
             batch.sparkSession,
             state_dir,
@@ -259,10 +271,9 @@ def incremental_drift_sink(
     redelivered batches on the log, and the refresh's source-version
     token no-ops redelivered refreshes."""
     from feature_store_spark.incremental import refresh_drift_counts
-    from feature_store_spark.sources.delta import delta_append
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        delta_append(batch, source_dir, txn=(app_id, batch_id))
+        _land(batch, source_dir, app_id, batch_id)
         refresh_drift_counts(
             batch.sparkSession,
             state_dir,

@@ -75,7 +75,9 @@ class TestCommitProtocol:
         """Kill point 1: mid-way through moving staged part files into
         the table layout. The table must stay exactly the old version;
         the half-moved files are unreferenced garbage that vacuum
-        removes, staging dir included."""
+        removes, and the staging dir goes once it is a day old."""
+        import time
+
         path = str(tmp_path / "t")
         delta_append(_df(spark, 0, 5, "a").repartition(2), path)
         before = _rows(_scan(spark, path))
@@ -104,6 +106,12 @@ class TestCommitProtocol:
         assert len(_data_files_on_disk(path)) > len(_live(spark, path))
         delta_vacuum(spark, path, retention_ms=0)
         assert len(_data_files_on_disk(path)) == len(_live(spark, path))
+        staging = [n for n in os.listdir(path) if n.startswith(".staging")]
+        assert staging  # a live writer's could look the same
+        day_old = time.time() - 25 * 3600
+        for n in staging:
+            os.utime(os.path.join(path, n), (day_old, day_old))
+        delta_vacuum(spark, path, retention_ms=0)
         assert not [n for n in os.listdir(path) if n.startswith(".staging")]
         assert _rows(_scan(spark, path)) == before
 
@@ -691,15 +699,54 @@ class TestPruneSoundness:
         )
 
     def test_vacuum_reaps_crashed_staging_and_tmp(self, spark, tmp_path):
+        """A day-old staging dir or commit temp file is a crashed
+        writer's and goes; a fresh one may be a live writer's and
+        stays, even at zero data-file retention."""
+        import time
+
         path = str(tmp_path / "t")
         delta_append(_df(spark, 0, 3, "a"), path)
-        os.makedirs(os.path.join(path, ".staging-deadbeef"))
-        tmp = os.path.join(path, "_delta_log", ".tmp-deadbeef")
-        with open(tmp, "w") as f:
-            f.write("{}")
+        old = [
+            os.path.join(path, ".staging-deadbeef"),
+            os.path.join(path, "_delta_log", ".tmp-deadbeef"),
+        ]
+        fresh = [
+            os.path.join(path, ".staging-cafef00d"),
+            os.path.join(path, "_delta_log", ".tmp-cafef00d"),
+        ]
+        for staging, tmp in (old, fresh):
+            os.makedirs(staging)
+            with open(tmp, "w") as f:
+                f.write("{}")
+        two_days_ago = time.time() - 2 * 24 * 3600
+        for p in old:
+            os.utime(p, (two_days_ago, two_days_ago))
         delta_vacuum(spark, path, retention_ms=0)
-        assert not os.path.exists(os.path.join(path, ".staging-deadbeef"))
-        assert not os.path.exists(tmp)
+        assert not any(os.path.exists(p) for p in old)
+        assert all(os.path.exists(p) for p in fresh)
+        assert len(_rows(_scan(spark, path))) == 3
+
+    def test_vacuum_spares_an_in_flight_commit(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Vacuum running while a writer sits between fsyncing its
+        commit temp file and linking it (zero data-file retention, the
+        default) must leave the temp file alone: the commit lands."""
+        path = str(tmp_path / "t")
+        delta_append(_df(spark, 0, 3, "a"), path)
+        real_link = commit.os.link
+        reaped: list[str] = []
+
+        def vacuum_then_link(src, dst):
+            reaped.extend(delta_vacuum(spark, path))
+            return real_link(src, dst)
+
+        monkeypatch.setattr(commit.os, "link", vacuum_then_link)
+        # a txn-only commit: no data file for vacuum to see as orphan
+        v = delta_append(_df(spark, 0, 0, "b"), path, txn=("app", 7))
+        monkeypatch.undo()
+        assert v == 1 and reaped == []
+        assert DeltaTable(spark, path).txn_version("app") == 7
         assert len(_rows(_scan(spark, path))) == 3
 
 
@@ -954,8 +1001,10 @@ class TestSchemaWidening:
         assert {r["extra"] for r in delta.collect()} == {50, 60, 70}
 
     def test_narrow_append_does_not_erase_columns(self, spark, tmp_path):
-        """An append missing an existing column is refused (schema
-        enforcement): the column is never erased from the table."""
+        """An append missing an existing column must not narrow the
+        recorded schema: the column stays readable (NULL for the new
+        rows). Without ``merge_schema`` the protocol's enforcement
+        refuses the batch instead."""
         path = str(tmp_path / "t")
         delta_append(
             _df(spark, 0, 3, "a").withColumn("extra", F.col("id") * 10),
@@ -963,10 +1012,33 @@ class TestSchemaWidening:
         )
         with pytest.raises(ValueError, match="missing columns"):
             delta_append(_df(spark, 3, 5, "b"), path)
+        delta_append(_df(spark, 3, 5, "b"), path, merge_schema=True)
         full = _scan(spark, path)
         assert "extra" in full.columns
         got = {r["id"]: r["extra"] for r in full.collect()}
-        assert got == {0: 0, 1: 10, 2: 20}
+        assert got[0] == 0 and got[2] == 20
+        assert got[3] is None and got[4] is None
+
+    def test_sink_batches_widen_and_narrow(self, spark, tmp_path):
+        """The stream sinks keep the union-of-schemas contract: a
+        micro-batch with a new column widens the source table, a
+        later one without it lands NULLs, and the view state still
+        folds every row."""
+        from feature_store_spark.streaming.materializer import (
+            incremental_view_sink,
+        )
+
+        src, state = str(tmp_path / "src"), str(tmp_path / "state")
+        sink = incremental_view_sink(src, state, "app", ["tag"], "id")
+        sink(_df(spark, 0, 3, "a"), 0)
+        sink(_df(spark, 3, 6, "a").withColumn("extra", F.col("id")), 1)
+        sink(_df(spark, 6, 9, "b"), 2)
+        got = {r["id"]: r["extra"] for r in _scan(spark, src).collect()}
+        assert got == {i: (i if 3 <= i < 6 else None) for i in range(9)}
+        counts = {
+            r["tag"]: r["n_rows"] for r in _scan(spark, state).collect()
+        }
+        assert counts == {"a": 6, "b": 3}
 
     def test_retyping_append_is_rejected(self, spark, tmp_path):
         """Same column name with a different type is corruption, not

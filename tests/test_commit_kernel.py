@@ -16,6 +16,22 @@ MERGE_ARMS = [
     {"condition": "src.event_time > tgt.event_time", "action": "update",
      "set": None}
 ]
+DELETE_ARMS = [
+    {"condition": "src.entity_id % 3 = 0", "action": "delete"},
+    {"condition": None, "action": "update",
+     "set": {"value_float": "src.value_float"}},
+]
+# the snapshot-sync shape: UPDATE SET *, a partial by-source SET, a
+# by-source delete, and a source column the merge adds to the table
+SYNC = {
+    "when_matched": [{"condition": None, "action": "update", "set": None}],
+    "when_not_matched_by_source": [
+        {"condition": "tgt.entity_id % 2 = 0", "action": "update",
+         "set": {"value_float": "tgt.value_float * 2"}},
+        {"condition": None, "action": "delete"},
+    ],
+    "evolve": True,
+}
 
 
 def _frame(spark, lo=0, hi=N_ROWS, shift=0):
@@ -26,6 +42,21 @@ def _frame(spark, lo=0, hi=N_ROWS, shift=0):
         F.timestamp_seconds(F.col("id") * 3600 + 86400 * shift).alias(
             "event_time"
         ),
+    )
+
+
+def _batch(spark):
+    return _frame(spark, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1)
+
+
+def _sync_batch(spark):
+    return _batch(spark).withColumn("tag", F.lit("snap"))
+
+
+def _cdc_batch(spark):
+    return _batch(spark).withColumn(
+        "op",
+        F.when(F.col("entity_id") % 5 == 0, "d").otherwise("u"),
     )
 
 
@@ -55,6 +86,18 @@ def _delta(verb):
         "delta_merge": lambda s, p: d.delta_merge(
             _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p,
             keys=["entity_id"], when_matched=MERGE_ARMS,
+        ),
+        "delta_upsert_cdc": lambda s, p: d.delta_upsert(
+            _cdc_batch(s), p, keys=["entity_id"], op_col="op",
+        ),
+        "delta_merge_sync": lambda s, p: d.delta_merge(
+            _sync_batch(s), p, keys=["entity_id"], **SYNC,
+        ),
+        "delta_merge_insert_only": lambda s, p: d.delta_merge(
+            _batch(s), p, keys=["entity_id"],
+        ),
+        "delta_merge_delete": lambda s, p: d.delta_merge(
+            _batch(s), p, keys=["entity_id"], when_matched=DELETE_ARMS,
         ),
         "delta_delete_where": lambda s, p: d.delta_delete_where(
             s, p, [("entity_id", "<", 50)]
@@ -86,6 +129,15 @@ def _iceberg(verb):
             _frame(s, N_ROWS // 2, N_ROWS + N_ROWS // 2, 1), p,
             keys=["entity_id"], when_matched=MERGE_ARMS,
         ),
+        "iceberg_merge_sync": lambda s, p: i.iceberg_merge(
+            _sync_batch(s), p, keys=["entity_id"], **SYNC,
+        ),
+        "iceberg_merge_insert_only": lambda s, p: i.iceberg_merge(
+            _batch(s), p, keys=["entity_id"],
+        ),
+        "iceberg_merge_delete": lambda s, p: i.iceberg_merge(
+            _batch(s), p, keys=["entity_id"], when_matched=DELETE_ARMS,
+        ),
         "iceberg_delete_where": lambda s, p: i.iceberg_delete_where(
             s, p, [("entity_id", "<", 50)]
         ),
@@ -101,12 +153,19 @@ EXPECTED_JOBS = {
     "delta_append": 2,
     "delta_upsert": 8,
     "delta_merge": 11,
+    "delta_upsert_cdc": 8,
+    "delta_merge_sync": 15,
+    "delta_merge_insert_only": 9,
+    "delta_merge_delete": 11,
     "delta_delete_where": 2,
     "delta_optimize": 2,
     "delta_overwrite": 2,
     "iceberg_append": 2,
     "iceberg_upsert": 3,
     "iceberg_merge": 13,
+    "iceberg_merge_sync": 18,
+    "iceberg_merge_insert_only": 10,
+    "iceberg_merge_delete": 13,
     "iceberg_delete_where": 3,
     "iceberg_rewrite": 3,
 }

@@ -68,18 +68,6 @@ def hex_to_bigint_sql(hex_expr_sql: str) -> str:
     return f"CAST(concat('0x', {hex_expr_sql}) AS BIGINT)"
 
 
-def schema_hash_sql(names_csv_sql: str) -> str:
-    """Oracle-SQL twin of :func:`schema_hash_expr` (DuckDB dialect)."""
-    return (
-        f"{hex_to_bigint_sql(f'substr(md5({names_csv_sql}), 1, 8)')}"
-        f" % {SCHEMA_HASH_MOD}"
-    )
-
-
-def hash_bucket_sql(value_sql: str, num_buckets: int = 10000) -> str:
-    return f"{hex_to_bigint_sql(f'substr(md5({value_sql}), 1, 8)')} % {num_buckets}"
-
-
 def sigmoid(col: Column) -> Column:
     """1/(1+exp(-x)) — the binary:logistic / rank:* output transform
     (reference: python/cuda_codegen/generator.py:54-80)."""

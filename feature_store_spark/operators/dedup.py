@@ -256,100 +256,6 @@ def lsh_band_sigs_wide(
     ).select(F.col(id_col), F.col("__b.band").alias("band"), F.col("__b.band_sig").alias("band_sig"))
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    max_bucket_size: int = 1000,
-    wide: bool = False,
-) -> DataFrame:
-    """LSH banding: docs whose signature agrees on ALL rows of at least
-    one band become a candidate pair (id_a < id_b, distinct).
-
-    ``signatures`` is tall (id, seed, minhash) by default, or the wide
-    form when ``wide=True`` (preferred — skips a shuffle, see
-    :func:`lsh_band_sigs_wide`).
-
-    ``max_bucket_size`` drops degenerate buckets (all-identical
-    boilerplate) that would otherwise explode the self-join — at 100 TB
-    this guard is what keeps the stage bounded.
-    """
-    if wide:
-        band_sigs = lsh_band_sigs_wide(signatures, num_hashes, bands, id_col)
-    else:
-        rows_per_band = _rows_per_band(num_hashes, bands)
-        banded = signatures.withColumn("band", F.floor(F.col("seed") / rows_per_band))
-        band_sigs = banded.groupBy(id_col, "band").agg(
-            F.md5(
-                F.array_join(F.array_sort(F.collect_list(F.concat_ws(":", "seed", "minhash"))), ",")
-            ).alias("band_sig")
-        )
-    bucket_sizes = band_sigs.groupBy("band", "band_sig").agg(
-        F.count(F.lit(1)).alias("__sz")
-    )
-    bounded = band_sigs.join(
-        bucket_sizes.filter(F.col("__sz") <= max_bucket_size), ["band", "band_sig"]
-    )
-    a = bounded.select(F.col("band"), F.col("band_sig"), F.col(id_col).alias("id_a"))
-    b = bounded.select(F.col("band"), F.col("band_sig"), F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def minhash_similarity(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    num_hashes: int = 16,
-    id_col: str = "doc_id",
-    wide: bool = False,
-) -> DataFrame:
-    """Estimated Jaccard = fraction of agreeing signature slots.
-
-    With ``wide=True`` the two signature joins move one row per doc
-    (k columns) instead of k rows per doc, and agreement is a codegen'd
-    sum of equality terms — no post-join re-aggregation shuffle.
-    """
-    if wide:
-        sig_a = signatures.select(
-            F.col(id_col).alias("id_a"),
-            *[F.col(f"h{i}").alias(f"__a{i}") for i in range(num_hashes)],
-        )
-        sig_b = signatures.select(
-            F.col(id_col).alias("id_b"),
-            *[F.col(f"h{i}").alias(f"__b{i}") for i in range(num_hashes)],
-        )
-        agree = sum(
-            F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
-        )
-        return (
-            pairs.join(sig_a, "id_a")
-            .join(sig_b, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (agree / F.lit(float(num_hashes))).alias("est_jaccard"),
-            )
-        )
-    sig_a = signatures.select(
-        F.col(id_col).alias("id_a"), F.col("seed"), F.col("minhash").alias("__ma")
-    )
-    sig_b = signatures.select(
-        F.col(id_col).alias("id_b"), F.col("seed"), F.col("minhash").alias("__mb")
-    )
-    joined = pairs.join(sig_a, "id_a").join(sig_b, ["id_b", "seed"])
-    return joined.groupBy("id_a", "id_b").agg(
-        (
-            F.count_if(F.col("__ma") == F.col("__mb")) / F.lit(float(num_hashes))
-        ).alias("est_jaccard")
-    )
-
-
 def minhash_pairs_fused(
     wide_signatures: DataFrame,
     num_hashes: int = 16,

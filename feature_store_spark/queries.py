@@ -9906,23 +9906,6 @@ FROM (SELECT DISTINCT user_id FROM events)
 """
 
 
-def _drift_frames(spark, sf_dir):
-    """Deterministic drift fixture: lineitem split into reference /
-    current halves by an md5 uniform on the (orderkey, linenumber)
-    PK; the current half's prices are inflated 10% (real drift),
-    quantities untouched (null control)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
-    )
-    u = _md5_u(F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-    ref = li.filter(u < 0.5).select("l_quantity", "l_extendedprice")
-    cur = li.filter(u >= 0.5).select(
-        "l_quantity",
-        (F.col("l_extendedprice") * 1.1).alias("l_extendedprice"),
-    )
-    return ref, cur
-
-
 def q_drift_psi(spark, sf_dir):
     """Population-Stability-Index drift report between a reference and
     a current window (training-vs-serving distribution monitor):

@@ -49,7 +49,8 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from feature_store_spark.session import local_rows_df
 from feature_store_spark.sources import commit
@@ -59,6 +60,7 @@ from feature_store_spark.sources.hive_paths import (
     parse_partition_segs,
 )
 from feature_store_spark.sources.iceberg import _Filter
+from feature_store_spark.sources.merge import Merge
 
 # Reader features this reader actually implements. The Delta spec
 # (PROTOCOL.md, "Table Features") requires a reader to REFUSE any
@@ -3404,316 +3406,132 @@ def delta_delete_where(
     return version, n_new
 
 
-def delta_upsert(
-    df: DataFrame,
-    table_dir: str,
-    keys: list[str],
-    partition_cols: list[str] | None = None,
-    txn: tuple[str, int] | None = None,
-    op_col: str | None = None,
-) -> tuple[int, int]:
-    """Keyed MERGE (upsert) as ONE Delta commit — the CDC sink verb,
-    mirroring ``iceberg_upsert``'s one-snapshot semantics (reference
-    CDC shape: every older version of each key dies, the new rows
-    land). Deletion-vector assisted merge-on-read: live target rows
-    whose key tuple appears in ``df`` are marked dead via DVs on
-    their existing files (no data file rewritten — the right physics
-    at 100 TB where a CDC batch touches a sliver of a huge table),
-    and ``df``'s rows land as new data files with footer stats, all
-    under one ``MERGE`` commit. Equivalent to
-    ``WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN INSERT
-    *`` with full-row replacement.
-
-    Scale shape: the match probe broadcasts ``df``'s distinct key
-    tuples against the target scan (the CDC batch is the small side),
-    and the target scan is pruned first by per-key min/max
-    data-skipping over the batch's key range — only candidate files
-    are read. Matched (file, ordinal) pairs are collected to the
-    driver, bounded by the batch's own match count (the sliver), not
-    the table — a merge big enough to strain that belongs in a
-    copy-on-write rewrite instead.
-
-    Refusals: duplicate key tuples in ``df`` (Delta MERGE semantics —
-    multiple source rows matching one target row is ambiguous),
-    schema drift (enforcement, same as append; MERGE does not
-    evolve), lost commit race (MERGE does not commute — rival may
-    have touched the same keys).
-
-    ``txn=(app_id, version)`` gives exactly-once redelivery no-op,
-    same handshake as :func:`delta_append`. First call on a missing
-    table degenerates to CREATE+INSERT via ``delta_append``.
-
-    ``op_col`` turns the batch into a full CDC feed (the Debezium /
-    change-stream shape): rows whose ``op_col`` value is ``d`` /
-    ``delete`` (case-insensitive) only KILL their key table-wide —
-    nothing is re-inserted for them — while every other row upserts
-    as usual; the op column itself is dropped before writing. Still
-    ONE commit (``WHEN MATCHED AND op='d' THEN DELETE`` composed
-    with the update/insert arms). A key carried by BOTH a delete row
-    and a non-delete row in one batch refuses (ambiguous, same rule
-    as duplicate keys).
-
-    Returns ``(commit_version, target_rows_replaced)`` — replaced
-    counts rows killed by updates AND deletes.
-
-    Conditional arms (``WHEN MATCHED AND <pred> THEN UPDATE SET
-    <subset>``) live in :func:`delta_merge` — this verb is the
-    full-row replacement fast path."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    if not keys:
-        raise ValueError("delta_upsert: keys must be non-empty")
-    spark = df.sparkSession
+def _is_table(table_dir: str) -> bool:
+    """A Delta table exists at ``table_dir``: its log holds a commit or
+    a checkpoint. A log whose JSON prefix was compacted away is still a
+    table, and reading it as missing would downgrade a MERGE to a plain
+    append."""
     log_dir = os.path.join(table_dir, "_delta_log")
-    # checkpoint files count as table existence too (review r11): a
-    # log whose JSON prefix was compacted away is still a table, and
-    # treating it as CREATE would silently downgrade the MERGE to a
-    # plain append through the delta_append fallback below
-    has_table = os.path.isdir(log_dir) and any(
+    return os.path.isdir(log_dir) and any(
         (n.endswith(".json") and n[:-5].isdigit())
         or re.match(r"\d{20}\.checkpoint(\.|$)", n)
         for n in os.listdir(log_dir)
     )
-    missing_keys = [k for k in keys if k not in df.columns]
-    if missing_keys:
-        raise ValueError(
-            f"delta_upsert: key column(s) {missing_keys} not in the "
-            f"source frame (columns: {df.columns})"
-        )
-    if op_col is not None:
-        if op_col not in df.columns:
-            raise ValueError(
-                f"delta_upsert: op_col {op_col!r} not in the source "
-                f"frame (columns: {df.columns})"
-            )
-        if op_col in keys:
-            raise ValueError(
-                f"delta_upsert: op_col {op_col!r} cannot be a key"
-            )
-        is_del = F.coalesce(
-            F.lower(F.col(op_col).cast("string")).isin("d", "delete"),
-            F.lit(False),
-        )
-        live = df.filter(~is_del).drop(op_col)
-        is_live = ~is_del
-    else:
-        live = df
-        is_live = F.lit(True)
-    # materialize the CDC batch ONCE (batch-bounded): the verb
-    # otherwise re-evaluates the caller's lineage per consumer — the
-    # batch aggregate below, the broadcast key set, the generated-
-    # column / invariant / constraint enforcement jobs and the
-    # staging write each re-ran the full upstream plan (guide §5).
-    # Unpersisted on every return path; error paths surface to a
-    # caller whose session is about to see the raise.
-    df = df.localCheckpoint(eager=True)
-    if op_col is not None:
-        live = df.filter(~is_del).drop(op_col)
-    else:
-        live = df
-    # ONE aggregate over the CDC batch (the small side) answers
-    # everything the verb needs before touching the table: the
-    # duplicate-key refusal (which row wins the UPDATE is undefined —
-    # Delta's MERGE raises exactly this, and a key carried by both a
-    # delete row and an upsert row is the same ambiguity), batch
-    # emptiness, live-row count (does anything stage?) and the
-    # per-key min/max bounds the file-pruning probe wants. Folding
-    # these into one job removes two driver round-trips per
-    # micro-batch vs the r12 shape (VERDICT r12 next #3 / wrong #2).
-    kb = (
-        df.groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(is_live.cast("long")).alias("__nl"),
-        )
-        .agg(
-            F.max("__n").alias("__maxn"),
-            F.sum("__nl").alias("__nlive"),
-            F.count(F.lit(1)).alias("__nkeys"),
-            *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-        )
-        .first()
-    )
-    if (kb["__maxn"] or 0) > 1:
-        # error path only: one more job to name an offending key
-        dup = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        kv = {k: dup[0][k] for k in keys}
-        df.unpersist()
-        raise ValueError(
-            f"delta_upsert: source has multiple rows for key {kv} — "
-            "MERGE cannot decide which one wins; de-duplicate the "
-            "batch first (e.g. latest-by-timestamp per key)"
-        )
-    src_nkeys = int(kb["__nkeys"] or 0)
-    n_live = int(kb["__nlive"] or 0)
-    if not has_table:
-        try:
-            v = delta_append(
-                live, table_dir, partition_cols=partition_cols, txn=txn
-            )
-        finally:
-            df.unpersist()
-        return v, 0
 
-    t = DeltaTable(spark, table_dir)
-    if txn is not None:
-        app_id, txn_v = txn
-        if t.txn_version(app_id) >= int(txn_v):
-            df.unpersist()
-            return t.latest_version(), 0  # redelivered batch: no-op
-    version = t.latest_version() + 1
-    meta, _, _ = t._state(None)
-    # write-side protocol gate: an upsert rewrites existing rows, so
-    # append-only tables refuse; generated columns are computed/
-    # verified and invariants + CHECK constraints enforced on the
-    # rows being landed (only when any are declared). The upsert
-    # lands COMPLETE replacement rows, so full-row generation
-    # semantics hold: absent generated columns are recomputed from
-    # the incoming row.
-    up_constraints = _writer_feature_gate(
-        t, meta, "delta_upsert", mutates=True, full_rows=True
-    )
-    up_gens, up_invs = _generation_rules(meta, table_dir)
-    # ONE fused rule aggregate, observed on the staging write (r14):
-    # the eager per-family passes each cost one extra job per
-    # micro-batch; an empty live frame stages nothing and no rows
-    # means no violations, so skipping the check there is equivalent
-    live, up_gen_checks = _compute_generated_columns(live, up_gens)
-    up_check_exprs, up_check_validate = _deferred_rule_checks(
-        up_gen_checks, up_invs, up_constraints, table_dir, "delta_upsert"
-    )
-    up_post_validate = None
-    if up_check_exprs:
-        from pyspark.sql import Observation
 
-        up_obs = Observation()
-        live = live.observe(up_obs, *up_check_exprs)
-        up_post_validate = (
-            lambda: up_check_validate(up_obs.get)  # noqa: E731
-        )
-    mode, map_fields = t._mapping(meta)
-    tbl_parts = meta.get("partitionColumns") or []
-    if partition_cols is not None and list(partition_cols) != list(
-        tbl_parts
-    ):
-        raise ValueError(
-            f"{table_dir}: table is partitioned by {tbl_parts}; "
-            f"upsert passed partition_cols={list(partition_cols)}"
-        )
-    _enforce_merge_schema(table_dir, meta, live, keys)
-
-    # ---- match probe: which live target rows' keys appear in df ----
-    # data-skipping first: prune candidate files by the batch's
-    # per-key min/max range (footer stats ride the add actions, and
-    # the bounds were folded into the batch aggregate above), so a
-    # narrow CDC batch over a clustered table reads a sliver. An
-    # EMPTY batch probes nothing — no reason to enumerate files.
-    filters: list[tuple] = []
-    for i, k in enumerate(keys):
-        lo, hi = kb[f"__lo_{i}"], kb[f"__hi_{i}"]
-        if lo is not None and hi is not None and not isinstance(
-            lo, (bytes, bytearray)
-        ):
-            filters.extend([(k, ">=", lo), (k, "<=", hi)])
-    adds = (
-        t.data_files(None, filters or None) if src_nkeys else []
+def _conform(m, table_dir: str, meta: dict, src: DataFrame,
+             evolve: bool = False) -> list[dict]:
+    """The planner's schema check on Delta types, nullability stripped
+    (:func:`_norm_type`). Returns the spark-schema field dicts of the
+    source columns the table lacks."""
+    fields = json.loads(src.schema.json())["fields"]
+    added = m.conform(
+        table_dir,
+        {
+            f["name"]: _norm_type(f["type"])
+            for f in json.loads(meta["schemaString"])["fields"]
+        },
+        {f["name"]: _norm_type(f["type"]) for f in fields},
+        evolve,
+        "delta_merge(evolve=True) or delta_append(merge_schema=True)",
     )
-    n_replaced = 0
-    affected: list[tuple[dict, list[int], int]] = []
-    if adds:
-        asm = t._assemble(adds, meta)
-        src_keys = df.select(*keys).distinct()
-        hits = (
-            asm.join(F.broadcast(src_keys), on=list(keys), how="leftsemi")
-            .select("__fp", "__pos")
-            .toPandas()
-        )
-        by_file: dict[str, set[int]] = {}
-        for fp, pos in zip(hits["__fp"], hits["__pos"]):
-            by_file.setdefault(fp, set()).add(int(pos))
-        for add in adds:
-            abs_p = os.path.abspath(os.path.join(t.path, add["path"]))
-            new_hits = by_file.get(abs_p)
-            if not new_hits:
-                continue
-            old = (
-                set(t._load_dv(add["deletionVector"]))
-                if add.get("deletionVector")
-                else set()
-            )
-            merged = sorted(old | new_hits)
-            if len(merged) == len(old):
-                continue  # every matched row already dead
-            n_replaced += len(merged) - len(old)
-            affected.append((add, merged, len(merged)))
+    return [f for f in fields if f["name"] in added]
 
+
+def _merge_commit(
+    t: DeltaTable,
+    table_dir: str,
+    version: int,
+    meta: dict,
+    kills: list[DataFrame],
+    to_stage: DataFrame | None,
+    txn: tuple[str, int] | None,
+    evolved: dict | None = None,
+    post_validate=None,
+) -> tuple[int, int, int]:
+    """Delta's MERGE tail: kill the rows each ``kills`` frame names by
+    (``__fp``, ``__pos``) through one deletion-vector file, stage
+    ``to_stage`` under the table's column mapping, and claim ``version``
+    as one MERGE commit. ``evolved`` is a schema-evolution ``metaData``
+    action committed ahead of the files. Returns ``(version, rows
+    newly killed, rows staged)``. With nothing to kill, land or record
+    it commits nothing and returns the current version.
+
+    MERGE does not commute: a rival commit may have added files
+    carrying the merge's keys or re-DV'd the files it re-adds, so a
+    lost race raises instead of retrying at the next version."""
     actions: list[dict] = [
         {
             "commitInfo": {
-                "timestamp": int(_time.time() * 1000),
+                "timestamp": int(time.time() * 1000),
                 "operation": "MERGE",
             }
         }
     ]
+    if evolved is not None:
+        # replay order makes the widened schema current before any
+        # reader sees the files that first carry the new columns
+        actions.append(evolved)
+        meta = evolved["metaData"]
+    mode, map_fields = t._mapping(meta)
+    # the kill collect is bounded by the merge's own fired rows (the
+    # sliver), not the table
+    by_file: dict[str, set[int]] = {}
+    for frame in kills:
+        hits = frame.toPandas()
+        for fp, pos in zip(hits["__fp"], hits["__pos"]):
+            by_file.setdefault(fp, set()).add(int(pos))
+    affected: list[tuple[dict, list[int], int]] = []
+    n_killed = 0
+    for add in t.data_files() if by_file else []:
+        new = by_file.get(os.path.abspath(os.path.join(t.path, add["path"])))
+        if not new:
+            continue
+        old = (
+            set(t._load_dv(add["deletionVector"]))
+            if add.get("deletionVector")
+            else set()
+        )
+        merged = sorted(old | new)
+        if len(merged) > len(old):
+            n_killed += len(merged) - len(old)
+            affected.append((add, merged, len(merged)))
     if affected:
         actions.extend(_dv_merge_actions(t, table_dir, affected, mode))
-
-    # ---- new data files: every LIVE source row lands (matched
-    # keys' replacements AND brand-new keys; op_col deletes
-    # contribute nothing here), mapping-aware ----
-    phys_of = {f["name"]: f["physical"] for f in map_fields}
-    fid_of = {f["name"]: f["id"] for f in map_fields}
-    wdf = live
-    part_phys = list(tbl_parts)
-    if mode != "none":
-        wdf = live.select(
-            *[
-                F.col(c).alias(
-                    phys_of[c],
-                    metadata={"parquet.field.id": int(fid_of[c])},
-                )
-                for c in live.columns
-            ]
-        )
-        part_phys = [phys_of[c] for c in tbl_parts]
-    data_cols = [
-        phys_of.get(f.name, f.name)
-        for f in live.schema.fields
-        if f.name not in tbl_parts
-    ]
-    if n_live > 0:
-        # an empty LIVE frame stages nothing, whatever produced it —
-        # a pure-delete CDC batch commits DVs only, and an empty
-        # upsert batch (a quiet micro-batch through delta_upsert_sink)
-        # must not land a junk zero-row data file (advice r11). The
-        # live count rides the batch aggregate — no isEmpty() job
-        # (VERDICT r12 wrong #2: that unconditional round-trip was
-        # the one this verb gained in r12).
-        actions.extend(
-            _stage_adds(
-                wdf,
-                table_dir,
-                version,
-                part_phys,
-                data_cols,
-                post_write_validate=up_post_validate,
+    n_staged = 0
+    if to_stage is not None:
+        # an empty frame stages nothing: the commit kernel drops
+        # zero-row part files
+        phys_of = {f["name"]: f["physical"] for f in map_fields}
+        fid_of = {f["name"]: f["id"] for f in map_fields}
+        parts = meta.get("partitionColumns") or []
+        wdf = to_stage
+        if mode != "none":
+            wdf = to_stage.select(
+                *[
+                    F.col(c).alias(
+                        phys_of[c],
+                        metadata={"parquet.field.id": int(fid_of[c])},
+                    )
+                    for c in to_stage.columns
+                ]
             )
+        staged = _stage_adds(
+            wdf,
+            table_dir,
+            version,
+            [phys_of.get(c, c) for c in parts],
+            [phys_of.get(c, c) for c in to_stage.columns if c not in parts],
+            post_write_validate=post_validate,
         )
-    df.unpersist()
+        n_staged = sum(
+            json.loads(a["add"]["stats"])["numRecords"] for a in staged
+        )
+        actions.extend(staged)
     if len(actions) == 1 and txn is None:
-        # nothing matched, nothing to insert, no txn watermark to
-        # record: committing would churn the log with a pure
-        # commitInfo MERGE every quiet micro-batch (advice r11)
-        return t.latest_version(), 0
+        # nothing fired, nothing lands, no watermark to record: a pure
+        # commitInfo MERGE every quiet micro-batch would churn the log
+        return t.latest_version(), 0, 0
     if txn is not None:
         actions.append(
             {
@@ -3724,54 +3542,125 @@ def delta_upsert(
                 }
             }
         )
-    # MERGE does not commute: a rival commit may have added files
-    # carrying our keys or re-DV'd the files we re-add — loud error,
-    # same contract as DELETE WHERE
     _claim_or_raise(table_dir, version, actions, "MERGE")
-    return version, n_replaced
+    return version, n_killed, n_staged
 
 
-def _enforce_merge_schema(
+def delta_upsert(
+    df: DataFrame,
     table_dir: str,
-    meta: dict,
-    src: DataFrame,
     keys: list[str],
-    allow_new: bool = False,
-) -> list[dict]:
-    """Schema ENFORCEMENT for merge verbs: silently narrowing or
-    widening under a merge would leave half the table's files on a
-    different schema with no metaData record. With ``allow_new``
-    (delta_merge's ``evolve=True``), source columns UNKNOWN to the
-    table are returned (spark-schema field dicts, source order) for
-    the caller to commit as schema evolution; type changes and
-    missing table columns always refuse."""
-    cur_fields = json.loads(meta["schemaString"])["fields"]
-    cur_types = {f["name"]: f["type"] for f in cur_fields}
-    src_fields = json.loads(src.schema.json())["fields"]
-    new_types = {f["name"]: f["type"] for f in src_fields}
-    mismatched = sorted(
-        n
-        for n in new_types
-        if n in cur_types
-        and _norm_type(new_types[n]) != _norm_type(cur_types[n])
-    )
-    absent = sorted(n for n in cur_types if n not in new_types)
-    unknown = sorted(n for n in new_types if n not in cur_types)
-    if mismatched or absent or (unknown and not allow_new):
-        raise ValueError(
-            f"{table_dir}: merge source schema deviates from the "
-            f"table (type changes: {mismatched}, missing: {absent}, "
-            f"unknown: {unknown}) — MERGE enforces the schema; "
-            "evolve via delta_merge(evolve=True) or "
-            "delta_append(merge_schema=True)"
+    partition_cols: list[str] | None = None,
+    txn: tuple[str, int] | None = None,
+    op_col: str | None = None,
+) -> tuple[int, int]:
+    """Keyed upsert as ONE Delta commit, the CDC sink verb: every live
+    target row whose key tuple appears in ``df`` dies through a deletion
+    vector on its existing file (no data file rewritten), and each of
+    ``df``'s rows lands once as a new data file. A key held by two live
+    target rows therefore lands one row, where ``UPDATE SET *`` would
+    land two. Conditional and partial-column arms live in
+    :func:`delta_merge`; both share the planner in
+    :mod:`feature_store_spark.sources.merge`.
+
+    Generated columns absent from ``df`` are computed from the incoming
+    row, and invariants and CHECK constraints bind the landed rows;
+    append-only tables refuse. Refusals: duplicate key tuples in ``df``,
+    schema drift (upsert does not evolve), a ``partition_cols`` that is
+    not the table's, a lost commit race.
+
+    ``op_col`` makes the batch a full CDC feed: rows whose ``op_col`` is
+    ``d`` / ``delete`` (case-insensitive) only kill their key, and every
+    other row upserts. The op column is dropped before writing. A key
+    carried by both a delete row and an upsert row refuses as a
+    duplicate.
+
+    ``txn=(app_id, version)`` makes a redelivered batch a no-op, the
+    :func:`delta_append` handshake. The first call on a missing table
+    creates it through :func:`delta_append`.
+
+    Returns ``(commit_version, target_rows_replaced)``, counting rows
+    killed by upserts and deletes alike."""
+    m = Merge(df, keys, "delta_upsert")
+    is_live = None
+    if op_col is not None:
+        if op_col not in df.columns:
+            raise ValueError(
+                f"delta_upsert: op_col {op_col!r} not in the source "
+                f"frame (columns: {df.columns})"
+            )
+        if op_col in keys:
+            raise ValueError(
+                f"delta_upsert: op_col {op_col!r} cannot be a key"
+            )
+        is_live = ~F.coalesce(
+            F.lower(F.col(op_col).cast("string")).isin("d", "delete"),
+            F.lit(False),
         )
-    bad_keys = [k for k in keys if k not in cur_types]
-    if bad_keys:
-        raise ValueError(
-            f"{table_dir}: key column(s) {bad_keys} not in the table "
-            f"schema"
+    has_table = _is_table(table_dir)
+    with m:
+        m.load(is_live)
+        live = m.df if op_col is None else m.df.filter(is_live).drop(op_col)
+        if not has_table:
+            v = delta_append(
+                live, table_dir, partition_cols=partition_cols, txn=txn
+            )
+            return v, 0
+        t = DeltaTable(df.sparkSession, table_dir)
+        if txn is not None and t.txn_version(txn[0]) >= int(txn[1]):
+            return t.latest_version(), 0  # redelivered batch: no-op
+        version = t.latest_version() + 1
+        meta, _, _ = t._state(None)
+        # the rule checks are observed on the staging write: an empty
+        # live frame stages nothing and so violates nothing
+        constraints = _writer_feature_gate(
+            t, meta, "delta_upsert", mutates=True, full_rows=True
         )
-    return [f for f in src_fields if f["name"] not in cur_types]
+        gens, invs = _generation_rules(meta, table_dir)
+        live, gen_checks = _compute_generated_columns(live, gens)
+        check_exprs, check_validate = _deferred_rule_checks(
+            gen_checks, invs, constraints, table_dir, "delta_upsert"
+        )
+        post_validate = None
+        if check_exprs:
+            obs = Observation()
+            live = live.observe(obs, *check_exprs)
+            post_validate = lambda: check_validate(obs.get)  # noqa: E731
+        tbl_parts = meta.get("partitionColumns") or []
+        if partition_cols is not None and list(partition_cols) != list(
+            tbl_parts
+        ):
+            raise ValueError(
+                f"{table_dir}: table is partitioned by {tbl_parts}; "
+                f"upsert passed partition_cols={list(partition_cols)}"
+            )
+        _conform(m, table_dir, meta, live)
+        # the kill rule: every row of a batch key dies, read through
+        # the key-pruned target (dead rows too: the tail counts only
+        # rows not already dead)
+        adds = t.data_files(None, m.filters) if not m.empty else []
+        kills = []
+        if adds:
+            kills.append(
+                t._assemble(adds, meta)
+                .join(
+                    F.broadcast(m.df.select(*keys).distinct()),
+                    on=list(keys),
+                    how="leftsemi",
+                )
+                .select("__fp", "__pos")
+            )
+        v, n_replaced, _ = _merge_commit(
+            t,
+            table_dir,
+            version,
+            meta,
+            kills,
+            live if m.n_live else None,
+            txn,
+            post_validate=post_validate,
+        )
+    return v, n_replaced
 
 
 def _dv_merge_actions(
@@ -3783,19 +3672,14 @@ def _dv_merge_actions(
     """Mint ONE deletion-vector file for the merge's kill set and
     return the protocol-upgrade + remove/re-add actions. ``affected``
     is ``(add_action, merged_sorted_positions, cardinality)`` per
-    touched file (positions = old DV ∪ new kills). Shared by
-    delta_upsert and delta_merge so both verbs commit byte-identical
-    DV shapes."""
-    import time as _time
-    import uuid as _uuid
-
+    touched file (positions = old DV ∪ new kills)."""
     from feature_store_spark.sources.roaring import (
         write_dv_file,
         z85_encode,
     )
 
     actions: list[dict] = []
-    dv_uuid = _uuid.uuid4()
+    dv_uuid = uuid.uuid4()
     dv_path = os.path.join(table_dir, f"deletion_vector_{dv_uuid}.bin")
     descs = write_dv_file(dv_path, [m for _, m, _ in affected])
     # protocol upgrade only when DVs are actually minted; UNION with
@@ -3827,7 +3711,7 @@ def _dv_merge_actions(
                 "remove": {
                     "path": add["path"],
                     "dataChange": True,
-                    "deletionTimestamp": int(_time.time() * 1000),
+                    "deletionTimestamp": int(time.time() * 1000),
                     "partitionValues": add.get("partitionValues") or {},
                     "size": add.get("size"),
                 }
@@ -3846,53 +3730,6 @@ def _dv_merge_actions(
     return actions
 
 
-def _validate_merge_arms(
-    arms: list[dict], keys: list[str], label: str,
-    verb: str = "delta_merge",
-) -> tuple[dict[int, dict | None], set[int]]:
-    """Shape-check an ordered arm list (matched or
-    not-matched-by-source): actions, the last-arm-only unconditional
-    rule, delete-with-set, SET-on-merge-key. Returns
-    ``({arm_index: set_map_or_None_for_SET*}, {delete_arm_indexes})``
-    with 1-based indexes. Shared by delta_merge and iceberg_merge —
-    the arm MODEL is format-independent; only the kill physics
-    (positional DVs vs equality deletes) differs."""
-    upd: dict[int, dict | None] = {}
-    dels: set[int] = set()
-    for i, arm in enumerate(arms, start=1):
-        action = arm.get("action")
-        if action not in ("update", "delete"):
-            raise ValueError(
-                f"{verb}: {label} arm {i} action must be "
-                f"'update' or 'delete', got {action!r}"
-            )
-        if arm.get("condition") is None and i != len(arms):
-            raise ValueError(
-                f"{verb}: {label} arm {i} has no condition but "
-                "is not the last arm — it would shadow every arm "
-                "after it (Delta's MERGE rule)"
-            )
-        if action == "delete":
-            if arm.get("set"):
-                raise ValueError(
-                    f"{verb}: {label} arm {i} is a delete — "
-                    "'set' is meaningless"
-                )
-            dels.add(i)
-        else:
-            s = arm.get("set")
-            if s is not None:
-                bad = sorted(set(s) & set(keys))
-                if bad:
-                    raise ValueError(
-                        f"{verb}: {label} arm {i} SETs merge "
-                        f"key(s) {bad} — rewriting the match key "
-                        "under a merge is ambiguous"
-                    )
-            upd[i] = dict(s) if s is not None else None
-    return upd, dels
-
-
 def delta_merge(
     df: DataFrame,
     table_dir: str,
@@ -3904,554 +3741,76 @@ def delta_merge(
     evolve: bool = False,
     txn: tuple[str, int] | None = None,
 ) -> tuple[int, int, int, int]:
-    """Conditional / partial-column MERGE as ONE Delta commit — the
-    general form of :func:`delta_upsert` (which stays the full-row
-    fast path). Arms follow Delta's ``MERGE INTO`` semantics:
+    """Conditional / partial-column MERGE as ONE Delta commit. The arm
+    grammar, ``evolve`` and the refusals are the planner's, stated once
+    in :mod:`feature_store_spark.sources.merge`.
 
-    ``when_matched`` is an ordered list of arms, each a dict::
+    Delta physics: fired target rows die through deletion vectors on
+    their existing files (no data file rewritten); their (file,
+    ordinal) pairs are collected to the driver, bounded by the merge's
+    fired rows, not the table. Replacement and insert rows land as new
+    data files with footer stats, and schema evolution rides in the
+    same commit (fresh field ids and physical names in mapped tables),
+    so :func:`delta_changes` reads the commit exactly. CHECK constraints
+    bind every landed row. A lost commit race refuses.
 
-        {"condition": "<sql over src.*/tgt.*>" | None,
-         "action": "update",
-         "set": {"col": "<sql over src.*/tgt.*>", ...} | None}
-        {"condition": ..., "action": "delete"}
+    ``txn=(app_id, version)`` makes a redelivered batch a no-op; a quiet
+    batch that must advance the watermark commits it alone. The first
+    call on a missing table creates it with the insert arm's rows.
 
-    For each LIVE target row whose key tuple matches a source row,
-    arms are evaluated IN ORDER and the first whose condition is true
-    (NULL = false, SQL semantics) fires; if none fires the target row
-    survives untouched and the source row is dropped. ``set`` updates
-    only the named columns — every other column keeps the TARGET
-    value (the partial-column form real CDC hits); ``set=None`` means
-    ``UPDATE SET *`` (full row from source). Only the LAST matched
-    arm may omit its condition (Delta's rule — an earlier
-    unconditional arm would shadow the rest). ``insert`` adds the
-    ``WHEN NOT MATCHED [AND insert_condition] THEN INSERT *`` arm for
-    source rows matching no target key.
-
-    ``when_not_matched_by_source`` adds Delta's third arm class —
-    arms (same dict shape, conditions/SETs over ``tgt.*`` only; there
-    is no source row) applied to LIVE target rows whose key appears
-    NOWHERE in the batch: the full-snapshot-sync verb (``WHEN NOT
-    MATCHED BY SOURCE THEN DELETE`` drops rows that vanished from the
-    upstream snapshot). Physics note: these arms are inherently
-    O(live target) — the engine anti-joins the WHOLE live row set
-    against the batch's broadcast key set (there is no smaller
-    correct read; Delta proper scans the same), and the kill collect
-    is bounded by the FIRED row count — a by-source arm expected to
-    fire on a large fraction of the table belongs in a copy-on-write
-    rewrite instead. Arms that fire on no rows cost one columnar
-    anti-join scan.
-
-    ``evolve=True`` turns on MERGE schema evolution: source columns
-    unknown to the table are appended as nullable columns in the SAME
-    commit (fresh field ids / physical names in mapped tables, the
-    delta_append(merge_schema=True) shape); pre-existing rows —
-    including rows kept by no-arm-fired and by partial SETs — read
-    NULL for them. Type changes and source frames MISSING table
-    columns still refuse (narrowing under a merge is never safe).
-
-    Physics is delta_upsert's: deletion-vector merge-on-read (fired
-    target rows die via DVs on their existing files — no data file
-    rewritten), the match probe broadcasts the batch's distinct keys
-    against a target scan pruned first by per-key min/max
-    data-skipping, arm predicates and SET expressions run as Catalyst
-    expressions inside the one probe join (whole-stage codegen, no
-    Python in the row path), and replacement + insert rows land as
-    new data files with footer stats — all under ONE ``MERGE``
-    commit, CDF-exact for :func:`delta_changes`. Matched (file,
-    ordinal) pairs are collected to the driver, bounded by the
-    batch's own match count (the sliver), not the table.
-
-    Refusals: duplicate source key tuples (ambiguous), SET on a merge
-    key (rewriting the match key under a merge is ambiguous), SET of
-    an unknown column, non-last unconditional arm in either arm
-    class, by-source update arms without an explicit SET, schema
-    drift (enforcement — source must carry the full table schema,
-    required by INSERT * and UPDATE SET *; ``evolve=True`` relaxes
-    only the unknown-column case), lost commit race.
-
-    Returns ``(commit_version, n_updated, n_deleted, n_inserted)``.
-    A merge where nothing fires, nothing inserts and no ``txn`` needs
+    Returns ``(commit_version, n_updated, n_deleted, n_inserted)``. A
+    merge where nothing fires, nothing inserts and no ``txn`` needs
     recording commits nothing and returns the current version."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    when_matched = list(when_matched or [])
-    when_not_matched_by_source = list(when_not_matched_by_source or [])
-    if not keys:
-        raise ValueError("delta_merge: keys must be non-empty")
-    if not when_matched and not insert and not when_not_matched_by_source:
-        raise ValueError(
-            "delta_merge: no matched arms, no by-source arms and "
-            "insert=False — the merge can never change anything"
-        )
-    missing_keys = [k for k in keys if k not in df.columns]
-    if missing_keys:
-        raise ValueError(
-            f"delta_merge: key column(s) {missing_keys} not in the "
-            f"source frame (columns: {df.columns})"
-        )
-    upd_arms, del_arms = _validate_merge_arms(
-        when_matched, keys, "matched"
+    m = Merge(
+        df, keys, "delta_merge", when_matched, insert, insert_condition,
+        when_not_matched_by_source,
     )
-    src_upd_arms, src_del_arms = _validate_merge_arms(
-        when_not_matched_by_source, keys, "by-source"
-    )
-    for i, s in upd_arms.items():
-        unknown = sorted(set(s or {}) - set(df.columns))
-        if unknown:
-            raise ValueError(
-                f"delta_merge: matched arm {i} SETs unknown "
-                f"column(s) {unknown}"
-            )
-    none_sets = sorted(i for i, s in src_upd_arms.items() if s is None)
-    if none_sets:
-        raise ValueError(
-            f"delta_merge: by-source update arm(s) {none_sets} need "
-            "an explicit 'set' — there is no source row for SET *"
-        )
-    spark = df.sparkSession
-    log_dir = os.path.join(table_dir, "_delta_log")
-    has_table = os.path.isdir(log_dir) and any(
-        (n.endswith(".json") and n[:-5].isdigit())
-        or re.match(r"\d{20}\.checkpoint(\.|$)", n)
-        for n in os.listdir(log_dir)
-    )
-    # materialize the source batch ONCE (batch-bounded, the budget
-    # the probe checkpoints already spend): the verb otherwise
-    # re-evaluates the caller's lineage per consumer — this key
-    # aggregate, the broadcast probe build, the by-source key set,
-    # the insert anti-join and the staging write each re-ran the
-    # full upstream plan (guide §5). Every exit path unpersists.
-    df = df.localCheckpoint(eager=True)
-    # ONE aggregate over the small batch answers the duplicate-key
-    # refusal (which row's arms win is undefined — same rule as
-    # delta_upsert), batch emptiness AND the per-key min/max bounds
-    # the probe's file pruning wants — three r12 driver round-trips
-    # folded into one job (VERDICT r12 next #3).
-    kb = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.max("__n").alias("__maxn"),
-            F.count(F.lit(1)).alias("__nkeys"),
-            *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-        )
-        .first()
-    )
-    if (kb["__maxn"] or 0) > 1:
-        # error path only: one more job to name an offending key
-        dup = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        kv = {k: dup[0][k] for k in keys}
-        df.unpersist()
-        raise ValueError(
-            f"delta_merge: source has multiple rows for key {kv} — "
-            "MERGE cannot decide which one wins; de-duplicate the "
-            "batch first"
-        )
-    if not has_table:
-        # everything is NOT MATCHED: CREATE + the insert arm only
-        if not insert:
-            raise ValueError(
-                f"delta_merge: {table_dir} does not exist and "
-                "insert=False — nothing to merge into"
-            )
-        from pyspark.sql import Observation
-
-        ins0 = df.alias("src")
-        if insert_condition is not None:
-            ins0 = ins0.filter(F.expr(insert_condition))
-        # insert count observed DURING the checkpoint job (r14,
-        # guide §1.2/§5): one driver round-trip, not two
-        obs0 = Observation()
-        ins0 = ins0.observe(
-            obs0, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)  # batch-bounded
-        try:
-            v = delta_append(ins0, table_dir, txn=txn)
-            n0 = int(obs0.get["n"] or 0)
-        finally:
-            ins0.unpersist()
-            df.unpersist()
-        return v, 0, 0, n0
-
-    t = DeltaTable(spark, table_dir)
-    if txn is not None:
-        app_id, txn_v = txn
-        if t.txn_version(app_id) >= int(txn_v):
-            df.unpersist()
+    has_table = _is_table(table_dir)
+    with m:
+        m.load()
+        if not has_table:
+            ins, n = m.inserts_only(table_dir)
+            return delta_append(ins, table_dir, txn=txn), 0, 0, n
+        t = DeltaTable(df.sparkSession, table_dir)
+        if txn is not None and t.txn_version(txn[0]) >= int(txn[1]):
             return t.latest_version(), 0, 0, 0  # redelivered: no-op
-    version = t.latest_version() + 1
-    # quiet-batch short circuit (review r12): an EMPTY source can
-    # match nothing and insert nothing, so without by-source arms
-    # there is no reason to enumerate files or build the probe —
-    # record the txn watermark (one tiny commit) or no-op entirely.
-    # With by-source arms an empty frame is a legitimate empty
-    # snapshot (everything is not-matched-by-source) and runs fully.
-    # Emptiness rode the batch aggregate above — no isEmpty() job.
-    src_empty = int(kb["__nkeys"] or 0) == 0
-    if src_empty and not when_not_matched_by_source:
-        df.unpersist()
-        if txn is None:
-            return t.latest_version(), 0, 0, 0
-        import time as _t2
-
-        actions0 = [
-            {
-                "commitInfo": {
-                    "timestamp": int(_t2.time() * 1000),
-                    "operation": "MERGE",
-                }
-            },
-            {
-                "txn": {
-                    "appId": txn[0],
-                    "version": int(txn[1]),
-                    "lastUpdated": 0,
-                }
-            },
-        ]
-        _claim_or_raise(table_dir, version, actions0, "MERGE")
-        return version, 0, 0, 0
-    meta, _, _ = t._state(None)
-    merge_constraints = _writer_feature_gate(
-        t, meta, "delta_merge", mutates=True
-    )
-    mode, map_fields = t._mapping(meta)
-    tbl_parts = meta.get("partitionColumns") or []
-    added = _enforce_merge_schema(
-        table_dir, meta, df, keys, allow_new=evolve
-    )
-    old_cols = [
-        f["name"] for f in json.loads(meta["schemaString"])["fields"]
-    ]
-    evolution_md = None
-    if added:
-        # schema evolution rides in the SAME commit (the protocol's
-        # shape); _evolve_delta_schema extends map_fields in place so
-        # the staged frame's physical rename covers the new columns
-        evolution_md = _evolve_delta_schema(meta, added, mode, map_fields)
-    added_of = {f["name"]: f["type"] for f in added}
-    tbl_cols = old_cols + [f["name"] for f in added]
-    bad_src_sets = sorted(
-        {
-            c
-            for s in src_upd_arms.values()
-            for c in (s or {})
-            if c not in tbl_cols
-        }
-    )
-    if bad_src_sets:
-        raise ValueError(
-            f"delta_merge: by-source arm SETs unknown column(s) "
-            f"{bad_src_sets}"
+        version = t.latest_version() + 1
+        meta, _, _ = t._state(None)
+        if m.quiet:
+            v, _, _ = _merge_commit(t, table_dir, version, meta, [], None, txn)
+            return v, 0, 0, 0
+        constraints = _writer_feature_gate(
+            t, meta, "delta_merge", mutates=True
         )
+        added = _conform(m, table_dir, meta, m.df, evolve)
+        evolved = None
+        if added:
+            mode, map_fields = t._mapping(meta)
+            evolved = _evolve_delta_schema(meta, added, mode, map_fields)
 
-    def _tgt_col(c: str):
-        # target value of a column: NULL (typed) for columns the
-        # evolution is adding in this very commit
-        if c in added_of:
-            return F.lit(None).cast(_ddl(added_of[c]))
-        return F.col(f"tgt.{c}")
+        def live_target(filters):
+            adds = t.data_files(None, filters)
+            return t._assemble_live(adds, meta) if adds else None
 
-    # ---- probe: LIVE target rows joined to the broadcast batch ----
-    # per-key bounds reuse the batch aggregate computed with the
-    # duplicate-key check — no second scan of the batch
-    filters: list[tuple] = []
-    for i, k in enumerate(keys):
-        lo, hi = kb[f"__lo_{i}"], kb[f"__hi_{i}"]
-        if lo is not None and hi is not None and not isinstance(
-            lo, (bytes, bytearray)
-        ):
-            filters.extend([(k, ">=", lo), (k, "<=", hi)])
-    adds = t.data_files(None, filters or None)
-    n_updated = n_deleted = 0
-    affected: list[tuple[dict, list[int], int]] = []
-    by_file: dict[str, set[int]] = {}  # kill set, both arm classes
-    matched = None  # materialized matched-pair frame (the sliver)
-    fired_src = None  # materialized fired by-source rows
-    try:
-        if adds and when_matched and not src_empty:
-            live_asm = t._assemble_live(adds, meta)
-            tj = live_asm.alias("tgt").join(
-                F.broadcast(df).alias("src"),
-                on=[
-                    F.col(f"tgt.{k}") == F.col(f"src.{k}") for k in keys
-                ],
-                how="inner",
+        m.plan(live_target, ["__fp", "__pos"])
+        to_stage = m.to_stage()
+        post_validate = None
+        if to_stage is not None and constraints:
+            # CHECK constraints bind every row this merge lands,
+            # observed on the staging write
+            exprs, validate = _deferred_rule_checks(
+                [], [], constraints, table_dir, "delta_merge"
             )
-            # first-true-arm selector + every arm's SET expressions,
-            # evaluated ONCE in the join select where src./tgt.
-            # qualifiers resolve
-            arm_sel = None
-            for i, arm in enumerate(when_matched, start=1):
-                cond = (
-                    F.expr(arm["condition"])
-                    if arm.get("condition") is not None
-                    else F.lit(True)
-                )
-                arm_sel = (
-                    F.when(cond, F.lit(i))
-                    if arm_sel is None
-                    else arm_sel.when(cond, F.lit(i))
-                )
-            sel = [
-                F.col("tgt.__fp").alias("__fp"),
-                F.col("tgt.__pos").alias("__pos"),
-                arm_sel.otherwise(F.lit(0)).alias("__arm"),
-            ]
-            for c in tbl_cols:
-                sel.append(_tgt_col(c).alias(f"__t_{c}"))
-                sel.append(F.col(f"src.{c}").alias(f"__s_{c}"))
-            for i, s in upd_arms.items():
-                for c, e in (s or {}).items():
-                    sel.append(F.expr(e).alias(f"__a{i}_{c}"))
-            # materialize the sliver once (ALL key-matched pairs, fired
-            # or not — a matched source row is consumed even when no arm
-            # fires); the kill collect, the replacement-row staging and
-            # the matched-key set for the insert anti-join all read it
-            # without re-running the probe
-            matched = tj.select(*sel).localCheckpoint(eager=True)
-            fired = matched.filter(F.col("__arm") > 0)
-            hits = fired.select("__fp", "__pos", "__arm").toPandas()
-            n_updated += int((hits["__arm"].isin(list(upd_arms))).sum())
-            n_deleted += int((hits["__arm"].isin(list(del_arms))).sum())
-            for fp, pos in zip(hits["__fp"], hits["__pos"]):
-                by_file.setdefault(fp, set()).add(int(pos))
-
-        # ---- by-source probe: LIVE rows whose key the batch lacks ----
-        kill_adds = adds
-        if when_not_matched_by_source:
-            all_adds = t.data_files(None, None)
-            kill_adds = all_adds  # kills may land on ANY file now
-            if all_adds:
-                live_all = t._assemble_live(all_adds, meta).alias("tgt")
-                nosrc = live_all.join(
-                    F.broadcast(df.select(*keys).distinct()),
-                    on=list(keys),
-                    how="left_anti",
-                )
-                arm_sel2 = None
-                for i, arm in enumerate(when_not_matched_by_source, start=1):
-                    cond = (
-                        F.expr(arm["condition"])
-                        if arm.get("condition") is not None
-                        else F.lit(True)
-                    )
-                    arm_sel2 = (
-                        F.when(cond, F.lit(i))
-                        if arm_sel2 is None
-                        else arm_sel2.when(cond, F.lit(i))
-                    )
-                sel2 = [
-                    F.col("__fp"),
-                    F.col("__pos"),
-                    arm_sel2.otherwise(F.lit(0)).alias("__arm"),
-                ]
-                for c in tbl_cols:
-                    sel2.append(_tgt_col(c).alias(f"__t_{c}"))
-                for i, s in src_upd_arms.items():
-                    for c, e in (s or {}).items():
-                        sel2.append(F.expr(e).alias(f"__a{i}_{c}"))
-                # materialized size = FIRED rows only (the update arms
-                # must rewrite those rows anyway); the kill collect below
-                # is the driver-bounded part — a by-source arm firing on
-                # a large table fraction belongs in copy-on-write
-                fired_src = (
-                    nosrc.select(*sel2)
-                    .filter(F.col("__arm") > 0)
-                    .localCheckpoint(eager=True)
-                )
-                hits2 = fired_src.select("__fp", "__pos", "__arm").toPandas()
-                n_updated += int(
-                    (hits2["__arm"].isin(list(src_upd_arms))).sum()
-                )
-                n_deleted += int(
-                    (hits2["__arm"].isin(list(src_del_arms))).sum()
-                )
-                for fp, pos in zip(hits2["__fp"], hits2["__pos"]):
-                    by_file.setdefault(fp, set()).add(int(pos))
-
-        for add in kill_adds:
-            abs_p = os.path.abspath(os.path.join(t.path, add["path"]))
-            new_hits = by_file.get(abs_p)
-            if not new_hits:
-                continue
-            old = (
-                set(t._load_dv(add["deletionVector"]))
-                if add.get("deletionVector")
-                else set()
-            )
-            merged = sorted(old | new_hits)
-            affected.append((add, merged, len(merged)))
-
-        # ---- rows to land: update replacements + unmatched inserts ----
-        to_stage = None
-        if matched is not None and upd_arms:
-            rep_cols = []
-            for c in tbl_cols:
-                e = None
-                for i, s in upd_arms.items():
-                    if s is None:
-                        val = F.col(f"__s_{c}")  # UPDATE SET *
-                    elif c in s:
-                        val = F.col(f"__a{i}_{c}")
-                    else:
-                        val = F.col(f"__t_{c}")  # non-set: keep target
-                    e = (
-                        F.when(F.col("__arm") == i, val)
-                        if e is None
-                        else e.when(F.col("__arm") == i, val)
-                    )
-                rep_cols.append(e.alias(c))
-            to_stage = (
-                matched.filter(F.col("__arm").isin(list(upd_arms)))
-                .select(*rep_cols)
-            )
-        if fired_src is not None and src_upd_arms:
-            rep2 = []
-            for c in tbl_cols:
-                e = None
-                for i, s in src_upd_arms.items():
-                    val = (
-                        F.col(f"__a{i}_{c}")
-                        if c in s
-                        else F.col(f"__t_{c}")  # non-set: keep target
-                    )
-                    e = (
-                        F.when(F.col("__arm") == i, val)
-                        if e is None
-                        else e.when(F.col("__arm") == i, val)
-                    )
-                rep2.append(e.alias(c))
-            r2 = fired_src.filter(
-                F.col("__arm").isin(list(src_upd_arms))
-            ).select(*rep2)
-            to_stage = r2 if to_stage is None else to_stage.unionByName(r2)
-        if insert and not src_empty:
-            ins = df.alias("src")
-            if matched is not None:
-                # matched source keys ≤ the batch's own key count — the
-                # anti-join's build side broadcasts
-                mk = matched.select(
-                    *[F.col(f"__t_{k}").alias(k) for k in keys]
-                ).distinct()
-                ins = ins.join(F.broadcast(mk), on=keys, how="left_anti")
-            elif adds and not when_matched:
-                # no matched arms: matched source rows are dropped, so
-                # the anti-join still needs the live target key set
-                live_asm = t._assemble_live(adds, meta)
-                mk = live_asm.join(
-                    F.broadcast(df.select(*keys).distinct()),
-                    on=keys,
-                    how="leftsemi",
-                ).select(*keys).distinct()
-                ins = ins.join(F.broadcast(mk), on=keys, how="left_anti")
-            if insert_condition is not None:
-                ins = ins.filter(F.expr(insert_condition))
-            ins = ins.select(*tbl_cols)
-            to_stage = ins if to_stage is None else to_stage.unionByName(ins)
-
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": int(_time.time() * 1000),
-                    "operation": "MERGE",
-                }
-            }
-        ]
-        if evolution_md is not None:
-            # replay order makes the widened schema current before any
-            # reader sees the files that first carry the new columns
-            actions.append(evolution_md)
-        if affected:
-            actions.extend(_dv_merge_actions(t, table_dir, affected, mode))
-        phys_of = {f["name"]: f["physical"] for f in map_fields}
-        fid_of = {f["name"]: f["id"] for f in map_fields}
-        n_staged = 0
-        # no isEmpty() probe: the commit kernel drops zero-row part
-        # files, so an empty frame stages nothing and `staged` comes
-        # back empty (VERDICT r12 next #3)
-        if to_stage is not None:
-            # CHECK constraints bind every row this merge lands —
-            # replacements, carried values and inserts alike; the
-            # violation counts are OBSERVED on the staging write
-            # (r14) instead of a separate aggregation job that
-            # re-evaluated the whole replacement plan
-            merge_post_validate = None
-            if merge_constraints:
-                from pyspark.sql import Observation
-
-                mc_exprs, mc_validate = _deferred_rule_checks(
-                    [], [], merge_constraints, table_dir, "delta_merge"
-                )
-                mc_obs = Observation()
-                to_stage = to_stage.observe(mc_obs, *mc_exprs)
-                merge_post_validate = (
-                    lambda: mc_validate(mc_obs.get)  # noqa: E731
-                )
-            wdf = to_stage
-            part_phys = list(tbl_parts)
-            if mode != "none":
-                wdf = to_stage.select(
-                    *[
-                        F.col(c).alias(
-                            phys_of[c],
-                            metadata={"parquet.field.id": int(fid_of[c])},
-                        )
-                        for c in to_stage.columns
-                    ]
-                )
-                part_phys = [phys_of[c] for c in tbl_parts]
-            data_cols = [
-                phys_of.get(c, c) for c in tbl_cols if c not in tbl_parts
-            ]
-            staged = _stage_adds(
-                wdf,
-                table_dir,
-                version,
-                part_phys,
-                data_cols,
-                post_write_validate=merge_post_validate,
-            )
-            n_staged = sum(
-                json.loads(a["add"]["stats"])["numRecords"] for a in staged
-            )
-            actions.extend(staged)
-    finally:
-        # release the materialized probe frames whether staging
-        # succeeded or raised (a toPandas / staging-I/O / SET-
-        # analysis error must not leak checkpointed blocks into a
-        # retry loop's session — ADVICE r12); on success they are
-        # fully consumed before the claim below, so a
-        # ConcurrentWriteError retry can't accumulate blocks either
-        df.unpersist()
-        if matched is not None:
-            matched.unpersist()
-        if fired_src is not None:
-            fired_src.unpersist()
-    n_inserted = n_staged - n_updated
-    if len(actions) == 1 and txn is None:
-        return t.latest_version(), 0, 0, 0  # true no-op: don't churn
-    if txn is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn[0],
-                    "version": int(txn[1]),
-                    "lastUpdated": 0,
-                }
-            }
+            obs = Observation()
+            to_stage = to_stage.observe(obs, *exprs)
+            post_validate = lambda: validate(obs.get)  # noqa: E731
+        v, _, n_staged = _merge_commit(
+            t, table_dir, version, meta, m.kills, to_stage, txn,
+            evolved, post_validate,
         )
-    _claim_or_raise(table_dir, version, actions, "MERGE")
-    return version, n_updated, n_deleted, n_inserted
+    if v != version:
+        return v, 0, 0, 0
+    return v, m.n_updated, m.n_deleted, n_staged - m.n_updated
 
 
 def delta_restore(

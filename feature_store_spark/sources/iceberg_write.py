@@ -45,6 +45,7 @@ import os
 import re
 import struct
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -55,6 +56,7 @@ from feature_store_spark.sources.commit import (  # noqa: F401 - re-export
     ConcurrentWriteError,
 )
 from feature_store_spark.sources.hive_paths import parse_partition_segs
+from feature_store_spark.sources.merge import Merge
 
 US_PER_DAY = 86_400_000_000
 
@@ -1846,48 +1848,6 @@ def iceberg_upsert(
     )
 
 
-def _enforce_iceberg_merge_schema(
-    table_dir: str,
-    cur_fields: list[dict],
-    df: DataFrame,
-    keys: list[str],
-    allow_new: bool = False,
-) -> list[str]:
-    """Schema ENFORCEMENT for iceberg_merge, the
-    :func:`feature_store_spark.sources.delta._enforce_merge_schema`
-    twin on Iceberg type strings: the source must carry every table
-    column at the same Iceberg type (INSERT * / UPDATE SET * need the
-    full row); ``allow_new`` (``evolve=True``) returns source columns
-    UNKNOWN to the table (df column order) for the commit to add via
-    schema evolution. Type changes and missing columns always
-    refuse."""
-    cur_types = {f["name"]: f["type"] for f in cur_fields}
-    new_types = {
-        f["name"]: f["type"] for f in _infer_fields(df)
-    }
-    mismatched = sorted(
-        n
-        for n in new_types
-        if n in cur_types and new_types[n] != cur_types[n]
-    )
-    absent = sorted(n for n in cur_types if n not in new_types)
-    unknown = [c for c in df.columns if c not in cur_types]
-    if mismatched or absent or (unknown and not allow_new):
-        raise ValueError(
-            f"{table_dir}: merge source schema deviates from the "
-            f"table (type changes: {mismatched}, missing: {absent}, "
-            f"unknown: {sorted(unknown)}) — MERGE enforces the "
-            "schema; evolve via iceberg_merge(evolve=True)"
-        )
-    bad_keys = [k for k in keys if k not in cur_types]
-    if bad_keys:
-        raise ValueError(
-            f"{table_dir}: key column(s) {bad_keys} not in the table "
-            "schema"
-        )
-    return unknown
-
-
 def iceberg_merge(
     df: DataFrame,
     table_dir: str,
@@ -1903,547 +1863,93 @@ def iceberg_merge(
     file_format: str = "parquet",
     partition_spec: list[tuple[str, str]] | None = None,
 ) -> tuple[int, int, int, int]:
-    """Conditional / partial-column MERGE as ONE Iceberg snapshot —
-    the general form of :func:`iceberg_upsert` (which stays the
-    full-row fast path), at arm parity with
-    :func:`feature_store_spark.sources.delta.delta_merge` (VERDICT
-    r12 next #1; the reference's offline store IS Iceberg —
-    IcebergOfflineStore.java:78-114 — so the CDC verbs belong on this
-    format too). Arm semantics are Delta MERGE's, shared through one
-    validator: ``when_matched`` is an ORDERED arm list
-    (``{"condition": sql|None, "action": "update"|"delete",
-    "set": {col: sql}|None}``) where the first true condition fires
-    (SQL null-as-false), ``set`` updates only the named columns
-    (every other column keeps the TARGET value), ``set=None`` is
-    ``UPDATE SET *``, and only the last arm may omit its condition;
-    ``insert``/``insert_condition`` add the WHEN NOT MATCHED INSERT
-    arm; ``when_not_matched_by_source`` arms (conditions/SETs over
-    ``tgt.*`` only) apply to live target rows whose key the batch
-    lacks — the full-snapshot-sync verb, inherently O(live target).
-    ``evolve=True`` appends source columns unknown to the table as
-    nullable columns in the same commit; rows the merge does not
-    rewrite read NULL for them.
+    """Conditional / partial-column MERGE as ONE Iceberg snapshot, the
+    general form of :func:`iceberg_upsert`. The arm grammar, ``evolve``
+    and the refusals are the planner's, stated once in
+    :mod:`feature_store_spark.sources.merge`.
 
-    Physics is merge-on-read EQUALITY deletes, not Delta's positional
-    DVs: the snapshot carries ONE global equality-delete file holding
-    exactly the key tuples whose arms FIRED (written by executors
-    straight from the fired-key DataFrame — never collected to the
-    driver, unlike delta_merge's position sliver) plus new data files
-    with the replacement, carried and inserted rows. The spec's
-    sequencing rule kills every older row of a fired key table-wide;
-    rows of UNFIRED keys survive in place, untouched and unwritten.
-    Because the equality delete is key-granular (a positional DV is
-    row-granular), a fired key whose target holds EXTRA live rows
-    that fired NO arm would lose them — those siblings are CARRIED:
-    re-landed verbatim in the new data files (counted in neither
-    updated nor inserted). Keyed CDC tables have no siblings and
-    carry nothing.
+    Iceberg physics is merge-on-read EQUALITY deletes: the snapshot
+    carries one global equality-delete file holding the key tuples
+    whose arms fired, written by executors straight from the fired-key
+    frame (never collected to the driver), plus new data files with the
+    replacement, carried and inserted rows. The spec's sequencing rule
+    kills every older row of a fired key table-wide, so a fired key's
+    live rows that fired no arm are carried: landed again verbatim and
+    counted as neither updated nor inserted. Keyed CDC tables have no
+    such siblings. Rows of unfired keys stay in place, unwritten. A lost
+    metadata race refuses (via ``_publish_metadata``).
 
-    Scale shape: the match probe broadcasts the batch against a
-    target scan pruned by per-key min/max manifest stats (one
-    aggregate over the batch supplies bounds + the duplicate-key
-    refusal + emptiness — a single driver round-trip); arm predicates
-    and SET expressions are Catalyst expressions inside the one probe
-    join; by-source arms anti-join the full live scan against the
-    broadcast batch key set (no smaller correct read exists).
+    ``txn=(app_id, batch_id)`` makes a redelivered batch a no-op through
+    the snapshot-summary high-water mark; a quiet batch that must
+    advance it commits metadata only. The first call on a missing table
+    creates it with the insert arm's rows.
 
-    Refusals: duplicate source key tuples, SET on a merge key, SET of
-    an unknown column, non-last unconditional arm, by-source update
-    arms without an explicit SET, schema drift (unless ``evolve``),
-    lost metadata race (via _publish_metadata).
-
-    ``txn=(app_id, batch_id)`` gives exactly-once redelivery no-op
-    (snapshot-summary high-water mark, same handshake as
-    iceberg_append); a quiet batch that must advance the watermark
-    commits metadata only.
-
-    Returns ``(snapshot_id, n_updated, n_deleted, n_inserted)``; a
-    merge where nothing fires and nothing inserts (and no txn needs
-    recording) commits nothing and returns the current snapshot."""
-    from pyspark.sql import Window
-
-    from feature_store_spark.sources.delta import _validate_merge_arms
+    Returns ``(snapshot_id, n_updated, n_deleted, n_inserted)``; a merge
+    where nothing fires, nothing inserts and no txn needs recording
+    commits nothing and returns the current snapshot."""
     from feature_store_spark.sources.iceberg import IcebergTable
 
-    when_matched = list(when_matched or [])
-    when_not_matched_by_source = list(when_not_matched_by_source or [])
-    if not keys:
-        raise ValueError("iceberg_merge: keys must be non-empty")
-    if not when_matched and not insert and not when_not_matched_by_source:
-        raise ValueError(
-            "iceberg_merge: no matched arms, no by-source arms and "
-            "insert=False — the merge can never change anything"
-        )
-    missing_keys = [k for k in keys if k not in df.columns]
-    if missing_keys:
-        raise ValueError(
-            f"iceberg_merge: key column(s) {missing_keys} not in the "
-            f"source frame (columns: {df.columns})"
-        )
-    upd_arms, del_arms = _validate_merge_arms(
-        when_matched, keys, "matched", verb="iceberg_merge"
+    m = Merge(
+        df, keys, "iceberg_merge", when_matched, insert, insert_condition,
+        when_not_matched_by_source,
     )
-    src_upd_arms, src_del_arms = _validate_merge_arms(
-        when_not_matched_by_source, keys, "by-source",
-        verb="iceberg_merge",
-    )
-    for i, s in upd_arms.items():
-        unknown = sorted(set(s or {}) - set(df.columns))
-        if unknown:
-            raise ValueError(
-                f"iceberg_merge: matched arm {i} SETs unknown "
-                f"column(s) {unknown}"
-            )
-    none_sets = sorted(i for i, s in src_upd_arms.items() if s is None)
-    if none_sets:
-        raise ValueError(
-            f"iceberg_merge: by-source update arm(s) {none_sets} "
-            "need an explicit 'set' — there is no source row for "
-            "SET *"
-        )
-    spark = df.sparkSession
     meta_dir = os.path.join(table_dir, "metadata")
     prev_meta, _pm, _nv = _load_prev(meta_dir)
 
-    # materialize the source batch ONCE (batch-bounded, the same
-    # budget the probe checkpoints already spend): the verb otherwise
-    # re-evaluates the caller's lineage per consumer — the key-bounds
-    # aggregate, the broadcast probe build, the by-source key set,
-    # the insert anti-join and the staging write each re-ran the full
-    # upstream plan (guide §5: persist when reused and recompute is
-    # expensive). Every exit path unpersists.
-    df = df.localCheckpoint(eager=True)
-
-    # ONE aggregate over the batch: duplicate-key refusal (which
-    # row's arms win is undefined), emptiness, and the per-key
-    # min/max bounds the scan pruning wants (delta_merge's r13 shape)
-    kb = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.max("__n").alias("__maxn"),
-            F.count(F.lit(1)).alias("__nkeys"),
-            *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-        )
-        .first()
-    )
-    if (kb["__maxn"] or 0) > 1:
-        dup = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        kv = {k: dup[0][k] for k in keys}
-        raise ValueError(
-            f"iceberg_merge: source has multiple rows for key {kv} "
-            "— MERGE cannot decide which one wins; de-duplicate the "
-            "batch first"
-        )
-    src_empty = int(kb["__nkeys"] or 0) == 0
-
-    if prev_meta is None:
-        # everything is NOT MATCHED: CREATE + the insert arm only
-        if not insert:
-            raise ValueError(
-                f"iceberg_merge: {table_dir} does not exist and "
-                "insert=False — nothing to merge into"
-            )
-        from pyspark.sql import Observation
-
-        ins0 = df.alias("src")  # insert_condition speaks src.*
-        if insert_condition is not None:
-            ins0 = ins0.filter(F.expr(insert_condition))
-        # insert count observed DURING the checkpoint job (guide §5 /
-        # §1.2: one driver round-trip, not a checkpoint + a count job)
-        obs0 = Observation()
-        ins0 = ins0.observe(
-            obs0, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        try:
-            n0 = int(obs0.get["n"] or 0)
-            snap = iceberg_append(
-                ins0,
-                table_dir,
-                entity_col=entity_col,
-                ts_col=ts_col,
-                txn=txn,
-                file_format=file_format,
-                partition_spec=partition_spec,
-                allow_empty=True,
-            )
-        finally:
-            ins0.unpersist()
-            df.unpersist()
-        return snap, 0, 0, n0
-
-    cur_snap = int(prev_meta.get("current-snapshot-id") or 0)
-    if txn is not None:
-        app_id, batch_id = txn
-        if iceberg_txn_version(table_dir, app_id) >= int(batch_id):
-            df.unpersist()
-            return cur_snap, 0, 0, 0  # redelivered batch: no-op
-
-    t = IcebergTable(spark, table_dir)
-    cur_fields = t.schema_fields()
-    added = _enforce_iceberg_merge_schema(
-        table_dir, cur_fields, df, keys, allow_new=evolve
-    )
-    spark_type_of = {f.name: f.dataType for f in df.schema.fields}
-    old_cols = [f["name"] for f in cur_fields]
-    tbl_cols = old_cols + added
-
-    def _tgt_col(c: str):
-        # target value of a column: typed NULL for columns the
-        # evolution adds in this very commit
-        if c in added:
-            return F.lit(None).cast(spark_type_of[c])
-        return F.col(f"tgt.{c}")
-
-    # quiet-batch short circuit: an empty source without by-source
-    # arms changes nothing — no-op, or a metadata-only watermark
-    if src_empty and not when_not_matched_by_source:
-        try:
-            if txn is None:
-                return cur_snap, 0, 0, 0
-            snap = iceberg_append(
-                df.limit(0),
-                table_dir,
-                entity_col=entity_col,
-                ts_col=ts_col,
-                txn=txn,
-                file_format=file_format,
-                partition_spec=partition_spec,
-                allow_empty=True,
-            )
-            return snap, 0, 0, 0
-        finally:
-            df.unpersist()
-
-    filters: list[tuple] = []
-    for i, k in enumerate(keys):
-        lo, hi = kb[f"__lo_{i}"], kb[f"__hi_{i}"]
-        if lo is not None and hi is not None and not isinstance(
-            lo, (bytes, bytearray)
-        ):
-            filters.extend([(k, ">=", lo), (k, "<=", hi)])
-
-    def _isin(col, idx):
-        return col.isin(list(idx)) if idx else F.lit(False)
-
-    n_up = n_del = n_carry = n_up2 = n_del2 = n_carry2 = 0
-    kill_frames: list[DataFrame] = []
-    stage_frames: list[DataFrame] = []
-    matched = None
-    fired_src = None
-    carried2 = None
-    try:
-        if when_matched and not src_empty:
-            live = t.scan(filters=filters or None)
-            tj = live.alias("tgt").join(
-                F.broadcast(df).alias("src"),
-                on=[
-                    F.col(f"tgt.{k}") == F.col(f"src.{k}")
-                    for k in keys
-                ],
-                how="inner",
-            )
-            arm_sel = None
-            for i, arm in enumerate(when_matched, start=1):
-                cond = (
-                    F.expr(arm["condition"])
-                    if arm.get("condition") is not None
-                    else F.lit(True)
-                )
-                arm_sel = (
-                    F.when(cond, F.lit(i))
-                    if arm_sel is None
-                    else arm_sel.when(cond, F.lit(i))
-                )
-            sel = [F.col(f"tgt.{k}").alias(k) for k in keys]
-            sel.append(arm_sel.otherwise(F.lit(0)).alias("__arm"))
-            for c in tbl_cols:
-                sel.append(_tgt_col(c).alias(f"__t_{c}"))
-                sel.append(F.col(f"src.{c}").alias(f"__s_{c}"))
-            for i, s in upd_arms.items():
-                for c, e in (s or {}).items():
-                    sel.append(F.expr(e).alias(f"__a{i}_{c}"))
-            # the sliver: ALL key-matched pairs (fired or not — a
-            # matched source row is consumed even when no arm
-            # fires), batch-bounded. The per-key window marks keys
-            # with ANY fired row so unfired SIBLING rows of a fired
-            # key can be carried (the equality delete kills the
-            # whole key). The per-arm counts are OBSERVED during the
-            # checkpoint job itself (r14, guide §1.2/§5: the old
-            # shape paid a second driver round-trip re-aggregating
-            # the just-materialized sliver — same rows, same
-            # aggregate expressions, one job instead of two).
-            from pyspark.sql import Observation
-
-            w = Window.partitionBy(*keys)
-            obs_m = Observation()
-            matched = (
-                tj.select(*sel)
-                .withColumn(
-                    "__fired",
-                    F.max((F.col("__arm") > 0).cast("int")).over(w),
-                )
-                .observe(
-                    obs_m,
-                    F.sum(
-                        _isin(F.col("__arm"), upd_arms).cast("long")
-                    ).alias("u"),
-                    F.sum(
-                        _isin(F.col("__arm"), del_arms).cast("long")
-                    ).alias("d"),
-                    F.sum(
-                        (
-                            (F.col("__arm") == 0)
-                            & (F.col("__fired") == 1)
-                        ).cast("long")
-                    ).alias("c"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            cnt = obs_m.get
-            n_up, n_del = int(cnt["u"] or 0), int(cnt["d"] or 0)
-            n_carry = int(cnt["c"] or 0)
-            if n_up or n_del:
-                kill_frames.append(
-                    matched.filter(F.col("__arm") > 0).select(*keys)
-                )
-            if n_up and upd_arms:
-                rep_cols = []
-                for c in tbl_cols:
-                    e = None
-                    for i, s in upd_arms.items():
-                        if s is None:
-                            val = F.col(f"__s_{c}")  # UPDATE SET *
-                        elif c in s:
-                            val = F.col(f"__a{i}_{c}")
-                        else:
-                            val = F.col(f"__t_{c}")  # keep target
-                        e = (
-                            F.when(F.col("__arm") == i, val)
-                            if e is None
-                            else e.when(F.col("__arm") == i, val)
-                        )
-                    rep_cols.append(e.alias(c))
-                stage_frames.append(
-                    matched.filter(
-                        _isin(F.col("__arm"), upd_arms)
-                    ).select(*rep_cols)
-                )
-            if n_carry:
-                stage_frames.append(
-                    matched.filter(
-                        (F.col("__arm") == 0) & (F.col("__fired") == 1)
-                    ).select(
-                        *[
-                            F.col(f"__t_{c}").alias(c)
-                            for c in tbl_cols
-                        ]
-                    )
-                )
-
-        if when_not_matched_by_source:
-            live_all = t.scan().alias("tgt")
-            nosrc = live_all.join(
-                F.broadcast(df.select(*keys).distinct()),
-                on=list(keys),
-                how="left_anti",
-            )
-            arm_sel2 = None
-            for i, arm in enumerate(
-                when_not_matched_by_source, start=1
-            ):
-                cond = (
-                    F.expr(arm["condition"])
-                    if arm.get("condition") is not None
-                    else F.lit(True)
-                )
-                arm_sel2 = (
-                    F.when(cond, F.lit(i))
-                    if arm_sel2 is None
-                    else arm_sel2.when(cond, F.lit(i))
-                )
-            sel2 = [F.col(f"tgt.{k}").alias(k) for k in keys]
-            sel2.append(arm_sel2.otherwise(F.lit(0)).alias("__arm"))
-            for c in tbl_cols:
-                sel2.append(_tgt_col(c).alias(f"__t_{c}"))
-            for i, s in src_upd_arms.items():
-                for c, e in (s or {}).items():
-                    sel2.append(F.expr(e).alias(f"__a{i}_{c}"))
-            all2 = nosrc.select(*sel2)
-            # materialized size = FIRED rows only; an arm expected to
-            # fire on a large table fraction belongs in a
-            # copy-on-write rewrite (same contract as delta_merge).
-            # Counts observed during the checkpoint job (r14): one
-            # driver round-trip, not checkpoint + re-aggregate.
-            from pyspark.sql import Observation
-
-            obs_f = Observation()
-            fired_src = (
-                all2.filter(F.col("__arm") > 0)
-                .observe(
-                    obs_f,
-                    F.sum(
-                        _isin(F.col("__arm"), src_upd_arms).cast("long")
-                    ).alias("u"),
-                    F.sum(
-                        _isin(F.col("__arm"), src_del_arms).cast("long")
-                    ).alias("d"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            cnt2 = obs_f.get
-            n_up2, n_del2 = int(cnt2["u"] or 0), int(cnt2["d"] or 0)
-            if int(cnt2["n"] or 0):
-                kills_s = fired_src.select(*keys)
-                kill_frames.append(kills_s)
-                if src_upd_arms:
-                    rep2 = []
-                    for c in tbl_cols:
-                        e = None
-                        for i, s in src_upd_arms.items():
-                            val = (
-                                F.col(f"__a{i}_{c}")
-                                if c in s
-                                else F.col(f"__t_{c}")
-                            )
-                            e = (
-                                F.when(F.col("__arm") == i, val)
-                                if e is None
-                                else e.when(F.col("__arm") == i, val)
-                            )
-                        rep2.append(e.alias(c))
-                    stage_frames.append(
-                        fired_src.filter(
-                            _isin(F.col("__arm"), src_upd_arms)
-                        ).select(*rep2)
-                    )
-                # unfired siblings of fired keys die with the key —
-                # carry them (second scan, only when something fired;
-                # count observed during the checkpoint job, r14)
-                obs_c = Observation()
-                carried2 = (
-                    all2.filter(F.col("__arm") == 0)
-                    .join(
-                        F.broadcast(kills_s.distinct()),
-                        on=list(keys),
-                        how="leftsemi",
-                    )
-                    .select(
-                        *[
-                            F.col(f"__t_{c}").alias(c)
-                            for c in tbl_cols
-                        ]
-                    )
-                    .observe(obs_c, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
-                )
-                n_carry2 = int(obs_c.get["n"] or 0)
-                if n_carry2:
-                    stage_frames.append(carried2)
-
-        if insert and not src_empty:
-            ins = df.alias("src")
-            if matched is not None:
-                mk = matched.select(*keys).distinct()
-                ins = ins.join(
-                    F.broadcast(mk), on=list(keys), how="left_anti"
-                )
-            elif not when_matched:
-                # no matched arms: matched source rows are still
-                # CONSUMED, so the anti-join needs the live key set
-                live2 = t.scan(filters=filters or None)
-                mk = (
-                    live2.join(
-                        F.broadcast(df.select(*keys).distinct()),
-                        on=list(keys),
-                        how="leftsemi",
-                    )
-                    .select(*keys)
-                    .distinct()
-                )
-                ins = ins.join(
-                    F.broadcast(mk), on=list(keys), how="left_anti"
-                )
-            if insert_condition is not None:
-                ins = ins.filter(F.expr(insert_condition))
-            stage_frames.append(ins.select(*tbl_cols))
-
-        if not stage_frames and not kill_frames:
-            if txn is None:
-                return cur_snap, 0, 0, 0  # true no-op: don't churn
-            snap = iceberg_append(
-                df.limit(0).select(*tbl_cols),
-                table_dir,
-                entity_col=entity_col,
-                ts_col=ts_col,
-                txn=txn,
-                file_format=file_format,
-                partition_spec=partition_spec,
-                allow_empty=True,
-            )
-            return snap, 0, 0, 0
-
-        if stage_frames:
-            to_stage = stage_frames[0]
-            for fr in stage_frames[1:]:
-                to_stage = to_stage.unionByName(fr)
-        else:
-            # pure-delete merge: the snapshot carries only the
-            # equality-delete manifest
-            to_stage = df.limit(0).select(*tbl_cols)
-        kill_df = None
-        if kill_frames:
-            kill_df = kill_frames[0]
-            for fr in kill_frames[1:]:
-                kill_df = kill_df.unionByName(fr)
-        snap = iceberg_append(
-            to_stage,
+    def append(frame, **kw):
+        return iceberg_append(
+            frame,
             table_dir,
             entity_col=entity_col,
             ts_col=ts_col,
-            upsert_keys=list(keys),
-            delete_keys_df=(
-                kill_df if kill_df is not None else df.limit(0)
-            ),
             txn=txn,
             file_format=file_format,
             partition_spec=partition_spec,
             allow_empty=True,
+            **kw,
         )
-    finally:
-        # release the materialized probe frames whether staging
-        # succeeded or raised (the delta_merge r13 contract)
-        df.unpersist()
-        if matched is not None:
-            matched.unpersist()
-        if fired_src is not None:
-            fired_src.unpersist()
-        if carried2 is not None:
-            carried2.unpersist()
-    # staged row total from the COMMITTED manifests (driver-side
-    # metadata, no extra job): inserts = landed − replacements −
-    # carried rows. allow_empty may have returned the CURRENT
-    # snapshot (everything empty at runtime) — count nothing then,
-    # or the PREVIOUS commit's rows would masquerade as inserts.
-    staged_total = 0
+
+    with m:
+        m.load()
+        if prev_meta is None:
+            ins, n = m.inserts_only(table_dir)
+            return append(ins), 0, 0, n
+        cur_snap = int(prev_meta.get("current-snapshot-id") or 0)
+        if txn is not None and iceberg_txn_version(
+            table_dir, txn[0]
+        ) >= int(txn[1]):
+            return cur_snap, 0, 0, 0  # redelivered batch: no-op
+        t = IcebergTable(df.sparkSession, table_dir)
+        m.conform(
+            table_dir,
+            {f["name"]: f["type"] for f in t.schema_fields()},
+            {f["name"]: f["type"] for f in _infer_fields(m.df)},
+            evolve,
+            "iceberg_merge(evolve=True)",
+        )
+        if not m.quiet:
+            m.plan(lambda filters: t.scan(filters=filters or None), keys)
+        if not m.stage and not m.kills:
+            if txn is None:
+                return cur_snap, 0, 0, 0  # true no-op: don't churn
+            return append(m.df.limit(0).select(*m.tbl_cols)), 0, 0, 0
+        # a pure-delete merge lands only the equality-delete manifest
+        to_stage = m.to_stage() or m.df.limit(0).select(*m.tbl_cols)
+        kills = reduce(DataFrame.unionByName, m.kills or [m.df.limit(0)])
+        snap = append(to_stage, upsert_keys=list(keys), delete_keys_df=kills)
+    # landed rows come from the committed manifests (driver metadata,
+    # no job). allow_empty may return the CURRENT snapshot when every
+    # frame was empty at runtime; count nothing then, or the previous
+    # commit's rows would read as inserts.
+    staged = 0
     if snap != cur_snap:
         _nm, new_manifests, _ = _load_prev(meta_dir)
-        staged_total = sum(
-            int(m.get("added_rows_count") or 0)
-            for m in new_manifests
-            if not m.get("content")
-            and m.get("added_snapshot_id") == snap
+        staged = sum(
+            int(mf.get("added_rows_count") or 0)
+            for mf in new_manifests
+            if not mf.get("content") and mf.get("added_snapshot_id") == snap
         )
-    n_inserted = staged_total - n_up - n_carry - n_up2 - n_carry2
-    return snap, n_up + n_up2, n_del + n_del2, n_inserted
+    return snap, m.n_updated, m.n_deleted, staged - m.n_updated - m.n_carried
 
 
 def iceberg_merge_sink(

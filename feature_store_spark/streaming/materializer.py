@@ -18,7 +18,6 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
 def windowed_stats_stream(
@@ -73,21 +72,6 @@ def enrich_stream(
     shuffled hash join per batch with identical semantics."""
     d = F.broadcast(dim) if broadcast_dim else dim
     return stream.join(d, list(keys), how)
-
-
-def start_materializer(
-    stream: DataFrame,
-    sink: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    trigger_seconds: int = 10,
-) -> StreamingQuery:
-    """Wire a stream into foreachBatch materialization."""
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
 
 
 def merge_latest_sink(

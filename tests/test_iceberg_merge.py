@@ -6,6 +6,8 @@ store actually uses, IcebergOfflineStore.java:78-114)."""
 import datetime
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 TS = datetime.datetime(2024, 3, 1)
@@ -305,3 +307,189 @@ class TestIcebergMergeArms:
         sink(spark.createDataFrame([], S), 1)
         assert IcebergTable(spark, d).scan().count() == 1
         assert iceberg_txn_version(d, "sink") == 1
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    base=st.dictionaries(
+        st.integers(min_value=0, max_value=20),
+        st.tuples(
+            st.floats(
+                min_value=-100, max_value=100, allow_nan=False, width=32
+            ),
+            st.sampled_from(["x", "y"]),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    batch=st.dictionaries(
+        st.integers(min_value=0, max_value=25),
+        st.tuples(
+            st.floats(
+                min_value=-100, max_value=100, allow_nan=False, width=32
+            ),
+            st.sampled_from(["b", "k", "n"]),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    thr=st.floats(min_value=-50, max_value=50, allow_nan=False),
+)
+def test_iceberg_merge_conditional_matches_dict_oracle(
+    spark, tmp_path_factory, base, batch, thr
+):
+    """The delta_merge dict-fold property, re-run against the
+    equality-delete physics: for ANY base table, ANY batch and ANY
+    threshold, the conditional MERGE equals the plain python fold —
+    partial SET keeps target columns, a matched row firing no arm
+    survives with its source row consumed."""
+    from feature_store_spark.sources.iceberg import IcebergTable
+    from feature_store_spark.sources.iceberg_write import (
+        iceberg_append,
+        iceberg_merge,
+    )
+
+    d = str(tmp_path_factory.mktemp("imergeprop") / "t")
+    sch = (
+        "eid long, val double, tag string, entity_type string, "
+        "event_time timestamp"
+    )
+    iceberg_append(
+        spark.createDataFrame(
+            [
+                (k, float(v), tag, "user", TS)
+                for k, (v, tag) in base.items()
+            ],
+            sch,
+        ),
+        d,
+        entity_col="entity_type",
+        ts_col="event_time",
+    )
+    iceberg_merge(
+        spark.createDataFrame(
+            [
+                (k, float(v), tag, "user", TS)
+                for k, (v, tag) in batch.items()
+            ],
+            sch,
+        ),
+        d,
+        keys=["eid"],
+        when_matched=[
+            {
+                "condition": f"src.tag = 'b' AND tgt.val > {thr!r}",
+                "action": "update",
+                "set": {"val": "tgt.val + src.val"},
+            },
+            {"condition": "src.tag = 'k'", "action": "delete"},
+        ],
+        insert_condition="src.val >= 0",
+    )
+    want = {k: (float(v), tag) for k, (v, tag) in base.items()}
+    for k, (v, tag) in batch.items():
+        if k in want:
+            tv, ttag = want[k]
+            if tag == "b" and tv > thr:
+                want[k] = (tv + float(v), ttag)
+            elif tag == "k":
+                want.pop(k)
+        elif float(v) >= 0:
+            want[k] = (float(v), tag)
+    got = {
+        r["eid"]: (r["val"], r["tag"])
+        for r in IcebergTable(spark, d).scan().collect()
+    }
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k][1] == want[k][1]
+        assert got[k][0] == pytest.approx(want[k][0])
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    base=st.dictionaries(
+        st.integers(min_value=0, max_value=20),
+        st.floats(
+            min_value=-100, max_value=100, allow_nan=False, width=32
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    snap_keys=st.sets(
+        st.integers(min_value=0, max_value=25), max_size=12
+    ),
+    thr=st.floats(min_value=-50, max_value=50, allow_nan=False),
+)
+def test_iceberg_merge_sync_matches_dict_oracle(
+    spark, tmp_path_factory, base, snap_keys, thr
+):
+    """Snapshot-sync MERGE (by-source arms + schema evolution) ==
+    dict fold, equality-delete physics."""
+    from feature_store_spark.sources.iceberg import IcebergTable
+    from feature_store_spark.sources.iceberg_write import (
+        iceberg_append,
+        iceberg_merge,
+    )
+
+    d = str(tmp_path_factory.mktemp("isyncprop") / "t")
+    iceberg_append(
+        spark.createDataFrame(
+            [(k, float(v), "user", TS) for k, v in base.items()],
+            "eid long, val double, entity_type string, "
+            "event_time timestamp",
+        ),
+        d,
+        entity_col="entity_type",
+        ts_col="event_time",
+    )
+    snap = spark.createDataFrame(
+        [
+            (k, float(k) * 2, "snap", "user", TS)
+            for k in sorted(snap_keys)
+        ],
+        "eid long, val double, tag string, entity_type string, "
+        "event_time timestamp",
+    )
+    iceberg_merge(
+        snap,
+        d,
+        keys=["eid"],
+        when_matched=[
+            {"condition": None, "action": "update", "set": None}
+        ],
+        when_not_matched_by_source=[
+            {
+                "condition": f"tgt.val > {thr!r}",
+                "action": "update",
+                "set": {"tag": "'orphan'"},
+            },
+            {"condition": None, "action": "delete"},
+        ],
+        evolve=True,
+    )
+    want: dict[int, tuple] = {}
+    for k, v in base.items():
+        if k in snap_keys:
+            want[k] = (float(k) * 2, "snap")
+        elif float(v) > thr:
+            want[k] = (float(v), "orphan")
+    for k in snap_keys:
+        if k not in base:
+            want[k] = (float(k) * 2, "snap")
+    got = {
+        r["eid"]: (r["val"], r["tag"])
+        for r in IcebergTable(spark, d).scan().collect()
+    }
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k][1] == want[k][1]
+        assert got[k][0] == pytest.approx(want[k][0])

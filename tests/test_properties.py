@@ -1192,6 +1192,180 @@ def test_delta_cdc_merge_matches_dict_oracle(spark, tmp_path_factory, base, batc
 
 
 @settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    base=st.dictionaries(
+        st.integers(min_value=0, max_value=20),
+        st.tuples(
+            st.floats(
+                min_value=-100, max_value=100, allow_nan=False, width=32
+            ),
+            st.sampled_from(["x", "y"]),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    batch=st.dictionaries(
+        st.integers(min_value=0, max_value=25),
+        st.tuples(
+            st.floats(
+                min_value=-100, max_value=100, allow_nan=False, width=32
+            ),
+            st.sampled_from(["b", "k", "n"]),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    thr=st.floats(min_value=-50, max_value=50, allow_nan=False),
+)
+def test_delta_merge_conditional_matches_dict_oracle(
+    spark, tmp_path_factory, base, batch, thr
+):
+    """For ANY base table, ANY batch and ANY predicate threshold, the
+    conditional MERGE (matched-predicate arm +
+    partial-column UPDATE SET + delete arm + conditional insert arm,
+    one DV-assisted commit) equals the plain python dict fold — in
+    particular the PARTIAL update keeps the target's non-set columns
+    and a matched row firing no arm survives untouched while its
+    source row is consumed."""
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_merge,
+    )
+
+    d = str(tmp_path_factory.mktemp("mergeprop") / "t")
+    bdf = spark.createDataFrame(
+        [(k, float(v), tag) for k, (v, tag) in base.items()],
+        "eid long, val double, tag string",
+    )
+    delta_append(bdf, d)
+    cdf = spark.createDataFrame(
+        [(k, float(v), tag) for k, (v, tag) in batch.items()],
+        "eid long, val double, tag string",
+    )
+    delta_merge(
+        cdf,
+        d,
+        keys=["eid"],
+        when_matched=[
+            {
+                "condition": f"src.tag = 'b' AND tgt.val > {thr!r}",
+                "action": "update",
+                "set": {"val": "tgt.val + src.val"},
+            },
+            {"condition": "src.tag = 'k'", "action": "delete"},
+        ],
+        insert_condition="src.val >= 0",
+    )
+    want = {k: (float(v), tag) for k, (v, tag) in base.items()}
+    for k, (v, tag) in batch.items():
+        if k in want:
+            tv, ttag = want[k]
+            if tag == "b" and tv > thr:
+                want[k] = (tv + float(v), ttag)  # partial: tag kept
+            elif tag == "k":
+                want.pop(k)
+            # else: matched, no arm fires — target row untouched
+        elif float(v) >= 0:
+            want[k] = (float(v), tag)
+    got = {
+        r["eid"]: (r["val"], r["tag"])
+        for r in DeltaTable(spark, d).scan().collect()
+    }
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k][1] == want[k][1]
+        assert got[k][0] == pytest.approx(want[k][0])
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    base=st.dictionaries(
+        st.integers(min_value=0, max_value=20),
+        st.floats(
+            min_value=-100, max_value=100, allow_nan=False, width=32
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    snap_keys=st.sets(
+        st.integers(min_value=0, max_value=25), max_size=12
+    ),
+    thr=st.floats(min_value=-50, max_value=50, allow_nan=False),
+)
+def test_delta_merge_sync_matches_dict_oracle(
+    spark, tmp_path_factory, base, snap_keys, thr
+):
+    """Snapshot-sync MERGE (by-source arms + schema evolution) ==
+    dict fold for ANY base table, ANY snapshot key set and ANY
+    quarantine threshold: matched keys take the snapshot row (with
+    the NEW evolved column), vanished keys above the threshold are
+    quarantined via a partial by-source SET (value kept, tag set),
+    the rest die; never-seen snapshot keys insert."""
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_merge,
+    )
+
+    d = str(tmp_path_factory.mktemp("syncprop") / "t")
+    delta_append(
+        spark.createDataFrame(
+            [(k, float(v)) for k, v in base.items()],
+            "eid long, val double",
+        ),
+        d,
+    )
+    snap = spark.createDataFrame(
+        [(k, float(k) * 2, "snap") for k in sorted(snap_keys)],
+        "eid long, val double, tag string",
+    )
+    delta_merge(
+        snap,
+        d,
+        keys=["eid"],
+        when_matched=[
+            {"condition": None, "action": "update", "set": None}
+        ],
+        when_not_matched_by_source=[
+            {
+                "condition": f"tgt.val > {thr!r}",
+                "action": "update",
+                "set": {"tag": "'orphan'"},
+            },
+            {"condition": None, "action": "delete"},
+        ],
+        evolve=True,
+    )
+    want: dict[int, tuple] = {}
+    for k, v in base.items():
+        if k in snap_keys:
+            want[k] = (float(k) * 2, "snap")
+        elif float(v) > thr:
+            want[k] = (float(v), "orphan")
+        # else: deleted
+    for k in snap_keys:
+        if k not in base:
+            want[k] = (float(k) * 2, "snap")
+    got = {
+        r["eid"]: (r["val"], r["tag"])
+        for r in DeltaTable(spark, d).scan().collect()
+    }
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k][1] == want[k][1]
+        assert got[k][0] == pytest.approx(want[k][0])
+
+
+@settings(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],

@@ -228,34 +228,6 @@ def _rows_per_band(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
-def lsh_band_sigs_wide(
-    wide_signatures: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, band, band_sig) rows straight from wide signatures — a pure
-    projection + explode (bands rows/doc), NO shuffle: each band's
-    signature is the concatenation of its h-columns, vs the tall form's
-    groupBy + collect_list which shuffles k rows/doc."""
-    rows_per_band = _rows_per_band(num_hashes, bands)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.concat_ws(
-                    ":",
-                    *[F.col(f"h{j * rows_per_band + r}") for r in range(rows_per_band)],
-                ).alias("band_sig"),
-            )
-            for j in range(bands)
-        ]
-    )
-    return wide_signatures.select(
-        F.col(id_col), F.explode(band_structs).alias("__b")
-    ).select(F.col(id_col), F.col("__b.band").alias("band"), F.col("__b.band_sig").alias("band_sig"))
-
-
 def minhash_pairs_fused(
     wide_signatures: DataFrame,
     num_hashes: int = 16,

@@ -21,6 +21,10 @@ a reliable ``checkpoint()`` to storage at these same sites.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -49,29 +53,31 @@ from feature_store_spark.operators.text import (
     token_stats,
 )
 from feature_store_spark.operators.topk import top_k, top_k_per_group
+from feature_store_spark.operators.windowed import windowed_features_self
+from feature_store_spark.scoring import compile_model_expr, compile_model_sql, example_model
+from feature_store_spark.session import load_table, local_rows_df
+from feature_store_spark.stats import feature_stats
 
 
-def _stream_tmpdir(prefix: str) -> str:
-    """mkdtemp that is ALSO registered for atexit removal: the stream
-    queries rmtree their fixture/checkpoint dirs inline after
-    awaitTermination, but a session that dies mid-query (ctrl-C, OOM,
-    harness kill) would otherwise leave /tmp/fss_stream_* behind."""
-    import atexit
-    import shutil
-    import tempfile
-
+@contextmanager
+def _scratch(prefix: str):
+    """A fresh temp dir for one query's fixture files, tables and
+    stream checkpoints, removed on every exit path (ctrl-C included).
+    A query that returns a frame read from it localCheckpoints the
+    frame inside the ``with`` block."""
     d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _run_stream_to_memory(spark, out, name: str, d: str, mode: str):
     """Shared tail of every stream query: drive a streaming DataFrame
     into a fresh memory sink (availableNow), fail LOUDLY on timeout
-    instead of grading a partial sink, clean the fixture/checkpoint
-    dir, return the sink as a batch DataFrame."""
-    import shutil
-
+    instead of grading a partial sink, return the sink as a batch
+    DataFrame. The sink lives in driver memory, so the caller's
+    fixture/checkpoint dir ``d`` may go once this returns."""
     try:
         spark.catalog.dropTempView(name)
     except Exception:
@@ -90,14 +96,7 @@ def _run_stream_to_memory(spark, out, name: str, d: str, mode: str):
             f"{name}: availableNow stream did not finish in 300s; "
             "refusing to grade a partial memory sink"
         )
-    # the memory sink lives in driver memory; the parquet fixture copy
-    # and checkpoint are no longer needed once the query terminated
-    shutil.rmtree(d, ignore_errors=True)
     return spark.table(name)
-from feature_store_spark.operators.windowed import windowed_features_self
-from feature_store_spark.scoring import compile_model_expr, compile_model_sql, example_model
-from feature_store_spark.session import load_table, local_rows_df
-from feature_store_spark.stats import feature_stats
 
 
 def _foreach_batch_stream(
@@ -110,13 +109,10 @@ def _foreach_batch_stream(
     micro-batches; ``shape`` transforms the stream first. Fails loudly
     on a 300 s timeout, and unless the Delta table ``d/<refreshed>``
     took at least two commits. Returns ``result_of(d)``
-    localCheckpointed, then removes the scratch dir ``d``."""
-    import shutil
-
+    localCheckpointed, before the scratch dir ``d`` goes."""
     from feature_store_spark.sources.delta import delta_head
 
-    d = _stream_tmpdir(f"fss_{name}_")
-    try:
+    with _scratch(f"fss_{name}_") as d:
         frame.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
         stream = (
             spark.readStream.schema(frame.schema)
@@ -139,8 +135,6 @@ def _foreach_batch_stream(
                 "most one commit"
             )
         return result_of(d).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -268,28 +262,28 @@ def q_stream_sessions(spark, sf_dir):
     from feature_store_spark.streaming.stateful import sessionize_stream
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-    d = _stream_tmpdir("fss_stream_sessions_")
-    ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = spark.readStream.schema(
-        "user_id long, ts timestamp, value double"
-    ).parquet(f"{d}/in")
-    out = sessionize_stream(
-        stream,
-        entity_col="user_id",
-        time_col="ts",
-        value_col="value",
-        gap_seconds=86_400,
-        watermark="0 seconds",
-    )
-    return _run_stream_to_memory(
-        spark, out, "fss_stream_sessions", d, "append"
-    ).select(
-        F.col("entity_id").alias("user_id"),
-        F.unix_micros("session_start").alias("start_us"),
-        F.unix_micros("session_end").alias("end_us"),
-        F.col("n_events"),
-        _r6(F.col("value_sum")).alias("value_sum"),
-    )
+    with _scratch("fss_stream_sessions_") as d:
+        ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = spark.readStream.schema(
+            "user_id long, ts timestamp, value double"
+        ).parquet(f"{d}/in")
+        out = sessionize_stream(
+            stream,
+            entity_col="user_id",
+            time_col="ts",
+            value_col="value",
+            gap_seconds=86_400,
+            watermark="0 seconds",
+        )
+        return _run_stream_to_memory(
+            spark, out, "fss_stream_sessions", d, "append"
+        ).select(
+            F.col("entity_id").alias("user_id"),
+            F.unix_micros("session_start").alias("start_us"),
+            F.unix_micros("session_end").alias("end_us"),
+            F.col("n_events"),
+            _r6(F.col("value_sum")).alias("value_sum"),
+        )
 
 
 STREAM_SESSIONS_SQL = """
@@ -1815,9 +1809,6 @@ def q_ivfpq_recall(spark, sf_dir):
     - the search runs over the READ-BACK partitioned table, so the
       write→read→prune path is what's graded, not an in-memory frame.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from feature_store_spark.operators.similarity import (
@@ -1851,8 +1842,7 @@ def q_ivfpq_recall(spark, sf_dir):
     cwc = pq_encode(emb, cb).join(
         assigned.select("vec_id", "cluster"), "vec_id"
     )
-    scratch = tempfile.mkdtemp(prefix="fss-ivfpq-")
-    try:
+    with _scratch("fss-ivfpq-") as scratch:
         cwc.write.partitionBy("cluster").mode("overwrite").parquet(scratch)
         stored = spark.read.parquet(scratch)
         # total file count from the relation's own file index — a
@@ -1944,8 +1934,6 @@ def q_ivfpq_recall(spark, sf_dir):
             [(row["n_queries"], bool(files_pruned), bool(row["recall_ok"]))],
             "n_queries long, files_pruned boolean, recall_ok boolean",
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 IVFPQ_RECALL_SQL = """
@@ -3798,9 +3786,6 @@ def q_scalar_upsert(spark, sf_dir):
     localCheckpointed so the scratch table's files can be deleted
     before returning (the merged table is key-bounded — one row per
     (entity, feature))."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -3815,8 +3800,7 @@ def q_scalar_upsert(spark, sf_dir):
         (F.col("event_time") + F.expr("INTERVAL 365 DAYS")).alias("event_time"),
         (F.col("rec_event_id") + 10_000_000).alias("rec_event_id"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-scalar-upsert-")
-    try:
+    with _scratch("fss-scalar-upsert-") as scratch:
         delta_append(existing, scratch)
         delta_merge_latest(
             updates,
@@ -3832,8 +3816,6 @@ def q_scalar_upsert(spark, sf_dir):
             _r6(F.col("value_float")).alias("value_float"),
             F.unix_micros("event_time").alias("event_time_us"),
         ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 def _append_in_thirds(df, key, src, refresh):
@@ -3859,17 +3841,13 @@ def q_incremental_agg(spark, sf_dir):
     events, which the incremental state must equal exactly. The
     middle refresh is deliberately run TWICE to prove the exactly-once
     token makes redelivered refreshes no-ops."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import (
         aggregate_view,
         refresh_aggregate,
     )
 
     events = load_table(spark, sf_dir, "events")
-    scratch = _tmp.mkdtemp(prefix="fss-incr-agg-")
-    try:
+    with _scratch("fss-incr-agg-") as scratch:
         src, state = scratch + "/src", scratch + "/state"
         _append_in_thirds(
             events, "event_id", src,
@@ -3887,8 +3865,6 @@ def q_incremental_agg(spark, sf_dir):
             _r6(F.col("avg_val")).alias("avg_val"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 INCREMENTAL_AGG_SQL = """
@@ -3915,17 +3891,13 @@ def q_incremental_distinct(spark, sf_dir):
     refresh runs twice to prove the exactly-once token. The estimate
     itself is gated within 2% of the exact distinct and the EXACT
     count is what the oracle grades."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import (
         distinct_view,
         refresh_distinct_sketch,
     )
 
     events = load_table(spark, sf_dir, "events")
-    scratch = _tmp.mkdtemp(prefix="fss-incr-distinct-")
-    try:
+    with _scratch("fss-incr-distinct-") as scratch:
         src, state = scratch + "/src", scratch + "/state"
         _append_in_thirds(
             events, "event_id", src,
@@ -3964,8 +3936,6 @@ def q_incremental_distinct(spark, sf_dir):
             .orderBy("event_type")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 INCREMENTAL_DISTINCT_SQL = """
@@ -3987,9 +3957,6 @@ def q_incremental_heavy_hitters(spark, sf_dir):
     the fold, so the EXACT hitters (full group-by — the oracle) must
     all appear among the candidates: ``covered`` asserts it in-row.
     The middle refresh runs twice to prove the exactly-once token."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import refresh_heavy_hitters
     from feature_store_spark.sources.delta import DeltaTable
 
@@ -3998,8 +3965,7 @@ def q_incremental_heavy_hitters(spark, sf_dir):
         "event_type",
         (F.col("user_id") % 13).cast("string").alias("item"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-incr-hh-")
-    try:
+    with _scratch("fss-incr-hh-") as scratch:
         src, state = scratch + "/src", scratch + "/state"
         _append_in_thirds(
             events, "event_id", src,
@@ -4031,8 +3997,6 @@ def q_incremental_heavy_hitters(spark, sf_dir):
             .orderBy("event_type", "item")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 INCREMENTAL_HH_SQL = """
@@ -4062,15 +4026,11 @@ def q_incremental_dedup(spark, sf_dir):
     to prove the txn token no-ops redelivery. The oracle is the FULL
     recompute over the whole corpus (the same SQL as minhash_pairs):
     accumulated deltas must equal it exactly."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import refresh_minhash_dedup
     from feature_store_spark.sources.delta import DeltaTable
 
     corpus = _mutated_corpus(spark, sf_dir, exact=False)
-    scratch = _tmp.mkdtemp(prefix="fss-incr-dedup-")
-    try:
+    with _scratch("fss-incr-dedup-") as scratch:
         src, sig = scratch + "/src", scratch + "/sig"
         pairs = scratch + "/pairs"
         _append_in_thirds(
@@ -4083,8 +4043,6 @@ def q_incremental_dedup(spark, sf_dir):
             "id_a", "id_b", _r6(F.col("est_jaccard")).alias("est_jaccard")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 def q_stream_incremental_dedup(spark, sf_dir):
@@ -4121,15 +4079,11 @@ def q_incremental_dedup_exact(spark, sf_dir):
     counts) maintained through the generic refresh_fold core from
     append deltas only. Three appends + one redelivered refresh; the
     oracle is the full groupBy recompute (same SQL as dedup_exact)."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import refresh_exact_dedup
     from feature_store_spark.sources.delta import DeltaTable
 
     corpus = _mutated_corpus(spark, sf_dir, exact=True)
-    scratch = _tmp.mkdtemp(prefix="fss-incr-exact-")
-    try:
+    with _scratch("fss-incr-exact-") as scratch:
         src, state = scratch + "/src", scratch + "/state"
         _append_in_thirds(
             corpus, "doc_id", src,
@@ -4138,8 +4092,6 @@ def q_incremental_dedup_exact(spark, sf_dir):
         return DeltaTable(spark, state).scan().select(
             "fingerprint", "keeper_id", "n_copies"
         ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 def q_incremental_ann(spark, sf_dir):
@@ -4151,9 +4103,6 @@ def q_incremental_ann(spark, sf_dir):
     a full rebuild row-for-row, ``ivfpq_search`` over the maintained
     state returns exactly the full-rebuild answer for a 5-query batch,
     and the redelivered refresh no-ops on its txn token."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import refresh_ivfpq_index
     from feature_store_spark.operators.similarity import (
         assign_clusters,
@@ -4176,8 +4125,7 @@ def q_incremental_ann(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-incr-ann-")
-    try:
+    with _scratch("fss-incr-ann-") as scratch:
         src, idx = scratch + "/src", scratch + "/idx"
         for i in range(2):
             delta_append(emb.filter(F.col("vec_id") % 2 == i), src)
@@ -4227,8 +4175,6 @@ def q_incremental_ann(spark, sf_dir):
             "n_indexed long, state_matches_full boolean, "
             "search_matches_full boolean, redelivery_noop boolean",
         ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 INCREMENTAL_ANN_SQL = """
@@ -4250,9 +4196,6 @@ def q_iceberg_scan(spark, sf_dir):
     range) and aggregate. The scan's file list is metadata-pruned
     before Spark ever opens a file; filters are re-applied row-level,
     so the aggregate equals the plain relational oracle on events."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import iceberg_append
 
@@ -4264,8 +4207,7 @@ def q_iceberg_scan(spark, sf_dir):
         F.col("ts").alias("event_time"),
     )
     cut_us = 1_705_276_800_000_000  # 2024-01-15T00:00:00Z in micros
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-")
-    try:
+    with _scratch("fss-iceberg-") as scratch:
         # two snapshots: pre-cut batch then post-cut batch, so the
         # day-transform pruning has manifests on both sides of the cut
         early = records.filter(F.unix_micros("event_time") < cut_us)
@@ -4286,8 +4228,6 @@ def q_iceberg_scan(spark, sf_dir):
             _r6(F.max("value_float")).alias("max_value"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 def q_iceberg_orc(spark, sf_dir):
@@ -4304,9 +4244,6 @@ def q_iceberg_orc(spark, sf_dir):
     CURRENT view: all post-cut rows plus pre-cut rows whose key never
     reappears. Oracle: the same anti-join semantics in plain SQL over
     events."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -4321,8 +4258,7 @@ def q_iceberg_orc(spark, sf_dir):
         F.col("ts").alias("event_time"),
     )
     cut_us = 1_705_276_800_000_000  # 2024-01-15T00:00:00Z in micros
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-orc-")
-    try:
+    with _scratch("fss-iceberg-orc-") as scratch:
         early = records.filter(F.unix_micros("event_time") < cut_us)
         late = records.filter(F.unix_micros("event_time") >= cut_us)
         iceberg_append(early, scratch, file_format="orc")
@@ -4343,8 +4279,6 @@ def q_iceberg_orc(spark, sf_dir):
             _r6(F.max("value_float")).alias("max_value"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_ORC_SQL = """
@@ -4385,9 +4319,6 @@ def q_iceberg_evolution(spark, sf_dir):
     resolver, which null-fills it — so the aggregate sees real
     weights for post-cut rows and NULLs for surviving pre-cut rows.
     Oracle: the same anti-join + NULL-weight semantics in SQL."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -4402,8 +4333,7 @@ def q_iceberg_evolution(spark, sf_dir):
         F.col("ts").alias("event_time"),
     )
     cut_us = 1_705_276_800_000_000  # 2024-01-15T00:00:00Z in micros
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-evo-")
-    try:
+    with _scratch("fss-iceberg-evo-") as scratch:
         early = records.filter(F.unix_micros("event_time") < cut_us)
         late = records.filter(
             F.unix_micros("event_time") >= cut_us
@@ -4421,8 +4351,6 @@ def q_iceberg_evolution(spark, sf_dir):
             _r6(F.sum("weight")).alias("sum_weight"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_EVOLUTION_SQL = """
@@ -4461,9 +4389,6 @@ def q_iceberg_refs(spark, sf_dir):
     rebuild), then aggregate ``scan(ref="v1")`` — the tagged snapshot
     by NAME, not by id. Oracle: the same aggregate over only the
     pre-cut events."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -4478,8 +4403,7 @@ def q_iceberg_refs(spark, sf_dir):
         F.col("ts").alias("event_time"),
     )
     cut_us = 1_705_276_800_000_000  # 2024-01-15T00:00:00Z in micros
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-refs-")
-    try:
+    with _scratch("fss-iceberg-refs-") as scratch:
         early = records.filter(F.unix_micros("event_time") < cut_us)
         late = records.filter(F.unix_micros("event_time") >= cut_us)
         iceberg_append(early, scratch)
@@ -4491,8 +4415,6 @@ def q_iceberg_refs(spark, sf_dir):
             _r6(F.sum("value_float")).alias("sum_value"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_REFS_SQL = """
@@ -4518,9 +4440,6 @@ def q_delta_uniform(spark, sf_dir):
     set is exactly the matching partition's, strictly fewer than the
     table's. The aggregate runs through the ICEBERG reader and must
     equal the relational oracle on orders."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import delta_append
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
@@ -4530,8 +4449,7 @@ def q_delta_uniform(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    scratch = _tmp.mkdtemp(prefix="fss-uniform-")
-    try:
+    with _scratch("fss-uniform-") as scratch:
         d = scratch + "/t"
         delta_append(
             orders.filter(F.col("o_orderkey") % 2 == 0), d,
@@ -4575,8 +4493,6 @@ def q_delta_uniform(spark, sf_dir):
         )
         out = agg.withColumn("files_pruned", F.lit(bool(files_pruned)))
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_UNIFORM_SQL = """
@@ -4600,9 +4516,6 @@ def q_delta_evolution(spark, sf_dir):
     for pre-evolution files instead of narrowing the frame (both
     hazards this round's enforcement/evolution work closed). Oracle:
     the plain union with NULL weights on the early side."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import DeltaTable, delta_append
 
     ev = load_table(spark, sf_dir, "events")
@@ -4613,8 +4526,7 @@ def q_delta_evolution(spark, sf_dir):
         F.col("ts").alias("event_time"),
     )
     cut_us = 1_705_276_800_000_000
-    scratch = _tmp.mkdtemp(prefix="fss-delta-evo-")
-    try:
+    with _scratch("fss-delta-evo-") as scratch:
         early = records.filter(F.unix_micros("event_time") < cut_us)
         late = records.filter(
             F.unix_micros("event_time") >= cut_us
@@ -4637,8 +4549,6 @@ def q_delta_evolution(spark, sf_dir):
             _r6(F.sum("weight")).alias("sum_weight"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_EVOLUTION_SQL = """
@@ -4672,16 +4582,12 @@ def q_delta_scan(spark, sf_dir):
     aggregate. File pruning happens at the metadata level before Spark
     opens a file; filters re-apply row-level, so the aggregate equals
     the plain relational oracle on orders."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import DeltaTable, delta_append
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-")
-    try:
+    with _scratch("fss-delta-") as scratch:
         # two commits split by key parity: both partitions span both
         # commits, so pruning must merge adds across the log replay
         delta_append(
@@ -4713,8 +4619,6 @@ def q_delta_scan(spark, sf_dir):
             _r6(F.max("o_totalprice")).alias("max_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_SCAN_SQL = """
@@ -4738,9 +4642,6 @@ def q_iceberg_upsert(spark, sf_dir):
     snapshot's own rows alive while killing every older version of
     each key, so the scan aggregate equals the relational oracle's
     latest-wins CASE expression."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -4761,8 +4662,7 @@ def q_iceberg_upsert(spark, sf_dir):
             "event_time",
         )
     )
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-upsert-")
-    try:
+    with _scratch("fss-iceberg-upsert-") as scratch:
         iceberg_append(base, scratch)
         upd = (
             ev.filter(F.col("user_id") % 7 == 0)
@@ -4787,8 +4687,6 @@ def q_iceberg_upsert(spark, sf_dir):
             _r6(F.max("value_float")).alias("max_val"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_UPSERT_SQL = """
@@ -4820,9 +4718,6 @@ def q_iceberg_rollback(spark, sf_dir):
     rows for its keys, never resurrecting s2/s3 effects (the
     CDF-after-rollback chain, mirroring Delta's
     MERGE→DELETE→RESTORE nets-to-zero test)."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -4849,8 +4744,7 @@ def q_iceberg_rollback(spark, sf_dir):
             "event_time",
         )
 
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-rollback-")
-    try:
+    with _scratch("fss-iceberg-rollback-") as scratch:
         s1 = iceberg_append(shaped(per_user), scratch)
         bad = shaped(
             per_user.filter(F.col("user_id") % 5 == 0).withColumn(
@@ -4913,8 +4807,6 @@ def q_iceberg_rollback(spark, sf_dir):
             F.lit(int(n_snapshots)).cast("long").alias("n_snapshots"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_ROLLBACK_SQL = """
@@ -4951,16 +4843,16 @@ def q_iceberg_bucket_prune(spark, sf_dir):
         iceberg_bucket,
     )
     from feature_store_spark.sources.iceberg_write import iceberg_append
-    import shutil as _sh
-    import tempfile as _tmp
 
     ev = load_table(spark, sf_dir, "events")
     feats = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("double").alias("n_events"),
         F.substring(F.max("event_type"), 1, 8).alias("cat"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-bucket-")
-    try:
+    with (
+        _scratch("fss-iceberg-bucket-") as scratch,
+        _scratch("fss-iceberg-bucket-str-") as scratch_s,
+    ):
         iceberg_append(
             feats,
             scratch,
@@ -4987,7 +4879,6 @@ def q_iceberg_bucket_prune(spark, sf_dir):
             .alias("uid"),
             "n_events",
         )
-        scratch_s = scratch + "_str"
         iceberg_append(
             feats_s, scratch_s, partition_spec=[("uid", "bucket[16]")]
         )
@@ -5018,9 +4909,6 @@ def q_iceberg_bucket_prune(spark, sf_dir):
             .withColumn("str_bucket_ok", F.lit(bool(str_bucket_ok)))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
-        _sh.rmtree(scratch + "_str", ignore_errors=True)
 
 
 ICEBERG_BUCKET_PRUNE_SQL = """
@@ -5051,9 +4939,6 @@ def q_iceberg_changes(spark, sf_dir):
     Candidates are file-bounded (positional targets from the delete
     parquet, equality candidates pruned by key bounds) — never a
     full-table diff."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -5077,8 +4962,7 @@ def q_iceberg_changes(spark, sf_dir):
             "event_time",
         )
 
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-changes-")
-    try:
+    with _scratch("fss-iceberg-changes-") as scratch:
         s1 = iceberg_append(shaped(per_user), scratch)
         upd = shaped(
             per_user.filter(F.col("user_id") % 7 == 0).withColumn(
@@ -5128,8 +5012,6 @@ def q_iceberg_changes(spark, sf_dir):
             F.lit(int(n_final)).cast("long").alias("n_final"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_CHANGES_SQL = """
@@ -5178,9 +5060,6 @@ def q_iceberg_merge_conditional(spark, sf_dir):
     ``changes()`` over the merge snapshot must read exactly
     updated+deleted deletes and updated+inserted inserts, all in one
     snapshot (``one_snapshot``)."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -5207,8 +5086,7 @@ def q_iceberg_merge_conditional(spark, sf_dir):
         )
 
     base = shaped(per_user, uid.cast("string"), F.col("v"), "cold")
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-merge-")
-    try:
+    with _scratch("fss-iceberg-merge-") as scratch:
         s1 = iceberg_append(base, scratch)
         boosts = shaped(
             per_user.filter(uid % 7 == 0),
@@ -5315,8 +5193,6 @@ def q_iceberg_merge_conditional(spark, sf_dir):
             F.lit(bool(one_snapshot)).alias("one_snapshot"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_MERGE_CONDITIONAL_SQL = """
@@ -5374,9 +5250,6 @@ def q_iceberg_merge_sync(spark, sf_dir):
     per-arm counts, and the changelog audit over the commit (reads
     with the CURRENT schema, so pre-evolution preimages carry
     sync_tag NULL)."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -5397,8 +5270,7 @@ def q_iceberg_merge_sync(spark, sf_dir):
         F.col("v").alias("value_float"),
         "event_time",
     )
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-sync-")
-    try:
+    with _scratch("fss-iceberg-sync-") as scratch:
         s1 = iceberg_append(base, scratch)
         snap = per_user.filter(uid % 2 == 0).select(
             F.lit("user").alias("entity_type"),
@@ -5486,8 +5358,6 @@ def q_iceberg_merge_sync(spark, sf_dir):
             .alias("cl_inserts"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_MERGE_SYNC_SQL = """
@@ -5538,7 +5408,6 @@ def q_stream_iceberg_merge(spark, sf_dir):
     ``txn_contiguous`` pin that each batch landed as its own
     txn-marked snapshot."""
     import os as _os
-    import shutil as _sh
 
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
@@ -5584,8 +5453,7 @@ def q_stream_iceberg_merge(spark, sf_dir):
             )
         )
     )
-    d = _stream_tmpdir("fss_stream_iceberg_merge_")
-    try:
+    with _scratch("fss_stream_iceberg_merge_") as d:
         _os.makedirs(f"{d}/in", exist_ok=True)
         for i, frame in enumerate((base, b1)):
             frame.coalesce(1).write.mode("overwrite").parquet(
@@ -5653,8 +5521,6 @@ def q_stream_iceberg_merge(spark, sf_dir):
             F.lit(hwm == n_snaps - 1).alias("txn_contiguous"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
 
 
 STREAM_ICEBERG_MERGE_SQL = """
@@ -5698,8 +5564,6 @@ def q_iceberg_temporal_bucket(spark, sf_dir):
     discipline, r12), and the surviving rows grade against the
     relational oracle."""
     import datetime as _dt
-    import shutil as _sh
-    import tempfile as _tmp
 
     from feature_store_spark.sources.iceberg import (
         IcebergTable,
@@ -5721,9 +5585,10 @@ def q_iceberg_temporal_bucket(spark, sf_dir):
     per_hour = ev.groupBy(
         F.timestamp_micros(hour_us).alias("event_hour")
     ).agg(F.count(F.lit(1)).cast("double").alias("n"))
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-dbkt-")
-    scratch_ts = scratch + "_ts"
-    try:
+    with (
+        _scratch("fss-iceberg-dbkt-") as scratch,
+        _scratch("fss-iceberg-dbkt-ts-") as scratch_ts,
+    ):
         iceberg_append(
             per_day, scratch, partition_spec=[("event_date", "bucket[8]")]
         )
@@ -5772,9 +5637,6 @@ def q_iceberg_temporal_bucket(spark, sf_dir):
             F.lit(bool(ts_bucket_ok)).alias("ts_bucket_ok"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
-        _sh.rmtree(scratch_ts, ignore_errors=True)
 
 
 ICEBERG_TEMPORAL_BUCKET_SQL = """
@@ -5829,8 +5691,6 @@ def q_iceberg_partition_evolution(spark, sf_dir):
     Values grade against the relational oracle over the SAME rows."""
     import json as _json
     import os as _os
-    import shutil as _sh
-    import tempfile as _tmp
 
     from feature_store_spark.sources.iceberg import (
         IcebergTable,
@@ -5847,8 +5707,7 @@ def q_iceberg_partition_evolution(spark, sf_dir):
     dd = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
     mn, mx = ev.agg(F.min(dd), F.max(dd)).first()
     cut = (int(mn) + int(mx) + 1) // 2
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-pevo-")
-    try:
+    with _scratch("fss-iceberg-pevo-") as scratch:
         iceberg_append(
             ev.filter(dd < cut),
             scratch,
@@ -5931,8 +5790,6 @@ def q_iceberg_partition_evolution(spark, sf_dir):
             F.lit(bool(migrate_ok)).alias("migrate_ok"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_PARTITION_EVOLUTION_SQL = """
@@ -5969,9 +5826,6 @@ def q_iceberg_time_prune(spark, sf_dir):
     spec-encoded months-since-epoch directory at or after the cut —
     i.e. a time-range query on a 100 TB event log reads only its
     months. Values grade against the relational oracle."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import iceberg_append
 
@@ -5989,8 +5843,7 @@ def q_iceberg_time_prune(spark, sf_dir):
     )
     cut_us = 1_709_251_200_000_000  # 2024-03-01T00:00:00Z
     cut_month = (2024 - 1970) * 12 + (3 - 1)  # spec months-since-epoch
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-time-")
-    try:
+    with _scratch("fss-iceberg-time-") as scratch:
         iceberg_append(
             records, scratch, partition_spec=[("event_time", "month")]
         )
@@ -6014,8 +5867,6 @@ def q_iceberg_time_prune(spark, sf_dir):
             .withColumn("months_ok", F.lit(bool(months_ok)))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_TIME_PRUNE_SQL = """
@@ -6039,9 +5890,6 @@ def q_iceberg_cluster_rewrite(spark, sf_dir):
     oracle) AND that the clustering bought real file pruning
     (``pruned_after`` strictly below the file count) — maintenance
     the 100 TB user runs nightly."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -6054,8 +5902,7 @@ def q_iceberg_cluster_rewrite(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("double").alias("n_events"))
         .repartition(8)  # scrambled: wide bounds in every file
     )
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-cluster-")
-    try:
+    with _scratch("fss-iceberg-cluster-") as scratch:
         iceberg_append(
             feats, scratch, partition_spec=[("user_id", "bucket[4]")]
         )
@@ -6086,8 +5933,6 @@ def q_iceberg_cluster_rewrite(spark, sf_dir):
             .withColumn("prune_ok", F.lit(bool(0 < pruned < total)))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_CLUSTER_REWRITE_SQL = """
@@ -6114,9 +5959,6 @@ def q_delta_upsert(spark, sf_dir):
     grades all three legs: the surviving key count + value mass
     (latest-wins), the commit version (exactly one MERGE commit), and
     the DV cardinality (``n_replaced`` = target rows marked dead)."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -6131,8 +5973,7 @@ def q_delta_upsert(spark, sf_dir):
         F.col("user_id").cast("string").alias("entity_id"),
         F.col("v").alias("value_float"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-upsert-")
-    try:
+    with _scratch("fss-delta-upsert-") as scratch:
         delta_append(base, scratch)
         upd = per_user.filter(F.col("user_id") % 7 == 0).select(
             F.col("user_id").cast("string").alias("entity_id"),
@@ -6155,8 +5996,6 @@ def q_delta_upsert(spark, sf_dir):
             F.lit(int(n_replaced)).cast("long").alias("n_replaced"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_UPSERT_SQL = """
@@ -6189,7 +6028,6 @@ def q_stream_delta_upsert(spark, sf_dir):
     ``txn_contiguous`` pin that the merge really ran as its own
     exactly-once commit."""
     import os as _os
-    import shutil as _sh
 
     from feature_store_spark.sources.delta import (
         DeltaTable,
@@ -6210,8 +6048,7 @@ def q_stream_delta_upsert(spark, sf_dir):
         (F.col("v") * 2).alias("value_float"),
         F.lit(2).alias("seq"),
     )
-    d = _stream_tmpdir("fss_stream_delta_upsert_")
-    try:
+    with _scratch("fss_stream_delta_upsert_") as d:
         base.coalesce(1).write.mode("overwrite").parquet(f"{d}/b0")
         upd.coalesce(1).write.mode("overwrite").parquet(f"{d}/b1")
         _os.makedirs(f"{d}/in", exist_ok=True)
@@ -6261,8 +6098,6 @@ def q_stream_delta_upsert(spark, sf_dir):
             F.lit(hwm == n_commits - 1).alias("txn_contiguous"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
 
 
 STREAM_DELTA_UPSERT_SQL = """
@@ -6289,7 +6124,6 @@ def q_stream_delta_merge(spark, sf_dir):
     equal the relational oracle; ``multi_commit`` / ``txn_contiguous``
     pin that each batch really landed as its own txn-marked commit."""
     import os as _os
-    import shutil as _sh
 
     from feature_store_spark.sources.delta import (
         DeltaTable,
@@ -6329,8 +6163,7 @@ def q_stream_delta_merge(spark, sf_dir):
             )
         )
     )
-    d = _stream_tmpdir("fss_stream_delta_merge_")
-    try:
+    with _scratch("fss_stream_delta_merge_") as d:
         _os.makedirs(f"{d}/in", exist_ok=True)
         for i, frame in enumerate((base, b1)):
             frame.coalesce(1).write.mode("overwrite").parquet(
@@ -6396,8 +6229,6 @@ def q_stream_delta_merge(spark, sf_dir):
             F.lit(hwm == n_commits - 1).alias("txn_contiguous"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
 
 
 STREAM_DELTA_MERGE_SQL = """
@@ -6434,9 +6265,6 @@ def q_delta_cdc(spark, sf_dir):
     inserts (``new-<id>`` for %13) — the Debezium sink shape. Graded
     against the relational latest-wins-minus-deleted oracle, plus
     the commit version (exactly one) and the DV kill count."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -6451,8 +6279,7 @@ def q_delta_cdc(spark, sf_dir):
         F.col("user_id").cast("string").alias("entity_id"),
         F.col("v").alias("value_float"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-cdc-")
-    try:
+    with _scratch("fss-delta-cdc-") as scratch:
         delta_append(base, scratch)
         upd = per_user.filter(F.col("user_id") % 7 == 0).select(
             F.col("user_id").cast("string").alias("entity_id"),
@@ -6484,8 +6311,6 @@ def q_delta_cdc(spark, sf_dir):
             F.lit(int(n_killed)).cast("long").alias("n_killed"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_CDC_SQL = """
@@ -6522,9 +6347,6 @@ def q_delta_merge_conditional(spark, sf_dir):
     base row still carries the target's tier), and the CDF audit
     (delta_changes over the merge commit must read exactly
     updated+deleted deletes and updated+inserted inserts)."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -6541,8 +6363,7 @@ def q_delta_merge_conditional(spark, sf_dir):
         F.col("v").alias("value_float"),
         F.lit("cold").alias("tier"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-merge-")
-    try:
+    with _scratch("fss-delta-merge-") as scratch:
         delta_append(base, scratch)
         uid = F.col("user_id")
         boosts = per_user.filter(uid % 7 == 0).select(
@@ -6612,8 +6433,6 @@ def q_delta_merge_conditional(spark, sf_dir):
             .alias("cdf_inserts"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_MERGE_CONDITIONAL_SQL = """
@@ -6669,9 +6488,6 @@ def q_delta_merge_sync(spark, sf_dir):
     value mass, the orphan/snap tag counts (proving the partial
     by-source SET and the evolution NULL-backfill), the per-arm
     counts, and the CDF audit over the commit."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -6687,8 +6503,7 @@ def q_delta_merge_sync(spark, sf_dir):
         F.col("user_id").cast("string").alias("entity_id"),
         F.col("v").alias("value_float"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-sync-")
-    try:
+    with _scratch("fss-delta-sync-") as scratch:
         delta_append(base, scratch)
         snap = per_user.filter(F.col("user_id") % 2 == 0).select(
             F.col("user_id").cast("string").alias("entity_id"),
@@ -6737,8 +6552,6 @@ def q_delta_merge_sync(spark, sf_dir):
             .alias("cdf_inserts"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_MERGE_SYNC_SQL = """
@@ -6791,8 +6604,6 @@ def q_delta_maintenance(spark, sf_dir):
     time travel to the pre-vacuum version now refuses loudly
     (``tt_refuses``) instead of returning wrong rows."""
     import os as _os
-    import shutil as _sh
-    import tempfile as _tmp
 
     from feature_store_spark.sources.delta import (
         DeltaTable,
@@ -6811,8 +6622,7 @@ def q_delta_maintenance(spark, sf_dir):
         F.col("user_id").cast("string").alias("entity_id"),
         F.col("v").alias("value_float"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-maint-")
-    try:
+    with _scratch("fss-delta-maint-") as scratch:
         # many small files: optimize has real work to do
         delta_append(base.repartition(8), scratch)
         upd = per_user.filter(F.col("user_id") % 7 == 0).select(
@@ -6851,8 +6661,6 @@ def q_delta_maintenance(spark, sf_dir):
             F.lit(bool(tt_refuses)).alias("tt_refuses"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_MAINTENANCE_SQL = """
@@ -6879,9 +6687,6 @@ def q_iceberg_expire(spark, sf_dir):
     age (the spec's ref-protection rule) and still time-travels,
     the untagged middle snapshot is gone from the log, and real
     files were reclaimed."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -6896,8 +6701,7 @@ def q_iceberg_expire(spark, sf_dir):
         F.col("value").cast("double").alias("value_float"),
         F.col("ts").alias("event_time"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-expire-")
-    try:
+    with _scratch("fss-iceberg-expire-") as scratch:
         thirds = [
             records.filter(F.col("event_id") % 3 == i) for i in range(3)
         ]
@@ -6943,8 +6747,6 @@ def q_iceberg_expire(spark, sf_dir):
             .alias("expired_some"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_EXPIRE_SQL = """
@@ -6966,9 +6768,6 @@ def q_delta_restore(spark, sf_dir):
     graded row proves the restored scan equals the pre-merge state
     (value mass + key count vs the plain relational oracle) while
     the in-between version stays time-travelable."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -6984,8 +6783,7 @@ def q_delta_restore(spark, sf_dir):
         F.col("user_id").cast("string").alias("entity_id"),
         F.col("v").alias("value_float"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-restore-")
-    try:
+    with _scratch("fss-delta-restore-") as scratch:
         delta_append(base, scratch)
         bad = per_user.filter(F.col("user_id") % 5 == 0).select(
             F.col("user_id").cast("string").alias("entity_id"),
@@ -7008,8 +6806,6 @@ def q_delta_restore(spark, sf_dir):
             F.lit(int(mid_bad)).cast("long").alias("mid_bad_rows"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_RESTORE_SQL = """
@@ -7036,9 +6832,6 @@ def q_delta_optimize(spark, sf_dir):
     aggregate still equals the relational oracle with the delete
     folded into WHERE. File count strictly drops and both-dimension
     pruning is asserted in tests/test_delta.py::TestOptimize."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -7049,8 +6842,7 @@ def q_delta_optimize(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-opt-")
-    try:
+    with _scratch("fss-delta-opt-") as scratch:
         delta_append(orders.repartition(16), scratch)
         delta_delete_where(
             spark, scratch, [("o_orderstatus", "=", "P")]
@@ -7071,8 +6863,6 @@ def q_delta_optimize(spark, sf_dir):
             F.countDistinct("o_custkey").alias("n_cust"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_OPTIMIZE_SQL = """
@@ -7094,9 +6884,6 @@ def q_delta_changes(spark, sf_dir):
     dataChange:true actions only, DV deltas resolved to the
     newly-dead ordinals. Aggregated per change type against the
     relational oracle."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         delta_append,
         delta_changes,
@@ -7106,8 +6893,7 @@ def q_delta_changes(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-cdf-")
-    try:
+    with _scratch("fss-delta-cdf-") as scratch:
         delta_append(
             orders.filter(F.col("o_orderkey") % 2 == 0), scratch
         )  # v0
@@ -7126,8 +6912,6 @@ def q_delta_changes(spark, sf_dir):
             ).alias("sum_price"),
         ).withColumnRenamed("_change_type", "change_type")
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_CHANGES_SQL = """
@@ -7156,9 +6940,6 @@ def q_delta_dv_scan(spark, sf_dir):
     anti-join on (file, _metadata.row_index) must drop exactly the
     deleted rows, so the aggregate equals the relational oracle with
     the delete folded into the WHERE clause."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import (
         DeltaTable,
         delta_append,
@@ -7168,8 +6949,7 @@ def q_delta_dv_scan(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-dv-")
-    try:
+    with _scratch("fss-delta-dv-") as scratch:
         delta_append(orders, scratch, partition_cols=["o_orderstatus"])
         delta_delete_where(
             spark, scratch, [("o_orderpriority", "=", "1-URGENT")]
@@ -7190,8 +6970,6 @@ def q_delta_dv_scan(spark, sf_dir):
             _r6(F.max("o_totalprice")).alias("max_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_DV_SCAN_SQL = """
@@ -7224,8 +7002,6 @@ def q_delta_generated(spark, sf_dir):
     against the expression; totals grade against the relational
     oracle computing the same generation arithmetic."""
     import json as _json
-    import shutil as _sh
-    import tempfile as _tmp
 
     from feature_store_spark.sources.delta import (
         DeltaTable,
@@ -7247,9 +7023,8 @@ def q_delta_generated(spark, sf_dir):
         },
     }
     props = {"delta.constraints.nonneg_id": "event_id >= 0"}
-    scratch = _tmp.mkdtemp(prefix="fss-delta-gen-")
-    d = scratch + "/t"
-    try:
+    with _scratch("fss-delta-gen-") as scratch:
+        d = scratch + "/t"
         b0 = ev.filter(F.col("event_id") % 2 == 0).withColumn(
             "value2", F.expr("value * CAST(2 AS DOUBLE)")
         )
@@ -7323,8 +7098,6 @@ def q_delta_generated(spark, sf_dir):
             F.lit(bool(check_refused)).alias("check_refused"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_GENERATED_SQL = """
@@ -7362,8 +7135,6 @@ def q_delta_identity(spark, sf_dir):
     and the upsert refusal (re-landing a key would ambiguously
     reallocate). Totals grade against the relational oracle."""
     import json as _json
-    import shutil as _sh
-    import tempfile as _tmp
 
     from feature_store_spark.sources.delta import (
         DeltaTable,
@@ -7379,9 +7150,8 @@ def q_delta_identity(spark, sf_dir):
             "delta.identity.allowExplicitInsert": True,
         }
     }
-    scratch = _tmp.mkdtemp(prefix="fss-delta-ident-")
-    d = scratch + "/t"
-    try:
+    with _scratch("fss-delta-ident-") as scratch:
+        d = scratch + "/t"
         seed = local_rows_df(
             spark,
             [(1000, 0, 0.0)],
@@ -7424,8 +7194,6 @@ def q_delta_identity(spark, sf_dir):
             F.lit(bool(upsert_refused)).alias("upsert_refused"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_IDENTITY_SQL = """
@@ -7449,16 +7217,12 @@ def q_delta_column_mapping(spark, sf_dir):
     then scan with logical-name filters. Pruning translates through
     the mapping and the frame comes back with LOGICAL columns, so the
     aggregate equals the plain relational oracle on customer."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.delta import DeltaTable, delta_append
 
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal", "c_nationkey"
     )
-    scratch = _tmp.mkdtemp(prefix="fss-delta-map-")
-    try:
+    with _scratch("fss-delta-map-") as scratch:
         delta_append(
             customer,
             scratch,
@@ -7481,8 +7245,6 @@ def q_delta_column_mapping(spark, sf_dir):
             F.countDistinct("c_nationkey").alias("n_nations"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 DELTA_COLUMN_MAPPING_SQL = """
@@ -7506,9 +7268,6 @@ def q_iceberg_mor_delete(spark, sf_dir):
     the delete manifest), then scan the post-delete snapshot with a
     partition predicate. The oracle is the equivalent relational
     filter on events."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append,
@@ -7522,8 +7281,7 @@ def q_iceberg_mor_delete(spark, sf_dir):
         F.col("value").alias("value_float"),
         F.col("ts").alias("event_time"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-iceberg-mor-")
-    try:
+    with _scratch("fss-iceberg-mor-") as scratch:
         iceberg_append(records, scratch)
         iceberg_delete_where(
             spark, scratch, [("value_float", "<", 50.0)]
@@ -7538,8 +7296,6 @@ def q_iceberg_mor_delete(spark, sf_dir):
             _r6(F.min("value_float")).alias("min_value"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(scratch, ignore_errors=True)
 
 
 ICEBERG_MOR_DELETE_SQL = """
@@ -8146,17 +7902,17 @@ def q_stream_dedup(spark, sf_dir):
     first-seen-wins dedup a continuous ingestion pipeline runs — and
     must produce the batch dedup answer."""
     corpus = _mutated_corpus(spark, sf_dir, exact=True)
-    d = _stream_tmpdir("fss_stream_dedup_")
-    corpus.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(f"{d}/in")
-    agg = (
-        stream.select(
-            F.md5(F.lower(F.trim("text"))).alias("fingerprint"), F.col("doc_id")
+    with _scratch("fss_stream_dedup_") as d:
+        corpus.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = spark.readStream.schema("doc_id long, text string").parquet(f"{d}/in")
+        agg = (
+            stream.select(
+                F.md5(F.lower(F.trim("text"))).alias("fingerprint"), F.col("doc_id")
+            )
+            .groupBy("fingerprint")
+            .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
         )
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
-    return _run_stream_to_memory(spark, agg, "fss_stream_dedup", d, "complete")
+        return _run_stream_to_memory(spark, agg, "fss_stream_dedup", d, "complete")
 
 
 # same answer as the batch exact dedup
@@ -8175,25 +7931,25 @@ def q_stream_window_stats(spark, sf_dir):
     eav = _events_eav(spark, sf_dir).select(
         "entity_id", "feature_name", "value_float", "event_time"
     )
-    d = _stream_tmpdir("fss_stream_wstats_")
-    eav.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = spark.readStream.schema(
-        "entity_id long, feature_name string, value_float double, "
-        "event_time timestamp"
-    ).parquet(f"{d}/in")
-    out = windowed_stats_stream(
-        stream, window="1 hour", watermark="2 hours"
-    )
-    return _run_stream_to_memory(
-        spark, out, "fss_stream_wstats", d, "complete"
-    ).select(
-        F.unix_micros(F.col("window.start")).alias("window_start_us"),
-        "feature_name",
-        F.col("count").cast("long").alias("n"),
-        _r6(F.col("mean")).alias("mean"),
-        _r6(F.col("min_value")).alias("min_value"),
-        _r6(F.col("max_value")).alias("max_value"),
-    )
+    with _scratch("fss_stream_wstats_") as d:
+        eav.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = spark.readStream.schema(
+            "entity_id long, feature_name string, value_float double, "
+            "event_time timestamp"
+        ).parquet(f"{d}/in")
+        out = windowed_stats_stream(
+            stream, window="1 hour", watermark="2 hours"
+        )
+        return _run_stream_to_memory(
+            spark, out, "fss_stream_wstats", d, "complete"
+        ).select(
+            F.unix_micros(F.col("window.start")).alias("window_start_us"),
+            "feature_name",
+            F.col("count").cast("long").alias("n"),
+            _r6(F.col("mean")).alias("mean"),
+            _r6(F.col("min_value")).alias("min_value"),
+            _r6(F.col("max_value")).alias("max_value"),
+        )
 
 
 STREAM_WINDOW_STATS_SQL = """
@@ -8223,18 +7979,18 @@ def q_stream_enrich(spark, sf_dir):
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
     )
-    d = _stream_tmpdir("fss_stream_enrich_")
-    ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = spark.readStream.schema(
-        "event_id long, user_id long, event_type string, value double"
-    ).parquet(f"{d}/in")
-    out = enrich_stream(stream, cust, ["user_id"], how="left")
-    return _run_stream_to_memory(
-        spark, out, "fss_stream_enrich", d, "append"
-    ).select(
-        "event_id", "user_id", "event_type", "value",
-        "c_mktsegment", F.col("c_nationkey").cast("int").alias("c_nationkey"),
-    )
+    with _scratch("fss_stream_enrich_") as d:
+        ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = spark.readStream.schema(
+            "event_id long, user_id long, event_type string, value double"
+        ).parquet(f"{d}/in")
+        out = enrich_stream(stream, cust, ["user_id"], how="left")
+        return _run_stream_to_memory(
+            spark, out, "fss_stream_enrich", d, "append"
+        ).select(
+            "event_id", "user_id", "event_type", "value",
+            "c_mktsegment", F.col("c_nationkey").cast("int").alias("c_nationkey"),
+        )
 
 
 STREAM_ENRICH_SQL = """
@@ -9508,20 +9264,20 @@ def q_stream_decay(spark, sf_dir):
         "user_id", "event_type", "ts", "value"
     )
     ref_ts = ev.agg(F.max("ts")).first()[0]
-    d = _stream_tmpdir("fss_stream_decay_")
-    ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = spark.readStream.schema(
-        "user_id long, event_type string, ts timestamp, value double"
-    ).parquet(f"{d}/in")
-    agg = time_decayed_sum(
-        stream,
-        ["user_id", "event_type"],
-        "ts",
-        "value",
-        half_life="7 days",
-        ref_ts=ref_ts,
-    )
-    return _run_stream_to_memory(spark, agg, "fss_stream_decay", d, "complete")
+    with _scratch("fss_stream_decay_") as d:
+        ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = spark.readStream.schema(
+            "user_id long, event_type string, ts timestamp, value double"
+        ).parquet(f"{d}/in")
+        agg = time_decayed_sum(
+            stream,
+            ["user_id", "event_type"],
+            "ts",
+            "value",
+            half_life="7 days",
+            ref_ts=ref_ts,
+        )
+        return _run_stream_to_memory(spark, agg, "fss_stream_decay", d, "complete")
 
 
 # identical answer to the batch decayed-counter query
@@ -9673,26 +9429,26 @@ def q_stream_attribution(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
-    d = _stream_tmpdir("fss_stream_attr_")
-    ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
-    schema = "user_id long, event_type string, ts timestamp, event_id long"
-    views = (
-        spark.readStream.schema(schema).parquet(f"{d}/in")
-        .filter(F.col("event_type") == "view")
-    )
-    purchases = (
-        spark.readStream.schema(schema).parquet(f"{d}/in")
-        .filter(F.col("event_type") == "purchase")
-    )
-    out = attribute_stream(views, purchases, window="1 hour")
-    res = _run_stream_to_memory(spark, out, "fss_stream_attr", d, "append")
-    return res.select(
-        "entity_id",
-        "exposure_id",
-        "conversion_id",
-        F.unix_micros("exposure_ts").alias("exposure_us"),
-        F.unix_micros("conversion_ts").alias("conversion_us"),
-    )
+    with _scratch("fss_stream_attr_") as d:
+        ev.coalesce(4).write.mode("overwrite").parquet(f"{d}/in")
+        schema = "user_id long, event_type string, ts timestamp, event_id long"
+        views = (
+            spark.readStream.schema(schema).parquet(f"{d}/in")
+            .filter(F.col("event_type") == "view")
+        )
+        purchases = (
+            spark.readStream.schema(schema).parquet(f"{d}/in")
+            .filter(F.col("event_type") == "purchase")
+        )
+        out = attribute_stream(views, purchases, window="1 hour")
+        res = _run_stream_to_memory(spark, out, "fss_stream_attr", d, "append")
+        return res.select(
+            "entity_id",
+            "exposure_id",
+            "conversion_id",
+            F.unix_micros("exposure_ts").alias("exposure_us"),
+            F.unix_micros("conversion_ts").alias("conversion_us"),
+        )
 
 
 STREAM_ATTRIBUTION_SQL = """
@@ -9839,8 +9595,6 @@ def q_stream_iceberg_sink(spark, sf_dir):
     both hash-mismatch the DISTINCT-users oracle. ``multi_commit`` /
     ``txn_contiguous`` pin that >1 snapshot happened and the summary
     marks cover batches 0..n-1."""
-    import shutil as _sh
-
     from feature_store_spark.sources.iceberg import IcebergTable
     from feature_store_spark.sources.iceberg_write import (
         iceberg_append_sink,
@@ -9848,30 +9602,29 @@ def q_stream_iceberg_sink(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    d = _stream_tmpdir("fss_stream_iceberg_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/in")
-    )
-    table = f"{d}/table"
-    body = iceberg_append_sink(table, "ev-upsert",
-                               upsert_keys=["entity_id"])
-
-    def sink(batch_df, batch_id):
-        # one version per key per batch (equality deletes only kill
-        # OLDER files); the value is a function of the key so the
-        # final table is deterministic whatever the batch split
-        records = batch_df.groupBy("user_id").count().select(
-            F.lit("user").alias("entity_type"),
-            F.col("user_id").cast("string").alias("entity_id"),
-            (F.col("user_id") * 2.0).alias("value_float"),
-            F.timestamp_seconds(F.lit(100)).alias("event_time"),
+    with _scratch("fss_stream_iceberg_") as d:
+        ev.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
+        stream = (
+            spark.readStream.schema("user_id long, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{d}/in")
         )
-        body(records, batch_id)
+        table = f"{d}/table"
+        body = iceberg_append_sink(table, "ev-upsert",
+                                   upsert_keys=["entity_id"])
 
-    try:
+        def sink(batch_df, batch_id):
+            # one version per key per batch (equality deletes only kill
+            # OLDER files); the value is a function of the key so the
+            # final table is deterministic whatever the batch split
+            records = batch_df.groupBy("user_id").count().select(
+                F.lit("user").alias("entity_type"),
+                F.col("user_id").cast("string").alias("entity_id"),
+                (F.col("user_id") * 2.0).alias("value_float"),
+                F.timestamp_seconds(F.lit(100)).alias("event_time"),
+            )
+            body(records, batch_id)
+
         q = (
             stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", f"{d}/ckpt")
@@ -9893,8 +9646,6 @@ def q_stream_iceberg_sink(spark, sf_dir):
             F.lit(hwm == n_snaps - 1).alias("txn_contiguous"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
 
 
 STREAM_ICEBERG_SINK_SQL = """
@@ -9986,9 +9737,6 @@ def q_incremental_drift(spark, sf_dir):
     |features|·bins-row state. The oracle is the full-recompute PSI
     over the whole split — the maintained monitor must equal it
     exactly."""
-    import shutil as _sh
-    import tempfile as _tmp
-
     from feature_store_spark.incremental import refresh_drift_counts
     from feature_store_spark.sources.delta import DeltaTable
     from feature_store_spark.stats import (
@@ -10020,23 +9768,22 @@ def q_incremental_drift(spark, sf_dir):
         "l_quantity",
         (F.col("l_extendedprice") * 1.1).alias("l_extendedprice"),
     )
-    scratch = _tmp.mkdtemp(prefix="fss-incr-drift-")
-    try:
-        cfg = drift_monitor_config(
-            ref, ["l_quantity", "l_extendedprice"], bins=10
-        )
-        src, state = scratch + "/src", scratch + "/state"
-        _append_in_thirds(
-            cur, "l_orderkey", src,
-            lambda: refresh_drift_counts(spark, state, src, cfg["edges"]),
-        )
-        out = psi_from_counts(
-            spark, cfg, DeltaTable(spark, state).scan()
-        )
-        return out.coalesce(1).localCheckpoint(eager=True)
-    finally:
-        base.unpersist()
-        _sh.rmtree(scratch, ignore_errors=True)
+    with _scratch("fss-incr-drift-") as scratch:
+        try:
+            cfg = drift_monitor_config(
+                ref, ["l_quantity", "l_extendedprice"], bins=10
+            )
+            src, state = scratch + "/src", scratch + "/state"
+            _append_in_thirds(
+                cur, "l_orderkey", src,
+                lambda: refresh_drift_counts(spark, state, src, cfg["edges"]),
+            )
+            out = psi_from_counts(
+                spark, cfg, DeltaTable(spark, state).scan()
+            )
+            return out.coalesce(1).localCheckpoint(eager=True)
+        finally:
+            base.unpersist()
 
 
 def q_stream_incremental_distinct(spark, sf_dir):
@@ -10790,36 +10537,11 @@ FROM b CROSS JOIN t
 """
 
 
+# The registry, in the order the driver reads it. The driver grades a
+# prefix of this order against DuckDB, so the order is part of the
+# contract; tests/test_queries_oracle.py pins it with each entry's
+# callable and oracle SQL.
 QUERIES: dict[str, tuple] = {
-    # --- ROUND-6 DRIVER WINDOW (first 50 entries) -------------------
-    # Changed-path-first rotation: the six NEW round-6 queries lead,
-    # then every query whose code path changed this round - the
-    # calibration/ece/corr_matrix/target_encoding perf set (VERDICT
-    # r5 #7), the single-eval metric guards (auc_roc/auc_pr/logloss),
-    # the fused text/curation pass, trainer NULL guards
-    # (mslr/criteo/fraud/tree_split), the serving TTL tier, and the
-    # manifest-layer queries (read_appended landed in manifest.py).
-    # Everything displaced past slot 50 is unchanged and already has
-    # a green driver row from r1-r5 (union coverage stays complete;
-    # all also pass the identical DuckDB oracle in pytest/selfcheck).
-    "iceberg_refs": (q_iceberg_refs, ICEBERG_REFS_SQL),
-    "delta_uniform": (q_delta_uniform, DELTA_UNIFORM_SQL),
-    "iceberg_scan": (q_iceberg_scan, ICEBERG_SCAN_SQL),
-    "iceberg_orc": (q_iceberg_orc, ICEBERG_ORC_SQL),
-    "iceberg_evolution": (q_iceberg_evolution, ICEBERG_EVOLUTION_SQL),
-    "iceberg_mor_delete": (q_iceberg_mor_delete, ICEBERG_MOR_DELETE_SQL),
-    "delta_scan": (q_delta_scan, DELTA_SCAN_SQL),
-    "delta_evolution": (q_delta_evolution, DELTA_EVOLUTION_SQL),
-    "delta_dv_scan": (q_delta_dv_scan, DELTA_DV_SCAN_SQL),
-    "delta_changes": (q_delta_changes, DELTA_CHANGES_SQL),
-    "stream_iceberg_sink": (q_stream_iceberg_sink, STREAM_ICEBERG_SINK_SQL),
-    "delta_optimize": (q_delta_optimize, DELTA_OPTIMIZE_SQL),
-    "delta_upsert": (q_delta_upsert, DELTA_UPSERT_SQL),
-    "delta_merge_conditional": (
-        q_delta_merge_conditional,
-        DELTA_MERGE_CONDITIONAL_SQL,
-    ),
-    "delta_merge_sync": (q_delta_merge_sync, DELTA_MERGE_SYNC_SQL),
     "iceberg_merge_conditional": (
         q_iceberg_merge_conditional,
         ICEBERG_MERGE_CONDITIONAL_SQL,
@@ -10840,668 +10562,214 @@ QUERIES: dict[str, tuple] = {
         q_iceberg_partition_evolution,
         ICEBERG_PARTITION_EVOLUTION_SQL,
     ),
+    "delta_generated": (q_delta_generated, DELTA_GENERATED_SQL),
+    "delta_identity": (q_delta_identity, DELTA_IDENTITY_SQL),
+    "delta_merge_conditional": (
+        q_delta_merge_conditional,
+        DELTA_MERGE_CONDITIONAL_SQL,
+    ),
+    "delta_merge_sync": (q_delta_merge_sync, DELTA_MERGE_SYNC_SQL),
     "stream_delta_merge": (q_stream_delta_merge, STREAM_DELTA_MERGE_SQL),
-    "delta_restore": (q_delta_restore, DELTA_RESTORE_SQL),
-    "delta_cdc": (q_delta_cdc, DELTA_CDC_SQL),
-    "stream_delta_upsert": (q_stream_delta_upsert, STREAM_DELTA_UPSERT_SQL),
+    "delta_upsert": (q_delta_upsert, DELTA_UPSERT_SQL),
+    "delta_maintenance": (q_delta_maintenance, DELTA_MAINTENANCE_SQL),
+    "delta_changes": (q_delta_changes, DELTA_CHANGES_SQL),
+    "iceberg_changes": (q_iceberg_changes, ICEBERG_CHANGES_SQL),
+    "iceberg_upsert": (q_iceberg_upsert, ICEBERG_UPSERT_SQL),
+    "iceberg_rollback": (q_iceberg_rollback, ICEBERG_ROLLBACK_SQL),
     "iceberg_bucket_prune": (
         q_iceberg_bucket_prune,
         ICEBERG_BUCKET_PRUNE_SQL,
     ),
-    "iceberg_cluster_rewrite": (
-        q_iceberg_cluster_rewrite,
-        ICEBERG_CLUSTER_REWRITE_SQL,
-    ),
-    "iceberg_upsert": (q_iceberg_upsert, ICEBERG_UPSERT_SQL),
-    "iceberg_rollback": (q_iceberg_rollback, ICEBERG_ROLLBACK_SQL),
     "iceberg_time_prune": (q_iceberg_time_prune, ICEBERG_TIME_PRUNE_SQL),
-    "iceberg_changes": (q_iceberg_changes, ICEBERG_CHANGES_SQL),
-    "delta_maintenance": (q_delta_maintenance, DELTA_MAINTENANCE_SQL),
+    "approx_quantiles": (q_approx_quantiles, APPROX_QUANTILES_SQL),
+    "asof_auto": (q_asof_auto, ASOF_SQL),
+    "asof_tolerance": (q_asof_tolerance, ASOF_TOLERANCE_SQL),
+    "class_balance": (q_class_balance, CLASS_BALANCE_SQL),
+    "decontaminate": (q_decontaminate, DECONTAMINATE_SQL),
+    "dedup_canonical": (q_dedup_canonical, DEDUP_CANONICAL_SQL),
+    "doc_chunks": (q_doc_chunks, DOC_CHUNKS_SQL),
+    "duplicate_spans": (q_duplicate_spans, DUPLICATE_SPANS_SQL),
+    "feature_minmax": (q_feature_minmax, FEATURE_MINMAX_SQL),
+    "group_sizes": (q_group_sizes, GROUP_SIZES_SQL),
+    "ivf_topk": (q_ivf_topk, IVF_TOPK_SQL),
+    "kmeans": (q_kmeans, KMEANS_SQL),
+    "knn_classify": (q_knn_classify, KNN_CLASSIFY_SQL),
+    "leakage_safe_split": (q_leakage_safe_split, LEAKAGE_SAFE_SPLIT_SQL),
+    "melt_vector_records": (q_melt_vector_records, MELT_VECTOR_SQL),
+    "model_gates": (q_model_gates, MODEL_GATES_SQL),
+    "pii_scan": (q_pii_scan, PII_SCAN_SQL),
+    "recent_events": (q_recent_events, RECENT_EVENTS_SQL),
+    "repetition": (q_repetition, REPETITION_SQL),
+    "salted_topk": (q_salted_topk, TOPK_PER_USER_SQL),
+    "score_split_topk": (q_score_split_topk, _score_split_sql()),
+    "stream_dedup": (q_stream_dedup, STREAM_DEDUP_SQL),
+    "stream_window_stats": (q_stream_window_stats, STREAM_WINDOW_STATS_SQL),
+    "tfidf_cosine": (q_tfidf_cosine, TFIDF_COSINE_SQL),
+    "top_ngrams": (q_top_ngrams, TOP_NGRAMS_SQL),
+    "vector_slots": (q_vector_slots, VECTOR_SLOTS_SQL),
+    "view_transform": (q_view_transform, _view_transform_sql()),
+    "dedup_exact": (q_dedup_exact, DEDUP_EXACT_SQL),
+    "embedding_topk": (q_embedding_topk, EMB_TOPK_SQL),
+    "tree_score_topk": (q_tree_score_topk, _tree_score_sql()),
+    "tree_score_large": (q_tree_score_large, _tree_score_large_sql()),
+    "schema_hash": (q_schema_hash, SCHEMA_HASH_SQL),
     "iceberg_expire": (q_iceberg_expire, ICEBERG_EXPIRE_SQL),
-    "delta_generated": (q_delta_generated, DELTA_GENERATED_SQL),
-    "delta_identity": (q_delta_identity, DELTA_IDENTITY_SQL),
+    "delta_cdc": (q_delta_cdc, DELTA_CDC_SQL),
+    "stream_delta_upsert": (q_stream_delta_upsert, STREAM_DELTA_UPSERT_SQL),
+    "delta_restore": (q_delta_restore, DELTA_RESTORE_SQL),
+    "delta_scan": (q_delta_scan, DELTA_SCAN_SQL),
+    "delta_dv_scan": (q_delta_dv_scan, DELTA_DV_SCAN_SQL),
     "delta_column_mapping": (
         q_delta_column_mapping,
         DELTA_COLUMN_MAPPING_SQL,
     ),
-    "incremental_agg": (q_incremental_agg, INCREMENTAL_AGG_SQL),
-    "stream_incremental_agg": (q_stream_incremental_agg, INCREMENTAL_AGG_SQL),
-    "segment_dedup": (q_segment_dedup, SEGMENT_DEDUP_SQL),
-    "semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
-    "perplexity_buckets": (q_perplexity_buckets, PERPLEXITY_BUCKETS_SQL),
-    "cache_ttl_serving": (q_cache_ttl_serving, CACHE_TTL_SERVING_SQL),
-    "calibration": (q_calibration, _calibration_sql()),
-    "ece": (q_ece, _ece_sql()),
-    "corr_matrix": (q_corr_matrix, _corr_matrix_sql()),
-    "target_encoding": (q_target_encoding, TARGET_ENCODING_SQL),
-    "drift_psi": (q_drift_psi, _drift_psi_sql()),
-    "incremental_drift": (q_incremental_drift, _drift_psi_sql()),
-    "stream_incremental_drift": (
-        q_stream_incremental_drift,
-        _drift_psi_sql(),
-    ),
-    "winsorized_stats": (q_winsorized_stats, _winsorized_sql()),
-    "auc_roc": (q_auc_roc, AUC_SQL),
-    "auc_pr": (q_auc_pr, AUC_PR_SQL),
-    "logloss": (q_logloss, LOGLOSS_SQL),
-    "heavy_hitters": (q_heavy_hitters, HEAVY_HITTERS_SQL),
-    "curation_pipeline": (q_curation_pipeline, CURATION_SQL),
-    "quality_scores": (q_quality_scores, QUALITY_SQL),
-    "lang_id": (q_lang_id, LANG_ID_SQL),
-    "source_quality": (q_source_quality, SOURCE_QUALITY_SQL),
-    "mslr_pipeline": (q_mslr_pipeline, MSLR_PIPELINE_SQL),
-    "criteo_pipeline": (q_criteo_pipeline, CRITEO_PIPELINE_SQL),
-    "fraud_pipeline": (q_fraud_pipeline, FRAUD_PIPELINE_SQL),
-    "tree_split": (q_tree_split, TREE_SPLIT_SQL),
-    "serving_fallback": (q_serving_fallback, SERVING_FALLBACK_SQL),
-    "point_lookup": (q_point_lookup, POINT_LOOKUP_SQL),
-    "serving_assembly": (q_serving_assembly, SERVING_SQL),
-    "scalar_upsert": (q_scalar_upsert, SCALAR_UPSERT_SQL),
-    "stream_manifest_sink": (q_stream_manifest_sink, STREAM_MANIFEST_SINK_SQL),
+    "delta_optimize": (q_delta_optimize, DELTA_OPTIMIZE_SQL),
+    "delta_evolution": (q_delta_evolution, DELTA_EVOLUTION_SQL),
+    "delta_uniform": (q_delta_uniform, DELTA_UNIFORM_SQL),
     "stream_delta_sink": (q_stream_delta_sink, STREAM_MANIFEST_SINK_SQL),
-    "gopher_rules": (q_gopher_rules, GOPHER_RULES_SQL),
-    "duplicate_spans": (q_duplicate_spans, DUPLICATE_SPANS_SQL),
-    "dedup_clusters": (q_dedup_clusters, DEDUP_CLUSTERS_SQL),
-    "word_entropy": (q_word_entropy, WORD_ENTROPY_SQL),
-    "funnel": (q_funnel, FUNNEL_SQL),
-    "retention_cohorts": (q_retention_cohorts, RETENTION_SQL),
-    "bigram_lm": (q_bigram_lm, BIGRAM_LM_SQL),
-    "bpe_pairs": (q_bpe_pairs, BPE_PAIRS_SQL),
-    "stratified_sample": (q_stratified_sample, STRATIFIED_SAMPLE_SQL),
-    "bm25_topk": (q_bm25_topk, _bm25_topk_sql()),
-    "hybrid_retrieval": (q_hybrid_retrieval, _hybrid_sql()),
-    "decayed_features": (q_decayed_features, DECAYED_SQL),
-    "ewma_features": (q_ewma_features, EWMA_SQL),
-    "dup_pagerank": (q_dup_pagerank, _dup_pagerank_sql()),
-    "stream_decay": (q_stream_decay, STREAM_DECAY_SQL),
-    "snapshot_diff": (q_snapshot_diff, SNAPSHOT_DIFF_SQL),
-    "integrity_checks": (q_integrity_checks, INTEGRITY_SQL),
-    "stream_attribution": (q_stream_attribution, STREAM_ATTRIBUTION_SQL),
-    "lsh_recall": (q_lsh_recall, _lsh_recall_sql()),
-    "online_offline_skew": (q_online_offline_skew, ONLINE_OFFLINE_SKEW_SQL),
-    "bpe_merges": (q_bpe_merges, _bpe_merges_sql()),
-    "multimodal_meta": (q_multimodal_meta, MULTIMODAL_SQL),
-    "multimodal_av_meta": (q_multimodal_av_meta, AV_META_SQL),
-    "chi2_association": (q_chi2_association, CHI2_SQL),
-    "ab_test": (q_ab_test, AB_TEST_SQL),
-    "pricing_summary": (q_pricing_summary, PRICING_SQL),
-    "asof_features": (q_asof_features, ASOF_SQL),
-    "stream_sessions": (q_stream_sessions, STREAM_SESSIONS_SQL),
-    "windowed_features": (q_windowed_features, WINDOWED_SQL),
-    "schema_hash": (q_schema_hash, SCHEMA_HASH_SQL),
-    "tree_score_topk": (q_tree_score_topk, _tree_score_sql()),
-    "tree_score_large": (q_tree_score_large, _tree_score_large_sql()),
-    "ndcg_at_5": (q_ndcg, NDCG_SQL),
-    "dedup_exact": (q_dedup_exact, DEDUP_EXACT_SQL),
-    "minhash_pairs": (q_minhash_pairs, MINHASH_PAIRS_SQL),
-    # incremental maintenance must equal the FULL-recompute oracle —
-    # deliberately the same SQL as minhash_pairs
-    "incremental_distinct": (
-        q_incremental_distinct,
-        INCREMENTAL_DISTINCT_SQL,
+    "iceberg_cluster_rewrite": (
+        q_iceberg_cluster_rewrite,
+        ICEBERG_CLUSTER_REWRITE_SQL,
     ),
+    "stream_iceberg_sink": (q_stream_iceberg_sink, STREAM_ICEBERG_SINK_SQL),
     "stream_incremental_distinct": (
         q_stream_incremental_distinct,
         STREAM_INCREMENTAL_DISTINCT_SQL,
+    ),
+    "funnel": (q_funnel, FUNNEL_SQL),
+    "confusion": (q_confusion, CONFUSION_SQL),
+    "decayed_features": (q_decayed_features, DECAYED_SQL),
+    "default_rate": (q_default_rate, DEFAULT_RATE_SQL),
+    "doc_fingerprints": (q_doc_fingerprints, FINGERPRINT_SQL),
+    "embedding_centroids": (q_embedding_centroids, EMB_CENTROIDS_SQL),
+    "embedding_near_dup": (q_embedding_near_dup, EMB_NEAR_DUP_SQL),
+    "ewma_features": (q_ewma_features, EWMA_SQL),
+    "group_cv_split": (q_group_cv_split, GROUP_CV_SQL),
+    "hash_bucket": (q_hash_bucket, HASH_BUCKET_SQL),
+    "heavy_hitters": (q_heavy_hitters, HEAVY_HITTERS_SQL),
+    "histogram": (q_histogram, HISTOGRAM_SQL),
+    "local_supplier_volume": (q_local_supplier_volume, LOCAL_SUPPLIER_SQL),
+    "pricing_cube": (q_pricing_cube, PRICING_CUBE_SQL),
+    "quantile_label": (q_quantile_label, QUANTILE_LABEL_SQL),
+    "revenue_by_nation": (q_revenue_by_nation, REVENUE_SQL),
+    "risk_tiers": (q_risk_tiers, _risk_tiers_sql()),
+    "running_totals": (q_running_totals, RUNNING_TOTALS_SQL),
+    "scalar_upsert": (q_scalar_upsert, SCALAR_UPSERT_SQL),
+    "semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
+    "staleness": (q_staleness, STALENESS_SQL),
+    "top_customers": (q_top_customers, TOP_CUSTOMERS_SQL),
+    "topk_events_global": (q_topk_events_global, TOPK_GLOBAL_SQL),
+    "topk_events_per_user": (q_topk_events_per_user, TOPK_PER_USER_SQL),
+    "approx_distinct": (q_approx_distinct, APPROX_DISTINCT_SQL),
+    "incremental_distinct": (
+        q_incremental_distinct,
+        INCREMENTAL_DISTINCT_SQL,
     ),
     "incremental_heavy_hitters": (
         q_incremental_heavy_hitters,
         INCREMENTAL_HH_SQL,
     ),
-    "incremental_dedup": (q_incremental_dedup, MINHASH_PAIRS_SQL),
-    "incremental_dedup_exact": (q_incremental_dedup_exact, DEDUP_EXACT_SQL),
-    "incremental_ann": (q_incremental_ann, INCREMENTAL_ANN_SQL),
-    "stream_incremental_dedup": (q_stream_incremental_dedup, MINHASH_PAIRS_SQL),
-    "ngram_jaccard": (q_ngram_jaccard, NGRAM_JACCARD_SQL),
-    "simhash_pigeonhole": (q_simhash_pigeonhole, SIMHASH_PIGEONHOLE_SQL),
-    "embedding_topk": (q_embedding_topk, EMB_TOPK_SQL),
-    "ivf_assign": (q_ivf_assign, IVF_ASSIGN_SQL),
-    "knn_classify": (q_knn_classify, KNN_CLASSIFY_SQL),
-    "ivf_topk": (q_ivf_topk, IVF_TOPK_SQL),
-    "score_split_topk": (q_score_split_topk, _score_split_sql()),
-    "model_gates": (q_model_gates, MODEL_GATES_SQL),
-    "class_balance": (q_class_balance, CLASS_BALANCE_SQL),
-    "group_sizes": (q_group_sizes, GROUP_SIZES_SQL),
-    "feature_minmax": (q_feature_minmax, FEATURE_MINMAX_SQL),
-    "vector_slots": (q_vector_slots, VECTOR_SLOTS_SQL),
-    "melt_vector_records": (q_melt_vector_records, MELT_VECTOR_SQL),
-    "registry_latest": (q_registry_latest, REGISTRY_LATEST_SQL),
-    "recent_events": (q_recent_events, RECENT_EVENTS_SQL),
-    "repetition": (q_repetition, REPETITION_SQL),
-    "pii_scan": (q_pii_scan, PII_SCAN_SQL),
-    "tfidf_cosine": (q_tfidf_cosine, TFIDF_COSINE_SQL),
-    "stream_dedup": (q_stream_dedup, STREAM_DEDUP_SQL),
-    "kmeans": (q_kmeans, KMEANS_SQL),
-    "top_ngrams": (q_top_ngrams, TOP_NGRAMS_SQL),
-    "view_transform": (q_view_transform, _view_transform_sql()),
-    "decontaminate": (q_decontaminate, DECONTAMINATE_SQL),
     "pack_sequences": (q_pack_sequences, PACK_SEQUENCES_SQL),
-    "corpus_mix": (q_corpus_mix, CORPUS_MIX_SQL),
-    "asof_tolerance": (q_asof_tolerance, ASOF_TOLERANCE_SQL),
-    "asof_auto": (q_asof_auto, ASOF_SQL),
     "pack_shards": (q_pack_shards, PACK_SHARDS_SQL),
-    "salted_topk": (q_salted_topk, TOPK_PER_USER_SQL),
-    "stream_window_stats": (q_stream_window_stats, STREAM_WINDOW_STATS_SQL),
-    "dedup_canonical": (q_dedup_canonical, DEDUP_CANONICAL_SQL),
-    "approx_distinct": (q_approx_distinct, APPROX_DISTINCT_SQL),
-    "approx_quantiles": (q_approx_quantiles, APPROX_QUANTILES_SQL),
+    "corpus_mix": (q_corpus_mix, CORPUS_MIX_SQL),
+    "snapshot_diff": (q_snapshot_diff, SNAPSHOT_DIFF_SQL),
+    "ndcg_at_5": (q_ndcg, NDCG_SQL),
+    "map_ranking": (q_map, MAP_SQL),
+    "iceberg_orc": (q_iceberg_orc, ICEBERG_ORC_SQL),
+    "iceberg_scan": (q_iceberg_scan, ICEBERG_SCAN_SQL),
+    "iceberg_mor_delete": (q_iceberg_mor_delete, ICEBERG_MOR_DELETE_SQL),
+    "iceberg_evolution": (q_iceberg_evolution, ICEBERG_EVOLUTION_SQL),
+    "iceberg_refs": (q_iceberg_refs, ICEBERG_REFS_SQL),
+    "registry_latest": (q_registry_latest, REGISTRY_LATEST_SQL),
+    "asof_features": (q_asof_features, ASOF_SQL),
+    "feature_stats": (q_feature_stats, STATS_SQL),
     "interval_join": (q_interval_join, INTERVAL_JOIN_SQL),
-    "doc_chunks": (q_doc_chunks, DOC_CHUNKS_SQL),
-    "leakage_safe_split": (q_leakage_safe_split, LEAKAGE_SAFE_SPLIT_SQL),
-    "ann_recall": (q_ann_recall, ANN_RECALL_SQL),
-    "pq_recall": (q_pq_recall, ANN_RECALL_SQL),
-    "ivfpq_recall": (q_ivfpq_recall, IVFPQ_RECALL_SQL),
     "scd2_intervals": (q_scd2_intervals, SCD2_INTERVALS_SQL),
-    "table_profile": (q_table_profile, TABLE_PROFILE_SQL),
-    "zorder_key": (q_zorder_key, ZORDER_KEY_SQL),
-    "stream_enrich": (q_stream_enrich, STREAM_ENRICH_SQL),
-    "skew_report": (q_skew_report, SKEW_REPORT_SQL),
     "sample_per_group": (q_sample_per_group, SAMPLE_PER_GROUP_SQL),
     "json_props": (q_json_props, JSON_PROPS_SQL),
+    "skew_report": (q_skew_report, SKEW_REPORT_SQL),
+    "stream_enrich": (q_stream_enrich, STREAM_ENRICH_SQL),
     "pricing_rollup": (q_pricing_rollup, PRICING_ROLLUP_SQL),
-    "asof_nearest": (q_asof_nearest, ASOF_NEAREST_SQL),
-    "decontaminate_bloom": (q_decontaminate_bloom, DECONTAMINATE_SQL),
-    "local_supplier_volume": (q_local_supplier_volume, LOCAL_SUPPLIER_SQL),
-    "pricing_cube": (q_pricing_cube, PRICING_CUBE_SQL),
-    "running_totals": (q_running_totals, RUNNING_TOTALS_SQL),
-    "revenue_by_nation": (q_revenue_by_nation, REVENUE_SQL),
-    "top_customers": (q_top_customers, TOP_CUSTOMERS_SQL),
-    "topk_events_global": (q_topk_events_global, TOPK_GLOBAL_SQL),
-    "topk_events_per_user": (q_topk_events_per_user, TOPK_PER_USER_SQL),
-    "asof_bucketed": (q_asof_bucketed, ASOF_SQL),
-    "staleness": (q_staleness, STALENESS_SQL),
-    "feature_stats": (q_feature_stats, STATS_SQL),
-    "histogram": (q_histogram, HISTOGRAM_SQL),
-    "quantile_label": (q_quantile_label, QUANTILE_LABEL_SQL),
-    "hash_bucket": (q_hash_bucket, HASH_BUCKET_SQL),
+    "zorder_key": (q_zorder_key, ZORDER_KEY_SQL),
+    "table_profile": (q_table_profile, TABLE_PROFILE_SQL),
     "melt_customer": (q_melt_customer, MELT_SQL),
     "pivot_events": (q_pivot_events, PIVOT_SQL),
-    "train_test_split": (q_train_test_split, SPLIT_SQL),
     "sessionize": (q_sessionize, SESSIONIZE_SQL),
-    "confusion": (q_confusion, CONFUSION_SQL),
-    "map_ranking": (q_map, MAP_SQL),
+    "train_test_split": (q_train_test_split, SPLIT_SQL),
     "minhash_signatures": (q_minhash_signatures, MINHASH_SIGS_SQL),
     "simhash": (q_simhash, SIMHASH_SQL),
     "simhash_pairs": (q_simhash_pairs, SIMHASH_PAIRS_SQL),
     "lsh_bucket_topk": (q_lsh_bucket_topk, LSH_TOPK_SQL),
-    "embedding_centroids": (q_embedding_centroids, EMB_CENTROIDS_SQL),
-    "embedding_near_dup": (q_embedding_near_dup, EMB_NEAR_DUP_SQL),
+    "incremental_drift": (q_incremental_drift, _drift_psi_sql()),
+    "stream_incremental_drift": (
+        q_stream_incremental_drift,
+        _drift_psi_sql(),
+    ),
+    "ivfpq_recall": (q_ivfpq_recall, IVFPQ_RECALL_SQL),
+    "pq_recall": (q_pq_recall, ANN_RECALL_SQL),
+    "ann_recall": (q_ann_recall, ANN_RECALL_SQL),
+    "incremental_dedup": (q_incremental_dedup, MINHASH_PAIRS_SQL),
+    "incremental_dedup_exact": (q_incremental_dedup_exact, DEDUP_EXACT_SQL),
+    "stream_incremental_dedup": (
+        q_stream_incremental_dedup,
+        MINHASH_PAIRS_SQL,
+    ),
+    "incremental_ann": (q_incremental_ann, INCREMENTAL_ANN_SQL),
+    "multimodal_av_meta": (q_multimodal_av_meta, AV_META_SQL),
+    "auc_roc": (q_auc_roc, AUC_SQL),
+    "auc_pr": (q_auc_pr, AUC_PR_SQL),
+    "lsh_recall": (q_lsh_recall, _lsh_recall_sql()),
+    "ab_test": (q_ab_test, AB_TEST_SQL),
+    "pricing_summary": (q_pricing_summary, PRICING_SQL),
+    "windowed_features": (q_windowed_features, WINDOWED_SQL),
+    "bm25_topk": (q_bm25_topk, _bm25_topk_sql()),
+    "bpe_pairs": (q_bpe_pairs, BPE_PAIRS_SQL),
+    "cache_ttl_serving": (q_cache_ttl_serving, CACHE_TTL_SERVING_SQL),
+    "calibration": (q_calibration, _calibration_sql()),
+    "chi2_association": (q_chi2_association, CHI2_SQL),
+    "corr_matrix": (q_corr_matrix, _corr_matrix_sql()),
+    "dedup_clusters": (q_dedup_clusters, DEDUP_CLUSTERS_SQL),
+    "drift_psi": (q_drift_psi, _drift_psi_sql()),
+    "dup_pagerank": (q_dup_pagerank, _dup_pagerank_sql()),
+    "ece": (q_ece, _ece_sql()),
+    "fraud_pipeline": (q_fraud_pipeline, FRAUD_PIPELINE_SQL),
+    "hybrid_retrieval": (q_hybrid_retrieval, _hybrid_sql()),
+    "integrity_checks": (q_integrity_checks, INTEGRITY_SQL),
+    "logloss": (q_logloss, LOGLOSS_SQL),
+    "online_offline_skew": (q_online_offline_skew, ONLINE_OFFLINE_SKEW_SQL),
+    "point_lookup": (q_point_lookup, POINT_LOOKUP_SQL),
+    "retention_cohorts": (q_retention_cohorts, RETENTION_SQL),
+    "serving_assembly": (q_serving_assembly, SERVING_SQL),
+    "serving_fallback": (q_serving_fallback, SERVING_FALLBACK_SQL),
+    "source_quality": (q_source_quality, SOURCE_QUALITY_SQL),
+    "stratified_sample": (q_stratified_sample, STRATIFIED_SAMPLE_SQL),
+    "target_encoding": (q_target_encoding, TARGET_ENCODING_SQL),
+    "tree_split": (q_tree_split, TREE_SPLIT_SQL),
+    "winsorized_stats": (q_winsorized_stats, _winsorized_sql()),
+    "word_entropy": (q_word_entropy, WORD_ENTROPY_SQL),
+    "asof_bucketed": (q_asof_bucketed, ASOF_SQL),
+    "asof_nearest": (q_asof_nearest, ASOF_NEAREST_SQL),
+    "incremental_agg": (q_incremental_agg, INCREMENTAL_AGG_SQL),
+    "stream_incremental_agg": (q_stream_incremental_agg, INCREMENTAL_AGG_SQL),
+    "segment_dedup": (q_segment_dedup, SEGMENT_DEDUP_SQL),
+    "perplexity_buckets": (q_perplexity_buckets, PERPLEXITY_BUCKETS_SQL),
+    "curation_pipeline": (q_curation_pipeline, CURATION_SQL),
+    "quality_scores": (q_quality_scores, QUALITY_SQL),
+    "lang_id": (q_lang_id, LANG_ID_SQL),
+    "mslr_pipeline": (q_mslr_pipeline, MSLR_PIPELINE_SQL),
+    "criteo_pipeline": (q_criteo_pipeline, CRITEO_PIPELINE_SQL),
+    "stream_manifest_sink": (q_stream_manifest_sink, STREAM_MANIFEST_SINK_SQL),
+    "gopher_rules": (q_gopher_rules, GOPHER_RULES_SQL),
+    "bigram_lm": (q_bigram_lm, BIGRAM_LM_SQL),
+    "stream_decay": (q_stream_decay, STREAM_DECAY_SQL),
+    "stream_attribution": (q_stream_attribution, STREAM_ATTRIBUTION_SQL),
+    "bpe_merges": (q_bpe_merges, _bpe_merges_sql()),
+    "multimodal_meta": (q_multimodal_meta, MULTIMODAL_SQL),
+    "stream_sessions": (q_stream_sessions, STREAM_SESSIONS_SQL),
+    "minhash_pairs": (q_minhash_pairs, MINHASH_PAIRS_SQL),
+    "ngram_jaccard": (q_ngram_jaccard, NGRAM_JACCARD_SQL),
+    "simhash_pigeonhole": (q_simhash_pigeonhole, SIMHASH_PIGEONHOLE_SQL),
+    "ivf_assign": (q_ivf_assign, IVF_ASSIGN_SQL),
+    "decontaminate_bloom": (q_decontaminate_bloom, DECONTAMINATE_SQL),
     "token_stats": (q_token_stats, TOKEN_STATS_SQL),
-    "doc_fingerprints": (q_doc_fingerprints, FINGERPRINT_SQL),
-    "risk_tiers": (q_risk_tiers, _risk_tiers_sql()),
-    "group_cv_split": (q_group_cv_split, GROUP_CV_SQL),
-    "default_rate": (q_default_rate, DEFAULT_RATE_SQL),
 }
-
-
-# --- ROUND-7 DRIVER WINDOW (first 50 entries) -----------------------
-# Changed-path-first rotation: the new iceberg_scan, then every query
-# whose code path changed this round — semantic_dedup (bucket guard +
-# persisted projection), the decay module pair (chunked-EWMA path
-# added), the floored bigram LM pair, heavy_hitters (sentinel schema
-# nullability), and the manifest-layer queries (txn_version snapshot
-# pinning + read_appended schema fallback). The tail of the window
-# refreshes the OLDEST driver rows (r1–r2-only: melt/pivot/splits/
-# ranking metrics/minhash-simhash family), per VERDICT r6 #7 —
-# everything displaced keeps its earlier green row and the identical
-# DuckDB oracle in pytest/selfcheck.
-_R7_WINDOW = [
-    "iceberg_scan",
-    "iceberg_mor_delete",
-    "delta_scan",
-    "semantic_dedup",
-    "ewma_features",
-    "decayed_features",
-    "perplexity_buckets",
-    "bigram_lm",
-    "heavy_hitters",
-    "incremental_agg",
-    "stream_incremental_agg",
-    "scalar_upsert",
-    "stream_manifest_sink",
-    "stream_delta_sink",
-    "gopher_rules",
-    "duplicate_spans",
-    # oldest-green refresh
-    "melt_customer",
-    "pivot_events",
-    "train_test_split",
-    "sessionize",
-    "confusion",
-    "map_ranking",
-    "minhash_signatures",
-    "simhash",
-    "simhash_pairs",
-    "lsh_bucket_topk",
-    "embedding_centroids",
-    "embedding_near_dup",
-    "token_stats",
-    "doc_fingerprints",
-    "risk_tiers",
-    "group_cv_split",
-    "default_rate",
-    "staleness",
-    "feature_stats",
-    "histogram",
-    "quantile_label",
-    "hash_bucket",
-    "revenue_by_nation",
-    "top_customers",
-    "topk_events_global",
-    "topk_events_per_user",
-    "asof_bucketed",
-    "local_supplier_volume",
-    "pricing_cube",
-    "running_totals",
-    "asof_nearest",
-    "decontaminate_bloom",
-    "pricing_rollup",
-    "json_props",
-    "sample_per_group",
-    "skew_report",
-    "stream_enrich",
-    "zorder_key",
-    "table_profile",
-]
-# --- ROUND-9 DRIVER WINDOW (first 50 entries) -----------------------
-# Changed-path-first: the SEVEN new graded queries (multimodal_av_meta
-# = WAV/MP3/MP4 stdlib header decode; incremental_dedup /
-# incremental_dedup_exact / stream_incremental_dedup = the
-# incremental-maintenance family over append deltas; iceberg_refs =
-# named-ref time travel; delta_uniform = dual-format metadata export;
-# pq_recall = product-quantization recall gate), then every query
-# whose code path changed this round — the delta family
-# (hive-unescaped partition values, reader-feature allowlist,
-# checkpoint remove tombstones, stamped deletionTimestamps, CDF
-# reconstruction over compacted ranges, retention-aware VACUUM), the
-# iceberg family (eq-delete parquet field ids, AVRO data files, refs
-# carried through appends), multimodal_meta (id_col-derived
-# mapInPandas schema), the incremental family, and the minhash/ngram
-# re-audit VERDICT r8 #5 asked for. Then the stale-row refresh
-# VERDICT r8 next #6 named (zorder_key r3; embedding_topk /
-# ivf_assign / simhash_pigeonhole r4), and the oldest remaining
-# r5/r6 rows fill the tail. Everything displaced keeps its earlier
-# green row and the identical DuckDB oracle in pytest/selfcheck.
-_R9_WINDOW = [
-    "multimodal_av_meta",
-    "incremental_dedup",
-    "incremental_dedup_exact",
-    "stream_incremental_dedup",
-    "delta_changes",
-    "delta_optimize",
-    "delta_scan",
-    "delta_dv_scan",
-    "delta_column_mapping",
-    "stream_delta_sink",
-    "iceberg_upsert",
-    "iceberg_scan",
-    "iceberg_mor_delete",
-    "iceberg_refs",
-    "delta_uniform",
-    "stream_iceberg_sink",
-    "multimodal_meta",
-    "incremental_agg",
-    "stream_incremental_agg",
-    "minhash_pairs",
-    "ngram_jaccard",
-    "minhash_signatures",
-    "pq_recall",
-    # VERDICT r8 next #6 stale set
-    "zorder_key",
-    "embedding_topk",
-    "ivf_assign",
-    "simhash_pigeonhole",
-    # oldest remaining driver rows (r5/r6)
-    "criteo_pipeline",
-    "mslr_pipeline",
-    "asof_features",
-    "schema_hash",
-    "tree_score_topk",
-    "tree_score_large",
-    "ndcg_at_5",
-    "dedup_exact",
-    "simhash",
-    "segment_dedup",
-    "curation_pipeline",
-    "stream_sessions",
-    "stream_manifest_sink",
-    "stream_attribution",
-    "stream_decay",
-    "bigram_lm",
-    "bpe_merges",
-    "perplexity_buckets",
-    "gopher_rules",
-    "token_stats",
-    "lang_id",
-    "quality_scores",
-    "decontaminate_bloom",
-]
-# --- ROUND-10 DRIVER WINDOW (first 50 entries) ----------------------
-# Changed-path-first: ivfpq_recall is NEW (cluster-partitioned code
-# storage + file-pruning audit + composed IVFPQ recall gate);
-# delta_uniform re-graded over a PARTITIONED Delta table (identity
-# partition spec + Column Projection rule #2 + pruning assert);
-# pq_recall/ann_recall exercise the two-phase ADC/knn scorers and the
-# ivf_probes refactor; the incremental-dedup family exercises the
-# torn-state repair + uncapped-by-default bucket policy;
-# delta_changes gained the DV-shrink refusal; multimodal_av_meta's
-# MP4 box walk gained the largesize stall guard; auc_roc/auc_pr
-# gained score_decimals (default path unchanged but both were
-# r6-stale); lsh_recall sits atop minhash_dedup_pairs whose cap
-# became a pass-through parameter. Then the stale-row refresh VERDICT
-# r9 next #3 named: the r5 trio (ab_test, pricing_summary,
-# windowed_features) and every remaining r6-era row, with the oldest
-# r7 rows filling the tail. Everything displaced keeps its earlier
-# green row and the identical DuckDB oracle in pytest/selfcheck.
-_R10_WINDOW = [
-    # new/changed paths
-    "iceberg_orc",
-    "iceberg_evolution",
-    "delta_evolution",
-    "incremental_drift",
-    "stream_incremental_drift",
-    "ivfpq_recall",
-    "delta_uniform",
-    "pq_recall",
-    "ann_recall",
-    "incremental_dedup",
-    "incremental_dedup_exact",
-    "stream_incremental_dedup",
-    "incremental_ann",
-    "delta_changes",
-    "multimodal_av_meta",
-    "auc_roc",
-    "auc_pr",
-    "lsh_recall",
-    # last green r5
-    "ab_test",
-    "pricing_summary",
-    "windowed_features",
-    # last green r6
-    "bm25_topk",
-    "bpe_pairs",
-    "cache_ttl_serving",
-    "calibration",
-    "chi2_association",
-    "corr_matrix",
-    "dedup_clusters",
-    "drift_psi",
-    "dup_pagerank",
-    "ece",
-    "fraud_pipeline",
-    "funnel",
-    "hybrid_retrieval",
-    "integrity_checks",
-    "logloss",
-    "online_offline_skew",
-    "point_lookup",
-    "retention_cohorts",
-    "serving_assembly",
-    "serving_fallback",
-    "snapshot_diff",
-    "source_quality",
-    "stratified_sample",
-    "target_encoding",
-    "tree_split",
-    "winsorized_stats",
-    "word_entropy",
-    # oldest remaining (r7)
-    "asof_bucketed",
-    "asof_nearest",
-    "confusion",
-    "decayed_features",
-    "default_rate",
-    "doc_fingerprints",
-    "embedding_centroids",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R10_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in _R10_WINDOW},
-}
-# --- ROUND-11 DRIVER WINDOW (first 50 entries) ----------------------
-# Changed-path-first: the TWO new graded queries (delta_upsert =
-# DV-assisted keyed MERGE in one commit; iceberg_bucket_prune =
-# bucket[16]+truncate[2] layout with the file-pruning audit), then
-# every query whose code path changed this round — the packing family
-# (duplicate-key guard fused into the prefix-sum window, judge r10
-# #1), snapshot_diff (rebuilt as union+groupBy with the free
-# uniqueness check), ndcg/map (unscored-relevant docs now penalize),
-# the ENTIRE iceberg family (generalized partition specs in the
-# writer, delete_where routed through the field-id resolver, ORC
-# stats partial-miss guard, schema-history rename gate) and delta
-# family (delta_append staging factored out, now sources/commit.py),
-# registry_latest (register_view no longer mutates the caller's
-# view), and the offline-scan pair (2-day partition widening). Then
-# the stale-row refresh VERDICT r10 next #6 named: the r7-era rows
-# (interval_join, scd2_intervals, sample_per_group, json_props,
-# skew_report, stream_enrich, pricing_rollup, zorder_key,
-# table_profile, melt/pivot/split/sessionize, and the
-# minhash/simhash/embedding family). Everything displaced keeps its
-# earlier green row and the identical DuckDB oracle in
-# pytest/selfcheck.
-_R11_WINDOW = [
-    # new
-    "delta_upsert",
-    "delta_cdc",
-    "stream_delta_upsert",
-    "delta_restore",
-    "iceberg_bucket_prune",
-    "iceberg_cluster_rewrite",
-    "incremental_distinct",
-    "stream_incremental_distinct",
-    "incremental_heavy_hitters",
-    # changed this round
-    "pack_sequences",
-    "pack_shards",
-    "corpus_mix",
-    "snapshot_diff",
-    "ndcg_at_5",
-    "map_ranking",
-    "iceberg_orc",
-    "iceberg_scan",
-    "iceberg_mor_delete",
-    "iceberg_upsert",
-    "iceberg_evolution",
-    "iceberg_refs",
-    "delta_uniform",
-    "stream_iceberg_sink",
-    "delta_scan",
-    "delta_evolution",
-    "delta_changes",
-    "delta_dv_scan",
-    "delta_column_mapping",
-    "delta_optimize",
-    "stream_delta_sink",
-    "registry_latest",
-    "asof_features",
-    "feature_stats",
-    # stale r7 refresh (VERDICT r10 next #6)
-    "interval_join",
-    "scd2_intervals",
-    "sample_per_group",
-    "json_props",
-    "skew_report",
-    "stream_enrich",
-    "pricing_rollup",
-    "zorder_key",
-    "table_profile",
-    "melt_customer",
-    "pivot_events",
-    "sessionize",
-    "train_test_split",
-    "minhash_signatures",
-    "simhash",
-    "simhash_pairs",
-    "lsh_bucket_topk",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R11_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in _R11_WINDOW},
-}
-# --- ROUND-12 DRIVER WINDOW (first 50 entries) ----------------------
-# Changed-path-first: the TWO new graded queries (delta_merge_
-# conditional = arm-ordered conditional/partial-column MERGE with the
-# CDF audit; iceberg_rollback = the corrupt→rollback→re-upsert chain
-# with ref semantics), then every query whose code path changed this
-# round — the whole delta family (scan() refactored through
-# _assemble_live, the DV/protocol action builder factored out of
-# delta_upsert, the empty-batch no-churn guard, delta_restore's
-# DV-bin vacuum refusal) and the iceberg write family
-# (string-bucket shadow vectorized behind arrow_udf, year/month
-# shadows UTC-safe; iceberg_bucket_prune now audits a string-bucketed
-# layout in-row), plus the two laddered stream sinks and funnel
-# (phase-profiled, SCALE.md round 12). Then the stale-row refresh
-# VERDICT r11 next #7 named: all 23 rows whose last green driver row
-# is r7, and the window fills with the oldest r8 rows. Everything
-# displaced keeps its earlier green row and the identical DuckDB
-# oracle in pytest/selfcheck.
-_R12_WINDOW = [
-    # new
-    "delta_merge_conditional",
-    "delta_merge_sync",
-    "stream_delta_merge",
-    "iceberg_rollback",
-    "iceberg_time_prune",
-    "iceberg_changes",
-    "delta_maintenance",
-    "iceberg_expire",
-    # changed this round
-    "delta_upsert",
-    "delta_cdc",
-    "stream_delta_upsert",
-    "delta_restore",
-    "delta_changes",
-    "delta_scan",
-    "delta_dv_scan",
-    "delta_column_mapping",
-    "delta_optimize",
-    "delta_evolution",
-    "delta_uniform",
-    "stream_delta_sink",
-    "iceberg_bucket_prune",
-    "iceberg_cluster_rewrite",
-    "iceberg_upsert",
-    "stream_iceberg_sink",
-    "stream_incremental_distinct",
-    "funnel",
-    # stale r7 refresh (VERDICT r11 next #7: every last-green-r7 row)
-    "confusion",
-    "decayed_features",
-    "default_rate",
-    "doc_fingerprints",
-    "embedding_centroids",
-    "embedding_near_dup",
-    "ewma_features",
-    "group_cv_split",
-    "hash_bucket",
-    "heavy_hitters",
-    "histogram",
-    "local_supplier_volume",
-    "pricing_cube",
-    "quantile_label",
-    "revenue_by_nation",
-    "risk_tiers",
-    "running_totals",
-    "scalar_upsert",
-    "semantic_dedup",
-    "staleness",
-    "top_customers",
-    "topk_events_global",
-    "topk_events_per_user",
-    # oldest remaining (r8)
-    "approx_distinct",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R12_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in _R12_WINDOW},
-}
-# --- ROUND-13 DRIVER WINDOW (first 50 entries) ----------------------
-# The FOUR new graded queries (iceberg_merge_conditional/_sync +
-# stream_iceberg_merge = the Iceberg MERGE arm surface on
-# equality-delete physics, VERDICT r12 next #1; iceberg_temporal_bucket
-# = date/timestamp bucket layouts with pruning audits, next #6), then
-# the paths that CHANGED this round — the delta commit verbs (writer-
-# feature allowlist gates every verb; the dup/emptiness/bounds probes
-# folded into one batch aggregate), the iceberg write family
-# (iceberg_merge physics rode in through iceberg_append's
-# delete_keys_df / zero-row-file / pure-delete changes), and the
-# changelog scan (removed-delete-file refusal, long-typed
-# _snapshot_id, between_timestamps resolution). Then the stale-row
-# refresh VERDICT r12 next #5 named: ALL 27 rows whose last green
-# driver row is r8, plus the five r9 rows the judge called out by
-# name (dedup_exact, embedding_topk, tree_score_topk/large,
-# schema_hash). The remaining 23 r9 rows carry their green r9 grade
-# plus the full-catalog DuckDB sweep in pytest/selfcheck and lead the
-# r14 window. Displaced read-mostly lakehouse rows (delta_scan,
-# delta_dv_scan, iceberg_scan, ...) keep their r12 green rows — their
-# read paths are untouched this round.
-_R13_WINDOW = [
-    # new
-    "iceberg_merge_conditional",
-    "iceberg_merge_sync",
-    "stream_iceberg_merge",
-    "iceberg_temporal_bucket",
-    "iceberg_partition_evolution",
-    "delta_generated",
-    "delta_identity",
-    # changed this round (stream_iceberg_sink, green in both r11 and
-    # r12, yields its slot to the new partition-evolution row so the
-    # window keeps all the judge-named r8/r9 refreshes)
-    "delta_merge_conditional",
-    "delta_merge_sync",
-    "stream_delta_merge",
-    "delta_upsert",
-    "delta_maintenance",
-    "delta_changes",
-    "iceberg_changes",
-    "iceberg_upsert",
-    "iceberg_rollback",
-    "iceberg_bucket_prune",
-    "iceberg_time_prune",
-    # stale r8 refresh (VERDICT r12 next #5: every last-green-r8 row)
-    "approx_quantiles",
-    "asof_auto",
-    "asof_tolerance",
-    "class_balance",
-    "decontaminate",
-    "dedup_canonical",
-    "doc_chunks",
-    "duplicate_spans",
-    "feature_minmax",
-    "group_sizes",
-    "ivf_topk",
-    "kmeans",
-    "knn_classify",
-    "leakage_safe_split",
-    "melt_vector_records",
-    "model_gates",
-    "pii_scan",
-    "recent_events",
-    "repetition",
-    "salted_topk",
-    "score_split_topk",
-    "stream_dedup",
-    "stream_window_stats",
-    "tfidf_cosine",
-    "top_ngrams",
-    "vector_slots",
-    "view_transform",
-    # oldest r9 rows the judge named (VERDICT r12 next #5)
-    "dedup_exact",
-    "embedding_topk",
-    "tree_score_topk",
-    "tree_score_large",
-    "schema_hash",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R13_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in _R13_WINDOW},
-}
-
-
-def queries():
-    return {name: fn for name, (fn, _) in QUERIES.items()}
-
-
-def oracle_sql():
-    return {name: sql for name, (_, sql) in QUERIES.items() if sql is not None}

@@ -47,6 +47,7 @@ import re
 import shutil
 import time
 import uuid
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -3296,15 +3297,6 @@ def delta_delete_where(
     the delete's own size (the sliver), not the table; a delete big
     enough to strain the driver is a job for copy-on-write rewrite,
     not DVs."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from feature_store_spark.sources.roaring import (
-        write_dv_file,
-        z85_encode,
-    )
-
     t = DeltaTable(spark, table_dir)
     version = t.latest_version() + 1
     meta, _, _ = t._state(None)
@@ -3321,87 +3313,19 @@ def delta_delete_where(
     df = t._assemble(adds, meta)
     for f in filters:
         df = df.filter(_Filter(*f).sql())
-    hits = df.select("__fp", "__pos").toPandas()
-    by_file: dict[str, set[int]] = {}
-    for fp, pos in zip(hits["__fp"], hits["__pos"]):
-        by_file.setdefault(fp, set()).add(int(pos))
-
-    affected: list[tuple[dict, list[int], int]] = []
-    n_new = 0
-    for add in adds:
-        abs_p = os.path.abspath(os.path.join(t.path, add["path"]))
-        new_hits = by_file.get(abs_p)
-        if not new_hits:
-            continue
-        old = (
-            set(t._load_dv(add["deletionVector"]))
-            if add.get("deletionVector")
-            else set()
-        )
-        merged = sorted(old | new_hits)
-        n_new += len(merged) - len(old)
-        if len(merged) == len(old):
-            continue  # every matched row was already deleted
-        affected.append((add, merged, len(merged)))
-    if not affected:
+    kill_actions, n_new = _dv_kill(
+        t, table_dir, [df.select("__fp", "__pos")], mode
+    )
+    if not kill_actions:
         raise ValueError(
             f"{table_dir}: DELETE WHERE matched no live rows — "
             "nothing committed (the table version is unchanged)"
         )
-
-    dv_uuid = _uuid.uuid4()
-    dv_path = os.path.join(table_dir, f"deletion_vector_{dv_uuid}.bin")
-    descs = write_dv_file(dv_path, [m for _, m, _ in affected])
-
-    import time as _time
-
-    # UNION with the table's existing protocol: replacing it would
-    # silently drop features an external writer declared (the log
-    # replay takes the LAST protocol action)
-    prev = t._protocol(None)
-    r_feats = {"deletionVectors"} | set(prev.get("readerFeatures") or [])
-    w_feats = {"deletionVectors"} | set(prev.get("writerFeatures") or [])
-    if mode != "none":
-        r_feats.add("columnMapping")
-        w_feats.add("columnMapping")
-    actions: list[dict] = [
-        {"commitInfo": {"timestamp": int(_time.time() * 1000),
+    actions = [
+        {"commitInfo": {"timestamp": int(time.time() * 1000),
                         "operation": "DELETE"}},
-        {
-            "protocol": {
-                "minReaderVersion": max(
-                    3, int(prev.get("minReaderVersion") or 1)
-                ),
-                "minWriterVersion": max(
-                    7, int(prev.get("minWriterVersion") or 1)
-                ),
-                "readerFeatures": sorted(r_feats),
-                "writerFeatures": sorted(w_feats),
-            }
-        }
+        *kill_actions,
     ]
-    for (add, _m, card), (off, sz, _c) in zip(affected, descs):
-        actions.append(
-            {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "deletionTimestamp": int(_time.time() * 1000),
-                    "partitionValues": add.get("partitionValues") or {},
-                    "size": add.get("size"),
-                }
-            }
-        )
-        new_add = dict(add)
-        new_add["dataChange"] = True
-        new_add["deletionVector"] = {
-            "storageType": "u",
-            "pathOrInlineDv": z85_encode(dv_uuid.bytes),
-            "offset": off,
-            "sizeInBytes": sz,
-            "cardinality": card,
-        }
-        actions.append({"add": new_add})
     _claim_or_raise(table_dir, version, actions, "DELETE")
     return version, n_new
 
@@ -3474,30 +3398,8 @@ def _merge_commit(
         actions.append(evolved)
         meta = evolved["metaData"]
     mode, map_fields = t._mapping(meta)
-    # the kill collect is bounded by the merge's own fired rows (the
-    # sliver), not the table
-    by_file: dict[str, set[int]] = {}
-    for frame in kills:
-        hits = frame.toPandas()
-        for fp, pos in zip(hits["__fp"], hits["__pos"]):
-            by_file.setdefault(fp, set()).add(int(pos))
-    affected: list[tuple[dict, list[int], int]] = []
-    n_killed = 0
-    for add in t.data_files() if by_file else []:
-        new = by_file.get(os.path.abspath(os.path.join(t.path, add["path"])))
-        if not new:
-            continue
-        old = (
-            set(t._load_dv(add["deletionVector"]))
-            if add.get("deletionVector")
-            else set()
-        )
-        merged = sorted(old | new)
-        if len(merged) > len(old):
-            n_killed += len(merged) - len(old)
-            affected.append((add, merged, len(merged)))
-    if affected:
-        actions.extend(_dv_merge_actions(t, table_dir, affected, mode))
+    kill_actions, n_killed = _dv_kill(t, table_dir, kills, mode)
+    actions.extend(kill_actions)
     n_staged = 0
     if to_stage is not None:
         # an empty frame stages nothing: the commit kernel drops
@@ -3663,21 +3565,50 @@ def delta_upsert(
     return v, n_replaced
 
 
-def _dv_merge_actions(
+def _dv_kill(
     t: DeltaTable,
     table_dir: str,
-    affected: list[tuple[dict, list[int], int]],
+    kills: list[DataFrame],
     mode: str,
-) -> list[dict]:
-    """Mint ONE deletion-vector file for the merge's kill set and
-    return the protocol-upgrade + remove/re-add actions. ``affected``
-    is ``(add_action, merged_sorted_positions, cardinality)`` per
-    touched file (positions = old DV ∪ new kills)."""
+) -> tuple[list[dict], int]:
+    """The deletion-vector kill path of DELETE and MERGE: collect the
+    union of the ``kills`` frames of (``__fp``, ``__pos``) in one job,
+    merge each touched file's positions with its old DV, and mint ONE
+    deletion-vector file for the files that gain a kill. Returns the
+    protocol-upgrade + remove/re-add actions (none when no live row
+    dies) and the number of rows newly killed.
+
+    The collect is bounded by the verb's own matched rows (the sliver),
+    not the table; a kill set big enough to strain the driver is a job
+    for a copy-on-write rewrite, not DVs."""
     from feature_store_spark.sources.roaring import (
         write_dv_file,
         z85_encode,
     )
 
+    if not kills:
+        return [], 0
+    hits = reduce(DataFrame.unionByName, kills).toPandas()
+    by_file: dict[str, set[int]] = {}
+    for fp, pos in zip(hits["__fp"], hits["__pos"]):
+        by_file.setdefault(fp, set()).add(int(pos))
+    affected: list[tuple[dict, list[int], int]] = []
+    n_killed = 0
+    for add in t.data_files() if by_file else []:
+        new = by_file.get(os.path.abspath(os.path.join(t.path, add["path"])))
+        if not new:
+            continue
+        old = (
+            set(t._load_dv(add["deletionVector"]))
+            if add.get("deletionVector")
+            else set()
+        )
+        merged = sorted(old | new)
+        if len(merged) > len(old):
+            n_killed += len(merged) - len(old)
+            affected.append((add, merged, len(merged)))
+    if not affected:
+        return [], 0
     actions: list[dict] = []
     dv_uuid = uuid.uuid4()
     dv_path = os.path.join(table_dir, f"deletion_vector_{dv_uuid}.bin")
@@ -3727,7 +3658,7 @@ def _dv_merge_actions(
             "cardinality": card,
         }
         actions.append({"add": new_add})
-    return actions
+    return actions, n_killed
 
 
 def delta_merge(
@@ -3777,6 +3708,9 @@ def delta_merge(
         version = t.latest_version() + 1
         meta, _, _ = t._state(None)
         if m.quiet:
+            # a quiet batch's schema is checked before its txn is
+            # recorded, as a non-empty batch's is
+            _conform(m, table_dir, meta, m.df, evolve)
             v, _, _ = _merge_commit(t, table_dir, version, meta, [], None, txn)
             return v, 0, 0, 0
         constraints = _writer_feature_gate(

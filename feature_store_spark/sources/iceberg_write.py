@@ -59,6 +59,11 @@ from feature_store_spark.sources.hive_paths import parse_partition_segs
 from feature_store_spark.sources.merge import Merge
 
 US_PER_DAY = 86_400_000_000
+# The default partition layout, the reference's offline-store spec:
+# identity(ENTITY_COL) as field ``entity_type_p`` + day(TS_COL) as
+# field ``ts_day``. The field names are table state; iceberg_rewrite
+# recognizes the layout by them.
+ENTITY_COL, TS_COL = "entity_type", "event_time"
 
 _FIELD_SUMMARY = {
     "type": "record",
@@ -897,8 +902,6 @@ def iceberg_txn_version(table_dir: str, app_id: str) -> int:
 def iceberg_append(
     df: DataFrame,
     table_dir: str,
-    entity_col: str = "entity_type",
-    ts_col: str = "event_time",
     schema_fields: list[dict] | None = None,
     upsert_keys: list[str] | None = None,
     txn: tuple[str, int] | None = None,
@@ -912,7 +915,7 @@ def iceberg_append(
     replace_paths: set | None = None,
 ) -> int:
     """Append ``df`` to (or create) an Iceberg v2 table partitioned
-    identity(entity_col) + day(ts_col) — the reference's offline-store
+    identity(ENTITY_COL) + day(TS_COL) — the reference's offline-store
     spec. Returns the committed snapshot id. Data files are written by
     Spark via shadow partition columns (source columns stay in the
     files, as Iceberg data files must); the commit is driver metadata
@@ -1096,27 +1099,27 @@ def iceberg_append(
             if p["transform"] != "identity":
                 p["shadow"] = pf["name"]
     elif partition_spec is None:
-        if entity_col not in by_name or ts_col not in by_name:
+        if ENTITY_COL not in by_name or TS_COL not in by_name:
             raise ValueError("entity/ts columns must be in the schema")
         pspec = [
             {
                 "name": "entity_type_p",
-                "source": entity_col,
+                "source": ENTITY_COL,
                 "transform": "identity",
-                "source_id": by_name[entity_col]["id"],
-                "src_type": by_name[entity_col]["type"],
-                "value_type": by_name[entity_col]["type"],
+                "source_id": by_name[ENTITY_COL]["id"],
+                "src_type": by_name[ENTITY_COL]["type"],
+                "value_type": by_name[ENTITY_COL]["type"],
                 "avro": _AVRO_OF_TYPE.get(
-                    by_name[entity_col]["type"], "string"
+                    by_name[ENTITY_COL]["type"], "string"
                 ),
                 "shadow": "__pt_ent",
             },
             {
                 "name": "ts_day",
-                "source": ts_col,
+                "source": TS_COL,
                 "transform": "day",
-                "source_id": by_name[ts_col]["id"],
-                "src_type": by_name[ts_col]["type"],
+                "source_id": by_name[TS_COL]["id"],
+                "src_type": by_name[TS_COL]["type"],
                 "value_type": "int",
                 "avro": "int",
                 "shadow": "__pt_day",
@@ -1578,8 +1581,6 @@ def _load_prev(meta_dir: str):
 def iceberg_append_sink(
     table_dir: str,
     app_id: str,
-    entity_col: str = "entity_type",
-    ts_col: str = "event_time",
     upsert_keys: list[str] | None = None,
 ):
     """foreachBatch body: exactly-once micro-batch appends (or CDC
@@ -1592,8 +1593,6 @@ def iceberg_append_sink(
         iceberg_append(
             batch_df,
             table_dir,
-            entity_col=entity_col,
-            ts_col=ts_col,
             upsert_keys=upsert_keys,
             txn=(app_id, int(batch_id)),
         )
@@ -1604,8 +1603,6 @@ def iceberg_append_sink(
 def iceberg_rewrite(
     spark,
     table_dir: str,
-    entity_col: str = "entity_type",
-    ts_col: str = "event_time",
     file_format: str = "parquet",
     sort_by: list[str] | None = None,
     sort_files: int | None = None,
@@ -1690,8 +1687,6 @@ def iceberg_rewrite(
         return iceberg_append(
             t.scan(only_paths=targets),
             table_dir,
-            entity_col=entity_col,
-            ts_col=ts_col,
             schema_fields=fields,
             file_format=file_format,
             partition_spec=pspec,
@@ -1703,8 +1698,6 @@ def iceberg_rewrite(
     return iceberg_append(
         current,
         table_dir,
-        entity_col=entity_col,
-        ts_col=ts_col,
         schema_fields=fields,
         replace=True,
         file_format=file_format,
@@ -1820,8 +1813,6 @@ def iceberg_upsert(
     df: DataFrame,
     table_dir: str,
     keys: list[str],
-    entity_col: str = "entity_type",
-    ts_col: str = "event_time",
     schema_fields: list[dict] | None = None,
     file_format: str = "parquet",
     partition_spec: list[tuple[str, str]] | None = None,
@@ -1839,8 +1830,6 @@ def iceberg_upsert(
     return iceberg_append(
         df,
         table_dir,
-        entity_col=entity_col,
-        ts_col=ts_col,
         schema_fields=schema_fields,
         upsert_keys=list(keys),
         file_format=file_format,
@@ -1858,8 +1847,6 @@ def iceberg_merge(
     when_not_matched_by_source: list[dict] | None = None,
     evolve: bool = False,
     txn: tuple[str, int] | None = None,
-    entity_col: str = "entity_type",
-    ts_col: str = "event_time",
     file_format: str = "parquet",
     partition_spec: list[tuple[str, str]] | None = None,
 ) -> tuple[int, int, int, int]:
@@ -1900,8 +1887,6 @@ def iceberg_merge(
         return iceberg_append(
             frame,
             table_dir,
-            entity_col=entity_col,
-            ts_col=ts_col,
             txn=txn,
             file_format=file_format,
             partition_spec=partition_spec,
@@ -1960,8 +1945,6 @@ def iceberg_merge_sink(
     insert: bool = True,
     insert_condition: str | None = None,
     when_not_matched_by_source: list[dict] | None = None,
-    entity_col: str = "entity_type",
-    ts_col: str = "event_time",
 ):
     """foreachBatch body: exactly-once conditional MERGE micro-batches
     into an Iceberg table — the iceberg twin of delta_merge_sink. An
@@ -1981,8 +1964,6 @@ def iceberg_merge_sink(
             when_not_matched_by_source=(
                 None if empty else when_not_matched_by_source
             ),
-            entity_col=entity_col,
-            ts_col=ts_col,
             txn=(app_id, int(batch_id)),
         )
 

@@ -154,7 +154,7 @@ EXPECTED_JOBS = {
     "delta_upsert": 8,
     "delta_merge": 11,
     "delta_upsert_cdc": 8,
-    "delta_merge_sync": 15,
+    "delta_merge_sync": 14,
     "delta_merge_insert_only": 9,
     "delta_merge_delete": 11,
     "delta_delete_where": 2,

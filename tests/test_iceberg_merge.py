@@ -367,8 +367,6 @@ def test_iceberg_merge_conditional_matches_dict_oracle(
             sch,
         ),
         d,
-        entity_col="entity_type",
-        ts_col="event_time",
     )
     iceberg_merge(
         spark.createDataFrame(
@@ -448,8 +446,6 @@ def test_iceberg_merge_sync_matches_dict_oracle(
             "event_time timestamp",
         ),
         d,
-        entity_col="entity_type",
-        ts_col="event_time",
     )
     snap = spark.createDataFrame(
         [

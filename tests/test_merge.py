@@ -77,6 +77,48 @@ def test_merge_verbs_release_what_they_materialize(
     assert _persisted(spark) - before == set()
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_quiet_batch_schema_checked_before_txn(spark, tmp_path, fmt):
+    """An empty batch whose schema deviates from the table refuses, as
+    a non-empty one does: the refusal leaves the table version and the
+    txn watermark where they were."""
+    from feature_store_spark.sources.delta import (
+        DeltaTable,
+        delta_append,
+        delta_merge,
+    )
+    from feature_store_spark.sources.iceberg import IcebergTable
+    from feature_store_spark.sources.iceberg_write import (
+        iceberg_append,
+        iceberg_merge,
+        iceberg_txn_version,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame([(1, 1.0)], "eid long, val double")
+    batch = spark.createDataFrame([], "eid long, val string")
+    if fmt == "delta":
+        delta_append(base, path)
+        merge = delta_merge
+
+        def state():
+            t = DeltaTable(spark, path)
+            return t.latest_version(), t.txn_version("a")
+    else:
+        iceberg_append(base, path, partition_spec=[])
+        merge = iceberg_merge
+
+        def state():
+            snaps = IcebergTable(spark, path).snapshots()
+            return snaps, iceberg_txn_version(path, "a")
+
+    before = state()
+    with pytest.raises(ValueError, match="deviates"):
+        merge(batch, path, ["eid"], when_matched=ARMS, txn=("a", 1))
+    assert state() == before
+    assert before[1] < 1
+
+
 # ---- random arm lists against a pure-Python reference MERGE ----------
 
 

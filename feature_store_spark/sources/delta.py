@@ -597,7 +597,6 @@ class DeltaTable:
         self._protocol_cache: dict[int, dict] = {}
         self._tombstone_cache: dict[int, list[dict]] = {}
         self._sig_cache: dict[str, tuple] = {}
-        self._maybe_evolved: dict[int, bool] = {}
 
     def _footer_sigs(self, paths: list[str]) -> dict[str, tuple]:
         """Footer (column name, field id) signatures per data file —
@@ -708,12 +707,6 @@ class DeltaTable:
         meta: dict = {}
         protocol: dict = {}
         txns: dict[str, int] = {}
-        # heterogeneity signal for the scan fast paths: files written
-        # under DIFFERENT schemaStrings may disagree on columns. A
-        # replay that starts from a checkpoint can't prove schema
-        # stability (the JSON history is compacted away), so it
-        # conservatively flags too.
-        schema_strings: set[str] = set()
         start = 0
         ckpt = self._checkpoint_at_or_before(version)
         if ckpt is not None:
@@ -769,9 +762,6 @@ class DeltaTable:
                     action = json.loads(line)
                     if "metaData" in action:
                         meta = action["metaData"]
-                        ss = meta.get("schemaString")
-                        if ss:
-                            schema_strings.add(ss)
                     elif "protocol" in action:
                         protocol = action["protocol"]
                     elif "add" in action:
@@ -790,9 +780,6 @@ class DeltaTable:
         self._check_protocol(protocol)
         if not meta:
             raise ValueError(f"{self.path}: delta log has no metaData")
-        self._maybe_evolved[version] = (
-            ckpt is not None or len(schema_strings) > 1
-        )
         out = (meta, list(adds.values()), txns)
         self._state_cache[version] = out
         self._protocol_cache[version] = protocol
@@ -1055,45 +1042,24 @@ class DeltaTable:
         as_of_ms: int | None = None,
     ) -> DataFrame:
         """The table at ``version`` (default latest), optionally pruned
-        by ``filters``. An unmapped table reads under the log's
-        recorded schema, the Delta table schema, so the read costs no
-        Spark footer-inference job."""
+        by ``filters``. An unmapped table's files read under the log's
+        recorded schema (``metaData.schemaString``) here and in every
+        write verb's probe, so no read of them costs a Spark
+        footer-inference job."""
         if as_of_ms is not None:
             if version is not None:
                 raise ValueError("pass version OR as_of_ms, not both")
             version = self.version_as_of(as_of_ms)
         meta, _, _ = self._state(version)
-        maybe_evolved = self._maybe_evolved.get(
-            version if version is not None else self.latest_version(),
-            True,
-        )
         adds = self.data_files(version, filters)
         if not adds:
             all_adds = self.data_files(version, None)
             if not all_adds:
                 # typed empty frame from the table schema (a CREATE
                 # TABLE commit has protocol+metaData and no files)
-                from pyspark.sql import types as T
-
-                return self.spark.createDataFrame(
-                    [],
-                    T.StructType.fromJson(
-                        json.loads(meta["schemaString"])
-                    ),
-                )
-            return (
-                self._assemble(
-                    [all_adds[0]],
-                    meta,
-                    maybe_evolved,
-                    tagged=False,
-                    log_schema=True,
-                )
-                .limit(0)
-            )
-        df = self._assemble_live(
-            adds, meta, maybe_evolved, tagged=False, log_schema=True
-        )
+                return self.spark.createDataFrame([], _log_schema(meta))
+            return self._assemble([all_adds[0]], meta, tagged=False).limit(0)
+        df = self._assemble_live(adds, meta, tagged=False)
         for f in filters or []:
             df = df.filter(_Filter(*f).sql())
         return df
@@ -1128,26 +1094,14 @@ class DeltaTable:
             adds.extend(a["add"] for a in actions if "add" in a)
         meta, _, _ = self._state(to)
         if not adds:
-            from pyspark.sql import types as T
-
-            return self.spark.createDataFrame(
-                [], T.StructType.fromJson(json.loads(meta["schemaString"]))
-            )
-        return self._assemble_live(
-            adds,
-            meta,
-            self._maybe_evolved.get(to, True),
-            tagged=False,
-            log_schema=True,
-        )
+            return self.spark.createDataFrame([], _log_schema(meta))
+        return self._assemble_live(adds, meta, tagged=False)
 
     def _assemble_live(
         self,
         adds: list[dict],
         meta: dict,
-        maybe_evolved: bool = True,
         tagged: bool = True,
-        log_schema: bool = False,
     ) -> DataFrame:
         """``_assemble`` minus the rows the adds' deletion vectors
         already killed, keeping the ``__fp``/``__pos`` tags — the
@@ -1158,9 +1112,7 @@ class DeltaTable:
         from pyspark.sql import functions as F
 
         dv_adds = [a for a in adds if a.get("deletionVector")]
-        df = self._assemble(
-            adds, meta, maybe_evolved, tagged or bool(dv_adds), log_schema
-        )
+        df = self._assemble(adds, meta, tagged or bool(dv_adds))
         if dv_adds:
             # decode all DVs at plan time (KB–MB metadata) and remove
             # their (file, row ordinal) pairs with ONE anti-join —
@@ -1201,9 +1153,7 @@ class DeltaTable:
         self,
         adds: list[dict],
         meta: dict,
-        maybe_evolved: bool = True,
         tagged: bool = True,
-        log_schema: bool = False,
     ) -> DataFrame:
         """Read the add set to a frame with LOGICAL column names plus,
         when ``tagged``, ``__fp`` (absolute data-file path) / ``__pos``
@@ -1235,55 +1185,23 @@ class DeltaTable:
             ).withColumn("__pos", F.col("_metadata.row_index"))
 
         paths = [os.path.join(self.path, a["path"]) for a in adds]
-        # heterogeneous footers (schema evolution) must not share one
-        # spark.read.parquet call — Spark infers the schema from ONE
-        # file, and a column missing there would silently null out
-        # rows from files that DO carry it (review r10d: the fast
-        # paths were previously unconditional, so an evolved unmapped
-        # table silently dropped the added column). The footer sniff
-        # costs one pooled KB read per file, so it only runs when the
-        # LOG REPLAY could not prove schema stability
-        # (``maybe_evolved``: >1 distinct schemaString seen, or the
-        # replay started from a checkpoint that compacted the history
-        # away) — never-evolved tables keep the zero-I/O fast path.
-        # In id mode the signature also resolves columns by field id.
-        sig_of: dict[str, tuple] = {}
         if mode == "none":
-            homogeneous = True
-            if maybe_evolved:
-                sig_of = self._footer_sigs(paths)
-                expected = {
-                    f["physical"]
-                    for f in fields
-                    if f["name"] not in logical_parts
-                }
-                name_sets = {
-                    frozenset(n for n, _ in sig_of[p]) for p in paths
-                }
-                homogeneous = len(name_sets) == 1 and expected <= next(
-                    iter(name_sets)
-                )
-            hive = all(
+            # an unmapped table's files read under the log schema: a
+            # file written before a column was added reads NULL for it,
+            # and no read pays Spark's footer-inference job
+            reader = self.spark.read.schema(_log_schema(meta))
+            if not logical_parts:
+                return tag(reader.parquet(*paths))
+            if all(
                 all(f"{c}=" in a["path"] for c in phys_parts)
                 for a in adds
-            )
-            reader = self.spark.read
-            if log_schema:
-                # the table reads (scan, read_appended); the verbs'
-                # probes still pay Spark's footer-inference job
-                from pyspark.sql import types as T
-
-                reader = reader.schema(
-                    T.StructType.fromJson(json.loads(meta["schemaString"]))
-                )
-            if homogeneous and not logical_parts:
-                return tag(reader.parquet(*paths))
-            if homogeneous and hive:
+            ):
                 return tag(
                     reader.option("basePath", self.path).parquet(*paths)
                 )
-        if not sig_of:
-            sig_of = self._footer_sigs(paths)
+        # a mapped file's columns resolve through its footer signature
+        # (in id mode by field id); unmapped files group by partition
+        sig_of = self._footer_sigs(paths) if mode != "none" else {}
 
         data_fields = [f for f in fields if f["name"] not in logical_parts]
         groups: dict[tuple, list[str]] = {}
@@ -1299,7 +1217,13 @@ class DeltaTable:
         frames = []
         for key, ps in groups.items():
             pv, sig = key
-            g = tag(self.spark.read.parquet(*ps))
+            g = tag(
+                self.spark.read.schema(
+                    _log_schema(meta, logical_parts)
+                ).parquet(*ps)
+                if mode == "none"
+                else self.spark.read.parquet(*ps)
+            )
             # homogeneous group: the footer names ARE the file schema
             present = {name for name, _ in sig} if sig else set(g.columns)
             by_id = (
@@ -1388,6 +1312,17 @@ _DELTA_TO_DDL = {
     "timestamp_ntz": "timestamp_ntz",
     "binary": "binary",
 }
+
+
+def _log_schema(meta: dict, drop=()):
+    """The log's recorded table schema (``metaData.schemaString``) as
+    a Spark read schema, minus the ``drop`` columns. Reading an
+    unmapped table's files under it costs no footer-inference job, and
+    a file written before a column was added reads NULL for it."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    return T.StructType([f for f in schema.fields if f.name not in drop])
 
 
 def _ddl(t) -> str:
@@ -2341,7 +2276,14 @@ def delta_optimize(
         if not cands or (len(cands) < 2 and not has_dv and not zorder_by):
             continue
         paths = [os.path.join(t.path, a["path"]) for a in cands]
-        df = spark.read.parquet(*paths)
+        # an unmapped table's files read under the log schema: a file
+        # written before a merge_schema append reads NULL for the new
+        # column instead of one footer's schema dropping it; a mapped
+        # table keeps its physical names (and, in id mode, field ids)
+        reader = spark.read
+        if mode == "none":
+            reader = reader.schema(_log_schema(meta, logical_parts))
+        df = reader.parquet(*paths)
         if has_dv:
             import pandas as pd
 
@@ -3499,18 +3441,21 @@ def delta_upsert(
             F.lower(F.col(op_col).cast("string")).isin("d", "delete"),
             F.lit(False),
         )
-    has_table = _is_table(table_dir)
+    spark = df.sparkSession
+    t = DeltaTable(spark, table_dir) if _is_table(table_dir) else None
+    if t is not None and txn is not None and t.txn_version(txn[0]) >= int(
+        txn[1]
+    ):
+        # a redelivered batch is a no-op, decided before any Spark job
+        return t.latest_version(), 0
     with m:
         m.load(is_live)
         live = m.df if op_col is None else m.df.filter(is_live).drop(op_col)
-        if not has_table:
+        if t is None:
             v = delta_append(
                 live, table_dir, partition_cols=partition_cols, txn=txn
             )
             return v, 0
-        t = DeltaTable(df.sparkSession, table_dir)
-        if txn is not None and t.txn_version(txn[0]) >= int(txn[1]):
-            return t.latest_version(), 0  # redelivered batch: no-op
         version = t.latest_version() + 1
         meta, _, _ = t._state(None)
         # the rule checks are observed on the staging write: an empty
@@ -3696,15 +3641,18 @@ def delta_merge(
         df, keys, "delta_merge", when_matched, insert, insert_condition,
         when_not_matched_by_source,
     )
-    has_table = _is_table(table_dir)
+    spark = df.sparkSession
+    t = DeltaTable(spark, table_dir) if _is_table(table_dir) else None
+    if t is not None and txn is not None and t.txn_version(txn[0]) >= int(
+        txn[1]
+    ):
+        # a redelivered batch is a no-op, decided before any Spark job
+        return t.latest_version(), 0, 0, 0
     with m:
         m.load()
-        if not has_table:
+        if t is None:
             ins, n = m.inserts_only(table_dir)
             return delta_append(ins, table_dir, txn=txn), 0, 0, n
-        t = DeltaTable(df.sparkSession, table_dir)
-        if txn is not None and t.txn_version(txn[0]) >= int(txn[1]):
-            return t.latest_version(), 0, 0, 0  # redelivered: no-op
         version = t.latest_version() + 1
         meta, _, _ = t._state(None)
         if m.quiet:

@@ -78,6 +78,9 @@ from feature_store_spark.sources.commit import _is_nan
 
 _US_PER_DAY = 86_400_000_000
 _US_PER_HOUR = 3_600_000_000
+# the spec's fixed position-delete file columns (an optional ``row``
+# struct may follow; no reader here needs it)
+POS_DELETE_SCHEMA = "file_path string, pos long"
 
 
 def current_schema_fields(meta: dict) -> list[dict]:
@@ -483,6 +486,25 @@ class IcebergTable:
         nested struct stats are not used for pruning)."""
         return current_schema_fields(self.meta)
 
+    def _read_parquet(
+        self, paths: list[str], names: list[str] | None = None
+    ) -> DataFrame:
+        """The parquet ``paths`` read under the current schema's
+        ``names`` columns (default all), which costs no Spark
+        footer-inference job. A column whose Spark type is not a
+        faithful read of its physical type (see :func:`_faithful`)
+        leaves the read to Spark's inference."""
+        from pyspark.sql import types as T
+
+        type_of = {f["name"]: f["type"] for f in self.schema_fields()}
+        names = list(type_of) if names is None else names
+        if not all(_faithful(type_of[n]) for n in names):
+            return self.spark.read.parquet(*paths)
+        schema = T.StructType(
+            [T.StructField(n, _spark_type(type_of[n])) for n in names]
+        )
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def partition_spec(self, spec_id: int | None = None) -> list[dict]:
         meta = self.meta
         if "partition-specs" in meta:
@@ -822,7 +844,9 @@ class IcebergTable:
             )
 
         if pos:
-            dels = spark.read.parquet(*[d["path"] for d in pos]).select(
+            dels = spark.read.schema(POS_DELETE_SCHEMA).parquet(
+                *[d["path"] for d in pos]
+            ).select(
                 _fp_expr(F.col("file_path")).alias("__del_fp"),
                 F.col("pos").cast("long").alias("__del_pos"),
             )
@@ -899,7 +923,7 @@ class IcebergTable:
                     )
                 cols = [names_by_id[i] for i in ids]
                 parts = [
-                    spark.read.parquet(d["path"])
+                    self._read_parquet([d["path"]], cols)
                     .select(
                         *[F.col(c).alias(f"__d_{c}") for c in cols]
                     )
@@ -1569,7 +1593,7 @@ class IcebergTable:
             ]
             allorc = [f for f in allf if f.get("format") == "orc"]
             if allpq:
-                return self.spark.read.parquet(allpq[0]["path"]).limit(0)
+                return self._read_parquet([allpq[0]["path"]]).limit(0)
             if allorc:
                 return self.spark.read.orc(allorc[0]["path"]).limit(0)
             return self._read_avro_data(allf[:1]).limit(0)
@@ -1607,7 +1631,8 @@ class IcebergTable:
             if probe_key not in cache:
                 cache[probe_key] = {
                     r["s"]
-                    for r in self.spark.read.parquet(*probe_key)
+                    for r in self.spark.read.schema(POS_DELETE_SCHEMA)
+                    .parquet(*probe_key)
                     .select(_fp_expr(F.col("file_path")).alias("s"))
                     .distinct()
                     .collect()
@@ -1778,7 +1803,7 @@ class IcebergTable:
         else:
             df = None
             if pq_files:
-                df = self.spark.read.parquet(*[f["path"] for f in pq_files])
+                df = self._read_parquet([f["path"] for f in pq_files])
                 if deletes:
                     df = self._apply_deletes(df, pq_files, deletes)
             if orc_files:
@@ -2066,9 +2091,8 @@ class IcebergTable:
             if pos_new:
                 hit = {
                     r["s"]
-                    for r in self.spark.read.parquet(
-                        *[d["path"] for d in pos_new]
-                    )
+                    for r in self.spark.read.schema(POS_DELETE_SCHEMA)
+                    .parquet(*[d["path"] for d in pos_new])
                     .select(_fp_expr(F.col("file_path")).alias("s"))
                     .distinct()
                     .collect()
@@ -2089,9 +2113,7 @@ class IcebergTable:
                     )
                 cols = sorted(names_by_id[i] for i in ids)
                 b = (
-                    self.spark.read.parquet(
-                        *[d["path"] for d in eq_new]
-                    )
+                    self._read_parquet([d["path"] for d in eq_new], cols)
                     .agg(
                         *[F.min(c).alias(f"lo_{c}") for c in cols],
                         *[F.max(c).alias(f"hi_{c}") for c in cols],
@@ -2233,6 +2255,20 @@ def _spark_type(type_str: str):
         "uuid": T.StringType(),
         "binary": T.BinaryType(),
     }.get(type_str)
+
+
+def _faithful(type_) -> bool:
+    """An Iceberg type whose :func:`_spark_type` reads its parquet
+    physical type faithfully. uuid (16-byte fixed), time (micros) and
+    fixed and nested types are not."""
+    return isinstance(type_, str) and (
+        type_
+        in (
+            "boolean", "int", "long", "float", "double", "date",
+            "timestamp", "timestamptz", "string", "binary",
+        )
+        or re.fullmatch(r"decimal\(\d+,\s*\d+\)", type_) is not None
+    )
 
 
 def _partition_value_type(transform: str, source_type: str) -> str:

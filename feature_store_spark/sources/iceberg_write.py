@@ -1894,16 +1894,17 @@ def iceberg_merge(
             **kw,
         )
 
+    cur_snap = int((prev_meta or {}).get("current-snapshot-id") or 0)
+    if prev_meta is not None and txn is not None and iceberg_txn_version(
+        table_dir, txn[0]
+    ) >= int(txn[1]):
+        # a redelivered batch is a no-op, decided before any Spark job
+        return cur_snap, 0, 0, 0
     with m:
         m.load()
         if prev_meta is None:
             ins, n = m.inserts_only(table_dir)
             return append(ins), 0, 0, n
-        cur_snap = int(prev_meta.get("current-snapshot-id") or 0)
-        if txn is not None and iceberg_txn_version(
-            table_dir, txn[0]
-        ) >= int(txn[1]):
-            return cur_snap, 0, 0, 0  # redelivered batch: no-op
         t = IcebergTable(df.sparkSession, table_dir)
         m.conform(
             table_dir,
@@ -2068,12 +2069,9 @@ def iceberg_delete_where(
     df = None
     if pq_files:
         # evolved tables: files written before a column was added
-        # don't carry it, and a raw multi-file read would infer the
-        # schema from ONE arbitrary footer — filters on the evolved
-        # column would then fail or miss rows nondeterministically.
-        # Sniff the (cached) footers; when any file omits a schema
-        # column, read under the TABLE schema explicitly so Spark
-        # null-fills per file.
+        # don't carry it. Sniff the (cached) footers; when any file
+        # omits a schema column, route through the per-file resolver
+        # below, else read every file under the current schema.
         from feature_store_spark.sources.iceberg import _spark_type
 
         prim = [
@@ -2120,7 +2118,7 @@ def iceberg_delete_where(
             df = t._read_by_field_id(pq_files)
         else:
             df = (
-                spark.read.parquet(*[f["path"] for f in pq_files])
+                t._read_parquet([f["path"] for f in pq_files])
                 .withColumn(
                     "__fp", _fp_expr(F.col("_metadata.file_path"))
                 )

@@ -34,6 +34,10 @@ SYNC = {
 }
 
 
+# a batch the table already committed: a keyed write of it is a no-op
+TXN = ("app", 1)
+
+
 def _frame(spark, lo=0, hi=N_ROWS, shift=0):
     return spark.range(lo, hi).select(
         F.lit("user").alias("entity_type"),
@@ -74,6 +78,9 @@ def _delta(verb):
     def setup(spark, path):
         d.delta_append(_frame(spark), path)
         d.delta_append(_frame(spark, N_ROWS, 2 * N_ROWS), path)
+        if verb.endswith("_redelivered"):
+            d.delta_append(_frame(spark, 2 * N_ROWS, 3 * N_ROWS), path,
+                           txn=TXN)
 
     calls = {
         "delta_append": lambda s, p: d.delta_append(
@@ -99,6 +106,13 @@ def _delta(verb):
         "delta_merge_delete": lambda s, p: d.delta_merge(
             _batch(s), p, keys=["entity_id"], when_matched=DELETE_ARMS,
         ),
+        "delta_upsert_redelivered": lambda s, p: d.delta_upsert(
+            _batch(s), p, keys=["entity_id"], txn=TXN,
+        ),
+        "delta_merge_redelivered": lambda s, p: d.delta_merge(
+            _batch(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
+            txn=TXN,
+        ),
         "delta_delete_where": lambda s, p: d.delta_delete_where(
             s, p, [("entity_id", "<", 50)]
         ),
@@ -112,10 +126,19 @@ def _delta(verb):
 
 def _iceberg(verb):
     from feature_store_spark.sources import iceberg_write as i
+    from feature_store_spark.sources.iceberg import IcebergTable
 
     def setup(spark, path):
         i.iceberg_append(_frame(spark), path)
         i.iceberg_append(_frame(spark, N_ROWS, 2 * N_ROWS), path)
+        if verb.endswith("_redelivered"):
+            i.iceberg_append(_frame(spark, 2 * N_ROWS, 3 * N_ROWS), path,
+                             txn=TXN)
+        if verb == "iceberg_scan_with_deletes":
+            # equality deletes from the upsert, position deletes from
+            # the delete
+            i.iceberg_upsert(_batch(spark), path, keys=["entity_id"])
+            i.iceberg_delete_where(spark, path, [("entity_id", "<", 50)])
 
     calls = {
         "iceberg_append": lambda s, p: i.iceberg_append(
@@ -138,10 +161,17 @@ def _iceberg(verb):
         "iceberg_merge_delete": lambda s, p: i.iceberg_merge(
             _batch(s), p, keys=["entity_id"], when_matched=DELETE_ARMS,
         ),
+        "iceberg_merge_redelivered": lambda s, p: i.iceberg_merge(
+            _batch(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
+            txn=TXN,
+        ),
         "iceberg_delete_where": lambda s, p: i.iceberg_delete_where(
             s, p, [("entity_id", "<", 50)]
         ),
         "iceberg_rewrite": lambda s, p: i.iceberg_rewrite(s, p),
+        "iceberg_scan_with_deletes": lambda s, p: IcebergTable(s, p)
+        .scan()
+        .collect(),
     }
     return setup, calls[verb]
 
@@ -151,23 +181,27 @@ def _iceberg(verb):
 # commit path must not move them without a reason.
 EXPECTED_JOBS = {
     "delta_append": 2,
-    "delta_upsert": 8,
-    "delta_merge": 11,
-    "delta_upsert_cdc": 8,
-    "delta_merge_sync": 14,
-    "delta_merge_insert_only": 9,
-    "delta_merge_delete": 11,
-    "delta_delete_where": 2,
-    "delta_optimize": 2,
+    "delta_upsert": 7,
+    "delta_merge": 10,
+    "delta_upsert_cdc": 7,
+    "delta_merge_sync": 12,
+    "delta_merge_insert_only": 8,
+    "delta_merge_delete": 10,
+    "delta_upsert_redelivered": 0,
+    "delta_merge_redelivered": 0,
+    "delta_delete_where": 1,
+    "delta_optimize": 1,
     "delta_overwrite": 2,
     "iceberg_append": 2,
     "iceberg_upsert": 3,
-    "iceberg_merge": 13,
-    "iceberg_merge_sync": 18,
-    "iceberg_merge_insert_only": 10,
-    "iceberg_merge_delete": 13,
-    "iceberg_delete_where": 3,
-    "iceberg_rewrite": 3,
+    "iceberg_merge": 12,
+    "iceberg_merge_sync": 16,
+    "iceberg_merge_insert_only": 9,
+    "iceberg_merge_delete": 12,
+    "iceberg_merge_redelivered": 0,
+    "iceberg_delete_where": 2,
+    "iceberg_rewrite": 2,
+    "iceberg_scan_with_deletes": 5,
 }
 
 

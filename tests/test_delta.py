@@ -779,6 +779,37 @@ class TestOptimize:
             delta_optimize(spark, d, target_file_bytes=1)
 
 
+def test_optimize_keeps_columns_added_by_merge_schema(spark, tmp_path):
+    """OPTIMIZE over files written before and after a merge_schema
+    append rewrites the same rows: reading the candidates under one
+    file's footer schema dropped the added column's values."""
+    from collections import Counter
+
+    from feature_store_spark.sources.delta import delta_optimize
+
+    d = str(tmp_path / "opt_evolved")
+    delta_append(
+        spark.createDataFrame([(i,) for i in range(5)], "a long").coalesce(1),
+        d,
+    )
+    delta_append(
+        spark.createDataFrame(
+            [(i, f"s{i}") for i in range(5, 10)], "a long, b string"
+        ).coalesce(1),
+        d,
+        merge_schema=True,
+    )
+
+    def rows():
+        return Counter(tuple(r) for r in DeltaTable(spark, d).scan().collect())
+
+    before = rows()
+    assert before[(7, "s7")] == 1 and before[(2, None)] == 1
+    v, removed, added = delta_optimize(spark, d)
+    assert (v, removed, added) == (2, 2, 1)
+    assert rows() == before
+
+
 class TestVacuum:
     def test_vacuum_reclaims_optimized_and_dv_garbage(
         self, spark, tmp_path
@@ -1464,8 +1495,10 @@ class TestSchemaEnforcementAndEvolution:
         t = DeltaTable(spark, d)
         assert t.scan().count() == 20
         assert t._sig_cache == {}
-        # an evolved table DOES sniff
-        d2 = str(tmp_path / "sniffs")
+        # an evolved unmapped table needs no sniff either: its files
+        # read under the log schema, so the older file reads NULL for
+        # the added column
+        d2 = str(tmp_path / "evolved")
         delta_append(self._base(spark), d2)
         delta_append(
             self._base(spark).withColumn("extra", F.lit(1.0)),
@@ -1473,8 +1506,11 @@ class TestSchemaEnforcementAndEvolution:
             merge_schema=True,
         )
         t2 = DeltaTable(spark, d2)
-        assert t2.scan().count() == 40
-        assert t2._sig_cache  # footers were read
+        rows = t2.scan().collect()
+        assert len(rows) == 40
+        assert sum(r["extra"] is None for r in rows) == 20
+        assert {r["extra"] for r in rows} == {None, 1.0}
+        assert t2._sig_cache == {}
 
 
 class TestRoaringHardening:

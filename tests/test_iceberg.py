@@ -3399,3 +3399,168 @@ class TestChangesBetweenTimestamps:
             between_timestamps=(self.BASE_MS + s1, None)
         )
         assert {r["_snapshot_id"] for r in feed.collect()} == {s4}
+
+
+def _pyarrow_live(t: IcebergTable):
+    """The table's live rows read with pyarrow alone: every data file of
+    the current snapshot, minus the rows its position deletes name and
+    the rows of older files that its equality deletes match. Returns
+    ``([(column, Spark type name)], Counter of rows)``, timestamps as
+    epoch micros."""
+    from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def spark_type(ty):
+        if pa.types.is_timestamp(ty):
+            return "timestamp" if ty.tz else "timestamp_ntz"
+        return {
+            pa.int32(): "int", pa.int64(): "bigint", pa.float32(): "float",
+            pa.float64(): "double", pa.string(): "string",
+            pa.bool_(): "boolean", pa.date32(): "date",
+        }[ty]
+
+    def rows(tbl):
+        cols = [
+            c.cast(pa.int64()) if pa.types.is_timestamp(c.type) else c
+            for c in tbl.columns
+        ]
+        return list(zip(*(c.to_pylist() for c in cols)))
+
+    def key(path):  # table-relative: partition dirs repeat file names
+        return path[path.rindex("/data/"):]
+
+    files = t.data_files()
+    data = [f for f in files if not f["is_delete"]]
+    pos = {
+        (key(fp), p)
+        for d in files
+        if d.get("delete_kind") == "pos"
+        for fp, p in rows(
+            pq.read_table(d["path"], columns=["file_path", "pos"])
+        )
+    }
+    name_of = {f["id"]: f["name"] for f in t.schema_fields()}
+    eqs = [
+        (
+            d["sequence_number"],
+            [name_of[i] for i in d["equality_ids"]],
+            pq.read_table(d["path"]),
+        )
+        for d in files
+        if d.get("delete_kind") == "eq"
+    ]
+    schema, live = None, Counter()
+    for f in data:
+        tbl = pq.read_table(f["path"])
+        names = tbl.column_names
+        schema = [(n, spark_type(tbl.schema.field(n).type)) for n in names]
+        for i, row in enumerate(rows(tbl)):
+            if (key(f["path"]), i) in pos:
+                continue
+            if any(
+                seq > f["sequence_number"]
+                and tuple(row[names.index(c)] for c in cols)
+                in set(rows(dt.select(cols)))
+                for seq, cols, dt in eqs
+            ):
+                continue
+            live[row] += 1
+    return schema, live
+
+
+def _spark_live(df):
+    """``df``'s column names with Spark type names, and its rows with
+    timestamps as epoch micros."""
+    import datetime
+    from collections import Counter
+
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    one_us = datetime.timedelta(microseconds=1)
+    schema = [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+    def norm(v, ty):
+        if ty == "timestamp":  # local wall clock in Python
+            return (v.astimezone(datetime.timezone.utc) - epoch) // one_us
+        if ty == "timestamp_ntz":
+            return (v.replace(tzinfo=datetime.timezone.utc) - epoch) // one_us
+        return v
+
+    return schema, Counter(
+        tuple(norm(v, ty) for v, (_, ty) in zip(r, schema))
+        for r in df.collect()
+    )
+
+
+class TestReadSchema:
+    """The plain scan reads under the table's current schema: names,
+    order, types and rows equal what pyarrow reads from the live
+    files."""
+
+    def test_timestamp_and_timestamptz_columns(self, spark, tmp_path):
+        import datetime
+
+        from pyspark.sql import functions as F
+
+        from feature_store_spark.sources.iceberg_write import iceberg_append
+
+        d = str(tmp_path / "ts")
+        df = spark.range(50).select(
+            F.col("id"),
+            F.col("id").cast("int").alias("i"),
+            (F.col("id") / 4).cast("float").alias("f"),
+            (F.col("id") % 3 == 0).alias("ok"),
+            F.date_add(
+                F.lit(datetime.date(2024, 2, 27)), F.col("id").cast("int")
+            ).alias("day"),
+            F.timestamp_micros(F.col("id") * 3_600_000_001)
+            .cast("timestamp_ntz")
+            .alias("ts_ntz"),
+            F.timestamp_micros(F.col("id") * 7_200_000_003).alias("ts_tz"),
+        )
+        iceberg_append(df, d, partition_spec=[])
+        iceberg_append(df.filter(F.col("id") < 10), d, partition_spec=[])
+        t = IcebergTable(spark, d)
+        types = {f["name"]: f["type"] for f in t.schema_fields()}
+        assert types["ts_ntz"] == "timestamp"
+        assert types["ts_tz"] == "timestamptz"
+        want_schema, want_rows = _pyarrow_live(t)
+        got_schema, got_rows = _spark_live(t.scan())
+        assert got_schema == want_schema
+        assert got_rows == want_rows and sum(got_rows.values()) == 60
+
+    def test_position_and_equality_deletes(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        from feature_store_spark.sources.iceberg_write import (
+            iceberg_append,
+            iceberg_delete_where,
+            iceberg_upsert,
+        )
+
+        def batch(lo, hi, shift):
+            return spark.range(lo, hi).select(
+                F.lit("user").alias("entity_type"),
+                F.col("id").alias("entity_id"),
+                (F.col("id") * 0.5 + shift).alias("value_float"),
+                F.timestamp_seconds(F.col("id") * 3600 + 86400 * shift)
+                .alias("event_time"),
+            )
+
+        d = str(tmp_path / "dels")
+        iceberg_append(batch(0, 100, 0), d)
+        iceberg_upsert(batch(50, 150, 1), d, keys=["entity_id"])
+        iceberg_delete_where(spark, d, [("entity_id", "<", 20)])
+        iceberg_delete_where(spark, d, [("entity_id", ">=", 140)])
+        t = IcebergTable(spark, d)
+        kinds = {f.get("delete_kind") for f in t.data_files()}
+        assert {"pos", "eq"} <= kinds
+        want_schema, want_rows = _pyarrow_live(t)
+        got_schema, got_rows = _spark_live(t.scan())
+        assert got_schema == want_schema
+        assert got_rows == want_rows
+        # ids 20..139 survive once: 20..49 from the append, 50..139
+        # from the upsert
+        ids = sorted(r[1] for r in got_rows.elements())
+        assert ids == list(range(20, 140))

@@ -1314,15 +1314,27 @@ _DELTA_TO_DDL = {
 }
 
 
-def _log_schema(meta: dict, drop=()):
+def _log_schema(meta: dict, drop=(), physical: bool = False):
     """The log's recorded table schema (``metaData.schemaString``) as
-    a Spark read schema, minus the ``drop`` columns. Reading an
-    unmapped table's files under it costs no footer-inference job, and
-    a file written before a column was added reads NULL for it."""
+    a Spark read schema, minus the ``drop`` columns (logical names).
+    Reading a table's files under it costs no footer-inference job, and
+    a file written before a column was added reads NULL for it.
+    ``physical`` names each column by its column-mapping physical name,
+    the name a mapped table's files carry."""
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    return T.StructType([f for f in schema.fields if f.name not in drop])
+    fields = [f for f in schema.fields if f.name not in drop]
+    if physical:
+        fields = [
+            T.StructField(
+                f.metadata.get("delta.columnMapping.physicalName", f.name),
+                f.dataType,
+                f.nullable,
+            )
+            for f in fields
+        ]
+    return T.StructType(fields)
 
 
 def _ddl(t) -> str:
@@ -2276,14 +2288,12 @@ def delta_optimize(
         if not cands or (len(cands) < 2 and not has_dv and not zorder_by):
             continue
         paths = [os.path.join(t.path, a["path"]) for a in cands]
-        # an unmapped table's files read under the log schema: a file
-        # written before a merge_schema append reads NULL for the new
-        # column instead of one footer's schema dropping it; a mapped
-        # table keeps its physical names (and, in id mode, field ids)
-        reader = spark.read
-        if mode == "none":
-            reader = reader.schema(_log_schema(meta, logical_parts))
-        df = reader.parquet(*paths)
+        # the files read under the log schema, by physical name: a
+        # file written before a merge_schema append reads NULL for the
+        # new column instead of one footer's schema dropping it
+        df = spark.read.schema(
+            _log_schema(meta, logical_parts, physical=True)
+        ).parquet(*paths)
         if has_dv:
             import pandas as pd
 
@@ -3491,7 +3501,7 @@ def delta_upsert(
             kills.append(
                 t._assemble(adds, meta)
                 .join(
-                    F.broadcast(m.df.select(*keys).distinct()),
+                    F.broadcast(m.df.select(*keys)),
                     on=list(keys),
                     how="leftsemi",
                 )

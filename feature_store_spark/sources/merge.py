@@ -34,9 +34,11 @@ key tuples (which row's arms win is undefined), SET on a merge key, SET
 of an unknown column, a non-last unconditional arm, a by-source update
 arm without ``set``, schema drift.
 
-Scale shape. The batch is materialized once. One aggregate over it
-answers the duplicate-key refusal, emptiness and the per-key min/max
-that prune the target scan. The matched probe broadcasts the batch
+Scale shape. The batch is materialized once, with each row's key
+count from one window over the keys (one shuffle). Metrics observed on
+that checkpoint answer the duplicate-key refusal, emptiness and the
+per-key min/max that prune the target scan, so the checks cost no job
+of their own. The matched probe broadcasts the batch
 against the pruned live target; arm predicates and SET expressions are
 Catalyst expressions inside that one join. Per-arm counts are observed
 on the probe's materialization, so they cost no job of their own.
@@ -212,7 +214,8 @@ class Merge:
 
     def _materialize(self, frame: DataFrame, **metrics: Column):
         """``frame`` checkpointed, held for release, and the ``metrics``
-        observed during the checkpoint job (no job of their own)."""
+        observed during the checkpoint job (no job of their own), as
+        observed: a key bound is not an int."""
         if metrics:
             obs = Observation()
             frame = frame.observe(
@@ -220,49 +223,41 @@ class Merge:
             )
         frame = frame.localCheckpoint(eager=True)
         self._held.append(frame)
-        return frame, {k: int(obs.get[k] or 0) for k in metrics}
+        return frame, obs.get if metrics else {}
 
     def load(self, is_live: Column | None = None) -> None:
-        """Materialize the batch once, then read the one key aggregate:
-        the duplicate-key refusal, emptiness, the count of rows where
-        ``is_live`` holds and the per-key bounds in :attr:`filters`."""
-        self.df, _ = self._materialize(self.df)
+        """Materialize the batch once, each row tagged with its key's
+        row count (a window groups NULL keys together, as ``groupBy``
+        does), and read off that one job the duplicate-key refusal,
+        emptiness, the count of rows where ``is_live`` holds and the
+        per-key bounds in :attr:`filters`."""
         keys = self.keys
         live = F.lit(True) if is_live is None else is_live
-        kb = (
-            self.df.groupBy(*keys)
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.sum(live.cast("long")).alias("__nl"),
-            )
-            .agg(
-                F.max("__n").alias("__maxn"),
-                F.sum("__nl").alias("__nlive"),
-                F.count(F.lit(1)).alias("__nkeys"),
-                *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-                *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-            )
-            .first()
+        ck, kb = self._materialize(
+            self.df.withColumn(
+                "__kn", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+            ),
+            maxn=F.max("__kn"),
+            n=F.count(F.lit(1)),
+            nlive=F.count(F.when(live, 1)),
+            **{f"lo{i}": F.min(k) for i, k in enumerate(keys)},
+            **{f"hi{i}": F.max(k) for i, k in enumerate(keys)},
         )
-        if (kb["__maxn"] or 0) > 1:
+        if (kb["maxn"] or 0) > 1:
             # error path only: one more job to name an offending key
-            dup = (
-                self.df.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .first()
-            )
+            dup = ck.filter(F.col("__kn") > 1).first()
             kv = {k: dup[k] for k in keys}
             raise ValueError(
                 f"{self.verb}: source has multiple rows for key {kv} — "
                 "MERGE cannot decide which one wins; de-duplicate the "
                 "batch first (e.g. latest-by-timestamp per key)"
             )
-        self.empty = not kb["__nkeys"]
-        self.n_live = int(kb["__nlive"] or 0)
+        self.df = ck.drop("__kn")
+        self.empty = not kb["n"]
+        self.n_live = kb["nlive"]
         self.filters: list[tuple] = []
         for i, k in enumerate(keys):
-            lo, hi = kb[f"__lo_{i}"], kb[f"__hi_{i}"]
+            lo, hi = kb[f"lo{i}"], kb[f"hi{i}"]
             if lo is not None and hi is not None and not isinstance(
                 lo, (bytes, bytearray)
             ):
@@ -362,8 +357,8 @@ class Merge:
 
         def counts(upd, dels) -> dict[str, Column]:
             return {
-                "u": F.sum(_isin(upd).cast("long")),
-                "d": F.sum(_isin(dels).cast("long")),
+                "u": F.count(F.when(_isin(upd), 1)),
+                "d": F.count(F.when(_isin(dels), 1)),
             }
 
         carry = [F.col(f"__t_{c}").alias(c) for c in self.tbl_cols]
@@ -392,7 +387,7 @@ class Merge:
                     "__fired", fired.over(Window.partitionBy(*keys))
                 )
                 sibling = (F.col("__arm") == 0) & (F.col("__fired") == 1)
-                metrics["c"] = F.sum(sibling.cast("long"))
+                metrics["c"] = F.count(F.when(sibling, 1))
             matched, n = self._materialize(frame, **metrics)
             if n["u"] or n["d"]:
                 self.kills.append(
@@ -409,7 +404,7 @@ class Merge:
         live = live_target(None) if self.by_source else None
         if live is not None:
             nosrc = live.alias("tgt").join(
-                F.broadcast(df.select(*keys).distinct()),
+                F.broadcast(df.select(*keys)),
                 on=keys,
                 how="left_anti",
             ).select(*probe(self.by_source, self.src_upd))
@@ -431,7 +426,7 @@ class Merge:
                     siblings, c = self._materialize(
                         nosrc.filter(F.col("__arm") == 0)
                         .join(
-                            F.broadcast(fired.select(*keys).distinct()),
+                            F.broadcast(fired.select(*keys)),
                             on=keys,
                             how="leftsemi",
                         )
@@ -446,20 +441,16 @@ class Merge:
         if self.insert and not self.empty:
             hit = None
             if matched is not None:
-                hit = matched.select(*keys).distinct()
+                hit = matched.select(*keys)
             elif not self.when_matched:
                 # no matched arms still consumes matched source rows
                 live = live_target(self.filters)
                 if live is not None:
-                    hit = (
-                        live.join(
-                            F.broadcast(df.select(*keys).distinct()),
-                            on=keys,
-                            how="leftsemi",
-                        )
-                        .select(*keys)
-                        .distinct()
-                    )
+                    hit = live.join(
+                        F.broadcast(df.select(*keys)),
+                        on=keys,
+                        how="leftsemi",
+                    ).select(*keys)
             ins = df.alias("src")
             if hit is not None:
                 ins = ins.join(F.broadcast(hit), on=keys, how="left_anti")

@@ -1,8 +1,8 @@
 """The shared commit kernel (``sources/commit.py``) under Delta and
-Iceberg: per-verb Spark job counts, the incremental refresh's job
-choreography, file bounds built from row-group footers (partial stats,
-NaN), the session-conf precondition, and cleanup when a write fails
-before publish."""
+Iceberg: per-verb and keyed-query Spark job counts, the incremental
+refresh's job choreography, file bounds built from row-group footers
+(partial stats, NaN), the session-conf precondition, and cleanup when
+a write fails before publish."""
 
 from __future__ import annotations
 
@@ -76,6 +76,8 @@ def _delta(verb):
     from feature_store_spark.sources import delta as d
 
     def setup(spark, path):
+        if verb.endswith("_create"):
+            return
         d.delta_append(_frame(spark), path)
         d.delta_append(_frame(spark, N_ROWS, 2 * N_ROWS), path)
         if verb.endswith("_redelivered"):
@@ -113,6 +115,12 @@ def _delta(verb):
             _batch(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
             txn=TXN,
         ),
+        "delta_upsert_create": lambda s, p: d.delta_upsert(
+            _frame(s), p, keys=["entity_id"],
+        ),
+        "delta_merge_create": lambda s, p: d.delta_merge(
+            _frame(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
+        ),
         "delta_delete_where": lambda s, p: d.delta_delete_where(
             s, p, [("entity_id", "<", 50)]
         ),
@@ -129,6 +137,8 @@ def _iceberg(verb):
     from feature_store_spark.sources.iceberg import IcebergTable
 
     def setup(spark, path):
+        if verb.endswith("_create"):
+            return
         i.iceberg_append(_frame(spark), path)
         i.iceberg_append(_frame(spark, N_ROWS, 2 * N_ROWS), path)
         if verb.endswith("_redelivered"):
@@ -165,6 +175,9 @@ def _iceberg(verb):
             _batch(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
             txn=TXN,
         ),
+        "iceberg_merge_create": lambda s, p: i.iceberg_merge(
+            _frame(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
+        ),
         "iceberg_delete_where": lambda s, p: i.iceberg_delete_where(
             s, p, [("entity_id", "<", 50)]
         ),
@@ -181,24 +194,27 @@ def _iceberg(verb):
 # commit path must not move them without a reason.
 EXPECTED_JOBS = {
     "delta_append": 2,
-    "delta_upsert": 7,
-    "delta_merge": 10,
-    "delta_upsert_cdc": 7,
-    "delta_merge_sync": 12,
-    "delta_merge_insert_only": 8,
-    "delta_merge_delete": 10,
+    "delta_upsert": 5,
+    "delta_merge": 7,
+    "delta_upsert_cdc": 5,
+    "delta_merge_sync": 9,
+    "delta_merge_insert_only": 5,
+    "delta_merge_delete": 7,
     "delta_upsert_redelivered": 0,
     "delta_merge_redelivered": 0,
+    "delta_upsert_create": 3,
+    "delta_merge_create": 4,
     "delta_delete_where": 1,
     "delta_optimize": 1,
     "delta_overwrite": 2,
     "iceberg_append": 2,
     "iceberg_upsert": 3,
-    "iceberg_merge": 12,
-    "iceberg_merge_sync": 16,
-    "iceberg_merge_insert_only": 9,
-    "iceberg_merge_delete": 12,
+    "iceberg_merge": 9,
+    "iceberg_merge_sync": 13,
+    "iceberg_merge_insert_only": 6,
+    "iceberg_merge_delete": 9,
     "iceberg_merge_redelivered": 0,
+    "iceberg_merge_create": 4,
     "iceberg_delete_where": 2,
     "iceberg_rewrite": 2,
     "iceberg_scan_with_deletes": 5,
@@ -214,6 +230,27 @@ def test_verb_job_counts_pinned(spark, tmp_path, verb):
     call(spark, path)
     jobs = _max_job_id(spark) - before
     assert jobs == EXPECTED_JOBS[verb]
+
+
+# Spark jobs of one keyed catalog query at sf0.001, its call and its
+# collect: the MERGE and upsert choreography as the driver runs it.
+EXPECTED_QUERY_JOBS = {
+    "delta_upsert": 16,
+    "delta_merge_conditional": 23,
+    "delta_merge_sync": 22,
+    "iceberg_merge_conditional": 29,
+    "iceberg_merge_sync": 36,
+}
+
+
+@pytest.mark.parametrize("name", list(EXPECTED_QUERY_JOBS))
+def test_keyed_query_job_counts_pinned(spark, sf_dir, name):
+    from feature_store_spark.queries import QUERIES
+
+    fn, _ = QUERIES[name]
+    before = _max_job_id(spark)
+    fn(spark, sf_dir).toPandas()
+    assert _max_job_id(spark) - before == EXPECTED_QUERY_JOBS[name]
 
 
 LONG_KEY = "k" + "x" * 4999  # sorts after every short key

@@ -779,10 +779,14 @@ class TestOptimize:
             delta_optimize(spark, d, target_file_bytes=1)
 
 
-def test_optimize_keeps_columns_added_by_merge_schema(spark, tmp_path):
+@pytest.mark.parametrize("mapping", ["none", "name", "id"])
+def test_optimize_keeps_columns_added_by_merge_schema(
+    spark, tmp_path, mapping
+):
     """OPTIMIZE over files written before and after a merge_schema
-    append rewrites the same rows: reading the candidates under one
-    file's footer schema dropped the added column's values."""
+    append rewrites the same rows, column-mapped or not: reading the
+    candidates under one file's footer schema dropped the added
+    column's values."""
     from collections import Counter
 
     from feature_store_spark.sources.delta import delta_optimize
@@ -791,6 +795,7 @@ def test_optimize_keeps_columns_added_by_merge_schema(spark, tmp_path):
     delta_append(
         spark.createDataFrame([(i,) for i in range(5)], "a long").coalesce(1),
         d,
+        column_mapping=mapping,
     )
     delta_append(
         spark.createDataFrame(

@@ -32,15 +32,16 @@ def _persisted(spark) -> set[int]:
     return {int(i) for i in ids}
 
 
-def _call(verb, batch, path):
+def _call(verb, batch, path, keys=("entity_id",)):
     from feature_store_spark.sources import delta as d
     from feature_store_spark.sources import iceberg_write as i
 
+    keys = list(keys)
     if verb == "delta_merge":
-        return d.delta_merge(batch, path, ["entity_id"], when_matched=ARMS)
+        return d.delta_merge(batch, path, keys, when_matched=ARMS)
     if verb == "delta_upsert":
-        return d.delta_upsert(batch, path, ["entity_id"])
-    return i.iceberg_merge(batch, path, ["entity_id"], when_matched=ARMS)
+        return d.delta_upsert(batch, path, keys)
+    return i.iceberg_merge(batch, path, keys, when_matched=ARMS)
 
 
 @pytest.mark.parametrize("case", ["ok", "duplicate_key", "schema_drift"])
@@ -75,6 +76,44 @@ def test_merge_verbs_release_what_they_materialize(
         with pytest.raises(ValueError, match="multiple rows|deviates"):
             _call(verb, batch, path)
     assert _persisted(spark) - before == set()
+
+
+@pytest.mark.parametrize("verb", VERBS)
+def test_composite_key_tuples_compare_null_parts_equal(
+    spark, tmp_path, verb
+):
+    """A source key tuple repeats when every part repeats, NULL parts
+    included (NULLs group together, as under ``groupBy``), so two
+    ``(NULL, 'a')`` rows refuse; ``(2, 'a')`` and ``(2, 'b')`` are two
+    keys and land as two rows."""
+    import datetime
+
+    from feature_store_spark.sources.delta import DeltaTable
+    from feature_store_spark.sources.iceberg import IcebergTable
+
+    def batch(rows):
+        ts = datetime.datetime(2024, 1, 1)
+        return spark.createDataFrame(
+            [("user", e, k2, v, ts) for e, k2, v in rows],
+            "entity_type string, entity_id long, k2 string, "
+            "value_float double, event_time timestamp",
+        )
+
+    path, keys = str(tmp_path / "t"), ("entity_id", "k2")
+    with pytest.raises(ValueError, match="multiple rows for key"):
+        _call(verb, batch([(None, "a", 1.0), (None, "a", 2.0)]), path, keys)
+    _call(verb, batch([(2, "a", 1.0), (2, "b", 2.0)]), path, keys)
+    with pytest.raises(ValueError, match="multiple rows for key"):
+        _call(verb, batch([(None, "a", 1.0), (None, "a", 2.0)]), path, keys)
+    _call(verb, batch([(2, "a", 3.0), (2, "b", 4.0)]), path, keys)
+    table = (DeltaTable if verb.startswith("delta") else IcebergTable)(
+        spark, path
+    )
+    got = sorted(
+        tuple(r) for r in table.scan()
+        .select("entity_id", "k2", "value_float").collect()
+    )
+    assert got == [(2, "a", 3.0), (2, "b", 4.0)]
 
 
 @pytest.mark.parametrize("fmt", ["delta", "iceberg"])

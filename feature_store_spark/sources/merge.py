@@ -34,14 +34,16 @@ key tuples (which row's arms win is undefined), SET on a merge key, SET
 of an unknown column, a non-last unconditional arm, a by-source update
 arm without ``set``, schema drift.
 
-Scale shape. The batch is materialized once, with each row's key
-count from one window over the keys (one shuffle). Metrics observed on
-that checkpoint answer the duplicate-key refusal, emptiness and the
-per-key min/max that prune the target scan, so the checks cost no job
-of their own. The matched probe broadcasts the batch
-against the pruned live target; arm predicates and SET expressions are
-Catalyst expressions inside that one join. Per-arm counts are observed
-on the probe's materialization, so they cost no job of their own.
+Scale shape. The batch is materialized once, each row tagged with its
+key's row count by one window over the keys (one shuffle). Metrics
+observed on that checkpoint answer the duplicate-key refusal, emptiness
+and the per-key min/max that prune the target scan, so the checks cost
+no job of their own. The matched probe broadcasts the batch against the
+pruned live target; arm predicates and SET expressions are Catalyst
+expressions inside that one join. Per-arm counts are observed on the
+probe's materialization, so they cost no job of their own. The key sets
+broadcast under semi and anti joins are not de-duplicated: such a join
+returns the same rows either way, and a ``distinct`` costs a shuffle.
 
 Division of labour. :class:`Merge` owns everything above. A format hands
 :meth:`Merge.plan` its live target frame and the columns that identify a
@@ -214,8 +216,8 @@ class Merge:
 
     def _materialize(self, frame: DataFrame, **metrics: Column):
         """``frame`` checkpointed, held for release, and the ``metrics``
-        observed during the checkpoint job (no job of their own), as
-        observed: a key bound is not an int."""
+        observed during the checkpoint job (no job of their own), with
+        their Spark types kept: a key bound need not be an int."""
         if metrics:
             obs = Observation()
             frame = frame.observe(

@@ -779,14 +779,9 @@ class TestOptimize:
             delta_optimize(spark, d, target_file_bytes=1)
 
 
-@pytest.mark.parametrize("mapping", ["none", "name", "id"])
-def test_optimize_keeps_columns_added_by_merge_schema(
+def _check_optimize_keeps_columns_added_by_merge_schema(
     spark, tmp_path, mapping
 ):
-    """OPTIMIZE over files written before and after a merge_schema
-    append rewrites the same rows, column-mapped or not: reading the
-    candidates under one file's footer schema dropped the added
-    column's values."""
     from collections import Counter
 
     from feature_store_spark.sources.delta import delta_optimize
@@ -813,6 +808,26 @@ def test_optimize_keeps_columns_added_by_merge_schema(
     v, removed, added = delta_optimize(spark, d)
     assert (v, removed, added) == (2, 2, 1)
     assert rows() == before
+
+
+def test_optimize_keeps_columns_added_by_merge_schema(spark, tmp_path):
+    """OPTIMIZE over files written before and after a merge_schema
+    append rewrites the same rows: reading the candidates under one
+    file's footer schema dropped the added column's values."""
+    _check_optimize_keeps_columns_added_by_merge_schema(
+        spark, tmp_path, "none"
+    )
+
+
+@pytest.mark.parametrize("mapping", ["name", "id"])
+def test_optimize_keeps_column_mapped_columns_added_by_merge_schema(
+    spark, tmp_path, mapping
+):
+    """The same OPTIMIZE over a column-mapped table: the physical
+    names of the added column must survive the rewrite."""
+    _check_optimize_keeps_columns_added_by_merge_schema(
+        spark, tmp_path, mapping
+    )
 
 
 class TestVacuum:

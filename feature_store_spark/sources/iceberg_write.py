@@ -59,6 +59,16 @@ from feature_store_spark.sources.hive_paths import parse_partition_segs
 from feature_store_spark.sources.merge import Merge
 
 US_PER_DAY = 86_400_000_000
+
+
+def _clock_ms(n: int) -> int:
+    """The ``timestamp-ms`` / ``last-updated-ms`` stamped on snapshot or
+    metadata version ``n``: a fixed epoch plus ``n``, so stamps rise
+    with every commit and repeat across runs. The one place a real
+    clock would plug in."""
+    return 1_700_000_000_000 + n
+
+
 # The default partition layout, the reference's offline-store spec:
 # identity(ENTITY_COL) as field ``entity_type_p`` + day(TS_COL) as
 # field ``ts_day``. The field names are table state; iceberg_rewrite
@@ -780,7 +790,7 @@ def _new_snapshot(
     write_avro(mlist, MANIFEST_LIST_SCHEMA, manifests, codec="deflate")
     snapshot = {
         "snapshot-id": snap_id,
-        "timestamp-ms": 1700000000000 + snap_id,
+        "timestamp-ms": _clock_ms(snap_id),
         "sequence-number": snap_id,
         "summary": summary,
         "manifest-list": mlist,
@@ -1424,7 +1434,7 @@ def iceberg_append(
         "table-uuid": (prev_meta or {}).get("table-uuid", str(uuid.uuid4())),
         "location": table_dir,
         "last-sequence-number": snap_id,
-        "last-updated-ms": 1700000000000 + snap_id,
+        "last-updated-ms": _clock_ms(snap_id),
         # monotone across evolution (ids are never reused even if a
         # column were ever dropped)
         "last-column-id": max(
@@ -2004,7 +2014,7 @@ def iceberg_rollback(
     if "main" in refs:
         refs["main"] = {**refs["main"], "snapshot-id": snapshot_id}
         meta["refs"] = refs
-    meta["last-updated-ms"] = 1700000000000 + next_v
+    meta["last-updated-ms"] = _clock_ms(next_v)
     _publish_metadata(meta_dir, next_v, meta)
     return next_v
 
@@ -2215,7 +2225,7 @@ def iceberg_delete_where(
     )
     meta = dict(prev_meta)
     meta["last-sequence-number"] = snap_id
-    meta["last-updated-ms"] = 1700000000000 + snap_id
+    meta["last-updated-ms"] = _clock_ms(snap_id)
     meta["current-snapshot-id"] = snap_id
     meta["snapshots"] = prev_meta.get("snapshots", []) + [snapshot]
     _publish_metadata(meta_dir, snap_id, meta)
@@ -2309,7 +2319,7 @@ def iceberg_evolve_partition(
     meta["partition-specs"] = specs
     meta["default-spec-id"] = new_sid
     meta["last-partition-id"] = last_pid
-    meta["last-updated-ms"] = 1700000000000 + next_v
+    meta["last-updated-ms"] = _clock_ms(next_v)
     _publish_metadata(meta_dir, next_v, meta)
     return next_v
 
@@ -2353,7 +2363,7 @@ def iceberg_set_ref(
     refs = dict(meta.get("refs") or {})
     refs[name] = {"snapshot-id": sid, "type": ref_type}
     meta["refs"] = refs
-    meta["last-updated-ms"] = 1700000000000 + next_v
+    meta["last-updated-ms"] = _clock_ms(next_v)
     _publish_metadata(meta_dir, next_v, meta)
     return next_v
 
@@ -2371,7 +2381,7 @@ def iceberg_drop_ref(table_dir: str, name: str) -> int:
     del refs[name]
     meta = dict(prev_meta)
     meta["refs"] = refs
-    meta["last-updated-ms"] = 1700000000000 + next_v
+    meta["last-updated-ms"] = _clock_ms(next_v)
     _publish_metadata(meta_dir, next_v, meta)
     return next_v
 
@@ -2611,7 +2621,7 @@ def iceberg_metadata_for_delta(spark, delta_dir: str) -> int:
         ),
         "location": delta_dir,
         "last-sequence-number": snap_id,
-        "last-updated-ms": 1700000000000 + snap_id,
+        "last-updated-ms": _clock_ms(snap_id),
         "last-column-id": max(
             max(f["id"] for f in fields),
             int((prev_meta or {}).get("last-column-id", 0)),

@@ -26,6 +26,9 @@ from feature_store_spark.sources.delta import (
 
 HOUR_RETENTION = {"delta.deletedFileRetentionDuration": "interval 1 hours"}
 
+# Spark jobs of one small OfflineStore.generate_training_dataset collect
+TRAINING_PULL_JOBS = 6
+
 
 def _df(spark, lo, hi, tag):
     return spark.range(lo, hi).select(
@@ -228,9 +231,9 @@ class TestManifestedOfflineStore:
         """The table read keeps hive partition parsing, so the
         entity_type filter still prunes partitions (S1/S3 semantics
         preserved under the transactional layout)."""
-        from feature_store_spark.offline import ManifestedOfflineStore
+        from feature_store_spark.offline import OfflineStore
 
-        store = ManifestedOfflineStore(spark, str(tmp_path / "records"))
+        store = OfflineStore(spark, str(tmp_path / "records"))
         df = spark.createDataFrame(
             [
                 ("merchant", "m1", "gmv", 5.0, None),
@@ -248,9 +251,9 @@ class TestManifestedOfflineStore:
         assert len(out.inputFiles()) == 1
 
     def test_merge_records_last_writer_wins(self, spark, tmp_path):
-        from feature_store_spark.offline import ManifestedOfflineStore
+        from feature_store_spark.offline import OfflineStore
 
-        store = ManifestedOfflineStore(spark, str(tmp_path / "records"))
+        store = OfflineStore(spark, str(tmp_path / "records"))
         mk = lambda eid, v, ms: (  # noqa: E731
             spark.createDataFrame(
                 [("merchant", eid, "gmv", v, None)],
@@ -269,6 +272,92 @@ class TestManifestedOfflineStore:
             for r in store.scan(entity_type="merchant").collect()
         }
         assert got == {"m1": 7.0, "m2": 2.0}
+
+    @staticmethod
+    def _record(spark, eid, ms):
+        return spark.createDataFrame(
+            [("merchant", eid, "gmv", 1.0, None)],
+            "entity_type string, entity_id string, feature_name string,"
+            " value_float double, value_string string",
+        ).select(
+            "*",
+            F.timestamp_millis(F.lit(ms)).alias("event_time"),
+            F.timestamp_millis(F.lit(ms)).alias("created_at"),
+        )
+
+    def test_failed_overwrite_keeps_the_store(self, spark, tmp_path):
+        """An overwrite whose job fails publishes nothing: the previous
+        snapshot still reads back. (A plain parquet overwrite deletes
+        the directory before its job runs.)"""
+        from feature_store_spark.offline import OfflineStore
+
+        store = OfflineStore(spark, str(tmp_path / "records"))
+        one = self._record(spark, "m1", 86_400_000)
+        store.write_records(one)
+        bad = one.withColumn(
+            "value_float",
+            F.when(
+                F.col("entity_id") == "m1", F.raise_error(F.lit("boom"))
+            ).otherwise(F.col("value_float")),
+        )
+        with pytest.raises(Exception, match="boom"):
+            store.write_records(bad, mode="overwrite")
+        assert store.scan().count() == 1
+
+    def test_scan_and_training_pull_job_counts(self, spark, tmp_path):
+        """Building a scan plans from the Delta log and reads under the
+        log's schema, so it launches no Spark job (a parquet directory
+        read pays a footer-inference job). The pinned training pull
+        catches such a job coming back."""
+        from feature_store_spark.offline import OfflineStore
+        from tests.test_commit_kernel import _max_job_id
+
+        store = OfflineStore(spark, str(tmp_path / "records"))
+        store.write_records(
+            self._record(spark, "m1", 86_400_000).unionByName(
+                self._record(spark, "m2", 2 * 86_400_000)
+            )
+        )
+        before = _max_job_id(spark)
+        store.scan(entity_type="merchant", feature_names=["gmv"])
+        assert _max_job_id(spark) - before == 0
+        labels = spark.createDataFrame(
+            [("m1", 1)], "entity_id string, label int"
+        ).withColumn("event_time", F.timestamp_millis(F.lit(3 * 86_400_000)))
+        before = _max_job_id(spark)
+        rows = store.generate_training_dataset(
+            "merchant", ["gmv"], labels, lookback_days=7
+        ).collect()
+        assert [r["gmv"] for r in rows] == [1.0]
+        assert _max_job_id(spark) - before == TRAINING_PULL_JOBS
+
+    def test_date_window_spans_writer_and_reader_zones(self, spark, tmp_path):
+        """``event_date`` is the writer's session-local day. A record
+        written at UTC+14 lands a calendar day after its UTC date, and
+        a reader's bound at UTC-12 dates a day before its UTC date: the
+        scan's date window must still keep the record."""
+        import datetime as dt
+        from zoneinfo import ZoneInfo
+
+        from feature_store_spark.offline import OfflineStore
+
+        store = OfflineStore(spark, str(tmp_path / "records"))
+        zone = "spark.sql.session.timeZone"
+        saved = spark.conf.get(zone)
+        try:
+            spark.conf.set(zone, "Pacific/Kiritimati")
+            # 2024-01-01T10:30Z
+            store.write_records(self._record(spark, "m1", 1_704_105_000_000))
+            spark.conf.set(zone, "Etc/GMT+12")
+            # 2024-01-01T11:00Z
+            bound = dt.datetime(2023, 12, 31, 23, 0, tzinfo=ZoneInfo("Etc/GMT+12"))
+            out = store.scan(entity_type="merchant", time_max=bound)
+            assert [r["entity_id"] for r in out.collect()] == ["m1"]
+            assert ["event_date=2024-01-02" in f for f in out.inputFiles()] == [
+                True
+            ]
+        finally:
+            spark.conf.set(zone, saved)
 
 
 class TestSnapshotSemantics:
@@ -480,9 +569,9 @@ class TestDataSkipping:
         data files at planning time through the date partitions."""
         import datetime as dt
 
-        from feature_store_spark.offline import ManifestedOfflineStore
+        from feature_store_spark.offline import OfflineStore
 
-        store = ManifestedOfflineStore(spark, str(tmp_path / "records"))
+        store = OfflineStore(spark, str(tmp_path / "records"))
         mk = lambda day, eid: (  # noqa: E731
             spark.createDataFrame(
                 [("merchant", eid, "gmv", 1.0, None)],

@@ -372,9 +372,9 @@ def test_register_view_immutable_versions(spark):
 def test_manifested_store_rejects_unknown_write_mode(spark, tmp_path):
     """Review r10: mode='ignore' (or a typo) used to fall through to a
     destructive overwrite of the committed snapshot."""
-    from feature_store_spark.offline import ManifestedOfflineStore
+    from feature_store_spark.offline import OfflineStore
 
-    store = ManifestedOfflineStore(spark, str(tmp_path / "t"))
+    store = OfflineStore(spark, str(tmp_path / "t"))
     df = spark.createDataFrame(
         [("user", "1", "f", 1.0, None,
           ts("2024-01-01T00:00:00"), ts("2024-01-01T00:00:00"), "p", 1)],

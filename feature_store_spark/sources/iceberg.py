@@ -49,16 +49,21 @@ Scope gates (loud, documented):
   deletes over ORC data files FULLY apply: equality deletes key on
   columns, and positional deletes — whose ordinal Spark's native ORC
   reader does not expose (_metadata.file_path but no row_index) —
-  route the ORC frame through an executor-side stripe-ordered
-  pyarrow decode that recovers the spec ordinal exactly
-  (_read_orc_with_pos); a plan-time probe keeps plain ORC scans and
-  parquet-only delete sets on the fast native reader. Merge-on-read
-  deletes over AVRO data files apply the same way — OCF records
-  decode in file order, so the decode path emits the ordinal
-  whenever deletes are present (with_pos). DELETE WHERE works across
-  all three formats. The one remaining format gate:
-  resolve_by_field_id (schema-evolution reads) stays parquet-only —
-  it reads parquet footers; ORC/AVRO files resolve by name.
+  route the ORC files they mark through an executor-side
+  stripe-ordered pyarrow decode that recovers the spec ordinal
+  exactly; a plan-time probe keeps every other ORC file on the fast
+  native reader. Merge-on-read deletes over AVRO data files apply
+  the same way — OCF records decode in file order, so the decode
+  path emits the ordinal whenever deletes are present.
+- one row reader: IcebergTable._rows picks each data file's lane
+  (above) and applies the deletes once over the union; scan,
+  iceberg_delete_where and changes() all read through it. Parquet
+  columns resolve by the spec's field ids whenever a file's footer
+  differs from the current schema — a missing current name, or a
+  field id carried under another name — chosen from the footers
+  themselves, with no caller-set option. ORC/AVRO files resolve by
+  name, so a schema history that renamed or reused a name refuses
+  for them.
 """
 
 from __future__ import annotations
@@ -144,6 +149,22 @@ def parquet_field_ids(path: str) -> tuple:
                 fid = None
         out.append((fld.name, fid))
     return tuple(out)
+
+
+def _footer_columns(fields: list[dict], sig: tuple) -> dict:
+    """{field id: the column of one parquet file that carries it, or
+    None} for current-schema ``fields`` under the spec's column
+    resolution: the footer column with the field's id, else — for a
+    column written without an id — the one with the field's name.
+    ``sig`` is the file's :func:`parquet_field_ids`."""
+    by_id = {fid: n for n, fid in sig if fid is not None}
+    idless = {n for n, fid in sig if fid is None}
+    return {
+        f["id"]: by_id.get(
+            f["id"], f["name"] if f["name"] in idless else None
+        )
+        for f in fields
+    }
 
 
 def _part_key(part: dict) -> str:
@@ -449,6 +470,8 @@ class IcebergTable:
         self.meta = self._load_metadata()
         self._avro_cache: dict[str, list] = {}
         self._footer_cache: dict[str, tuple] = {}
+        self._orc_cache: dict[str, frozenset] = {}
+        self._pos_probe_cache: dict[tuple, set] = {}
 
     # -- metadata resolution
 
@@ -487,21 +510,22 @@ class IcebergTable:
         return current_schema_fields(self.meta)
 
     def _read_parquet(
-        self, paths: list[str], names: list[str] | None = None
+        self, paths: list[str], cols: list[tuple] | None = None
     ) -> DataFrame:
-        """The parquet ``paths`` read under the current schema's
-        ``names`` columns (default all), which costs no Spark
-        footer-inference job. A column whose Spark type is not a
-        faithful read of its physical type (see :func:`_faithful`)
-        leaves the read to Spark's inference."""
+        """The parquet ``paths`` read under an explicit schema of
+        ``cols``, (file column name, Iceberg type) pairs (default: the
+        current schema), which costs no Spark footer-inference job. A
+        type whose Spark type is not a faithful read of its physical
+        type (see :func:`_faithful`) leaves the read to Spark's
+        inference."""
         from pyspark.sql import types as T
 
-        type_of = {f["name"]: f["type"] for f in self.schema_fields()}
-        names = list(type_of) if names is None else names
-        if not all(_faithful(type_of[n]) for n in names):
+        if cols is None:
+            cols = [(f["name"], f["type"]) for f in self.schema_fields()]
+        if not all(_faithful(ty) for _, ty in cols):
             return self.spark.read.parquet(*paths)
         schema = T.StructType(
-            [T.StructField(n, _spark_type(type_of[n])) for n in names]
+            [T.StructField(n, _spark_type(ty)) for n, ty in cols]
         )
         return self.spark.read.schema(schema).parquet(*paths)
 
@@ -797,12 +821,12 @@ class IcebergTable:
 
     def _apply_deletes(
         self,
-        df: DataFrame,
+        tagged: DataFrame,
         files: list[dict],
         deletes: list[dict],
-        pre_tagged: bool = False,
     ) -> DataFrame:
-        """Apply merge-on-read deletes to the data rows.
+        """Apply merge-on-read deletes to data rows tagged with their
+        file (``__fp``) and row ordinal (``__pos``); the tags stay.
 
         POSITIONAL deletes ((file_path, pos) parquet) anti-join on the
         (file path, row ordinal) — delete rows record the writer's
@@ -814,6 +838,8 @@ class IcebergTable:
         columns with NULL-safe equality AND the spec's sequencing
         rule: a delete at sequence s removes only rows of data files
         with sequence < s (later re-inserts of the same key survive).
+        The delete file's columns resolve by field id like a data
+        file's, so a later rename of a key column keeps applying it.
         The per-row data sequence rides in via a broadcast (file
         suffix → sequence) join. A delete written with a PARTITIONED
         spec additionally applies only within its recorded partition
@@ -826,22 +852,6 @@ class IcebergTable:
         spark = self.spark
         pos = [d for d in deletes if d["delete_kind"] == "pos"]
         eqs = [d for d in deletes if d["delete_kind"] == "eq"]
-        if pre_tagged:
-            tagged = df
-        else:
-            # _metadata.row_index exists only in Spark's PARQUET
-            # reader (the ORC _metadata struct stops at block
-            # offsets) — reference it only when positional deletes
-            # actually need it, so equality-only delete sets apply
-            # over ORC data frames too
-            tagged = df.withColumn(
-                "__fp", _fp_expr(F.col("_metadata.file_path"))
-            ).withColumn(
-                "__pos",
-                F.col("_metadata.row_index")
-                if pos
-                else F.lit(None).cast("long"),
-            )
 
         if pos:
             dels = spark.read.schema(POS_DELETE_SCHEMA).parquet(
@@ -922,16 +932,32 @@ class IcebergTable:
                         "needs a full Iceberg runtime"
                     )
                 cols = [names_by_id[i] for i in ids]
-                parts = [
-                    self._read_parquet([d["path"]], cols)
-                    .select(
-                        *[F.col(c).alias(f"__d_{c}") for c in cols]
+                parts = []
+                for d in dfiles:
+                    src = _footer_columns(
+                        [by_name[c] for c in cols],
+                        self._file_field_mapping(d["path"]),
                     )
-                    .withColumn(
-                        "__dseq", F.lit(int(d["sequence_number"]))
+                    if None in src.values():
+                        raise NotImplementedError(
+                            f"{self.path}: equality-delete file "
+                            f"{d['path']} has no column for field "
+                            f"ids {ids}"
+                        )
+                    parts.append(
+                        self._read_parquet(
+                            [d["path"]],
+                            [(src[i], by_name[c]["type"])
+                             for i, c in zip(ids, cols)],
+                        )
+                        .select(
+                            *[F.col(src[i]).alias(f"__d_{c}")
+                              for i, c in zip(ids, cols)]
+                        )
+                        .withColumn(
+                            "__dseq", F.lit(int(d["sequence_number"]))
+                        )
                     )
-                    for d in dfiles
-                ]
                 dels = parts[0]
                 for x in parts[1:]:
                     dels = dels.unionByName(x)
@@ -953,10 +979,7 @@ class IcebergTable:
                     )
                 tagged = tagged.join(dels, cond, "left_anti")
             tagged = tagged.drop("__dataseq", "__part")
-
-        if pre_tagged:
-            return tagged  # caller owns the tag columns
-        return tagged.drop("__fp", "__pos")
+        return tagged
 
     def _file_field_mapping(self, path: str) -> tuple:
         """((parquet_column_name, field_id or None), ...) from one data
@@ -984,111 +1007,81 @@ class IcebergTable:
         st = _spark_type(type_str)
         return F.lit(value).cast(st) if st else F.lit(value)
 
-    def _read_by_field_id(self, files: list[dict]) -> DataFrame:
-        """Read data files with columns resolved BY FIELD ID (the
-        spec's rule — names may have changed since a file was
-        written): group files by their footer's (name, id) signature
-        plus partition tuple, rename each group's columns to the
-        current schema's names, null-fill columns added after a file
-        was written, drop columns since removed, and union. Footer
-        signatures are gathered with a thread pool (KB reads). Rows
-        are pre-tagged with the file path/ordinal so merge-on-read
-        deletes keep working across the rename+union.
+    def _read_by_field_id(self, files: list[tuple]) -> DataFrame:
+        """Read (data file, footer signature) pairs with columns
+        resolved BY FIELD ID (the spec's rule — names may have changed
+        since a file was written): group files by footer signature,
+        read each group under an explicit schema of its own column
+        names typed by the current schema, rename its columns to the
+        current names, null-fill columns added after a file was
+        written, drop columns since removed, and union. Rows are
+        tagged with the file path/ordinal.
 
         Columns ABSENT from a file whose field id is the source of an
         IDENTITY partition field fill from the file's partition
         metadata — the spec's "Column Projection" rule #2, which is
         how Hive-migrated and UniForm-exported tables (hive layout:
         partition values in directory names, not in the files)
-        reconstruct their partition columns. Grouping by partition
-        tuple keeps the injected literal per-group constant; group
-        count is bounded by the pruned set's partition count."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        reconstruct their partition columns. Only files that need
+        that literal also group by partition tuple, so files that
+        embed their partition columns — everything the in-repo
+        writers emit — collapse into one group per footer signature."""
         from pyspark.sql import functions as F
 
-        current = {
-            f["id"]: f
-            for f in self.schema_fields()
-            if isinstance(f["type"], str)
-        }
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            sigs = list(
-                pool.map(
-                    lambda f: self._file_field_mapping(f["path"]), files
-                )
-            )
+        current = [
+            f for f in self.schema_fields() if isinstance(f["type"], str)
+        ]
         groups: dict[tuple, list[str]] = {}
-        part_of: dict[tuple, tuple] = {}
-        for f, sig in zip(files, sigs):
+        group_of: dict[tuple, tuple] = {}
+        for f, sig in files:
             part = f.get("partition") or {}
             spec_id = int(f.get("spec_id", 0) or 0)
-            # group by partition tuple ONLY when this file actually
-            # needs the Column Projection literal (an identity source
-            # column absent from its footer): files that embed their
-            # partition columns — everything the in-repo writers emit
-            # — collapse into one group per footer signature, so an
-            # evolved table with a thousand partitions unions a
-            # handful of frames, not a thousand (review r10n: the
-            # per-partition grouping made the evolution scan's plan
-            # grow with partition count for zero benefit)
-            by_id_f = {fid for _, fid in sig if fid is not None}
-            names_f = {n for n, _ in sig}
+            src = _footer_columns(current, sig)
             needs_proj = any(
                 pf.get("transform") == "identity"
-                and pf["source-id"] not in by_id_f
-                and current.get(pf["source-id"], {}).get("name")
-                not in names_f
+                and src.get(pf["source-id"], "") is None
                 for pf in self.partition_spec(spec_id)
             )
-            key = (
-                sig,
-                spec_id,
-                _part_key(part) if needs_proj else None,
-            )
+            key = (sig, spec_id, _part_key(part) if needs_proj else None)
             groups.setdefault(key, []).append(f["path"])
-            part_of[key] = (part, f.get("spec_id", 0))
+            group_of[key] = (part, spec_id, src)
         frames = []
         for key, paths in groups.items():
-            sig = key[0]
-            part, spec_id = part_of[key]
-            spec = self.partition_spec(spec_id)
+            part, spec_id, src = group_of[key]
             ident_by_source = {
                 pf["source-id"]: pf
-                for pf in spec
+                for pf in self.partition_spec(spec_id)
                 if pf.get("transform") == "identity"
             }
-            raw = self.spark.read.parquet(*paths)
-            tagged = raw.withColumn(
-                "__fp", _fp_expr(F.col("_metadata.file_path"))
-            ).withColumn("__pos", F.col("_metadata.row_index"))
-            by_id = {fid: name for name, fid in sig if fid is not None}
-            file_names = {name for name, _ in sig}
+            raw = self._read_parquet(
+                paths,
+                [(src[c["id"]], c["type"]) for c in current
+                 if src[c["id"]] is not None],
+            )
             cols = []
-            for fid, cur in current.items():
-                cur_name = cur["name"]
-                if fid in by_id:
-                    cols.append(F.col(by_id[fid]).alias(cur_name))
-                elif cur_name in file_names:
-                    # the spec's name-mapping fallback for files
-                    # written WITHOUT field ids (e.g. plain Spark
-                    # writers, incl. iceberg_append's data files)
-                    cols.append(F.col(cur_name))
-                elif fid in ident_by_source:
+            for cur in current:
+                name = cur["name"]
+                if src[cur["id"]] is not None:
+                    cols.append(F.col(src[cur["id"]]).alias(name))
+                elif cur["id"] in ident_by_source:
                     # Column Projection rule #2: identity partition
                     # value stands in for the absent source column
-                    pf = ident_by_source[fid]
+                    pf = ident_by_source[cur["id"]]
                     cols.append(
                         self._identity_partition_literal(
                             part.get(pf["name"]), cur["type"]
-                        ).alias(cur_name)
+                        ).alias(name)
                     )
                 else:
                     # column added after this file was written
                     cols.append(F.lit(None).cast(
                         _spark_type(cur["type"]) or "string"
-                    ).alias(cur_name))
-            frames.append(tagged.select(*cols, "__fp", "__pos"))
+                    ).alias(name))
+            frames.append(raw.select(
+                *cols,
+                _fp_expr(F.col("_metadata.file_path")).alias("__fp"),
+                F.col("_metadata.row_index").alias("__pos"),
+            ))
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)
@@ -1465,9 +1458,9 @@ class IcebergTable:
         stripe-batched so memory is bounded by one stripe — the
         ``_read_avro_data`` architecture) recovers exact ordinals.
 
-        Used only when positional deletes actually mark ORC rows
-        (the probe in :meth:`scan`); plain ORC scans stay on Spark's
-        native reader. Columns resolve by NAME under the table
+        Used only for the ORC files that need ordinals or omit a
+        column (the lane choice in :meth:`_rows`); every other ORC
+        file stays on Spark's native reader. Columns resolve by NAME under the table
         schema; a column a file omits reads as NULL (identity
         partition projection is gated before this path can see it).
         Differential-tested against the native reader row-for-row."""
@@ -1518,47 +1511,259 @@ class IcebergTable:
 
         return self._decoded_frame(files, decode, True, "orc")
 
+    def _pos_targets(self, pos_deletes: list[dict]) -> set:
+        """The table-relative paths of the data files the positional
+        ``pos_deletes`` mark: the DISTINCT ``file_path`` values of the
+        delete files, ≤ |data files| rows, metadata scale. Delete
+        files are immutable once committed, so the answer is cached
+        per delete-path set and repeated reads skip the job."""
+        from pyspark.sql import functions as F
+
+        key = tuple(sorted(d["path"] for d in pos_deletes))
+        if key not in self._pos_probe_cache:
+            self._pos_probe_cache[key] = {
+                r["s"]
+                for r in self.spark.read.schema(POS_DELETE_SCHEMA)
+                .parquet(*key)
+                .select(_fp_expr(F.col("file_path")).alias("s"))
+                .distinct()
+                .collect()
+            }
+        return self._pos_probe_cache[key]
+
+    def _rows(
+        self,
+        files: list[dict],
+        deletes: list[dict],
+        ordinals: bool = False,
+    ) -> DataFrame:
+        """The live rows of the data ``files`` under the current
+        schema: each format's lane yields the current columns, and
+        ``deletes`` apply once over the union. With ``ordinals`` the
+        rows keep their ``__fp`` (table-relative file path) and
+        ``__pos`` (row ordinal) tags, the key positional deletes and
+        the change feed join on.
+
+        The lane of each file follows from its footer (thread-pooled
+        KB reads, cached per reader — committed files are immutable):
+        - PARQUET: a file whose footer carries every current column
+          under its current name (spec field-id resolution, with the
+          name fallback for columns written without ids, picks the
+          same-named column) is read by name, all such files in one
+          read. Any other file — one that lacks a current name
+          (additive evolution; an identity partition source whose
+          values live in partition metadata) or whose field ids carry
+          other names (a rename or a swap) — goes through the
+          per-file field-id projection.
+        - ORC: Spark's native reader, except the files that need the
+          executor-side stripe-ordered decode for their ordinals (a
+          positional delete marks them, or ``ordinals`` is set) or
+          that omit a current column (the decode null-fills it).
+        - AVRO: the executor-side OCF decode.
+        ORC and AVRO resolve columns by name, so they refuse a schema
+        history that renamed or reused a name, and a file that omits
+        an identity partition source or looks renamed."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import functions as F
+
+        if not files:
+            return self._empty_frame()
+        tagged = ordinals or bool(deletes)
+        fields = self.schema_fields()
+        prims = [f for f in fields if isinstance(f["type"], str)]
+        nested = [f["name"] for f in fields if not isinstance(f["type"], str)]
+        orc_files = [f for f in files if f.get("format") == "orc"]
+        avro_files = [f for f in files if f.get("format") == "avro"]
+        pq_files = [
+            f for f in files
+            if f.get("format", "parquet") not in ("avro", "orc")
+        ]
+
+        def native(df: DataFrame, pos) -> DataFrame:
+            # a frame of Spark's own reader, tagged when tags are
+            # wanted (the decode lanes always tag their rows)
+            if not tagged:
+                return df
+            return df.withColumn(
+                "__fp", _fp_expr(F.col("_metadata.file_path"))
+            ).withColumn("__pos", pos)
+
+        frames = []
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            sigs = list(pool.map(
+                lambda f: self._file_field_mapping(f["path"]), pq_files
+            ))
+        by_name, by_id = [], []
+        for f, sig in zip(pq_files, sigs):
+            src = _footer_columns(prims, sig)
+            if all(src[p["id"]] == p["name"] for p in prims):
+                by_name.append(f)
+            else:
+                by_id.append((f, sig))
+        if by_id and (orc_files or avro_files):
+            raise NotImplementedError(
+                f"{self.path}: parquet data files need field-id "
+                "projection (evolution, projection or rename) but the "
+                "snapshot mixes in non-parquet files the per-file "
+                "resolver can't read — needs a full Iceberg runtime"
+            )
+        if by_id and nested:
+            # the per-file resolver carries primitive columns only
+            raise NotImplementedError(
+                f"{self.path}: files need field-id projection and the "
+                f"schema has non-primitive columns {nested} the "
+                "per-file resolver can't carry — needs a full Iceberg "
+                "runtime"
+            )
+        if by_name:
+            frames.append(native(
+                self._read_parquet([f["path"] for f in by_name]),
+                F.col("_metadata.row_index"),
+            ))
+        if by_id:
+            frames.append(self._read_by_field_id(by_id))
+        if orc_files:
+            self._assert_name_resolution_safe("orc")
+            ident = {
+                pf["source-id"]
+                for f in orc_files
+                for pf in self.partition_spec(f.get("spec_id", 0))
+                if pf.get("transform") == "identity"
+            }
+            schema_names = {f["name"] for f in fields}
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                orc_names = list(pool.map(
+                    lambda f: self._orc_names(f["path"]), orc_files
+                ))
+            decode = set()
+            for f, names in zip(orc_files, orc_names):
+                missing = [p for p in prims if p["name"] not in names]
+                gone = [p["name"] for p in missing if p["id"] in ident]
+                if gone:
+                    raise NotImplementedError(
+                        f"{self.path}: ORC data file omits identity "
+                        f"partition source column(s) {gone} (spec "
+                        "Column Projection); the per-file resolver "
+                        "reads parquet footers — needs a full "
+                        "Iceberg runtime"
+                    )
+                if missing and (names - schema_names):
+                    # lacking a schema column while carrying one the
+                    # schema doesn't know is a rename's signature:
+                    # null-filling the new name would silently zero a
+                    # column whose data sits under the old name
+                    raise NotImplementedError(
+                        f"{self.path}: ORC data file is missing "
+                        f"schema column(s) {[p['name'] for p in missing]}"
+                        " while carrying unknown column(s) "
+                        f"{sorted(names - schema_names)} — a rename "
+                        "needs field-id resolution, which is "
+                        "parquet-only here"
+                    )
+                if missing or ordinals:
+                    decode.add(_path_suffix(f["path"]))
+            pos = [d for d in deletes if d["delete_kind"] == "pos"]
+            if pos and not ordinals:
+                # Spark's native ORC reader has no row ordinal: only
+                # the files a positional delete marks pay the decode
+                decode |= self._pos_targets(pos)
+            marked = [
+                f for f in orc_files if _path_suffix(f["path"]) in decode
+            ]
+            plain = [
+                f["path"] for f in orc_files
+                if _path_suffix(f["path"]) not in decode
+            ]
+            if marked:
+                frames.append(self._read_orc_with_pos(marked))
+            if plain:
+                # no positional delete marks these rows: a NULL
+                # ordinal never matches one
+                frames.append(native(
+                    self.spark.read.orc(plain), F.lit(None).cast("long")
+                ))
+        if avro_files:
+            frames.append(self._read_avro_data(avro_files, with_pos=tagged))
+        if not tagged:
+            frames = [x.drop("__fp", "__pos") for x in frames]
+        df = frames[0]
+        for x in frames[1:]:
+            df = df.unionByName(x)
+        if deletes:
+            df = self._apply_deletes(df, files, deletes)
+        return df if ordinals else df.drop("__fp", "__pos")
+
+    def _orc_names(self, path: str) -> frozenset:
+        """The column names of one ORC file's footer (pyarrow reads
+        only the footer), cached per reader."""
+        import pyarrow.orc as po
+
+        if path not in self._orc_cache:
+            self._orc_cache[path] = frozenset(
+                po.ORCFile(_strip_scheme(path)).schema.names
+            )
+        return self._orc_cache[path]
+
+    def _row_filter(
+        self, df: DataFrame, filters: list[tuple] | None
+    ) -> DataFrame:
+        """``df`` restricted to the rows matching every (column, op,
+        literal) filter: timestamp columns compare in epoch micros and
+        date columns in days from epoch (Iceberg's units, which the
+        pruning layer compares in too); date literals may also be
+        dates or ISO strings."""
+        from pyspark.sql import functions as F
+
+        types = {f["name"]: f["type"] for f in self.schema_fields()}
+        for f in self._canon_filters(filters):
+            fil = _Filter(*f)
+            ty = types.get(fil.col)
+            if ty == "date":
+                col = F.datediff(F.col(fil.col), F.lit("1970-01-01"))
+            elif isinstance(ty, str) and ty.startswith("timestamp"):
+                col = F.unix_micros(F.col(fil.col))
+            else:
+                df = df.filter(fil.sql())
+                continue
+            v = fil.value
+            expr = {
+                "=": col == v, "!=": col != v, "<": col < v,
+                "<=": col <= v, ">": col > v, ">=": col >= v,
+            }.get(fil.op)
+            df = df.filter(col.isin(list(v)) if expr is None else expr)
+        return df
+
     def scan(
         self,
         snapshot_id: int | None = None,
         filters: list[tuple] | None = None,
-        resolve_by_field_id: bool = False,
         as_of_ms: int | None = None,
         ref: str | None = None,
         only_paths: set | None = None,
     ) -> DataFrame:
-        """DataFrame over the snapshot's data with metadata-pruned
-        file list; ``filters`` are (column, op, literal) triples with
-        op in ``=, !=, <, <=, >, >=, in`` (timestamp literals in
-        MICROseconds since epoch, matching Iceberg's representation).
-        Filters are re-applied to the frame — pruning is an
-        optimization, never the correctness boundary.
+        """DataFrame over the snapshot's live rows under the current
+        schema, from a metadata-pruned file list; ``filters`` are
+        (column, op, literal) triples with op in ``=, !=, <, <=, >,
+        >=, in`` (timestamp literals in MICROseconds since epoch,
+        matching Iceberg's representation; date literals in days
+        since epoch, or dates). Filters are re-applied to the frame —
+        pruning is an optimization, never the correctness boundary.
         ``as_of_ms`` time-travels by wall clock (the snapshot current
         at that epoch-milli instant); mutually exclusive with
-        ``snapshot_id``.
+        ``snapshot_id`` and ``ref``. ``only_paths`` restricts the
+        scan to the named data files (every delete file still
+        applies).
 
-        Merge-on-read deletes are applied — POSITIONAL delete files
-        (parquet of (file_path, pos)) anti-join on Spark's
-        ``_metadata.file_path`` / ``_metadata.row_index``; EQUALITY
-        delete files anti-join on their recorded equality_ids columns
-        under the spec's sequence-number rule (only rows of OLDER data
-        files are removed, so re-inserted keys survive). Both are
-        distributed anti-joins with small broadcast delete sides.
-
-        ``resolve_by_field_id=True`` resolves columns by the spec's
-        field ids instead of names — the explicit knob for tables
-        whose schema EVOLVED (renamed/added/dropped columns) after
-        data files were written. Cost model: even in the default
-        path, every surviving parquet/ORC file's footer is sniffed at
-        plan time (thread-pooled KB reads, cached per reader) to
-        catch the two ways a file can legitimately omit a current-
-        schema column — identity-partition Column Projection (values
-        live in partition metadata) and additive schema evolution
-        (NULL is correct). When any file omits a column, the scan
-        routes through the per-file resolver (parquet) or the
-        name-resolved decode (ORC, evolution only) automatically;
-        rename signatures (missing + unknown names) refuse loudly on
-        the name-resolved paths."""
+        Rows come from :meth:`_rows`: columns resolve by the spec's
+        field ids wherever a file's footer differs from the current
+        schema (renamed, swapped, added or projected columns), and
+        merge-on-read deletes are applied — POSITIONAL delete files
+        anti-join on (file, row ordinal); EQUALITY delete files
+        anti-join on their recorded equality_ids columns under the
+        spec's sequence-number rule (only rows of OLDER data files are
+        removed, so re-inserted keys survive). Both are distributed
+        anti-joins with small broadcast delete sides."""
         if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
             raise ValueError(
                 "pass at most one of snapshot_id / as_of_ms / ref"
@@ -1571,332 +1776,8 @@ class IcebergTable:
         deletes = [f for f in all_files if f.get("is_delete")]
         files = [f for f in all_files if not f.get("is_delete")]
         if only_paths is not None:
-            # restrict to the named DATA files (the scoped-rewrite
-            # row source: "current live rows of exactly these
-            # files"); every delete file still applies, so the
-            # restricted view carries the same MOR semantics as the
-            # full scan
             files = [f for f in files if f["path"] in only_paths]
-        if not files:
-            # empty-but-typed: derive the schema from any data file of
-            # the snapshot, else from the table schema itself
-            allf = [
-                f
-                for f in self.data_files(snapshot_id, None)
-                if not f.get("is_delete")
-            ]
-            if not allf:
-                return self._empty_frame()
-            allpq = [
-                f for f in allf
-                if f.get("format", "parquet") not in ("avro", "orc")
-            ]
-            allorc = [f for f in allf if f.get("format") == "orc"]
-            if allpq:
-                return self._read_parquet([allpq[0]["path"]]).limit(0)
-            if allorc:
-                return self.spark.read.orc(allorc[0]["path"]).limit(0)
-            return self._read_avro_data(allf[:1]).limit(0)
-        avro_files = [f for f in files if f.get("format") == "avro"]
-        orc_files = [f for f in files if f.get("format") == "orc"]
-        pq_files = [
-            f for f in files
-            if f.get("format", "parquet") not in ("avro", "orc")
-        ]
-        pos_deletes = [d for d in deletes if d["delete_kind"] == "pos"]
-        orc_touched: set = set()
-        if orc_files and pos_deletes:
-            # positional deletes anti-join on the per-row ordinal,
-            # which Spark's native ORC reader does not expose
-            # (_metadata.row_index is parquet-only — verified against
-            # Spark 4.1's ORC _metadata struct). A delete that only
-            # marks rows of PARQUET files is harmless to the ORC
-            # frame — the realistic migration shape (parquet history
-            # with MOR deletes + new ORC appends) — so the ORC frame
-            # is routed through the slower executor-side ordinal
-            # decode (_read_orc_with_pos) ONLY when a delete row
-            # actually references an ORC file. The probe reads the
-            # delete files' DISTINCT file_path values: ≤ |data files|
-            # rows, metadata scale.
-            from pyspark.sql import functions as F
-
-            orc_sfx = {_path_suffix(f["path"]) for f in orc_files}
-            # delete files are immutable once committed: cache the
-            # probe per delete-path set so repeated scans of the same
-            # snapshot don't re-run the plan-time job
-            probe_key = tuple(sorted(d["path"] for d in pos_deletes))
-            cache = getattr(self, "_pos_probe_cache", None)
-            if cache is None:
-                cache = self._pos_probe_cache = {}
-            if probe_key not in cache:
-                cache[probe_key] = {
-                    r["s"]
-                    for r in self.spark.read.schema(POS_DELETE_SCHEMA)
-                    .parquet(*probe_key)
-                    .select(_fp_expr(F.col("file_path")).alias("s"))
-                    .distinct()
-                    .collect()
-                }
-            orc_touched = cache[probe_key] & orc_sfx
-        if orc_files and resolve_by_field_id:
-            raise NotImplementedError(
-                f"{self.path}: resolve_by_field_id reads parquet "
-                "footers; orc data files resolve by name"
-            )
-        if avro_files and resolve_by_field_id:
-            raise NotImplementedError(
-                f"{self.path}: resolve_by_field_id reads parquet "
-                "footers; avro data files resolve by name"
-            )
-        orc_evolved: set = set()
-        if orc_files and not resolve_by_field_id:
-            # ORC footer sniff (pyarrow reads only the file footer;
-            # schemas cached per reader — committed files are
-            # immutable). Two reasons a current-schema column can be
-            # absent from a file:
-            # - identity partition source (spec Column Projection):
-            #   its values live in partition METADATA and the
-            #   parquet-only resolver can't patch an ORC frame —
-            #   refuse loudly (rewrite routes through this scan, so
-            #   it can't be the advertised remedy);
-            # - schema evolution (column added later): NULL is the
-            #   correct value, and the decode path null-fills by
-            #   name — route those files through it instead of
-            #   letting spark.read.orc silently narrow the frame to
-            #   one file's schema.
-            ident_sources = {
-                pf["source-id"]
-                for f in orc_files
-                for pf in self.partition_spec(f.get("spec_id", 0))
-                if pf.get("transform") == "identity"
-            }
-            allprims = [
-                f
-                for f in self.schema_fields()
-                if isinstance(f["type"], str)
-            ]
-            proj_names = {
-                f["name"] for f in allprims if f["id"] in ident_sources
-            }
-            import pyarrow.orc as _po
-
-            cache = getattr(self, "_orc_schema_cache", None)
-            if cache is None:
-                cache = self._orc_schema_cache = {}
-
-            def _orc_names(path: str) -> frozenset:
-                if path not in cache:
-                    cache[path] = frozenset(
-                        _po.ORCFile(_strip_scheme(path)).schema.names
-                    )
-                return cache[path]
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=16) as pool:
-                all_names = list(
-                    pool.map(lambda f: _orc_names(f["path"]), orc_files)
-                )
-            schema_names = {
-                f["name"] for f in self.schema_fields()
-            }
-            for f, names in zip(orc_files, all_names):
-                missing = [
-                    p["name"] for p in allprims if p["name"] not in names
-                ]
-                gone = [m for m in missing if m in proj_names]
-                if gone:
-                    raise NotImplementedError(
-                        f"{self.path}: ORC data file omits identity "
-                        f"partition source column(s) {gone} (spec "
-                        "Column Projection); the per-file resolver "
-                        "reads parquet footers — needs a full "
-                        "Iceberg runtime"
-                    )
-                if missing and (names - schema_names):
-                    # a file that LACKS a schema column while CARRYING
-                    # one the schema doesn't know is the signature of
-                    # a rename (same field id, new name) — null-
-                    # filling the new name would silently zero a
-                    # column whose data sits under the old name
-                    # (review r10c #2). Name-based decode can't tell
-                    # renames from evolution; refuse loudly.
-                    raise NotImplementedError(
-                        f"{self.path}: ORC data file is missing "
-                        f"schema column(s) {missing} while carrying "
-                        f"unknown column(s) {sorted(names - schema_names)} "
-                        "— a rename needs field-id resolution, which "
-                        "is parquet-only here"
-                    )
-                if missing:
-                    orc_evolved.add(_path_suffix(f["path"]))
-        if pq_files and not resolve_by_field_id:
-            # footer sniff: if ANY current-schema column is absent
-            # from ANY surviving parquet file, the plain multi-file
-            # read misreads the table — an identity-partition source
-            # column lives in partition metadata (spec Column
-            # Projection, hive-layout/UniForm tables), and a column
-            # ADDED by schema evolution is simply missing from older
-            # files (spark.read.parquet would silently narrow to one
-            # file's schema). Both route through the per-file
-            # resolver, which projects per file and null-fills.
-            # EVERY surviving file's footer is sniffed (review r10:
-            # a first-file-only check misreads MIXED tables) —
-            # thread-pooled KB reads, cached per table, reused
-            # verbatim by the resolver when routing triggers.
-            need = [
-                f
-                for f in self.schema_fields()
-                if isinstance(f["type"], str)
-            ]
-            if need:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=16) as pool:
-                    sigs = pool.map(
-                        lambda f: self._file_field_mapping(f["path"]),
-                        pq_files,
-                    )
-                for sig in sigs:
-                    names = {n for n, _ in sig}
-                    if any(f["name"] not in names for f in need):
-                        if avro_files or orc_files:
-                            # the resolver can't carry the non-parquet
-                            # frames; silently null-filling the
-                            # missing column would be a wrong answer,
-                            # and rewrite_data_files routes through
-                            # this very scan, so it can't be the
-                            # advertised remedy
-                            raise NotImplementedError(
-                                f"{self.path}: parquet data files "
-                                "omit current-schema columns "
-                                "(projection or evolution) but the "
-                                "snapshot mixes in non-parquet "
-                                "files the per-file resolver can't "
-                                "read — needs a full Iceberg runtime"
-                            )
-                        nested = [
-                            f["name"]
-                            for f in self.schema_fields()
-                            if not isinstance(f["type"], str)
-                        ]
-                        if nested:
-                            # the per-file resolver carries primitive
-                            # columns only — routing would silently
-                            # drop the nested ones (review r10c #3)
-                            raise NotImplementedError(
-                                f"{self.path}: files omit current-"
-                                "schema columns and the schema has "
-                                f"non-primitive columns {nested} the "
-                                "per-file resolver can't carry — "
-                                "needs a full Iceberg runtime"
-                            )
-                        resolve_by_field_id = True
-                        break
-        if resolve_by_field_id:
-            df = self._read_by_field_id(files)
-            if deletes:
-                df = self._apply_deletes(
-                    df, files, deletes, pre_tagged=True
-                )
-            df = df.drop("__fp", "__pos")
-        else:
-            df = None
-            if pq_files:
-                df = self._read_parquet([f["path"] for f in pq_files])
-                if deletes:
-                    df = self._apply_deletes(df, pq_files, deletes)
-            if orc_files:
-                # BOTH orc lanes (python ordinal decode AND Spark's
-                # native reader) resolve columns by name — the
-                # history rename gate must cover the native lane too,
-                # not just _decode_fields
-                self._assert_name_resolution_safe("orc")
-                # the probe already knows WHICH files pos deletes
-                # mark: only those pay the python ordinal decode;
-                # every other ORC file stays on Spark's native
-                # vectorized reader (review r10b: decoding all 1,000
-                # files because one was marked is the wrong physics)
-                route = orc_touched | orc_evolved
-                marked = [
-                    f for f in orc_files
-                    if _path_suffix(f["path"]) in route
-                ]
-                plain = [
-                    f for f in orc_files
-                    if _path_suffix(f["path"]) not in route
-                ]
-                odf = None
-                if marked:
-                    # decode with executor-side ordinals (pre-tagged
-                    # __fp/__pos); the standard anti-joins then apply
-                    # both delete kinds
-                    x = self._read_orc_with_pos(marked)
-                    odf = self._apply_deletes(
-                        x, marked, deletes, pre_tagged=True
-                    ).drop("__fp", "__pos")
-                if plain:
-                    # Spark-native ORC scan (read.orc takes a LIST of
-                    # paths, not varargs). Only EQUALITY deletes reach
-                    # this frame: no positional delete marks it (probe
-                    # above) — skipping them avoids referencing the
-                    # row ordinal the native reader lacks.
-                    y = self.spark.read.orc(
-                        [f["path"] for f in plain]
-                    )
-                    eq_only = [
-                        d for d in deletes if d["delete_kind"] == "eq"
-                    ]
-                    if eq_only:
-                        y = self._apply_deletes(y, plain, eq_only)
-                    odf = y if odf is None else odf.unionByName(y)
-                df = odf if df is None else df.unionByName(odf)
-            if avro_files:
-                # the python decode is the only avro path anyway, so
-                # deletes cost just the extra (__fp, __pos) columns
-                av = self._read_avro_data(
-                    avro_files, with_pos=bool(deletes)
-                )
-                if deletes:
-                    av = self._apply_deletes(
-                        av, avro_files, deletes, pre_tagged=True
-                    ).drop("__fp", "__pos")
-                df = av if df is None else df.unionByName(av)
-        ts_cols = {
-            f["name"]
-            for f in self.schema_fields()
-            if isinstance(f["type"], str) and f["type"].startswith("timestamp")
-        }
-        date_cols = {
-            f["name"]
-            for f in self.schema_fields()
-            if f["type"] == "date"
-        }
-        for f in self._canon_filters(filters):
-            fil = _Filter(*f)
-            # dates compare in Iceberg's unit (days-from-epoch — the
-            # canonicalized int literals the pruning layer hashes)
-            if fil.col in ts_cols or fil.col in date_cols:
-                # compare in micros (Iceberg's timestamp unit)
-                from pyspark.sql import functions as F
-
-                if fil.col in ts_cols:
-                    col = F.unix_micros(F.col(fil.col))
-                else:
-                    col = F.datediff(
-                        F.col(fil.col), F.lit("1970-01-01")
-                    )
-                v = fil.value
-                expr = {
-                    "=": col == v, "!=": col != v, "<": col < v,
-                    "<=": col <= v, ">": col > v, ">=": col >= v,
-                }.get(fil.op)
-                if expr is None:  # in
-                    expr = col.isin(list(v))
-                df = df.filter(expr)
-            else:
-                df = df.filter(fil.sql())
-        return df
+        return self._row_filter(self._rows(files, deletes), filters)
 
     def changes(
         self,
@@ -1945,9 +1826,9 @@ class IcebergTable:
         - ``replace`` snapshots (rewrite_data_files) are invisible:
           layout changed, rows didn't — the Delta CDF dataChange rule.
 
-        Parquet data files and primitive columns only (the per-file
-        resolver's lane); ORC/Avro files or nested columns in a
-        touched transition refuse loudly."""
+        Every frame is read by :meth:`_rows`, the reader ``scan``
+        uses, so each format, column resolution and refusal of a scan
+        holds for the feed too."""
         from pyspark.sql import functions as F
 
         if between_timestamps is not None:
@@ -1997,15 +1878,11 @@ class IcebergTable:
                 "lineage; the change feed across lineages is undefined"
             )
         chain.reverse()
-        prims = [
-            f for f in self.schema_fields() if isinstance(f["type"], str)
-        ]
-        nested = [
-            f["name"]
+        prims = {
+            f["id"]: f
             for f in self.schema_fields()
-            if not isinstance(f["type"], str)
-        ]
-        names_by_id = {f["id"]: f["name"] for f in prims}
+            if isinstance(f["type"], str)
+        }
 
         def tag(df: DataFrame, kind: str, sid: int) -> DataFrame:
             # explicit long: a bare F.lit(int) types as INT for ids
@@ -2082,22 +1959,13 @@ class IcebergTable:
                     " outside a replace — rows they killed would "
                     "resurrect without appearing as feed inserts"
                 )
-            touched = added + removed
             frames: list[DataFrame] = []
             # ---- delete candidates: removed + retained-but-targeted
             cand = {_path_suffix(f["path"]): f for f in removed}
             pos_new = [d for d in new_dels if d["delete_kind"] == "pos"]
             eq_new = [d for d in new_dels if d["delete_kind"] == "eq"]
             if pos_new:
-                hit = {
-                    r["s"]
-                    for r in self.spark.read.schema(POS_DELETE_SCHEMA)
-                    .parquet(*[d["path"] for d in pos_new])
-                    .select(_fp_expr(F.col("file_path")).alias("s"))
-                    .distinct()
-                    .collect()
-                }
-                for k in hit:
+                for k in self._pos_targets(pos_new):
                     if k in data_p and k in data_s:
                         cand.setdefault(k, data_p[k])
             if eq_new:
@@ -2106,14 +1974,16 @@ class IcebergTable:
                     for d in eq_new
                     for i in (d.get("equality_ids") or ())
                 }
-                if not ids or any(i not in names_by_id for i in ids):
+                if not ids or any(i not in prims for i in ids):
                     raise NotImplementedError(
                         f"{self.path}: equality-delete file without "
                         f"resolvable equality_ids {sorted(ids)}"
                     )
-                cols = sorted(names_by_id[i] for i in ids)
+                keys = sorted((prims[i]["name"], prims[i]["type"])
+                              for i in ids)
+                cols = [c for c, _ in keys]
                 b = (
-                    self._read_parquet([d["path"] for d in eq_new], cols)
+                    self._read_parquet([d["path"] for d in eq_new], keys)
                     .agg(
                         *[F.min(c).alias(f"lo_{c}") for c in cols],
                         *[F.max(c).alias(f"hi_{c}") for c in cols],
@@ -2160,65 +2030,25 @@ class IcebergTable:
                         and f["sequence_number"] < max_seq
                     ):
                         cand.setdefault(k, f)
-                touched = touched + list(cand.values())
-            bad_fmt = sorted(
-                {
-                    f["path"]
-                    for f in touched + list(cand.values())
-                    if f.get("format", "parquet") != "parquet"
-                }
-            )
-            if bad_fmt:
-                raise NotImplementedError(
-                    f"{self.path}: change feed touches non-parquet "
-                    f"data files (e.g. {bad_fmt[0]!r}) — the "
-                    "resolver lane is parquet-only"
-                )
-            # nested columns refuse only when this transition
-            # actually reads rows (pure-metadata transitions feed
-            # nothing and need no row decode) — review r12: the
-            # blanket refusal contradicted the docstring's
-            # touched-transition scoping
-            if nested and (added or cand):
-                raise NotImplementedError(
-                    f"{self.path}: change feed over a schema with "
-                    f"nested columns {nested} — the per-file "
-                    "resolver carries primitives only"
-                )
             # ---- inserts: live rows of the added files at s
             if added:
-                ins = self._read_by_field_id(added)
-                if dels_s:
-                    ins = self._apply_deletes(
-                        ins, added, dels_s, pre_tagged=True
-                    )
-                frames.append(tag(ins, "insert", sid))
+                frames.append(tag(self._rows(added, dels_s), "insert", sid))
             # ---- deletes: candidate rows live at parent, gone at s
             if cand:
                 cand_list = list(cand.values())
-                live_p = self._read_by_field_id(cand_list)
-                if dels_p:
-                    live_p = self._apply_deletes(
-                        live_p, cand_list, dels_p, pre_tagged=True
-                    )
+                dead = self._rows(cand_list, dels_p, ordinals=True)
                 retained = [
                     f
                     for f in cand_list
                     if _path_suffix(f["path"]) in data_s
                 ]
                 if retained:
-                    live_s = self._read_by_field_id(retained)
-                    if dels_s:
-                        live_s = self._apply_deletes(
-                            live_s, retained, dels_s, pre_tagged=True
-                        )
-                    dead = live_p.join(
+                    live_s = self._rows(retained, dels_s, ordinals=True)
+                    dead = dead.join(
                         live_s.select("__fp", "__pos"),
                         ["__fp", "__pos"],
                         "left_anti",
                     )
-                else:
-                    dead = live_p
                 frames.append(tag(dead, "delete", sid))
             for fr in frames:
                 out = fr if out is None else out.unionByName(fr)

@@ -2032,18 +2032,17 @@ def iceberg_delete_where(
     a sliver of a huge table.
 
     Distributed end to end: the matching rows' (file_path, pos) pairs
-    are computed by executors — from ``_metadata`` row ordinals for
-    parquet data files, from the stripe-ordered pyarrow decode
-    (``IcebergTable._read_orc_with_pos``) for ORC ones — and WRITTEN
-    as the delete parquet by executors; the driver only authors the
-    delete manifest from the written files' footers and flips the
-    version pointer. Matching against already-deleted rows re-marks
-    them — harmless (idempotent). AVRO data files route through the
-    OCF decode with ordinals (``_read_avro_data(with_pos=True)``) —
-    all three spec formats delete."""
+    are computed by executors — the rows come from
+    ``IcebergTable._rows`` with their ordinals (the reader ``scan``
+    uses, so every data-file format and column resolution of a scan
+    holds here) and the filters apply as ``scan`` applies them — and
+    are WRITTEN as the delete parquet by executors; the driver only
+    authors the delete manifest from the written files' footers and
+    flips the version pointer. Matching against already-deleted rows
+    re-marks them — harmless (idempotent)."""
     from pyspark.sql import functions as F
 
-    from feature_store_spark.sources.iceberg import IcebergTable, _Filter
+    from feature_store_spark.sources.iceberg import IcebergTable, _path_suffix
 
     t = IcebergTable(spark, table_dir)
     # candidate pruning (r11): only files that MIGHT match the
@@ -2064,101 +2063,9 @@ def iceberg_delete_where(
             "(empty table, or the predicate prunes every file) — "
             "nothing committed"
         )
-    pq_files = [
-        f for f in files
-        if f.get("format", "parquet") not in ("avro", "orc")
-    ]
-    orc_files = [f for f in files if f.get("format") == "orc"]
-    avro_files = [f for f in files if f.get("format") == "avro"]
-    # per-format tagged frames: parquet rows carry Spark's _metadata
-    # ordinals; ORC rows come through the executor-side stripe decode
-    # (_read_orc_with_pos) that recovers the spec ordinal in file
-    # order — both normalize to (data cols, __fp suffix, __pos)
-    from feature_store_spark.sources.iceberg import _fp_expr, _path_suffix
-
-    df = None
-    if pq_files:
-        # evolved tables: files written before a column was added
-        # don't carry it. Sniff the (cached) footers; when any file
-        # omits a schema column, route through the per-file resolver
-        # below, else read every file under the current schema.
-        from feature_store_spark.sources.iceberg import _spark_type
-
-        prim = [
-            f for f in t.schema_fields() if isinstance(f["type"], str)
-        ]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            sigs = list(
-                pool.map(
-                    lambda f: t._file_field_mapping(f["path"]), pq_files
-                )
-            )
-        needs_fill = any(
-            any(p["name"] not in {n for n, _ in sig} for p in prim)
-            for sig in sigs
-        )
-        if needs_fill:
-            nested = [
-                f["name"]
-                for f in t.schema_fields()
-                if not isinstance(f["type"], str)
-            ]
-            unmapped = [
-                f["name"] for f in prim if _spark_type(f["type"]) is None
-            ]
-            if nested or unmapped:
-                raise NotImplementedError(
-                    f"{table_dir}: DELETE WHERE over an evolved table "
-                    f"with non-primitive/unmapped columns "
-                    f"{nested + unmapped} needs a full Iceberg runtime"
-                )
-            # ADVICE r10: a blanket table-schema read null-fills ANY
-            # absent column — on a hive-layout/UniForm table (files
-            # omit the identity partition source) or after a rename,
-            # the predicate column reads all-NULL and the DELETE
-            # silently commits a no-op. Route through the SAME
-            # per-file resolver scan uses: identity sources fill from
-            # the file's partition metadata (spec Column Projection
-            # rule #2), renamed columns resolve by parquet field id,
-            # and only genuinely-added columns null-fill. Rows come
-            # back pre-tagged (__fp suffix, __pos ordinal) — the
-            # exact shape the ordinal collection below needs.
-            df = t._read_by_field_id(pq_files)
-        else:
-            df = (
-                t._read_parquet([f["path"] for f in pq_files])
-                .withColumn(
-                    "__fp", _fp_expr(F.col("_metadata.file_path"))
-                )
-                .withColumn("__pos", F.col("_metadata.row_index"))
-            )
-    if orc_files:
-        odf = t._read_orc_with_pos(orc_files)
-        df = odf if df is None else df.unionByName(odf)
-    if avro_files:
-        adf = t._read_avro_data(avro_files, with_pos=True)
-        df = adf if df is None else df.unionByName(adf)
-    ts_cols = {
-        f["name"]
-        for f in t.schema_fields()
-        if isinstance(f["type"], str) and f["type"].startswith("timestamp")
-    }
-    for f in filters or []:
-        fil = _Filter(*f)
-        if fil.col in ts_cols:
-            col = F.unix_micros(F.col(fil.col))
-            v = fil.value
-            expr = {
-                "=": col == v, "!=": col != v, "<": col < v,
-                "<=": col <= v, ">": col > v, ">=": col >= v,
-            }.get(fil.op)
-            if expr is None:
-                expr = col.isin(list(v))
-            df = df.filter(expr)
-        else:
-            df = df.filter(fil.sql())
+    # every candidate row with its (file suffix, ordinal) tag, read
+    # and filtered exactly as scan reads and filters
+    df = t._row_filter(t._rows(files, [], ordinals=True), filters)
     # executors emit (recorded file path, row ordinal); the recorded
     # path (what the manifests carry) is recovered from the read path
     # by the table-relative data/ suffix (guarded helper: a table

@@ -52,47 +52,47 @@ MANIFEST_SCHEMA = manifest_schema(
 )
 
 
-def _write_parquet(path: str, rows: list[dict]) -> tuple[int, dict, dict]:
-    """Write one data file; returns (n_rows, lower_bounds, upper_bounds)
-    keyed by field id with Iceberg single-value binary encoding. The
-    parquet schema carries PARQUET:field_id per column, as real
-    Iceberg writers emit — what field-id column resolution reads."""
+# the row-dict key of each base field id; a column added by
+# ``IcebergFixture.evolve`` is keyed by its field id
+_ROW_KEY = {1: "entity_type", 2: "entity_id", 3: "feature_name",
+            4: "value_float", 6: "event_time_us"}
+_ARROW_TYPE = {"string": pa.string(), "double": pa.float64(),
+               "date": pa.date32(), "long": pa.int64(),
+               "timestamptz": pa.timestamp("us", tz="UTC")}
+_BOUND_FORMAT = {"double": "<d", "date": "<i", "long": "<q",
+                 "timestamptz": "<q"}
 
-    def fld(name, typ, fid):
-        return pa.field(
-            name, typ, metadata={b"PARQUET:field_id": str(fid).encode()}
-        )
 
+def _write_parquet(
+    path: str, rows: list[dict], fields: list[dict] = SCHEMA_FIELDS
+) -> tuple[int, dict, dict]:
+    """Write one data file with a column per schema field; returns
+    (n_rows, lower_bounds, upper_bounds) keyed by field id with
+    Iceberg single-value binary encoding (numeric, date and timestamp
+    columns). The parquet schema carries PARQUET:field_id per column,
+    as real Iceberg writers emit — what field-id column resolution
+    reads."""
     schema = pa.schema([
-        fld("entity_type", pa.string(), 1),
-        fld("entity_id", pa.string(), 2),
-        fld("feature_name", pa.string(), 3),
-        fld("value_float", pa.float64(), 4),
-        fld("event_time", pa.timestamp("us", tz="UTC"), 6),
+        pa.field(
+            f["name"], _ARROW_TYPE[f["type"]],
+            metadata={b"PARQUET:field_id": str(f["id"]).encode()},
+        )
+        for f in fields
     ])
-    table = pa.table(
-        {
-            "entity_type": pa.array([r["entity_type"] for r in rows],
-                                    pa.string()),
-            "entity_id": pa.array([r["entity_id"] for r in rows],
-                                  pa.string()),
-            "feature_name": pa.array([r["feature_name"] for r in rows],
-                                     pa.string()),
-            "value_float": pa.array([r["value_float"] for r in rows],
-                                    pa.float64()),
-            "event_time": pa.array([r["event_time_us"] for r in rows],
-                                   pa.timestamp("us", tz="UTC")),
-        },
-        schema=schema,
-    )
-    pq.write_table(table, path)
-    vals = [r["value_float"] for r in rows if r["value_float"] is not None]
-    ts = [r["event_time_us"] for r in rows]
-    lowers = {6: struct.pack("<q", min(ts))}
-    uppers = {6: struct.pack("<q", max(ts))}
-    if vals:
-        lowers[4] = struct.pack("<d", min(vals))
-        uppers[4] = struct.pack("<d", max(vals))
+    pq.write_table(pa.table({
+        f["name"]: [r.get(_ROW_KEY.get(f["id"], f["id"])) for r in rows]
+        for f in fields
+    }, schema=schema), path)
+    lowers, uppers = {}, {}
+    for f in fields:
+        fmt = _BOUND_FORMAT.get(f["type"])
+        vals = [
+            v for v in (r.get(_ROW_KEY.get(f["id"], f["id"])) for r in rows)
+            if v is not None
+        ]
+        if fmt and vals:
+            lowers[f["id"]] = struct.pack(fmt, min(vals))
+            uppers[f["id"]] = struct.pack(fmt, max(vals))
     return len(rows), lowers, uppers
 
 
@@ -185,21 +185,37 @@ class IcebergFixture:
         self.manifests: list[dict] = []
         self.snapshots: list[dict] = []
         self.snap_id = 0
+        self.fields = [dict(f) for f in SCHEMA_FIELDS]
+        self.schemas = [
+            {"type": "struct", "schema-id": 0, "fields": self.fields}
+        ]
+
+    def evolve(self, fields: list[dict]) -> None:
+        """Make ``fields`` the current schema (a new schema-id; the
+        history stays): later appends write their columns, and the
+        earlier files keep theirs."""
+        self.fields = [dict(f) for f in fields]
+        self.schemas.append({
+            "type": "struct",
+            "schema-id": len(self.schemas),
+            "fields": self.fields,
+        })
 
     def _commit(self, operation: str) -> None:
         mlist = os.path.join(self.meta_dir, f"snap-{self.snap_id}.avro")
         write_avro(mlist, MANIFEST_LIST_SCHEMA, list(self.manifests),
                    codec="deflate")
-        self.snapshots.append(
-            {
-                "snapshot-id": self.snap_id,
-                "timestamp-ms": 1700000000000 + self.snap_id,
-                "sequence-number": self.snap_id,
-                "summary": {"operation": operation},
-                "manifest-list": mlist,
-                "schema-id": 0,
-            }
-        )
+        snap = {
+            "snapshot-id": self.snap_id,
+            "timestamp-ms": 1700000000000 + self.snap_id,
+            "sequence-number": self.snap_id,
+            "summary": {"operation": operation},
+            "manifest-list": mlist,
+            "schema-id": self.schemas[-1]["schema-id"],
+        }
+        if self.snapshots:
+            snap["parent-snapshot-id"] = self.snapshots[-1]["snapshot-id"]
+        self.snapshots.append(snap)
 
     def _manifest_rec(self, mpath, content, n_files, n_rows, partitions):
         return {
@@ -231,7 +247,8 @@ class IcebergFixture:
         writer, ext = (
             (_write_avro_data, "avro")
             if file_format == "AVRO"
-            else (_write_parquet, "parquet")
+            else (lambda p, rows: _write_parquet(p, rows, self.fields),
+                  "parquet")
         )
         entries, n_rows = [], 0
         for (etype, day), rows in sorted(by_part.items()):
@@ -349,8 +366,12 @@ class IcebergFixture:
         dpath = os.path.join(
             self.data_dir, f"eq-deletes-{self.snap_id}.parquet"
         )
+        # the key column under its current name, with its field id
+        name = next(f["name"] for f in self.fields if f["id"] == 2)
         pq.write_table(
-            pa.table({"entity_id": pa.array(entity_ids, pa.string())}),
+            pa.table({name: entity_ids}, schema=pa.schema([pa.field(
+                name, pa.string(), metadata={b"PARQUET:field_id": b"2"}
+            )])),
             dpath,
         )
         self._delete_manifest(dpath, partition, len(entity_ids),
@@ -407,12 +428,11 @@ class IcebergFixture:
             "location": self.table_dir,
             "last-sequence-number": self.snap_id,
             "last-updated-ms": 1700000000000 + self.snap_id,
-            "last-column-id": 6,
-            "current-schema-id": 0,
-            "schemas": [
-                {"type": "struct", "schema-id": 0,
-                 "fields": SCHEMA_FIELDS}
-            ],
+            "last-column-id": max(
+                f["id"] for sch in self.schemas for f in sch["fields"]
+            ),
+            "current-schema-id": self.schemas[-1]["schema-id"],
+            "schemas": self.schemas,
             "default-spec-id": 0,
             "partition-specs": [
                 {"spec-id": 0, "fields": PARTITION_SPEC},

@@ -144,11 +144,19 @@ def _iceberg(verb):
         if verb.endswith("_redelivered"):
             i.iceberg_append(_frame(spark, 2 * N_ROWS, 3 * N_ROWS), path,
                              txn=TXN)
-        if verb == "iceberg_scan_with_deletes":
-            # equality deletes from the upsert, position deletes from
-            # the delete
+        if verb in ("iceberg_scan_with_deletes", "iceberg_changes_upsert"):
+            # equality deletes from the upsert
             i.iceberg_upsert(_batch(spark), path, keys=["entity_id"])
+        if verb in ("iceberg_scan_with_deletes", "iceberg_changes_delete"):
+            # position deletes from the delete
             i.iceberg_delete_where(spark, path, [("entity_id", "<", 50)])
+        if verb == "iceberg_scan_evolved":
+            # the older files lack the appended column
+            i.iceberg_append(_batch(spark).withColumn("tag", F.lit("t")), path)
+
+    def changes(spark, path):
+        t = IcebergTable(spark, path)
+        return t.changes(from_snapshot_id=t.snapshots()[-2][0]).collect()
 
     calls = {
         "iceberg_append": lambda s, p: i.iceberg_append(
@@ -185,6 +193,11 @@ def _iceberg(verb):
         "iceberg_scan_with_deletes": lambda s, p: IcebergTable(s, p)
         .scan()
         .collect(),
+        "iceberg_scan_evolved": lambda s, p: IcebergTable(s, p)
+        .scan()
+        .collect(),
+        "iceberg_changes_upsert": changes,
+        "iceberg_changes_delete": changes,
     }
     return setup, calls[verb]
 
@@ -218,6 +231,9 @@ EXPECTED_JOBS = {
     "iceberg_delete_where": 2,
     "iceberg_rewrite": 2,
     "iceberg_scan_with_deletes": 5,
+    "iceberg_scan_evolved": 1,
+    "iceberg_changes_upsert": 7,
+    "iceberg_changes_delete": 5,
 }
 
 
@@ -232,14 +248,27 @@ def test_verb_job_counts_pinned(spark, tmp_path, verb):
     assert jobs == EXPECTED_JOBS[verb]
 
 
+def test_evolved_iceberg_scan_builds_without_jobs(spark, tmp_path):
+    """Older files that lack an appended column are read under an
+    explicit schema: building the scan infers no footer in a job."""
+    from feature_store_spark.sources.iceberg import IcebergTable
+
+    setup, _ = _iceberg("iceberg_scan_evolved")
+    path = str(tmp_path / "t")
+    setup(spark, path)
+    before = _max_job_id(spark)
+    IcebergTable(spark, path).scan()
+    assert _max_job_id(spark) == before
+
+
 # Spark jobs of one keyed catalog query at sf0.001, its call and its
 # collect: the MERGE and upsert choreography as the driver runs it.
 EXPECTED_QUERY_JOBS = {
     "delta_upsert": 16,
     "delta_merge_conditional": 23,
     "delta_merge_sync": 22,
-    "iceberg_merge_conditional": 29,
-    "iceberg_merge_sync": 36,
+    "iceberg_merge_conditional": 26,
+    "iceberg_merge_sync": 31,
 }
 
 

@@ -334,7 +334,7 @@ class TestIcebergScan:
 
 # ------------------------------------------------------ avro property
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _AVRO_SCHEMA = {
@@ -618,14 +618,49 @@ class TestDeleteWhere:
         assert IcebergTable(spark, d).scan().count() == 3
 
 
+    def test_date_filter_matches_scan(self, spark, tmp_path):
+        """DELETE WHERE takes the filters scan takes: a date column
+        compares in days since epoch, or against a date."""
+        import datetime
+
+        from pyspark.sql import functions as F
+
+        from feature_store_spark.sources.iceberg_write import (
+            iceberg_append,
+            iceberg_delete_where,
+        )
+
+        d = str(tmp_path / "dwdate")
+        iceberg_append(
+            spark.range(8).select(
+                F.lit("user").alias("entity_type"),
+                F.col("id").alias("entity_id"),
+                F.timestamp_seconds(F.col("id")).alias("event_time"),
+                F.date_from_unix_date(
+                    (F.col("id") % 2 + 19723).cast("int")
+                ).alias("d"),
+            ),
+            d,
+        )
+        assert IcebergTable(spark, d).scan(
+            filters=[("d", "=", 19723)]
+        ).count() == 4
+        iceberg_delete_where(spark, d, [("d", "=", 19723)])
+        assert IcebergTable(spark, d).scan().count() == 4
+        iceberg_delete_where(
+            spark, d, [("d", "=", datetime.date(2024, 1, 2))]
+        )
+        assert IcebergTable(spark, d).scan().count() == 0
+
+
 class TestFieldIdResolution:
     def test_renamed_schema_resolves_by_field_id(self, spark, tmp_path):
         """Schema evolution: after a column RENAME the current schema
         carries the old field id under a new name; files on disk still
-        use the old parquet column name. resolve_by_field_id=True
-        reads them correctly (the spec's resolution rule), including
-        a column ADDED after the files were written (null-filled) and
-        merge-on-read deletes across the rename."""
+        use the old parquet column name. scan() reads them by field
+        id (the spec's resolution rule), including a column ADDED
+        after the files were written (null-filled) and merge-on-read
+        deletes across the rename."""
         import json
         import os
 
@@ -654,17 +689,14 @@ class TestFieldIdResolution:
             json.dump(meta, f)
 
         t = IcebergTable(spark, d)
-        df = t.scan(resolve_by_field_id=True)
+        df = t.scan()
         assert "amount" in df.columns and "source" in df.columns
         assert "value_float" not in df.columns
         rows = {(r["entity_id"], r["amount"], r["source"])
                 for r in df.collect()}
         assert rows == {("u2", 2.0, None)}  # u1 deleted, amount read
         # filters work against the CURRENT (renamed) column names
-        assert t.scan(
-            filters=[("entity_type", "=", "user")],
-            resolve_by_field_id=True,
-        ).count() == 1
+        assert t.scan(filters=[("entity_type", "=", "user")]).count() == 1
 
     def test_name_mapping_fallback_for_idless_files(self, spark, tmp_path):
         """Files written WITHOUT parquet field ids (plain Spark
@@ -674,22 +706,61 @@ class TestFieldIdResolution:
 
         from feature_store_spark.sources.iceberg_write import iceberg_append
 
-        d = str(tmp_path / "idless")
-        iceberg_append(
-            spark.range(10).select(
+        def batch(lo, hi):
+            return spark.range(lo, hi).select(
                 F.lit("user").alias("entity_type"),
                 F.concat(F.lit("e"), F.col("id")).alias("entity_id"),
                 F.col("id").cast("double").alias("value_float"),
                 F.timestamp_seconds(F.col("id")).alias("event_time"),
-            ),
-            d,
-        )
-        t = IcebergTable(spark, d)
-        by_name = {tuple(r) for r in t.scan().collect()}
+            )
+
+        d = str(tmp_path / "idless")
+        iceberg_append(batch(0, 10), d)
+        by_name = {tuple(r) for r in IcebergTable(spark, d).scan().collect()}
+        # an appended column: the older id-less file now lacks a
+        # current name, so scan() projects it by field id, through
+        # the name fallback
+        iceberg_append(batch(10, 20).withColumn("tag", F.lit("t")), d)
         by_id = {
-            tuple(r) for r in t.scan(resolve_by_field_id=True).collect()
+            tuple(r)[:-1]
+            for r in IcebergTable(spark, d).scan().collect()
+            if r["tag"] is None
         }
         assert by_id == by_name and len(by_id) == 10
+
+
+    def test_swapped_names_resolve_by_field_id(self, spark, tmp_path):
+        """A rename that swaps two names (field ids 2 and 3) leaves
+        every current name in the footer, under the other id: scan()
+        and DELETE WHERE still read each column by its field id."""
+        from iceberg_fixture import SCHEMA_FIELDS, IcebergFixture
+
+        from feature_store_spark.sources.iceberg_write import (
+            iceberg_delete_where,
+        )
+
+        d = str(tmp_path / "swap")
+        fx = IcebergFixture(d)
+        fx.append([
+            _row("user", "u1", "clicks", 1.0, 100),
+            _row("user", "u2", "views", 2.0, 100),
+        ])
+        swapped = {2: "feature_name", 3: "entity_id"}
+        fx.evolve([
+            {**f, "name": swapped.get(f["id"], f["name"])}
+            for f in SCHEMA_FIELDS
+        ])
+        fx.finish()
+        got = {
+            (r["entity_id"], r["feature_name"])
+            for r in IcebergTable(spark, d).scan().collect()
+        }
+        assert got == {("clicks", "u1"), ("views", "u2")}
+        iceberg_delete_where(spark, d, [("entity_id", "=", "clicks")])
+        assert [
+            r["feature_name"]
+            for r in IcebergTable(spark, d).scan().collect()
+        ] == ["u2"]
 
 
 class TestRound8Hardening:
@@ -2040,14 +2111,31 @@ class TestOrcDataFiles:
         t2 = IcebergTable(spark, d)
         assert t2.scan().count() == 59
 
-    def test_resolve_by_field_id_gated_for_orc(self, spark, tmp_path):
-        from feature_store_spark.sources.iceberg_write import iceberg_append
+    def test_change_feed_over_orc_files(self, spark, tmp_path):
+        """changes() reads ORC data files through the row reader scan
+        uses: a DELETE WHERE feeds its row, an append its rows."""
+        from feature_store_spark.sources.iceberg_write import (
+            iceberg_append,
+            iceberg_delete_where,
+        )
 
-        d = str(tmp_path / "orc_fid")
+        d = str(tmp_path / "orc_feed")
         iceberg_append(self._batch(spark), d, file_format="orc")
-        t = IcebergTable(spark, d)
-        with pytest.raises(NotImplementedError, match="field_id"):
-            t.scan(resolve_by_field_id=True)
+        base = IcebergTable(spark, d).snapshots()[-1][0]
+        iceberg_delete_where(spark, d, [("entity_id", "=", "e1")])
+        iceberg_append(
+            self._batch(spark, n=5, shift=1000.0, day0=105),
+            d,
+            file_format="orc",
+        )
+        feed = IcebergTable(spark, d).changes(from_snapshot_id=base)
+        got = sorted(
+            (r["_change_type"], r["entity_id"], r["value_float"])
+            for r in feed.collect()
+        )
+        assert got == [("delete", "e1", 1.5)] + [
+            ("insert", f"e{i}", i * 1.5 + 1000.0) for i in range(5)
+        ]
 
     def test_empty_filtered_scan_is_typed_from_orc(self, spark, tmp_path):
         from feature_store_spark.sources.iceberg_write import iceberg_append
@@ -3481,6 +3569,8 @@ def _spark_live(df):
     schema = [(f.name, f.dataType.simpleString()) for f in df.schema]
 
     def norm(v, ty):
+        if v is None:
+            return None
         if ty == "timestamp":  # local wall clock in Python
             return (v.astimezone(datetime.timezone.utc) - epoch) // one_us
         if ty == "timestamp_ntz":
@@ -3564,3 +3654,218 @@ class TestReadSchema:
         # from the upsert
         ids = sorted(r[1] for r in got_rows.elements())
         assert ids == list(range(20, 140))
+
+
+# ------------------------------------------- schema evolution property
+
+
+def _evolved_table(d: str, steps: list[tuple]) -> None:
+    """An IcebergFixture table at ``d`` built by one two-row append and
+    then ``steps``: ``("append", n)`` writes n rows on a new day under
+    the current schema; ``("add", type)`` appends a column;
+    ``("rename", k)`` gives field k a fresh name; ``("swap", k)``
+    swaps the names of the k-th pair of same-typed fields;
+    ``("pos_delete", k)`` deletes one row of the k-th data file;
+    ``("eq_delete", k)`` deletes the entity id ``u{k % 3}`` from
+    every older file."""
+    from itertools import combinations
+
+    from iceberg_fixture import SCHEMA_FIELDS, IcebergFixture
+
+    fx = IcebergFixture(d)
+    fields = [dict(f) for f in SCHEMA_FIELDS]
+    files: list[tuple] = []  # (entity_type, day, rows) per data file
+    appends = 0
+    for op, k in [("append", 2)] + list(steps):
+        if op == "append":
+            day = 100 + appends
+            rows = []
+            for j in range(k):
+                r = _row(("user", "item")[j % 2], f"u{(appends + j) % 3}",
+                         ("clicks", "views")[j % 2],
+                         float(10 * appends + j), day, j)
+                for f in fields[5:]:  # added columns, keyed by id
+                    r[f["id"]] = {"string": f"s{appends}{j}",
+                                  "double": j / 4,
+                                  "date": 19723 + j % 2}[f["type"]]
+                rows.append(r)
+            fx.append(rows)
+            appends += 1
+            for et in ("user", "item"):
+                n = sum(r["entity_type"] == et for r in rows)
+                if n:
+                    files.append((et, day, n))
+            continue
+        if op == "add":
+            fid = max(f["id"] for f in fields) + 1
+            fields.append({"id": fid, "name": f"c{fid}",
+                           "required": False, "type": k})
+        elif op == "rename":
+            fields[k % len(fields)]["name"] = f"n{len(fx.schemas)}"
+        elif op == "swap":
+            pairs = [
+                (a, b) for a, b in combinations(range(len(fields)), 2)
+                if fields[a]["type"] == fields[b]["type"]
+            ]
+            a, b = pairs[k % len(pairs)]
+            fields[a]["name"], fields[b]["name"] = (
+                fields[b]["name"], fields[a]["name"]
+            )
+        elif op == "pos_delete":
+            et, day, n = files[k % len(files)]
+            fx.pos_delete([(et, day, k % n)])
+            continue
+        elif op == "eq_delete":
+            fx.eq_delete([f"u{k % 3}"])
+            continue
+        fx.evolve([dict(f) for f in fields])
+    fx.finish()
+
+
+def _live_by_field_id(t: IcebergTable, snapshot_id=None) -> dict:
+    """{(table-relative file path, row ordinal): row} of a snapshot's
+    live rows, read with pyarrow alone and resolved by field id: each
+    current column is the file column carrying its id, else NULL;
+    equality-delete keys resolve the same way. Timestamps are epoch
+    micros, dates days since epoch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def column(tbl, fid):
+        for i, fld in enumerate(tbl.schema):
+            if (fld.metadata or {}).get(b"PARQUET:field_id") == b"%d" % fid:
+                c = tbl.column(i)
+                if pa.types.is_timestamp(c.type):
+                    c = c.cast(pa.int64())
+                elif pa.types.is_date(c.type):
+                    c = c.cast(pa.int32())
+                return c.to_pylist()
+        return [None] * tbl.num_rows
+
+    def key(path):
+        return path[path.rindex("/data/"):]
+
+    fields = t.schema_fields()
+    files = t.data_files(snapshot_id)
+    pos = set()
+    eqs = []
+    for d in files:
+        if d.get("delete_kind") == "pos":
+            cols = pq.read_table(d["path"]).to_pydict()
+            pos |= {(key(fp), p) for fp, p in zip(cols["file_path"],
+                                                   cols["pos"])}
+        elif d.get("delete_kind") == "eq":
+            dt = pq.read_table(d["path"])
+            ids = d["equality_ids"]
+            eqs.append((d["sequence_number"], ids, set(
+                zip(*[column(dt, i) for i in ids])
+            )))
+    live = {}
+    for f in files:
+        if f["is_delete"]:
+            continue
+        tbl = pq.read_table(f["path"])
+        cols = {x["id"]: column(tbl, x["id"]) for x in fields}
+        for i in range(tbl.num_rows):
+            if (key(f["path"]), i) in pos or any(
+                seq > f["sequence_number"]
+                and tuple(cols[fid][i] for fid in ids) in keys
+                for seq, ids, keys in eqs
+            ):
+                continue
+            live[(key(f["path"]), i)] = tuple(
+                cols[x["id"]][i] for x in fields
+            )
+    return live
+
+
+def _matches(v, op, lit) -> bool:
+    return v is not None and {
+        "=": v == lit, "<": v < lit, ">=": v >= lit,
+    }[op]
+
+
+_EVOLUTION_STEP = st.one_of(
+    st.tuples(st.just("append"), st.integers(1, 4)),
+    st.tuples(st.just("add"), st.sampled_from(["string", "double", "date"])),
+    st.tuples(
+        st.sampled_from(["rename", "swap", "pos_delete", "eq_delete"]),
+        st.integers(0, 63),
+    ),
+)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(
+    steps=st.lists(_EVOLUTION_STEP, max_size=6),
+    flt=st.tuples(
+        st.integers(0, 63), st.sampled_from(["=", "<", ">="]),
+        st.integers(0, 63),
+    ),
+)
+# swapped names: the current entity_id is field id 3, which holds
+# "clicks"/"views"
+@example(steps=[("swap", 2)], flt=(2, "=", 0))
+# a date column, filtered in days since epoch
+@example(steps=[("add", "date"), ("append", 2)], flt=(5, "=", 0))
+# an equality delete keeps applying after its key column is renamed
+@example(steps=[("eq_delete", 0), ("rename", 1)], flt=(0, "=", 0))
+def test_evolution_reads_match_field_id_reference(
+    spark, tmp_path_factory, steps, flt
+):
+    """Over random schema evolution (added, renamed and swapped
+    columns) interleaved with position and equality deletes, scan(),
+    a filtered scan(), iceberg_delete_where and changes() agree with a
+    pyarrow-only reader that resolves every column by field id."""
+    import datetime
+    from collections import Counter
+
+    from feature_store_spark.sources.iceberg_write import (
+        iceberg_delete_where,
+    )
+
+    def days(v):
+        if type(v) is datetime.date:
+            return (v - datetime.date(1970, 1, 1)).days
+        return v
+
+    def rows(df):
+        return Counter({
+            tuple(days(v) for v in r): n
+            for r, n in _spark_live(df)[1].items()
+        })
+
+    d = str(tmp_path_factory.mktemp("evolve") / "t")
+    _evolved_table(d, steps)
+    t = IcebergTable(spark, d)
+    names = [f["name"] for f in t.schema_fields()]
+    live = _live_by_field_id(t)
+    assert rows(t.scan().select(*names)) == Counter(live.values())
+
+    i = flt[0] % len(names)
+    values = sorted({r[i] for r in live.values()} - {None})
+    if values:
+        f = (names[i], flt[1], values[flt[2] % len(values)])
+        want = Counter(
+            r for r in live.values() if _matches(r[i], *f[1:])
+        )
+        assert rows(t.scan(filters=[f]).select(*names)) == want
+        try:
+            iceberg_delete_where(spark, d, [f])
+        except ValueError as e:
+            # rows that match but are already deleted are re-marked
+            assert "matched no" in str(e) and not want
+        t = IcebergTable(spark, d)
+        live = _live_by_field_id(t)
+        assert rows(t.scan().select(*names)) == Counter(live.values())
+        assert not any(_matches(r[i], *f[1:]) for r in live.values())
+
+    want = Counter()
+    snaps = [sid for sid, _ in t.snapshots()]
+    for p, s in zip(snaps, snaps[1:]):
+        lp, ls = _live_by_field_id(t, p), _live_by_field_id(t, s)
+        want.update(("insert", s) + ls[k] for k in ls.keys() - lp.keys())
+        want.update(("delete", s) + lp[k] for k in lp.keys() - ls.keys())
+    feed = t.changes(from_snapshot_id=snaps[0])
+    assert rows(feed.select("_change_type", "_snapshot_id", *names)) == want

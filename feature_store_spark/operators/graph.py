@@ -50,7 +50,8 @@ def connected_components(
 
     ``max_iter`` bounds the propagation rounds (diameter cap);
     ``checkpoint=False`` skips per-round localCheckpoints for tiny
-    inputs where lineage growth over a handful of rounds is free.
+    inputs: the plan then grows by one round per round, and every
+    probe re-runs the rounds before it.
     """
     # NULL endpoints are not nodes: filter them up front so the
     # NULL-keeps-its-group behavior of groupBy can never mint a
@@ -80,17 +81,26 @@ def connected_components(
         which crashed under ANSI for STRING node ids (and, with ANSI
         off, nulled the sum so round one looked converged and a
         partially-propagated WRONG clustering escaped — review r10i,
-        execution-confirmed)."""
-        msgs = edges.join(lbls, "node").select(
-            F.col("peer").alias("node"),
-            "component",
-            F.lit(None).cast(comp_type).alias("__old"),
-        )
-        olds = lbls.select(
-            "node", "component", F.col("component").alias("__old")
-        )
+        execution-confirmed).
+
+        ``lbls`` is referenced ONCE: each joined (node, peer) row
+        emits both the peer's message and the node's old label (every
+        node has an edge, so none is lost; the duplicate old labels
+        fold away in the min/max). Two references doubled the plan
+        every round, so without checkpoints ten rounds planned ~1000
+        copies of the first."""
+        msgs = lbls.join(edges, "node").select(F.explode(F.array(
+            F.struct(
+                "node", "component", F.col("component").alias("__old")
+            ),
+            F.struct(
+                F.col("peer").alias("node"),
+                "component",
+                F.lit(None).cast(comp_type).alias("__old"),
+            ),
+        )).alias("m"))
         return (
-            msgs.union(olds)
+            msgs.select("m.*")
             .groupBy("node")
             .agg(
                 F.min("component").alias("component"),

@@ -50,6 +50,7 @@ import uuid
 from functools import reduce
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -213,8 +214,6 @@ def _deferred_rule_checks(
     Returns ``(exprs, validate)``; ``validate`` accepts any mapping
     (an ``Observation.get`` dict or a Row) keyed by the expr aliases.
     """
-    from pyspark.sql import functions as F
-
     exprs = []
     for i, (name, sql, ty) in enumerate(gen_checks):
         ty_s = ty if isinstance(ty, str) else json.dumps(ty)
@@ -358,8 +357,6 @@ def _compute_generated_columns(
     :func:`_deferred_rule_checks`, so the verification aggregate
     rides the staging write instead of its own pass. Nested types
     compare with eqNullSafe like everything else."""
-    from pyspark.sql import functions as F
-
     checks = [g for g in gens if g[0] in df.columns]
     for name, sql, ty in gens:
         if name not in df.columns:
@@ -459,7 +456,6 @@ def _apply_identity_columns(
     ``{name: new_high_water_mark}`` for the columns whose mark must
     advance in this commit's metaData."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     new_hwm: dict[str, int] = {}
     for ident in idents:
@@ -597,6 +593,7 @@ class DeltaTable:
         self._protocol_cache: dict[int, dict] = {}
         self._tombstone_cache: dict[int, list[dict]] = {}
         self._sig_cache: dict[str, tuple] = {}
+        self._dv_cache: dict[tuple, Any] = {}
 
     def _footer_sigs(self, paths: list[str]) -> dict[str, tuple]:
         """Footer (column name, field id) signatures per data file —
@@ -859,13 +856,14 @@ class DeltaTable:
 
     # -- deletion vectors
 
-    def _load_dv(self, d: dict):
-        """Decode one add action's deletionVector descriptor to a
-        SORTED int64 numpy array of deleted row ordinals (PROTOCOL.md
-        'Deletion Vector Descriptor Schema': inline Z85,
-        relative-with-UUID, or absolute-path storage). Numpy end to
-        end — a 10⁵–10⁶-position DV decodes in milliseconds where the
-        per-value Python loop took seconds."""
+    def _dv_positions(self, add: dict | None):
+        """The row ordinals ``add``'s deletion vector kills, as a
+        SORTED int64 numpy array (empty without one), decoded once per
+        descriptor per table object (PROTOCOL.md 'Deletion Vector
+        Descriptor Schema': inline Z85, relative-with-UUID, or
+        absolute-path storage). Numpy end to end — a 10⁵–10⁶-position
+        DV decodes in milliseconds where the per-value Python loop took
+        seconds."""
         from feature_store_spark.sources.roaring import (
             deserialize_rbm_array_np,
             dv_file_path,
@@ -873,20 +871,62 @@ class DeltaTable:
             z85_decode,
         )
 
-        st = d["storageType"]
-        if st == "i":
-            return deserialize_rbm_array_np(
-                z85_decode(d["pathOrInlineDv"])
+        key = _dv_key(add)
+        if key is None:
+            return np.empty(0, dtype=np.int64)
+        if key not in self._dv_cache:
+            d = add["deletionVector"]
+            st = d["storageType"]
+            if st == "i":
+                pos = deserialize_rbm_array_np(
+                    z85_decode(d["pathOrInlineDv"])
+                )
+            elif st in ("u", "p"):
+                pos = read_dv_from_file(
+                    dv_file_path(self.path, d),
+                    int(d["offset"]),
+                    int(d["sizeInBytes"]),
+                    as_numpy=True,
+                )
+            else:
+                raise NotImplementedError(
+                    f"{self.path}: deletionVector storageType {st!r}"
+                )
+            self._dv_cache[key] = pos
+        return self._dv_cache[key]
+
+    def _filter_positions(
+        self, df: DataFrame, positions: dict, how: str
+    ) -> DataFrame:
+        """Keep (``left_semi``) or drop (``left_anti``) the rows of the
+        ``__fp``/``__pos``-tagged ``df`` whose row ordinal is among
+        ``positions[absolute data-file path]`` — the one (file,
+        ordinal) join every deletion-vector read uses, the Iceberg
+        positional-delete shape. The pairs are built at plan time,
+        numpy/pandas end to end: no per-position Python objects even
+        at 10⁶ deletes."""
+        import pandas as pd
+
+        parts = [
+            pd.DataFrame(
+                {
+                    "__dv_fp": np.full(len(pos), fp, dtype=object),
+                    "__dv_pos": np.asarray(pos, dtype=np.int64),
+                }
             )
-        if st in ("u", "p"):
-            return read_dv_from_file(
-                dv_file_path(self.path, d),
-                int(d["offset"]),
-                int(d["sizeInBytes"]),
-                as_numpy=True,
-            )
-        raise NotImplementedError(
-            f"{self.path}: deletionVector storageType {st!r}"
+            for fp, pos in positions.items()
+            if len(pos)
+        ]
+        if not parts:
+            return df if how == "left_anti" else df.limit(0)
+        pdf = pd.concat(parts, ignore_index=True)
+        sel = self.spark.createDataFrame(pdf)
+        if len(pdf) <= 4_000_000:
+            sel = F.broadcast(sel)
+        return df.join(
+            sel,
+            (df["__fp"] == sel["__dv_fp"]) & (df["__pos"] == sel["__dv_pos"]),
+            how,
         )
 
     # -- planning
@@ -1109,45 +1149,20 @@ class DeltaTable:
         is not a row; firing a merge arm on one would resurrect it).
         ``tagged=False`` drops the tags; without deletion vectors the
         scan then never reads the row-index metadata column."""
-        from pyspark.sql import functions as F
-
         dv_adds = [a for a in adds if a.get("deletionVector")]
         df = self._assemble(adds, meta, tagged or bool(dv_adds))
         if dv_adds:
-            # decode all DVs at plan time (KB–MB metadata) and remove
-            # their (file, row ordinal) pairs with ONE anti-join —
-            # the Iceberg positional-delete shape. Numpy/Arrow end to
-            # end: no per-position Python objects even at 10⁶ deletes.
-            import numpy as np
-            import pandas as pd
-
-            parts = []
-            for a in dv_adds:
-                pos = self._load_dv(a["deletionVector"])
-                if len(pos) == 0:
-                    continue
-                p = os.path.abspath(os.path.join(self.path, a["path"]))
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "__del_fp": np.full(len(pos), p,
-                                                dtype=object),
-                            "__del_pos": pos,
-                        }
-                    )
-                )
-            if parts:
-                pdf = pd.concat(parts, ignore_index=True)
-                dv_df = self.spark.createDataFrame(pdf)
-                if len(pdf) <= 4_000_000:
-                    dv_df = F.broadcast(dv_df)
-                df = df.join(
-                    dv_df,
-                    (df["__fp"] == dv_df["__del_fp"])
-                    & (df["__pos"] == dv_df["__del_pos"]),
-                    "left_anti",
-                )
+            df = self._filter_positions(
+                df,
+                {self._abs(a): self._dv_positions(a) for a in dv_adds},
+                "left_anti",
+            )
         return df if tagged else df.drop("__fp", "__pos")
+
+    def _abs(self, add: dict) -> str:
+        """The absolute path of ``add``'s data file, as ``__fp``
+        carries it."""
+        return os.path.abspath(os.path.join(self.path, add["path"]))
 
     def _assemble(
         self,
@@ -1166,8 +1181,6 @@ class DeltaTable:
         literals from ``partitionValues``, resolve physical column
         names back to logical, and union — group count is bounded by
         the pruned set's partition count, not its file count."""
-        from pyspark.sql import functions as F
-
         mode, fields = self._mapping(meta)
         logical_parts = meta.get("partitionColumns") or []
         log2phys = {f["name"]: f["physical"] for f in fields}
@@ -1175,14 +1188,7 @@ class DeltaTable:
         phys_parts = [log2phys.get(c, c) for c in logical_parts]
 
         def tag(frame):
-            if not tagged:
-                return frame
-            return frame.withColumn(
-                "__fp",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ),
-            ).withColumn("__pos", F.col("_metadata.row_index"))
+            return _tag(frame) if tagged else frame
 
         paths = [os.path.join(self.path, a["path"]) for a in adds]
         if mode == "none":
@@ -1257,6 +1263,15 @@ class DeltaTable:
         return out
 
 
+def _tag(df: DataFrame) -> DataFrame:
+    """``df`` (a parquet read) plus the ``__fp`` (absolute data-file
+    path) / ``__pos`` (row ordinal) tags deletion vectors match on."""
+    return df.withColumn(
+        "__fp",
+        F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", ""),
+    ).withColumn("__pos", F.col("_metadata.row_index"))
+
+
 def _claim_commit(log_dir: str, version: int, actions: list[dict]) -> bool:
     """Claim ``_delta_log/<version>.json`` through the kernel's
     put-if-absent publish. Returns False when another writer already
@@ -1285,6 +1300,52 @@ def _claim_or_raise(
             f"{table_dir}: version {version} was committed by another "
             f"writer while {verb} ran; re-read and retry"
         )
+
+
+def _commit_actions(
+    operation: str,
+    body: list[dict],
+    params: dict | None = None,
+    txn: tuple[str, int] | None = None,
+    data_change: bool = True,
+) -> list[dict]:
+    """One Delta commit's actions, the only place a write verb's
+    ``commitInfo``, ``remove`` and ``txn`` actions are built:
+    ``commitInfo`` (``operation``, ``params`` as its
+    ``operationParameters``) first, then ``body`` in order, then the
+    ``txn`` action when one is passed. A body entry ``{"remove": add}``
+    names the live add action it removes; it becomes the protocol's
+    remove action with ``data_change`` as its ``dataChange``. One clock
+    reading stamps the commitInfo and every remove's
+    ``deletionTimestamp``."""
+    now_ms = int(time.time() * 1000)
+    info: dict[str, Any] = {"timestamp": now_ms, "operation": operation}
+    if params is not None:
+        info["operationParameters"] = params
+    out: list[dict] = [{"commitInfo": info}]
+    for a in body:
+        if "remove" in a:
+            r = a["remove"]
+            a = {"remove": {"path": r["path"], "dataChange": data_change,
+                            "deletionTimestamp": now_ms,
+                            "partitionValues": r.get("partitionValues") or {},
+                            "size": r.get("size")}}
+        out.append(a)
+    if txn is not None:
+        out.append({"txn": {"appId": txn[0], "version": int(txn[1]),
+                            "lastUpdated": 0}})
+    return out
+
+
+def _dv_key(add: dict | None):
+    """The identity of ``add``'s deletion vector (None without one):
+    the protocol's unique id — storage type, path or inline bytes, and
+    the offset within a shared DV file. Adds with equal keys kill the
+    same rows."""
+    d = (add or {}).get("deletionVector")
+    if not d:
+        return None
+    return (d.get("storageType"), d.get("pathOrInlineDv"), d.get("offset"))
 
 
 def _as_dict(v) -> dict:
@@ -1435,28 +1496,59 @@ def _norm_type(t):
 
 
 def _stage_adds(
-    wdf: DataFrame,
+    df: DataFrame,
     table_dir: str,
     version: int,
-    part_phys: list[str],
-    data_cols: list[str],
+    partition_cols: list[str],
+    mapping: tuple[str, list[dict]] = ("none", []),
     post_write_validate=None,
     rebalance: bool = True,
     partition_values: dict | None = None,
 ) -> list[dict]:
-    """Stage ``wdf`` (already physical-named in mapped tables) through
-    the commit kernel, move its files into the canonical Delta layout
-    (partition dirs directly under the table root, unique names — one
-    directory structure across commits, which Spark's partition
-    discovery over the table requires) and return their add actions.
-    Shared by every verb that lands data, so a MERGE or OPTIMIZE lands
-    files with the exact layout, naming and stats shape of an append.
+    """Stage ``df`` (LOGICAL column names) through the commit kernel,
+    move its files into the canonical Delta layout (partition dirs
+    directly under the table root, unique names — one directory
+    structure across commits, which Spark's partition discovery over
+    the table requires) and return their add actions. Shared by every
+    verb that lands data, so a MERGE or OPTIMIZE lands files with the
+    exact layout, naming and stats shape of an append.
+
+    ``mapping`` is the table's column mapping (``DeltaTable._mapping``:
+    mode and fields). In a mapped table every column is written under
+    its PHYSICAL name with its ``parquet.field.id`` (id-mode readers
+    resolve columns by id, per PROTOCOL.md), and the stats and
+    ``partitionValues`` are keyed by physical name; no other writer
+    applies the mapping.
 
     ``post_write_validate`` checks the write-path rule aggregates
-    (generated columns, invariants, CHECK) observed on ``wdf``; a
-    refused batch never leaves staging. ``partition_values`` (OPTIMIZE)
-    lands an unpartitioned write under one known partition and marks
-    the adds ``dataChange: false``."""
+    (generated columns, invariants, CHECK) observed on ``df``; a
+    refused batch never leaves staging. ``partition_values`` (OPTIMIZE,
+    keyed by physical name) lands an unpartitioned write under one
+    known partition and marks the adds ``dataChange: false``."""
+    mode, fields = mapping
+    phys_of = {f["name"]: f["physical"] for f in fields}
+    wdf = df
+    if mode != "none":
+        missing = [c for c in df.columns if c not in phys_of]
+        if missing:
+            raise ValueError(
+                f"{table_dir}: columns {missing} are not in the mapped "
+                "table schema"
+            )
+        id_of = {f["name"]: f["id"] for f in fields}
+        wdf = df.select(
+            *[
+                F.col(c).alias(
+                    phys_of[c],
+                    metadata={}
+                    if id_of[c] is None
+                    else {"parquet.field.id": id_of[c]},
+                )
+                for c in df.columns
+            ]
+        )
+    part_phys = [phys_of.get(c, c) for c in partition_cols]
+    data_cols = [c for c in wdf.columns if c not in part_phys]
     staging = os.path.join(table_dir, f".staging-{uuid.uuid4().hex[:8]}")
     staged = commit.stage(
         wdf,
@@ -1542,12 +1634,10 @@ def _evolve_delta_schema(
     lacking them lands NULLs).
     In mapped tables each new column is assigned a fresh physical
     name + field id above the recorded high-water mark;
-    ``map_fields`` is extended in place so the caller's physical
-    rename of the staged frame sees the new columns. Shared by
+    ``map_fields`` is extended in place so the staging write's
+    physical rename sees the new columns. Shared by
     delta_append(merge_schema=True) and delta_merge(evolve=True) so
     both verbs evolve with byte-identical metadata shapes."""
-    import uuid
-
     cur_fields = json.loads(meta0["schemaString"])["fields"]
     conf = dict(meta0.get("configuration") or {})
     sj = {
@@ -1644,11 +1734,6 @@ def delta_append(
     Concurrent appenders arbitrate on the version claim: a lost race
     re-checks the txn mark and retries at the next version with the
     same staged files, unless the table definition changed."""
-    import uuid
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
     spark = df.sparkSession
     partition_cols = list(partition_cols or [])
     log_dir = os.path.join(table_dir, "_delta_log")
@@ -1893,27 +1978,6 @@ def delta_append(
         obs = Observation()
         df = df.observe(obs, *check_exprs)
         post_write_validate = lambda: check_validate(obs.get)  # noqa: E731
-    phys_of = {f["name"]: f["physical"] for f in map_fields}
-    fid_of = {f["name"]: f["id"] for f in map_fields}
-    wdf = df
-    part_phys = partition_cols
-    if mode != "none":
-        missing = [c for c in df.columns if c not in phys_of]
-        if missing:
-            raise ValueError(
-                f"{table_dir}: columns {missing} are not in the mapped "
-                "table schema"
-            )
-        wdf = df.select(
-            *[
-                F.col(c).alias(
-                    phys_of[c],
-                    metadata={"parquet.field.id": int(fid_of[c])},
-                )
-                for c in df.columns
-            ]
-        )
-        part_phys = [phys_of[c] for c in partition_cols]
 
     actions: list[dict] = []
     if evolution_md is not None:
@@ -1966,10 +2030,10 @@ def delta_append(
                               "minWriterVersion": 5}}
             )
             sj = json.loads(df.schema.json())
-            for f in sj["fields"]:
+            for f, mf in zip(sj["fields"], map_fields):
                 f["metadata"] = {
-                    "delta.columnMapping.id": int(fid_of[f["name"]]),
-                    "delta.columnMapping.physicalName": phys_of[f["name"]],
+                    "delta.columnMapping.id": mf["id"],
+                    "delta.columnMapping.physicalName": mf["physical"],
                 }
             schema_string = json.dumps(sj)
             configuration = {
@@ -1998,35 +2062,17 @@ def delta_append(
                 }
             }
         )
-    # stats + partitionValues are keyed by PHYSICAL names (what the
-    # footers and directory segs carry in mapped tables)
-    data_cols = [
-        phys_of.get(f.name, f.name)
-        for f in df.schema.fields
-        if f.name not in partition_cols
-    ]
     actions.extend(
         _stage_adds(
-            wdf,
+            df,
             table_dir,
             version,
-            part_phys,
-            data_cols,
+            partition_cols,
+            (mode, map_fields),
             post_write_validate=post_write_validate,
         )
     )
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": txn[0], "version": int(txn[1]),
-                     "lastUpdated": 0}}
-        )
-    import time as _time
-
-    actions.insert(
-        0,
-        {"commitInfo": {"timestamp": int(_time.time() * 1000),
-                        "operation": "WRITE"}},
-    )
+    actions = _commit_actions("WRITE", actions, txn=txn)
     # optimistic concurrency: claim the version put-if-absent. Lost
     # races on APPENDS commute — recheck the txn mark (the rival may
     # have committed this very batch) and retry at the next version.
@@ -2094,11 +2140,7 @@ def delta_overwrite(
     read_version = int(read_version)
     partition_cols = list(partition_cols or [])
     schema_string = df.schema.json()
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {"commitInfo": {"timestamp": now_ms, "operation": "WRITE",
-                        "operationParameters": {"mode": "Overwrite"}}}
-    ]
+    actions: list[dict] = []
     if read_version < 0:
         os.makedirs(os.path.join(table_dir, "_delta_log"), exist_ok=True)
         actions += [
@@ -2141,26 +2183,16 @@ def delta_overwrite(
             actions.append(
                 {"metaData": {**meta, "schemaString": schema_string}}
             )
-        actions += [
-            {"remove": {"path": a["path"], "dataChange": True,
-                        "deletionTimestamp": now_ms,
-                        "partitionValues": a.get("partitionValues") or {},
-                        "size": a.get("size")}}
-            for a in adds
-        ]
-    actions += _stage_adds(
-        df,
+        actions += [{"remove": a} for a in adds]
+    actions += _stage_adds(df, table_dir, read_version + 1, partition_cols)
+    _claim_or_raise(
         table_dir,
         read_version + 1,
-        partition_cols,
-        [c for c in df.columns if c not in partition_cols],
+        _commit_actions(
+            "WRITE", actions, {"mode": "Overwrite"}, txn
+        ),
+        "overwrite",
     )
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": txn[0], "version": int(txn[1]),
-                     "lastUpdated": 0}}
-        )
-    _claim_or_raise(table_dir, read_version + 1, actions, "overwrite")
     return read_version + 1
 
 
@@ -2237,12 +2269,10 @@ def delta_optimize(
     KB-scale files whose footer/open overhead dominates scans; the
     rewrite is executor work (coalesce per partition — no shuffle
     unless Z-ordering, which needs the range partition), the commit is
-    driver metadata. Column-mapped tables rewrite PHYSICAL columns
-    byte-for-byte (no unmapping round trip). Returns
+    driver metadata. Column-mapped tables rewrite each column under
+    its physical name and field id. Returns
     ``(version, files_removed, files_added)``."""
     import math
-
-    from pyspark.sql import functions as F
 
     t = DeltaTable(spark, table_dir)
     version = t.latest_version() + 1
@@ -2252,17 +2282,15 @@ def delta_optimize(
     _writer_feature_gate(
         t, meta, "delta_optimize", mutates=False, adds_rows=False
     )
-    mode, fields = t._mapping(meta)
+    mapping = t._mapping(meta)
+    fields = mapping[1]
     logical_parts = meta.get("partitionColumns") or []
     log2phys = {f["name"]: f["physical"] for f in fields}
     part_phys = [log2phys.get(c, c) for c in logical_parts]
-    zphys = [log2phys.get(c, c) for c in (zorder_by or [])]
     for c in zorder_by or []:
         if c not in log2phys:
             raise ValueError(f"zorder column {c!r} is not in the schema")
-    data_cols = [
-        f["physical"] for f in fields if f["name"] not in logical_parts
-    ]
+    data_fields = [f for f in fields if f["name"] not in logical_parts]
 
     adds = t.data_files(None, None)
     groups: dict[tuple, list[dict]] = {}
@@ -2284,8 +2312,8 @@ def delta_optimize(
                 if a.get("deletionVector")
                 or (a.get("size") or 0) < int(target_file_bytes)
             ]
-        has_dv = any(a.get("deletionVector") for a in cands)
-        if not cands or (len(cands) < 2 and not has_dv and not zorder_by):
+        dv_adds = [a for a in cands if a.get("deletionVector")]
+        if not cands or (len(cands) < 2 and not dv_adds and not zorder_by):
             continue
         paths = [os.path.join(t.path, a["path"]) for a in cands]
         # the files read under the log schema, by physical name: a
@@ -2294,120 +2322,49 @@ def delta_optimize(
         df = spark.read.schema(
             _log_schema(meta, logical_parts, physical=True)
         ).parquet(*paths)
-        if has_dv:
-            import pandas as pd
-
-            rows = []
-            for a in cands:
-                if not a.get("deletionVector"):
-                    continue
-                p = os.path.abspath(os.path.join(t.path, a["path"]))
-                rows.extend(
-                    (p, pos)
-                    for pos in t._load_dv(a["deletionVector"])
-                )
-            tagged = df.withColumn(
-                "__fp",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ),
-            ).withColumn("__pos", F.col("_metadata.row_index"))
-            if rows:
-                dv_df = F.broadcast(
-                    spark.createDataFrame(
-                        pd.DataFrame(
-                            rows, columns=["__del_fp", "__del_pos"]
-                        )
-                    )
-                )
-                tagged = tagged.join(
-                    dv_df,
-                    (tagged["__fp"] == dv_df["__del_fp"])
-                    & (tagged["__pos"] == dv_df["__del_pos"]),
-                    "left_anti",
-                )
-            df = tagged.drop("__fp", "__pos")
+        if dv_adds:
+            df = t._filter_positions(
+                _tag(df),
+                {t._abs(a): t._dv_positions(a) for a in dv_adds},
+                "left_anti",
+            )
+        df = df.select(
+            *[F.col(f["physical"]).alias(f["name"]) for f in data_fields]
+        )
         total = sum(int(a.get("size") or 0) for a in cands)
         n_out = max(1, math.ceil(total / int(target_file_bytes)))
-        if zphys:
-            if len(zphys) == 2:
+        if zorder_by:
+            if len(zorder_by) == 2:
                 from feature_store_spark.functions import zorder2_expr
 
-                zkey = zorder2_expr(F.col(zphys[0]), F.col(zphys[1]))
+                zkey = zorder2_expr(F.col(zorder_by[0]), F.col(zorder_by[1]))
             else:
-                zkey = F.struct(*[F.col(c) for c in zphys])
+                zkey = F.struct(*[F.col(c) for c in zorder_by])
             df = df.repartitionByRange(n_out, zkey).sortWithinPartitions(
                 zkey
             )
         else:
             df = df.coalesce(n_out)
-        if mode == "id":
-            # rewritten files must keep their parquet field ids — id-
-            # mode readers (per PROTOCOL.md) resolve columns BY id
-            id_of_phys = {
-                f["physical"]: f["id"]
-                for f in fields
-                if f["id"] is not None
-            }
-            df = df.select(
-                *[
-                    (
-                        F.col(c).alias(
-                            c,
-                            metadata={
-                                "parquet.field.id": int(id_of_phys[c])
-                            },
-                        )
-                        if c in id_of_phys
-                        else F.col(c)
-                    )
-                    for c in df.columns
-                ]
-            )
-
         new_adds.extend(
             _stage_adds(
                 df,
                 table_dir,
                 version,
-                part_phys,
-                data_cols,
+                logical_parts,
+                mapping,
                 # the coalesce / range clustering above IS the layout
                 rebalance=False,
                 partition_values=dict(zip(part_phys, pv)),
             )
         )
-        for a in cands:
-            removes.append(
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "dataChange": False,
-                        "deletionTimestamp": int(time.time() * 1000),
-                        "partitionValues": a.get("partitionValues")
-                        or {},
-                        "size": a.get("size"),
-                    }
-                }
-            )
+        removes.extend({"remove": a} for a in cands)
     if not removes:
         raise ValueError(
             f"{table_dir}: nothing to optimize (every file already "
             f">= {target_file_bytes} bytes, no deletion vectors)"
         )
-    import time as _time
-
-    actions = (
-        [
-            {
-                "commitInfo": {
-                    "timestamp": int(_time.time() * 1000),
-                    "operation": "OPTIMIZE",
-                }
-            }
-        ]
-        + removes
-        + new_adds
+    actions = _commit_actions(
+        "OPTIMIZE", removes + new_adds, data_change=False
     )
     _claim_or_raise(table_dir, version, actions, "OPTIMIZE")
     return version, len(removes), len(new_adds)
@@ -2464,8 +2421,6 @@ def delta_changes(
     need that rounding. A ``from_ms`` before the first commit
     refuses (no baseline state); mutually exclusive with the
     version arguments."""
-    from pyspark.sql import functions as F
-
     t = DeltaTable(spark, table_dir)
     if between_timestamps is not None:
         if from_version is not None or to_version is not None:
@@ -2527,20 +2482,10 @@ def delta_changes(
                 "is indistinguishable from a rewrite (visible) without "
                 "the commit's dataChange flags; change feed ambiguous"
             )
-        def dv_key(add):
-            d = add.get("deletionVector")
-            if not d:
-                return None
-            return (
-                d.get("pathOrInlineDv"),
-                d.get("offset"),
-                d.get("sizeInBytes"),
-            )
-
         dv_changed = {
             p: curm[p]
             for p in curm
-            if p in prevm and dv_key(curm[p]) != dv_key(prevm[p])
+            if p in prevm and _dv_key(curm[p]) != _dv_key(prevm[p])
         }
         # a descriptor CHANGE is only reconstructible as a delete
         # feed when the position set grew; a shrink (RESTORE-shaped
@@ -2549,7 +2494,7 @@ def delta_changes(
         # EMPTY feed — a guessed answer, violating the provably-
         # exact-or-raise contract (ADVICE r9 #4)
         for p in dv_changed:
-            if dv_positions(prevm[p]) - dv_positions(curm[p]):
+            if len(gone(curm[p], prevm[p])):
                 raise ValueError(
                     f"{table_dir}: compacted commit {v} shrank the "
                     f"deletion vector of {p} (a RESTORE-shaped "
@@ -2565,24 +2510,12 @@ def delta_changes(
             list(removed),
         )
 
-    # memoized DV decode (each descriptor is read once across the
-    # whole range, not once per version transition)
-    _dv_cache: dict[tuple, frozenset] = {}
-
-    def dv_positions(add: dict | None) -> frozenset:
-        if not add or not add.get("deletionVector"):
-            return frozenset()
-        d = add["deletionVector"]
-        key = (
-            d.get("pathOrInlineDv"),
-            d.get("offset"),
-            d.get("sizeInBytes"),
+    def gone(a: dict, b: dict):
+        """The ordinals ``a``'s deletion vector spares and ``b``'s
+        kills (each descriptor decodes once across the whole range)."""
+        return np.setdiff1d(
+            t._dv_positions(b), t._dv_positions(a), assume_unique=True
         )
-        if key not in _dv_cache:
-            _dv_cache[key] = frozenset(
-                int(p) for p in t._load_dv(d)
-            )
-        return _dv_cache[key]
 
     frames: list[DataFrame] = []
     meta_now, _, _ = t._state(to_version)
@@ -2591,51 +2524,21 @@ def delta_changes(
     _, base_adds, _ = t._state(from_version)
     state_by_path: dict[str, dict] = {a["path"]: a for a in base_adds}
 
-    def _abs(add: dict) -> str:
-        return os.path.abspath(os.path.join(t.path, add["path"]))
-
-    def rows_of(adds_v, version, change, select=None, drop=None):
+    def rows_of(adds_v, version, change, keep=None):
         """ONE frame for a whole batch of files of one (version,
         change type): the per-file loop would union N single-file
         scans; batching keeps it one multi-file scan per commit per
-        change type. ``select``/``drop`` are (abs_path, pos) sets —
-        broadcast semi/anti joins on the row ordinal."""
-        import pandas as pd
-
-        df = t._assemble(adds_v, meta_now)
-        if select:
-            pos_df = F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame(
-                        sorted(select),
-                        columns=["__sel_fp", "__sel_pos"],
-                    )
-                )
-            )
-            df = df.join(
-                pos_df,
-                (df["__fp"] == pos_df["__sel_fp"])
-                & (df["__pos"] == pos_df["__sel_pos"]),
-                "left_semi",
-            )
-        if drop:
-            del_df = F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame(
-                        sorted(drop),
-                        columns=["__del_fp", "__del_pos"],
-                    )
-                )
-            )
-            df = df.join(
-                del_df,
-                (df["__fp"] == del_df["__del_fp"])
-                & (df["__pos"] == del_df["__del_pos"]),
-                "left_anti",
-            )
-        return df.drop("__fp", "__pos").withColumn(
-            "_change_type", F.lit(change)
-        ).withColumn("_commit_version", F.lit(int(version)))
+        change type. The files' live rows, or with ``keep`` ({abs path:
+        ordinals}) exactly those rows."""
+        if keep is None:
+            df = t._assemble_live(adds_v, meta_now, tagged=False)
+        else:
+            df = t._filter_positions(
+                t._assemble(adds_v, meta_now), keep, "left_semi"
+            ).drop("__fp", "__pos")
+        return df.withColumn("_change_type", F.lit(change)).withColumn(
+            "_commit_version", F.lit(int(version))
+        )
 
     for v in range(from_version + 1, to_version + 1):
         prev_by_path = state_by_path
@@ -2671,57 +2574,40 @@ def delta_changes(
                                 action["remove"]["path"]
                             ] = action["remove"]
         inserts: list[dict] = []
-        ins_drop: set = set()
         dv_prev_adds: list[dict] = []
-        dv_select: set = set()
+        dv_select: dict = {}
         res_adds: list[dict] = []
-        res_select: set = set()
-        removed_adds: list[dict] = []
-        rem_drop: set = set()
+        res_select: dict = {}
         for path, add in commit_adds.items():
             prev = prev_by_path.get(path)
             if prev is None:
                 inserts.append(add)
-                ins_drop |= {(_abs(add), p) for p in dv_positions(add)}
-            else:
-                new_dead = dv_positions(add) - dv_positions(prev)
-                if new_dead:
-                    dv_prev_adds.append(prev)
-                    dv_select |= {(_abs(prev), p) for p in new_dead}
-                # a SHRUNK deletion vector (the RESTORE shape) means
-                # rows came back to life — the feed must carry them
-                # as inserts, not silently show an empty commit
-                # (pre-r11 this case dropped the resurrected rows;
-                # only the compacted-log path refused)
-                resurrected = dv_positions(prev) - dv_positions(add)
-                if resurrected:
-                    res_adds.append(add)
-                    res_select |= {
-                        (_abs(add), p) for p in resurrected
-                    }
-        for path in commit_removes:
-            if path in commit_adds:
-                continue  # same-commit re-add: handled as a DV delta
-            prev = prev_by_path.get(path)
-            if prev is not None:
-                removed_adds.append(prev)
-                rem_drop |= {
-                    (_abs(prev), p) for p in dv_positions(prev)
-                }
+                continue
+            new_dead = gone(prev, add)
+            if len(new_dead):
+                dv_prev_adds.append(prev)
+                dv_select[t._abs(prev)] = new_dead
+            # a SHRUNK deletion vector (the RESTORE shape) means rows
+            # came back to life — the feed must carry them as inserts,
+            # not silently show an empty commit
+            resurrected = gone(add, prev)
+            if len(resurrected):
+                res_adds.append(add)
+                res_select[t._abs(add)] = resurrected
+        removed_adds = [
+            prev_by_path[path]
+            for path in commit_removes
+            # a same-commit re-add is handled as a DV delta
+            if path not in commit_adds and path in prev_by_path
+        ]
         if inserts:
-            frames.append(rows_of(inserts, v, "insert", drop=ins_drop))
+            frames.append(rows_of(inserts, v, "insert"))
         if res_adds:
-            frames.append(
-                rows_of(res_adds, v, "insert", select=res_select)
-            )
+            frames.append(rows_of(res_adds, v, "insert", res_select))
         if dv_prev_adds:
-            frames.append(
-                rows_of(dv_prev_adds, v, "delete", select=dv_select)
-            )
+            frames.append(rows_of(dv_prev_adds, v, "delete", dv_select))
         if removed_adds:
-            frames.append(
-                rows_of(removed_adds, v, "delete", drop=rem_drop)
-            )
+            frames.append(rows_of(removed_adds, v, "delete"))
         # advance the rolling state with ALL of this commit's actions
         # (OPTIMIZE's dataChange:false shuffles included — they are
         # invisible to the FEED but very much part of the state).
@@ -3273,12 +3159,9 @@ def delta_delete_where(
             f"{table_dir}: DELETE WHERE matched no live rows — "
             "nothing committed (the table version is unchanged)"
         )
-    actions = [
-        {"commitInfo": {"timestamp": int(time.time() * 1000),
-                        "operation": "DELETE"}},
-        *kill_actions,
-    ]
-    _claim_or_raise(table_dir, version, actions, "DELETE")
+    _claim_or_raise(
+        table_dir, version, _commit_actions("DELETE", kill_actions), "DELETE"
+    )
     return version, n_new
 
 
@@ -3336,67 +3219,38 @@ def _merge_commit(
     MERGE does not commute: a rival commit may have added files
     carrying the merge's keys or re-DV'd the files it re-adds, so a
     lost race raises instead of retrying at the next version."""
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "MERGE",
-            }
-        }
-    ]
+    actions: list[dict] = []
     if evolved is not None:
         # replay order makes the widened schema current before any
         # reader sees the files that first carry the new columns
         actions.append(evolved)
         meta = evolved["metaData"]
-    mode, map_fields = t._mapping(meta)
-    kill_actions, n_killed = _dv_kill(t, table_dir, kills, mode)
+    mapping = t._mapping(meta)
+    kill_actions, n_killed = _dv_kill(t, table_dir, kills, mapping[0])
     actions.extend(kill_actions)
     n_staged = 0
     if to_stage is not None:
         # an empty frame stages nothing: the commit kernel drops
         # zero-row part files
-        phys_of = {f["name"]: f["physical"] for f in map_fields}
-        fid_of = {f["name"]: f["id"] for f in map_fields}
-        parts = meta.get("partitionColumns") or []
-        wdf = to_stage
-        if mode != "none":
-            wdf = to_stage.select(
-                *[
-                    F.col(c).alias(
-                        phys_of[c],
-                        metadata={"parquet.field.id": int(fid_of[c])},
-                    )
-                    for c in to_stage.columns
-                ]
-            )
         staged = _stage_adds(
-            wdf,
+            to_stage,
             table_dir,
             version,
-            [phys_of.get(c, c) for c in parts],
-            [phys_of.get(c, c) for c in to_stage.columns if c not in parts],
+            meta.get("partitionColumns") or [],
+            mapping,
             post_write_validate=post_validate,
         )
         n_staged = sum(
             json.loads(a["add"]["stats"])["numRecords"] for a in staged
         )
         actions.extend(staged)
-    if len(actions) == 1 and txn is None:
+    if not actions and txn is None:
         # nothing fired, nothing lands, no watermark to record: a pure
         # commitInfo MERGE every quiet micro-batch would churn the log
         return t.latest_version(), 0, 0
-    if txn is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn[0],
-                    "version": int(txn[1]),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-    _claim_or_raise(table_dir, version, actions, "MERGE")
+    _claim_or_raise(
+        table_dir, version, _commit_actions("MERGE", actions, txn=txn), "MERGE"
+    )
     return version, n_killed, n_staged
 
 
@@ -3530,8 +3384,9 @@ def _dv_kill(
     union of the ``kills`` frames of (``__fp``, ``__pos``) in one job,
     merge each touched file's positions with its old DV, and mint ONE
     deletion-vector file for the files that gain a kill. Returns the
-    protocol-upgrade + remove/re-add actions (none when no live row
-    dies) and the number of rows newly killed.
+    protocol-upgrade + remove/re-add body for :func:`_commit_actions`
+    (none when no live row dies) and the number of rows newly
+    killed.
 
     The collect is bounded by the verb's own matched rows (the sliver),
     not the table; a kill set big enough to strain the driver is a job
@@ -3550,14 +3405,10 @@ def _dv_kill(
     affected: list[tuple[dict, list[int], int]] = []
     n_killed = 0
     for add in t.data_files() if by_file else []:
-        new = by_file.get(os.path.abspath(os.path.join(t.path, add["path"])))
+        new = by_file.get(t._abs(add))
         if not new:
             continue
-        old = (
-            set(t._load_dv(add["deletionVector"]))
-            if add.get("deletionVector")
-            else set()
-        )
+        old = set(t._dv_positions(add).tolist())
         merged = sorted(old | new)
         if len(merged) > len(old):
             n_killed += len(merged) - len(old)
@@ -3592,17 +3443,7 @@ def _dv_kill(
         }
     )
     for (add, _m, card), (off, sz, _c) in zip(affected, descs):
-        actions.append(
-            {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "partitionValues": add.get("partitionValues") or {},
-                    "size": add.get("size"),
-                }
-            }
-        )
+        actions.append({"remove": add})
         new_add = dict(add)
         new_add["dataChange"] = True
         new_add["deletionVector"] = {
@@ -3724,8 +3565,6 @@ def delta_restore(
     resurrects a missing file corrupts every later scan.
 
     Returns ``(commit_version, files_removed, files_restored)``."""
-    import time as _time
-
     t = DeltaTable(spark, table_dir)
     cur_v = t.latest_version()
     if version == cur_v:
@@ -3742,12 +3581,6 @@ def delta_restore(
     _writer_feature_gate(
         t, meta_c, "delta_restore", mutates=True, adds_rows=False
     )
-
-    def dv_key(a: dict):
-        dv = a.get("deletionVector")
-        if not dv:
-            return None
-        return (dv.get("pathOrInlineDv"), dv.get("offset"))
 
     cur_by_path = {a["path"]: a for a in adds_c}
     tgt_by_path = {a["path"]: a for a in adds_t}
@@ -3784,64 +3617,37 @@ def delta_restore(
         a
         for p, a in tgt_by_path.items()
         if p not in cur_by_path
-        or dv_key(cur_by_path[p]) != dv_key(a)
+        or _dv_key(cur_by_path[p]) != _dv_key(a)
     ]
     if not removes and not readds and meta_t == meta_c:
         raise ValueError(
             f"{table_dir}: table state at {cur_v} already equals "
             f"version {version} — nothing to restore"
         )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(_time.time() * 1000),
-                "operation": "RESTORE",
-                "operationParameters": {"version": str(int(version))},
-            }
-        }
-    ]
+    actions: list[dict] = []
     if meta_t != meta_c:
         # RESTORE also restores the table definition (schema,
         # partitioning, configuration) — protocol is NOT downgraded
         # (the spec forbids it; old readers of the restored schema
         # still need the current feature set to read the log)
         actions.append({"metaData": meta_t})
-    for p in removes:
-        a = cur_by_path[p]
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "dataChange": True,
-                    "deletionTimestamp": int(_time.time() * 1000),
-                    "partitionValues": a.get("partitionValues") or {},
-                    "size": a.get("size"),
-                }
-            }
-        )
+    actions += [{"remove": cur_by_path[p]} for p in removes]
     for a in readds:
         if a["path"] in cur_by_path:
             # DV state changed: remove+add pair, the same convention
             # delta_delete_where commits (replay alone would accept a
             # bare re-add, but external readers expect the pair)
-            cur = cur_by_path[a["path"]]
-            actions.append(
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "dataChange": True,
-                        "deletionTimestamp": int(_time.time() * 1000),
-                        "partitionValues": cur.get("partitionValues")
-                        or {},
-                        "size": cur.get("size"),
-                    }
-                }
-            )
-        new_add = dict(a)
-        new_add["dataChange"] = True
-        actions.append({"add": new_add})
+            actions.append({"remove": cur_by_path[a["path"]]})
+        actions.append({"add": {**a, "dataChange": True}})
     next_v = cur_v + 1
-    _claim_or_raise(table_dir, next_v, actions, "RESTORE")
+    _claim_or_raise(
+        table_dir,
+        next_v,
+        _commit_actions(
+            "RESTORE", actions, {"version": str(int(version))}
+        ),
+        "RESTORE",
+    )
     return next_v, len(removes), len(readds)
 
 

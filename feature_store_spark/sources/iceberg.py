@@ -73,9 +73,11 @@ import json
 import os
 import re
 import struct
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from feature_store_spark.session import local_rows_df
 from feature_store_spark.sources.avro_io import read_avro
@@ -121,8 +123,6 @@ def _path_suffix(p: str) -> str:
 def _fp_expr(col):
     """Spark-side twin of :func:`_path_suffix` over a path column
     (``_metadata.file_path`` carries a ``file:`` scheme)."""
-    from pyspark.sql import functions as F
-
     sfx = F.regexp_extract(col, "(data/.*)$", 1)
     return F.when(sfx != "", sfx).otherwise(
         F.regexp_replace(col, "^file:(//)?", "")
@@ -847,8 +847,6 @@ class IcebergTable:
         delete is global. Delete sides get broadcast hints when
         their recorded row counts are small (the common case; a table
         whose delete set rivals its data is overdue for compaction)."""
-        from pyspark.sql import functions as F
-
         spark = self.spark
         pos = [d for d in deletes if d["delete_kind"] == "pos"]
         eqs = [d for d in deletes if d["delete_kind"] == "eq"]
@@ -932,35 +930,15 @@ class IcebergTable:
                         "needs a full Iceberg runtime"
                     )
                 cols = [names_by_id[i] for i in ids]
-                parts = []
-                for d in dfiles:
-                    src = _footer_columns(
-                        [by_name[c] for c in cols],
-                        self._file_field_mapping(d["path"]),
+                parts = [
+                    self._eq_delete_keys(
+                        [d["path"]], [by_name[c] for c in cols]
                     )
-                    if None in src.values():
-                        raise NotImplementedError(
-                            f"{self.path}: equality-delete file "
-                            f"{d['path']} has no column for field "
-                            f"ids {ids}"
-                        )
-                    parts.append(
-                        self._read_parquet(
-                            [d["path"]],
-                            [(src[i], by_name[c]["type"])
-                             for i, c in zip(ids, cols)],
-                        )
-                        .select(
-                            *[F.col(src[i]).alias(f"__d_{c}")
-                              for i, c in zip(ids, cols)]
-                        )
-                        .withColumn(
-                            "__dseq", F.lit(int(d["sequence_number"]))
-                        )
-                    )
-                dels = parts[0]
-                for x in parts[1:]:
-                    dels = dels.unionByName(x)
+                    .toDF(*[f"__d_{c}" for c in cols])
+                    .withColumn("__dseq", F.lit(int(d["sequence_number"])))
+                    for d in dfiles
+                ]
+                dels = reduce(DataFrame.unionByName, parts)
                 n_del_rows = sum(
                     d["record_count"]
                     for d in dfiles
@@ -981,6 +959,23 @@ class IcebergTable:
             tagged = tagged.drop("__dataseq", "__part")
         return tagged
 
+    def _eq_delete_keys(
+        self, paths: list[str], fields: list[dict]
+    ) -> DataFrame:
+        """The key columns of equality-delete files that share one
+        footer layout, for current-schema ``fields``: each resolved by
+        field id (the spec reads delete files by id) and named as the
+        field is named now."""
+        src = _footer_columns(fields, self._file_field_mapping(paths[0]))
+        if None in src.values():
+            raise NotImplementedError(
+                f"{self.path}: equality-delete file {paths[0]} has no "
+                f"column for field ids {sorted(src)}"
+            )
+        return self._read_parquet(
+            paths, [(src[f["id"]], f["type"]) for f in fields]
+        ).select(*[F.col(src[f["id"]]).alias(f["name"]) for f in fields])
+
     def _file_field_mapping(self, path: str) -> tuple:
         """((parquet_column_name, field_id or None), ...) from one data
         file's footer — the spec's column-resolution key. Cached per
@@ -996,8 +991,6 @@ class IcebergTable:
         """Typed Column literal for an identity partition value (the
         spec's single-value representations: date = days since epoch,
         timestamps = micros)."""
-        from pyspark.sql import functions as F
-
         if value is None:
             return F.lit(None).cast(_spark_type(type_str) or "string")
         if type_str == "date":
@@ -1026,8 +1019,6 @@ class IcebergTable:
         that literal also group by partition tuple, so files that
         embed their partition columns — everything the in-repo
         writers emit — collapse into one group per footer signature."""
-        from pyspark.sql import functions as F
-
         current = [
             f for f in self.schema_fields() if isinstance(f["type"], str)
         ]
@@ -1517,8 +1508,6 @@ class IcebergTable:
         delete files, ≤ |data files| rows, metadata scale. Delete
         files are immutable once committed, so the answer is cached
         per delete-path set and repeated reads skip the job."""
-        from pyspark.sql import functions as F
-
         key = tuple(sorted(d["path"] for d in pos_deletes))
         if key not in self._pos_probe_cache:
             self._pos_probe_cache[key] = {
@@ -1564,8 +1553,6 @@ class IcebergTable:
         history that renamed or reused a name, and a file that omits
         an identity partition source or looks renamed."""
         from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.sql import functions as F
 
         if not files:
             return self._empty_frame()
@@ -1713,8 +1700,6 @@ class IcebergTable:
         date columns in days from epoch (Iceberg's units, which the
         pruning layer compares in too); date literals may also be
         dates or ISO strings."""
-        from pyspark.sql import functions as F
-
         types = {f["name"]: f["type"] for f in self.schema_fields()}
         for f in self._canon_filters(filters):
             fil = _Filter(*f)
@@ -1829,8 +1814,6 @@ class IcebergTable:
         Every frame is read by :meth:`_rows`, the reader ``scan``
         uses, so each format, column resolution and refusal of a scan
         holds for the feed too."""
-        from pyspark.sql import functions as F
-
         if between_timestamps is not None:
             if from_snapshot_id is not None or to_snapshot_id is not None:
                 raise ValueError(
@@ -1979,11 +1962,23 @@ class IcebergTable:
                         f"{self.path}: equality-delete file without "
                         f"resolvable equality_ids {sorted(ids)}"
                     )
-                keys = sorted((prims[i]["name"], prims[i]["type"])
-                              for i in ids)
-                cols = [c for c, _ in keys]
+                key_fields = sorted(
+                    (prims[i] for i in ids), key=lambda f: f["name"]
+                )
+                cols = [f["name"] for f in key_fields]
+                by_layout: dict[tuple, list[str]] = {}
+                for d in eq_new:
+                    by_layout.setdefault(
+                        self._file_field_mapping(d["path"]), []
+                    ).append(d["path"])
                 b = (
-                    self._read_parquet([d["path"] for d in eq_new], keys)
+                    reduce(
+                        DataFrame.unionByName,
+                        [
+                            self._eq_delete_keys(ps, key_fields)
+                            for ps in by_layout.values()
+                        ],
+                    )
                     .agg(
                         *[F.min(c).alias(f"lo_{c}") for c in cols],
                         *[F.max(c).alias(f"hi_{c}") for c in cols],

@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import struct
 import uuid
 from functools import reduce
@@ -1196,11 +1197,8 @@ def iceberg_append(
         # scale instead of a local constant. (Unpartitioned writes
         # get the kernel's AQE-sized rebalance instead.)
         wdf = wdf.repartition(_staging_parallelism(spark), *shadows)
-    # the equality-delete file (upsert/merge commits) is a SECOND,
-    # independent Spark write; submit it concurrently with the data
-    # staging write (guide §2.6 — the two jobs' task tails back-fill
-    # each other) instead of paying two sequential job walls per
-    # commit
+    # the equality-delete file (upsert/merge commits) is a second
+    # Spark write, run after the data staging write
     del_dir = None
     del_keys = None
     if upsert_keys:
@@ -1227,37 +1225,20 @@ def iceberg_append(
             ]
         )
 
-    def stage_data():
-        return commit.stage(
-            wdf, staging, partition_cols=shadows, fmt=fmt,
-            rebalance=not sort_by,
-        )
-
-    if del_keys is None:
-        staged = stage_data()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_data = pool.submit(stage_data)
-            f_del = pool.submit(
-                commit.stage, del_keys.distinct(), del_dir,
-                rebalance=False,
+    staged = commit.stage(
+        wdf, staging, partition_cols=shadows, fmt=fmt,
+        rebalance=not sort_by,
+    )
+    if del_keys is not None:
+        try:
+            del_staged = commit.stage(
+                del_keys.distinct(), del_dir, rebalance=False
             )
-            try:
-                # surface BOTH results (a failed delete write must
-                # not be masked by a successful data write)
-                staged = f_data.result()
-                del_staged = f_del.result()
-            except BaseException:
-                # wait out the other write, then leave nothing behind
-                f_data.exception()
-                f_del.exception()
-                import shutil as _sh
-
-                _sh.rmtree(staging, ignore_errors=True)
-                _sh.rmtree(del_dir, ignore_errors=True)
-                raise
+        except BaseException:
+            # leave nothing behind: the data write already landed
+            shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(del_dir, ignore_errors=True)
+            raise
 
     field_by_name = {f["name"]: f for f in schema_fields}
     entries = []
@@ -1323,11 +1304,9 @@ def iceberg_append(
         # CURRENT snapshot instead of raising. A replace_paths commit
         # with no entries is NOT empty: it shrinks the view (the
         # targeted files' live rows were all deleted).
-        import shutil as _sh
-
-        _sh.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
         if del_dir is not None:
-            _sh.rmtree(del_dir, ignore_errors=True)
+            shutil.rmtree(del_dir, ignore_errors=True)
         if allow_empty:
             return int(
                 (prev_meta or {}).get("current-snapshot-id") or 0
@@ -1588,6 +1567,33 @@ def _load_prev(meta_dir: str):
     return meta, prev_manifests, v + 1
 
 
+def _load_table(table_dir: str):
+    """``(meta_dir, metadata, current manifests, next version)`` of an
+    existing table; a directory without one refuses."""
+    meta_dir = os.path.join(table_dir, "metadata")
+    prev_meta, manifests, next_v = _load_prev(meta_dir)
+    if prev_meta is None:
+        raise ValueError(f"{table_dir}: not an iceberg table")
+    return meta_dir, prev_meta, manifests, next_v
+
+
+def _commit_metadata(
+    meta_dir: str, version: int, prev_meta: dict, changes: dict
+) -> int:
+    """Publish metadata ``version``: ``prev_meta`` with the top-level
+    ``changes`` and a fresh ``last-updated-ms``, which the spec asks
+    every metadata file to update. The one publish of the
+    metadata-only verbs (rollback, refs, partition evolution, snapshot
+    expiry) and of ``iceberg_delete_where``'s snapshot; a lost race
+    raises ConcurrentWriteError. Returns ``version``."""
+    _publish_metadata(
+        meta_dir,
+        version,
+        {**prev_meta, **changes, "last-updated-ms": _clock_ms(version)},
+    )
+    return version
+
+
 def iceberg_append_sink(
     table_dir: str,
     app_id: str,
@@ -1734,10 +1740,7 @@ def iceberg_expire_snapshots(
     (paths; with ``dry_run`` nothing is removed)."""
     from feature_store_spark.sources.avro_io import read_avro
 
-    meta_dir = os.path.join(table_dir, "metadata")
-    prev_meta, _prev_manifests, snap_id = _load_prev(meta_dir)
-    if prev_meta is None:
-        raise ValueError(f"{table_dir}: not an iceberg table")
+    meta_dir, prev_meta, _prev_manifests, snap_id = _load_table(table_dir)
     snaps = prev_meta.get("snapshots", [])
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
@@ -1782,8 +1785,7 @@ def iceberg_expire_snapshots(
         (exp_ml - keep_ml) | (exp_m - keep_m) | (exp_f - keep_f)
     )
     if not dry_run:
-        new_meta = dict(prev_meta)
-        new_meta["snapshots"] = keep
+        changes: dict = {"snapshots": keep}
         # the expiring snapshots may carry the ONLY record of a
         # streaming sink's (app-id, batch-id) high-water marks:
         # persist them into the table properties so exactly-once
@@ -1800,7 +1802,7 @@ def iceberg_expire_snapshots(
                 continue
             marks[app] = max(marks.get(app, -1), b)
         if marks:
-            props = dict(new_meta.get("properties") or {})
+            props = dict(prev_meta.get("properties") or {})
             for app, b in marks.items():
                 key = f"fss.txn.{app}"
                 try:
@@ -1808,8 +1810,8 @@ def iceberg_expire_snapshots(
                 except (TypeError, ValueError):
                     prev_b = -1
                 props[key] = str(max(prev_b, b))
-            new_meta["properties"] = props
-        _publish_metadata(meta_dir, snap_id, new_meta)
+            changes["properties"] = props
+        _commit_metadata(meta_dir, snap_id, prev_meta, changes)
         for p in doomed:
             if os.path.exists(p):
                 os.remove(p)
@@ -1994,10 +1996,7 @@ def iceberg_rollback(
     metadata JSON. The ``main`` ref follows the current pointer
     (refs and the pointer must agree, or ref-based and plain reads
     would diverge). Returns the new metadata version number."""
-    meta_dir = os.path.join(table_dir, "metadata")
-    prev_meta, _prev_manifests, next_v = _load_prev(meta_dir)
-    if prev_meta is None:
-        raise ValueError(f"{table_dir}: no table to roll back")
+    meta_dir, prev_meta, _prev_manifests, next_v = _load_table(table_dir)
     known = {s["snapshot-id"] for s in prev_meta.get("snapshots", [])}
     if snapshot_id not in known:
         raise ValueError(
@@ -2008,15 +2007,13 @@ def iceberg_rollback(
         raise ValueError(
             f"{table_dir}: already at snapshot {snapshot_id}"
         )
-    meta = dict(prev_meta)
-    meta["current-snapshot-id"] = snapshot_id
-    refs = dict(meta.get("refs") or {})
+    changes: dict = {"current-snapshot-id": snapshot_id}
+    refs = prev_meta.get("refs") or {}
     if "main" in refs:
-        refs["main"] = {**refs["main"], "snapshot-id": snapshot_id}
-        meta["refs"] = refs
-    meta["last-updated-ms"] = _clock_ms(next_v)
-    _publish_metadata(meta_dir, next_v, meta)
-    return next_v
+        changes["refs"] = {
+            **refs, "main": {**refs["main"], "snapshot-id": snapshot_id}
+        }
+    return _commit_metadata(meta_dir, next_v, prev_meta, changes)
 
 
 def iceberg_delete_where(
@@ -2040,8 +2037,6 @@ def iceberg_delete_where(
     authors the delete manifest from the written files' footers and
     flips the version pointer. Matching against already-deleted rows
     re-marks them — harmless (idempotent)."""
-    from pyspark.sql import functions as F
-
     from feature_store_spark.sources.iceberg import IcebergTable, _path_suffix
 
     t = IcebergTable(spark, table_dir)
@@ -2085,10 +2080,7 @@ def iceberg_delete_where(
         .select(F.col("__recorded").alias("file_path"), "pos")
     )
 
-    meta_dir = os.path.join(table_dir, "metadata")
-    prev_meta, prev_manifests, snap_id = _load_prev(meta_dir)
-    if prev_meta is None:
-        raise ValueError(f"{table_dir}: not an iceberg table")
+    meta_dir, prev_meta, prev_manifests, snap_id = _load_table(table_dir)
     del_dir = os.path.join(
         table_dir, "data", f"deletes-{snap_id}-{uuid.uuid4().hex[:8]}"
     )
@@ -2106,9 +2098,7 @@ def iceberg_delete_where(
     null_partition = {pf["name"]: None for pf in spec_fields}
     entries = [_added_entry(snap_id, 1, f, null_partition) for f in staged]
     if not entries:
-        import shutil as _sh
-
-        _sh.rmtree(del_dir, ignore_errors=True)
+        shutil.rmtree(del_dir, ignore_errors=True)
         raise ValueError(
             f"{table_dir}: DELETE WHERE matched no rows — nothing "
             "committed (the table version is unchanged)"
@@ -2130,13 +2120,16 @@ def iceberg_delete_where(
         # after evolution is not necessarily schema-id 0
         int(prev_meta.get("current-schema-id", 0)),
     )
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = snap_id
-    meta["last-updated-ms"] = _clock_ms(snap_id)
-    meta["current-snapshot-id"] = snap_id
-    meta["snapshots"] = prev_meta.get("snapshots", []) + [snapshot]
-    _publish_metadata(meta_dir, snap_id, meta)
-    return snap_id
+    return _commit_metadata(
+        meta_dir,
+        snap_id,
+        prev_meta,
+        {
+            "last-sequence-number": snap_id,
+            "current-snapshot-id": snap_id,
+            "snapshots": prev_meta.get("snapshots", []) + [snapshot],
+        },
+    )
 
 
 def iceberg_evolve_partition(
@@ -2169,10 +2162,7 @@ def iceberg_evolve_partition(
     table (IcebergOfflineStore.java:78-114); layout evolution is the
     standard Iceberg answer to "our daily partitions got too big"
     at growing scale."""
-    meta_dir = os.path.join(table_dir, "metadata")
-    prev_meta, _m, next_v = _load_prev(meta_dir)
-    if prev_meta is None:
-        raise ValueError(f"{table_dir}: not an iceberg table")
+    meta_dir, prev_meta, _m, next_v = _load_table(table_dir)
     from feature_store_spark.sources.iceberg import (
         current_schema_fields,
     )
@@ -2222,13 +2212,16 @@ def iceberg_evolve_partition(
         )
     new_sid = max(int(s["spec-id"]) for s in specs) + 1
     specs.append({"spec-id": new_sid, "fields": new_fields})
-    meta = dict(prev_meta)
-    meta["partition-specs"] = specs
-    meta["default-spec-id"] = new_sid
-    meta["last-partition-id"] = last_pid
-    meta["last-updated-ms"] = _clock_ms(next_v)
-    _publish_metadata(meta_dir, next_v, meta)
-    return next_v
+    return _commit_metadata(
+        meta_dir,
+        next_v,
+        prev_meta,
+        {
+            "partition-specs": specs,
+            "default-spec-id": new_sid,
+            "last-partition-id": last_pid,
+        },
+    )
 
 
 def iceberg_set_ref(
@@ -2251,10 +2244,7 @@ def iceberg_set_ref(
     retention rule). Returns the new metadata version."""
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"ref_type must be tag|branch, got {ref_type!r}")
-    meta_dir = os.path.join(table_dir, "metadata")
-    prev_meta, _m, next_v = _load_prev(meta_dir)
-    if prev_meta is None:
-        raise ValueError(f"{table_dir}: not an iceberg table")
+    meta_dir, prev_meta, _m, next_v = _load_table(table_dir)
     sid = (
         int(snapshot_id)
         if snapshot_id is not None
@@ -2266,31 +2256,22 @@ def iceberg_set_ref(
             f"{table_dir}: snapshot {sid} does not exist (have "
             f"{sorted(known)})"
         )
-    meta = dict(prev_meta)
-    refs = dict(meta.get("refs") or {})
-    refs[name] = {"snapshot-id": sid, "type": ref_type}
-    meta["refs"] = refs
-    meta["last-updated-ms"] = _clock_ms(next_v)
-    _publish_metadata(meta_dir, next_v, meta)
-    return next_v
+    refs = {
+        **(prev_meta.get("refs") or {}),
+        name: {"snapshot-id": sid, "type": ref_type},
+    }
+    return _commit_metadata(meta_dir, next_v, prev_meta, {"refs": refs})
 
 
 def iceberg_drop_ref(table_dir: str, name: str) -> int:
     """Remove a named ref (metadata-only CAS commit). Dropping a tag
     releases its snapshot back to normal expiry rules."""
-    meta_dir = os.path.join(table_dir, "metadata")
-    prev_meta, _m, next_v = _load_prev(meta_dir)
-    if prev_meta is None:
-        raise ValueError(f"{table_dir}: not an iceberg table")
+    meta_dir, prev_meta, _m, next_v = _load_table(table_dir)
     refs = dict(prev_meta.get("refs") or {})
     if name not in refs:
         raise ValueError(f"{table_dir}: no ref named {name!r}")
     del refs[name]
-    meta = dict(prev_meta)
-    meta["refs"] = refs
-    meta["last-updated-ms"] = _clock_ms(next_v)
-    _publish_metadata(meta_dir, next_v, meta)
-    return next_v
+    return _commit_metadata(meta_dir, next_v, prev_meta, {"refs": refs})
 
 
 _DELTA_TO_ICEBERG_TYPE = {
@@ -2445,16 +2426,11 @@ def iceberg_metadata_for_delta(spark, delta_dir: str) -> int:
     # identity partition spec from Delta's partitionColumns; values
     # are typed from the add actions' partitionValues strings
     part_cols = meta.get("partitionColumns") or []
-    _AVRO_OF = {
-        "string": "string", "int": "int", "long": "long",
-        "double": "double", "float": "float", "boolean": "boolean",
-        "date": "int",
-    }
     spec_fields = []
     part_avro_fields = []
     for i, c in enumerate(part_cols):
         f = field_by_name.get(c)
-        if f is None or f["type"] not in _AVRO_OF:
+        if f is None or f["type"] not in _AVRO_OF_TYPE:
             raise NotImplementedError(
                 f"{delta_dir}: uniform export cannot express "
                 f"partition column {c!r} of type "
@@ -2470,7 +2446,7 @@ def iceberg_metadata_for_delta(spark, delta_dir: str) -> int:
                 "field-id": 1000 + i,
             }
         )
-        part_avro_fields.append({"name": c, "avro": _AVRO_OF[f["type"]]})
+        part_avro_fields.append({"name": c, "avro": _AVRO_OF_TYPE[f["type"]]})
 
     def _typed_part(col: str, s):
         if s is None:

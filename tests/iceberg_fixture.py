@@ -351,11 +351,13 @@ class IcebergFixture:
         self,
         entity_ids: list[str],
         partition: tuple[str, int] | None = None,
+        entity_types: list[str] | None = None,
     ) -> None:
         """Equality-delete snapshot on entity_id (field id 2): rows in
         DATA FILES WITH LOWER SEQUENCE NUMBERS whose entity_id matches
         are deleted; later appends are untouched (the spec's
-        sequencing rule).
+        sequencing rule). ``entity_types`` keys the delete on
+        (entity_type, entity_id) (field ids 1 and 2) instead.
 
         ``partition=None`` writes the delete under the UNPARTITIONED
         spec — a GLOBAL delete (the spec's scope rule). Passing
@@ -366,16 +368,22 @@ class IcebergFixture:
         dpath = os.path.join(
             self.data_dir, f"eq-deletes-{self.snap_id}.parquet"
         )
-        # the key column under its current name, with its field id
-        name = next(f["name"] for f in self.fields if f["id"] == 2)
+        # the key columns under their current names, with field ids
+        keys = {2: entity_ids}
+        if entity_types is not None:
+            keys = {1: entity_types, **keys}
+        names = {f["id"]: f["name"] for f in self.fields}
         pq.write_table(
-            pa.table({name: entity_ids}, schema=pa.schema([pa.field(
-                name, pa.string(), metadata={b"PARQUET:field_id": b"2"}
-            )])),
+            pa.table([pa.array(v, pa.string()) for v in keys.values()],
+                     schema=pa.schema([
+                         pa.field(names[i], pa.string(), metadata={
+                             b"PARQUET:field_id": str(i).encode()})
+                         for i in keys
+                     ])),
             dpath,
         )
         self._delete_manifest(dpath, partition, len(entity_ids),
-                              content=2, equality_ids=[2])
+                              content=2, equality_ids=list(keys))
         self._commit("overwrite")
 
     def _delete_manifest(self, dpath, partition, n_rows, content,

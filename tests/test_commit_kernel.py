@@ -483,3 +483,142 @@ def test_failed_delete_file_write_leaves_nothing(
     assert sorted(map(tuple, t.scan().collect())) == rows_before
     assert t.snapshots_df().collect() == history_before
     assert set(os.listdir(data_dir)) == dirs_before
+
+
+# A batch no set-up committed: a keyed write of it lands and records it.
+NEW_TXN = ("app", 7)
+
+
+def _delta_commit_call(verb):
+    """(set-up, call) for one Delta write verb; the call returns the
+    version it committed."""
+    from feature_store_spark.sources import delta as d
+
+    setup, _ = _delta("delta_append")
+
+    def restore_setup(spark, path):
+        setup(spark, path)
+        d.delta_delete_where(spark, path, [("entity_id", "<", 50)])
+        d.delta_append(_frame(spark, 2 * N_ROWS, 3 * N_ROWS), path)
+
+    calls = {
+        "delta_append": (setup, lambda s, p: d.delta_append(
+            _frame(s, 2 * N_ROWS, 3 * N_ROWS), p, txn=NEW_TXN
+        )),
+        "delta_append_create": (lambda s, p: None, lambda s, p: (
+            d.delta_append(_frame(s), p, column_mapping="id", txn=NEW_TXN)
+        )),
+        "delta_overwrite": (setup, lambda s, p: d.delta_overwrite(
+            _batch(s), p, 1, txn=NEW_TXN
+        )),
+        "delta_overwrite_create": (lambda s, p: None, lambda s, p: (
+            d.delta_overwrite(_frame(s), p, -1)
+        )),
+        "delta_upsert": (setup, lambda s, p: d.delta_upsert(
+            _batch(s), p, keys=["entity_id"], txn=NEW_TXN
+        )[0]),
+        "delta_merge": (setup, lambda s, p: d.delta_merge(
+            _batch(s), p, keys=["entity_id"], when_matched=MERGE_ARMS,
+            txn=NEW_TXN,
+        )[0]),
+        "delta_merge_sync": (setup, lambda s, p: d.delta_merge(
+            _sync_batch(s), p, keys=["entity_id"], **SYNC,
+        )[0]),
+        "delta_delete_where": (setup, lambda s, p: d.delta_delete_where(
+            s, p, [("entity_id", "<", 50)]
+        )[0]),
+        "delta_optimize": (restore_setup, lambda s, p: (
+            d.delta_optimize(s, p)[0]
+        )),
+        "delta_restore": (restore_setup, lambda s, p: (
+            d.delta_restore(s, p, 1)[0]
+        )),
+    }
+    return calls[verb]
+
+
+# What each Delta write verb commits: the log's action kinds in order
+# (a run of one kind written once), commitInfo's operation and
+# operationParameters (None when absent).
+EXPECTED_COMMITS = {
+    "delta_append": (["commitInfo", "add", "txn"], "WRITE", None),
+    "delta_append_create": (
+        ["commitInfo", "protocol", "metaData", "add", "txn"], "WRITE", None
+    ),
+    "delta_overwrite": (
+        ["commitInfo", "remove", "add", "txn"], "WRITE",
+        {"mode": "Overwrite"},
+    ),
+    "delta_overwrite_create": (
+        ["commitInfo", "protocol", "metaData", "add"], "WRITE",
+        {"mode": "Overwrite"},
+    ),
+    "delta_upsert": (
+        ["commitInfo", "protocol", "remove", "add", "remove", "add",
+         "txn"],
+        "MERGE", None,
+    ),
+    "delta_merge": (
+        ["commitInfo", "protocol", "remove", "add", "remove", "add",
+         "txn"],
+        "MERGE", None,
+    ),
+    "delta_merge_sync": (
+        ["commitInfo", "metaData", "protocol", "remove", "add", "remove",
+         "add"],
+        "MERGE", None,
+    ),
+    "delta_delete_where": (
+        ["commitInfo", "protocol", "remove", "add"], "DELETE", None
+    ),
+    "delta_optimize": (["commitInfo", "remove", "add"], "OPTIMIZE", None),
+    "delta_restore": (
+        ["commitInfo", "remove", "add"], "RESTORE", {"version": "1"}
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", list(EXPECTED_COMMITS))
+def test_delta_commit_records_pinned(spark, tmp_path, verb):
+    """Each Delta write verb's commit JSON: ordered action kinds,
+    commitInfo first with its operation and parameters, a passed txn
+    last, and every remove carrying a deletion timestamp."""
+    import json
+
+    setup, call = _delta_commit_call(verb)
+    path = str(tmp_path / "t")
+    setup(spark, path)
+    v = call(spark, path)
+    with open(os.path.join(path, "_delta_log", f"{v:020d}.json")) as f:
+        actions = [json.loads(line) for line in f if line.strip()]
+    kinds = [next(iter(a)) for a in actions]
+    runs = [k for i, k in enumerate(kinds) if i == 0 or kinds[i - 1] != k]
+    want_kinds, want_op, want_params = EXPECTED_COMMITS[verb]
+    assert runs == want_kinds
+    info = actions[0]["commitInfo"]
+    assert info["operation"] == want_op
+    assert info.get("operationParameters") == want_params
+    if kinds[-1] == "txn":
+        assert actions[-1]["txn"] == {
+            "appId": NEW_TXN[0], "version": NEW_TXN[1], "lastUpdated": 0
+        }
+    for a in actions:
+        if "remove" in a:
+            assert a["remove"]["deletionTimestamp"] > 0
+
+
+@pytest.mark.parametrize("verb", ["delta_overwrite", "delta_restore"])
+def test_delta_removes_share_commit_timestamp(spark, tmp_path, verb):
+    """One clock reading per commit: every remove's deletionTimestamp
+    is the commitInfo timestamp."""
+    import json
+
+    setup, call = _delta_commit_call(verb)
+    path = str(tmp_path / "t")
+    setup(spark, path)
+    v = call(spark, path)
+    with open(os.path.join(path, "_delta_log", f"{v:020d}.json")) as f:
+        actions = [json.loads(line) for line in f if line.strip()]
+    stamps = {a["remove"]["deletionTimestamp"] for a in actions
+              if "remove" in a}
+    assert stamps == {actions[0]["commitInfo"]["timestamp"]}

@@ -763,6 +763,42 @@ class TestFieldIdResolution:
         ] == ["u2"]
 
 
+    def test_changes_reads_eq_delete_bounds_by_field_id(
+        self, spark, tmp_path
+    ):
+        """An equality delete keyed on (entity_type, entity_id) whose
+        key names were swapped after it was written: changes() reads
+        the delete's key bounds by field id, as scan() applies the
+        delete, so the feed carries the deleted row and the bounds
+        stay stats-prunable."""
+        import warnings
+
+        from iceberg_fixture import SCHEMA_FIELDS, IcebergFixture
+
+        d = str(tmp_path / "swap_eq")
+        fx = IcebergFixture(d)
+        fx.append([
+            _row("user", "u1", "clicks", 1.0, 100),
+            _row("user", "u2", "views", 2.0, 100),
+        ])
+        fx.eq_delete(["u1"], entity_types=["user"])
+        swapped = {1: "entity_id", 2: "entity_type"}
+        fx.evolve([
+            {**f, "name": swapped.get(f["id"], f["name"])}
+            for f in SCHEMA_FIELDS
+        ])
+        fx.finish()
+        t = IcebergTable(spark, d)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            feed = t.changes(from_snapshot_id=t.snapshots()[0][0]).collect()
+        # by field id: entity_type (id 1) is now named entity_id
+        assert [
+            (r["_change_type"], r["entity_id"], r["entity_type"])
+            for r in feed
+        ] == [("delete", "user", "u1")]
+
+
 class TestRound8Hardening:
     """VERDICT r7 missing #3/#4, wrong #2/#3, next #2/#7/#8 + ADVICE
     r7 #2/#3: partition-scoped equality deletes, non-parquet refusal,
@@ -1405,6 +1441,42 @@ def test_concurrent_metadata_commit_refuses(spark, tmp_path, monkeypatch):
     assert open(rival).read() == before  # rival commit untouched
     # and the table still works
     assert IcebergTable(spark, d).scan().count() == 2
+
+
+def test_metadata_only_commits_change_only_their_keys(spark, tmp_path):
+    """Each metadata-only verb publishes the previous metadata with
+    its own top-level keys changed, and stamps ``last-updated-ms``,
+    which the spec asks every metadata file to update."""
+    import feature_store_spark.sources.iceberg_write as iw
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "metaonly")
+    df = spark.createDataFrame(
+        [("user", "a", 1.0)],
+        "entity_type string, entity_id string, value_float double",
+    ).withColumn("event_time", F.timestamp_seconds(F.lit(100)))
+    snaps = [iw.iceberg_append(df, d) for _ in range(3)]
+    steps = [
+        (lambda: iw.iceberg_set_ref(d, "t1", "tag", snaps[0]),
+         {"refs"}),
+        (lambda: iw.iceberg_drop_ref(d, "t1"), {"refs"}),
+        (lambda: iw.iceberg_evolve_partition(d, [("event_time", "month")]),
+         {"partition-specs", "default-spec-id", "last-partition-id"}),
+        (lambda: iw.iceberg_rollback(d, snaps[1]),
+         {"current-snapshot-id"}),
+        (lambda: iw.iceberg_expire_snapshots(d, keep_last=2),
+         {"snapshots"}),
+    ]
+    meta_dir = os.path.join(d, "metadata")
+    for step, keys in steps:
+        before = iw._load_prev(meta_dir)[0]
+        step()
+        after = iw._load_prev(meta_dir)[0]
+        changed = {
+            k for k in before.keys() | after.keys()
+            if before.get(k) != after.get(k)
+        }
+        assert changed == keys | {"last-updated-ms"}
 
 
 def test_txn_marks_survive_expiration(spark, tmp_path):

@@ -765,9 +765,7 @@ class TestPruneSoundness:
         delta_append(_df(spark, 0, 3, "a"), path)
 
         # stage-but-don't-commit, like a writer paused pre-publish
-        adds = D._stage_adds(
-            _df(spark, 3, 6, "b").coalesce(1), path, 1, [], ["id", "tag"]
-        )
+        adds = D._stage_adds(_df(spark, 3, 6, "b").coalesce(1), path, 1, [])
         delta_vacuum(spark, path, retention_ms=3_600_000)
         for a in adds:
             assert os.path.exists(os.path.join(path, a["add"]["path"]))
@@ -778,9 +776,7 @@ class TestPruneSoundness:
         # escape hatch
         path2 = str(tmp_path / "t2")
         delta_append(_df(spark, 0, 2, "a"), path2)
-        adds2 = D._stage_adds(
-            _df(spark, 2, 4, "b").coalesce(1), path2, 1, [], ["id", "tag"]
-        )
+        adds2 = D._stage_adds(_df(spark, 2, 4, "b").coalesce(1), path2, 1, [])
         delta_vacuum(spark, path2, retention_ms=0)
         assert not any(
             os.path.exists(os.path.join(path2, a["add"]["path"]))
